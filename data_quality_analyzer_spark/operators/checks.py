@@ -16,8 +16,8 @@ The Spark recast of the reference's check layer
   driver-side control flow between Spark jobs, so a failed cheap check
   means the expensive jobs never launch.
 
-Each check is ONE conditional-aggregation scan (plus at most one distinct
-job) — the reference's per-check multi-query fan-out fused per SURVEY §4.2.
+One Spark action per check: its conditional aggregates and distinct counts
+fuse into one collected plan — the reference's fan-out fused per SURVEY §4.2.
 """
 
 from __future__ import annotations
@@ -135,13 +135,14 @@ def _blank(c: Column) -> Column:
 
 def _has_valid_elem(arr: str, field: str) -> Column:
     """$elemMatch {field: exists, != null, != ''} (charge_analysis_checks.py
-    :410-422) as one null-safe array existential."""
-    a = F.col(arr)
-    return (
-        a.isNotNull()
-        & (F.size(a) > 0)
-        & F.coalesce(F.exists(a, lambda x: ~_blank(x[field])), F.lit(False))
-    )
+    :410-422) as one null-safe array existential (NULL/empty array → False)."""
+    return F.coalesce(F.exists(arr, lambda x: ~_blank(x[field])), F.lit(False))
+
+
+def _valid_cpts() -> Column:
+    """Non-blank ``charges[].cpt_hcpcs`` codes, duplicates kept (:530-560)."""
+    valid = F.filter("charges", lambda c: ~_blank(c["cpt_hcpcs"]))
+    return F.transform(valid, lambda c: c["cpt_hcpcs"])
 
 
 # ---------------------------------------------------------------------------
@@ -151,16 +152,27 @@ def _has_valid_elem(arr: str, field: str) -> Column:
 def check_claims_data(
     claims: DataFrame, rs: ReadinessSettings = DEFAULT_READINESS
 ) -> dict[str, Any]:
-    """Volume + charge/diagnosis coverage + eligibility + CPT diversity,
-    in one conditional-aggregation scan plus one distinct job."""
-    has_charges = _has_valid_elem("charges", "cpt_hcpcs")
-    has_dx = _has_valid_elem("diagnoses", "code")
-    row = claims.agg(
-        F.count("*").alias("total"),
-        F.sum(F.when(has_charges, 1).otherwise(0)).cast("long").alias("with_charges"),
-        F.sum(F.when(has_dx, 1).otherwise(0)).cast("long").alias("with_dx"),
-        F.sum(F.when(has_charges & has_dx, 1).otherwise(0)).cast("long").alias("eligible"),
-    ).collect()[0]
+    """Volume + charge/diagnosis coverage + eligibility + CPT diversity in
+    one Spark action: ``posexplode_outer`` of the valid CPT codes gives each
+    claim rows ``pos`` 0, 1, … (or one NULL row); claim totals count first
+    rows only, by ``count(when)`` so an empty table gives 0, beside
+    ``countDistinct(cpt)``."""
+    first = F.coalesce(F.col("pos"), F.lit(0)) == 0
+    charged = F.col("pos") == 0  # first row of a claim with a valid CPT
+    row = (
+        claims.select(
+            _has_valid_elem("diagnoses", "code").alias("has_dx"),
+            F.posexplode_outer(_valid_cpts()).alias("pos", "cpt"),
+        )
+        .agg(
+            F.count(F.when(first, 1)).alias("total"),
+            F.count(F.when(charged, 1)).alias("with_charges"),
+            F.count(F.when(first & F.col("has_dx"), 1)).alias("with_dx"),
+            F.count(F.when(charged & F.col("has_dx"), 1)).alias("eligible"),
+            F.countDistinct("cpt").alias("unique_cpt"),
+        )
+        .collect()[0]
+    )
     total = row["total"]
     metrics: dict[str, Any] = {"total_claims": total}
 
@@ -201,12 +213,7 @@ def check_claims_data(
     metrics["eligible_percentage"] = round(row["eligible"] / total * 100, 2)
 
     # Step 5: CPT diversity (:530-560) — unwind → match valid → distinct
-    unique_cpt = (
-        claims.select(F.explode("charges").alias("c"))
-        .filter(~_blank(F.col("c.cpt_hcpcs")))
-        .agg(F.countDistinct("c.cpt_hcpcs"))
-        .collect()[0][0]
-    )
+    unique_cpt = row["unique_cpt"]
     metrics["unique_cpt_count"] = unique_cpt
     if unique_cpt < rs.cpt_minimum_unique_codes:
         issues.append(
@@ -239,19 +246,6 @@ def check_claims_data(
 # Check 3: Historical Stats Availability (charge_analysis_checks.py:617-905)
 # ---------------------------------------------------------------------------
 
-def payer_stats_distribution(
-    stats: DataFrame, min_record_count: int = 3
-) -> DataFrame:
-    """Per-payer CPT counts among quality stats — the $match→$group→$sort
-    pipeline of charge_analysis_checks.py:758-768, one shuffle."""
-    return (
-        stats.filter(F.col("record_count") >= min_record_count)
-        .groupBy("payer_mco")
-        .agg(F.count("*").alias("cpt_count"))
-        .orderBy(F.desc("cpt_count"), F.asc_nulls_last("payer_mco"))
-    )
-
-
 def check_stats_quality(
     claims: DataFrame,
     stats: DataFrame,
@@ -259,7 +253,10 @@ def check_stats_quality(
     stats_age_days: int | None = None,
 ) -> dict[str, Any]:
     """Coverage + quality + avg record count + per-payer distribution +
-    freshness, with the reference's stats severity bands.
+    freshness, with the reference's stats severity bands, in one Spark
+    action: one row per payer (rows, rows with enough ``record_count``,
+    Σ/count of non-NULL ``record_count``) cross-joined with the distinct CPT
+    counts of stats and claims; the driver sums and sorts these few rows.
 
     ``stats_age_days``: age of the most recent stats update; the parquet
     stats table carries no timestamp column, so the age is supplied by the
@@ -269,7 +266,20 @@ def check_stats_quality(
     metrics: dict[str, Any] = {}
     issues: list[str] = []
 
-    total_stats = stats.count()
+    rc = F.col("record_count")
+    per_payer = stats.groupBy("payer_mco").agg(
+        F.count("*").alias("n"),
+        F.count(F.when(rc >= rs.stats_minimum_record_count, 1)).alias("sufficient"),
+        F.sum(rc).alias("rc_sum"),
+        F.count(rc).alias("rc_n"),
+    )
+    stats_cpts = stats.agg(F.countDistinct("cpt_code").alias("cpt_with_stats"))
+    claims_cpts = claims.select(F.explode(_valid_cpts()).alias("cpt")).agg(
+        F.countDistinct("cpt").alias("total_cpt")
+    )
+    rows = per_payer.crossJoin(stats_cpts).crossJoin(claims_cpts).collect()
+
+    total_stats = sum(r["n"] for r in rows)
     metrics["total_stats"] = total_stats
     if total_stats == 0:  # :655-666 — immediate critical
         return create_check_result(
@@ -281,13 +291,8 @@ def check_stats_quality(
         )
 
     # Step 2: coverage — distinct CPTs in claims vs in stats (:668-699)
-    total_cpt = (
-        claims.select(F.explode("charges").alias("c"))
-        .filter(~_blank(F.col("c.cpt_hcpcs")))
-        .agg(F.countDistinct("c.cpt_hcpcs"))
-        .collect()[0][0]
-    )
-    cpt_with_stats = stats.select("cpt_code").distinct().count()
+    total_cpt = rows[0]["total_cpt"]
+    cpt_with_stats = rows[0]["cpt_with_stats"]
     coverage_pct = (cpt_with_stats / total_cpt * 100) if total_cpt else 0.0
     metrics["total_cpt_codes_in_claims"] = total_cpt
     metrics["cpt_codes_with_stats"] = cpt_with_stats
@@ -298,22 +303,18 @@ def check_stats_quality(
             f"{rs.stats_coverage_threshold * 100:.1f}%"
         )
 
-    # Step 3: quality + avg record count — one scan (:708-750)
-    q = stats.agg(
-        F.sum(
-            F.when(F.col("record_count") >= rs.stats_minimum_record_count, 1).otherwise(0)
-        ).cast("long").alias("sufficient"),
-        F.avg("record_count").alias("avg_rc"),
-    ).collect()[0]
-    quality_pct = q["sufficient"] / total_stats * 100
-    metrics["sufficient_stats"] = q["sufficient"]
+    # Step 3: quality + avg record count (:708-750)
+    sufficient = sum(r["sufficient"] for r in rows)
+    quality_pct = sufficient / total_stats * 100
+    metrics["sufficient_stats"] = sufficient
     metrics["quality_percentage"] = round(quality_pct, 2)
     if quality_pct < 50:  # hardcoded 50% in the reference (:733-738)
         issues.append(
             f"Only {quality_pct:.1f}% of stats have record_count >= "
             f"{rs.stats_minimum_record_count}"
         )
-    avg_rc = float(q["avg_rc"])
+    rc_n = sum(r["rc_n"] for r in rows)
+    avg_rc = sum(r["rc_sum"] or 0 for r in rows) / rc_n if rc_n else 0.0
     metrics["avg_record_count"] = round(avg_rc, 2)
     if avg_rc < rs.stats_minimum_avg_record_count:
         issues.append(
@@ -321,14 +322,13 @@ def check_stats_quality(
             f"{rs.stats_minimum_avg_record_count}"
         )
 
-    # Step 4: per-payer distribution (:755-806)
-    payer_rows = payer_stats_distribution(
-        stats, rs.stats_minimum_record_count
-    ).collect()
+    # Step 4: per-payer quality-stat counts (:755-806): count desc, payer asc, NULL last
+    payer_rows = [r for r in rows if r["sufficient"] > 0]
+    payer_rows.sort(key=lambda r: (-r["sufficient"], r["payer_mco"] is None, r["payer_mco"] or ""))
     insufficient = [
-        f"{r['payer_mco']} ({r['cpt_count']} CPTs)"
+        f"{r['payer_mco']} ({r['sufficient']} CPTs)"
         for r in payer_rows
-        if r["cpt_count"] < rs.stats_minimum_cpts_per_payer
+        if r["sufficient"] < rs.stats_minimum_cpts_per_payer
     ]
     metrics["total_payers"] = len(payer_rows)
     metrics["payers_with_sufficient_coverage"] = len(payer_rows) - len(insufficient)

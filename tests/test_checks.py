@@ -1,6 +1,7 @@
 """Readiness-check layer: dynamic severity bands, critical early-exit,
-per-payer stats distribution, and the sampled data-quality check — all
-cross-checked against DuckDB on the deterministic claims fixture.
+per-payer stats distribution, the sampled data-quality check, one Spark
+action per check, and the EP2 script end to end — cross-checked against
+DuckDB on the deterministic claims fixture and planted edge inputs.
 
 Reference band boundaries under test:
 - diversity: <50% of threshold critical / <80% high / else medium
@@ -91,30 +92,38 @@ def test_sampled_quality_severity():
 # Check 2 vs DuckDB
 # ---------------------------------------------------------------------------
 
-def test_check2_metrics_match_duckdb(claims, duck):
-    res = CK.check_claims_data(claims)
-    want = duck.sql(
-        """
-        SELECT COUNT(*),
-          SUM(CASE WHEN charges IS NOT NULL AND len(charges) > 0
-               AND len(list_filter(charges, x -> x.cpt_hcpcs IS NOT NULL AND x.cpt_hcpcs <> '')) > 0
-               THEN 1 ELSE 0 END),
-          SUM(CASE WHEN diagnoses IS NOT NULL AND len(diagnoses) > 0
-               AND len(list_filter(diagnoses, x -> x.code IS NOT NULL AND x.code <> '')) > 0
-               THEN 1 ELSE 0 END)
-        FROM claims
+def _duck_check2_metrics(duck, src: str) -> dict:
+    """Every check_claims_data metric, computed by DuckDB over ``src``."""
+    total, charges, dx, eligible = duck.sql(
+        f"""
+        WITH f AS (SELECT
+          coalesce(len(list_filter(charges, x -> x.cpt_hcpcs IS NOT NULL AND x.cpt_hcpcs <> '')), 0) > 0 AS ch,
+          coalesce(len(list_filter(diagnoses, x -> x.code IS NOT NULL AND x.code <> '')), 0) > 0 AS dx
+          FROM {src})
+        SELECT COUNT(*), COUNT(*) FILTER (ch), COUNT(*) FILTER (dx), COUNT(*) FILTER (ch AND dx)
+        FROM f
         """
     ).fetchone()
     uniq = duck.sql(
-        """SELECT COUNT(DISTINCT c.cpt_hcpcs) FROM
-           (SELECT unnest(charges) AS c FROM claims)
+        f"""SELECT COUNT(DISTINCT c.cpt_hcpcs) FROM
+           (SELECT unnest(charges) AS c FROM {src})
            WHERE c.cpt_hcpcs IS NOT NULL AND c.cpt_hcpcs <> ''"""
     ).fetchone()[0]
-    m = res["metrics"]
-    assert m["total_claims"] == want[0]
-    assert m["claims_with_charges"] == want[1]
-    assert m["claims_with_diagnoses"] == want[2]
-    assert m["unique_cpt_count"] == uniq
+    return {
+        "total_claims": total,
+        "claims_with_charges": charges,
+        "charges_percentage": round(charges / total * 100, 2),
+        "claims_with_diagnoses": dx,
+        "diagnoses_percentage": round(dx / total * 100, 2),
+        "eligible_claims": eligible,
+        "eligible_percentage": round(eligible / total * 100, 2),
+        "unique_cpt_count": uniq,
+    }
+
+
+def test_check2_metrics_match_duckdb(claims, duck):
+    res = CK.check_claims_data(claims)
+    assert res["metrics"] == _duck_check2_metrics(duck, "claims")
     # the fixture plants a charges-coverage shortfall (79.5% < 80%): the
     # check fails at plain high (volume floor is met, so no escalation)
     assert res["status"] == "failed" and res["severity"] == "high"
@@ -124,6 +133,32 @@ def test_check2_metrics_match_duckdb(claims, duck):
         claims_with_charges_percentage=0.5, claims_with_diagnoses_percentage=0.5
     )
     assert CK.check_claims_data(claims, rs)["status"] == "passed"
+
+
+def test_check2_edge_inputs_match_duckdb(spark, tmp_path):
+    """The fused posexplode scan on the array edge cases: NULL / empty
+    charges, only blank CPTs, a NULL element, a CPT repeated in one claim,
+    NULL diagnoses."""
+    schema = (
+        "claim_id string, charges array<struct<cpt_hcpcs:string,amount:double>>, "
+        "diagnoses array<struct<code:string>>"
+    )
+    dx = [{"code": "D1"}]
+    rows = [
+        ("null_charges", None, dx),
+        ("empty_charges", [], dx),
+        ("blank_cpts", [{"cpt_hcpcs": None, "amount": 1.0}, {"cpt_hcpcs": "", "amount": 2.0}], dx),
+        ("null_element", [None, {"cpt_hcpcs": "A", "amount": 3.0}], [{"code": ""}]),
+        ("repeat_cpt", [{"cpt_hcpcs": "B", "amount": 1.0}, {"cpt_hcpcs": "B", "amount": 2.0}], dx),
+        ("null_dx", [{"cpt_hcpcs": "A", "amount": 1.0}, {"cpt_hcpcs": "C", "amount": 1.0}], None),
+        ("ok", [{"cpt_hcpcs": "D", "amount": 1.0}], [{"code": None}, {"code": "D2"}]),
+    ]
+    path = str(tmp_path / "edge_claims.parquet")
+    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(path)
+    con = duckdb.connect()
+    want = _duck_check2_metrics(con, f"read_parquet('{path}/*.parquet')")
+    assert want["unique_cpt_count"] == 4 and want["eligible_claims"] == 2
+    assert CK.check_claims_data(spark.read.parquet(path))["metrics"] == want
 
 
 def test_check2_volume_escalation(claims):
@@ -189,6 +224,59 @@ def test_check3_empty_stats_critical(claims, stats):
     empty = stats.filter(F.lit(False))
     res = CK.check_stats_quality(claims, empty)
     assert res["status"] == "failed" and res["severity"] == "critical"
+
+
+STATS_SCHEMA = "payer_mco string, cpt_code string, record_count long"
+
+
+def test_check3_all_null_record_count(spark, claims):
+    """An all-NULL record_count averages to 0.0 (the non-NULL mean, 0 when
+    there is none) and raises the average-record-count issue."""
+    stats = spark.createDataFrame(
+        [("P1", "99201", None), ("P1", "99202", None), ("P2", "99201", None)],
+        STATS_SCHEMA,
+    )
+    res = CK.check_stats_quality(claims, stats)
+    m = res["metrics"]
+    assert m["total_stats"] == 3 and m["sufficient_stats"] == 0
+    assert m["avg_record_count"] == 0.0 and m["total_payers"] == 0
+    assert res["status"] == "failed" and res["severity"] == "critical"
+    assert "Average record count is 0.0" in res["description"]
+
+
+def test_check3_payer_order_matches_spark_sort(spark, claims):
+    """The driver-side payer sort equals the reference's
+    groupBy → orderBy(desc cpt_count, asc_nulls_last payer): ties broken by
+    binary string order, NULL payer last among its tie, the top-10 cut
+    falling inside a tie."""
+    payers = {  # payer → quality-stat count (record_count >= 3)
+        "Z": 2, "B": 2, None: 2, "b": 2, "": 1, "M": 1, "a": 1, "A": 1,
+        "P1": 1, "P2": 1, "P3": 1, "P4": 5, "P5": 3, "P6": 3,
+    }
+    rows = []
+    for payer, k in payers.items():
+        rows += [(payer, f"C{i}", 3 + i) for i in range(k)]
+        rows.append((payer, "LOW", 1))  # below the quality floor
+    rows += [("ONLY_LOW", "C0", 2), ("P1", "C9", None)]
+    stats = spark.createDataFrame(rows, STATS_SCHEMA)
+    ref = (
+        stats.filter(F.col("record_count") >= 3)
+        .groupBy("payer_mco")
+        .agg(F.count("*").alias("cpt_count"))
+        .orderBy(F.desc("cpt_count"), F.asc_nulls_last("payer_mco"))
+        .collect()
+    )
+    insufficient = [f"{r['payer_mco']} ({r['cpt_count']} CPTs)" for r in ref if r["cpt_count"] < 3]
+    assert len(insufficient) == 11  # the [:10] cut drops one of the tied 1s
+
+    m = CK.check_stats_quality(claims, stats)["metrics"]
+    assert m["problematic_payers"] == insufficient[:10]
+    assert m["total_payers"] == len(ref) == len(payers)
+    assert m["payers_with_insufficient_coverage"] == len(insufficient)
+    assert m["payers_with_sufficient_coverage"] == len(ref) - len(insufficient)
+    assert m["total_stats"] == len(rows)
+    assert m["avg_record_count"] == round(stats.agg(F.avg("record_count")).first()[0], 2)
+    assert m["cpt_codes_with_stats"] == stats.select("cpt_code").distinct().count()
 
 
 def test_payer_bands_match_duckdb(stats, duck, claims):
@@ -272,6 +360,45 @@ def test_sampled_check_empty_critical(stats):
 
 
 # ---------------------------------------------------------------------------
+# one Spark action per check
+# ---------------------------------------------------------------------------
+
+def test_each_spark_check_issues_one_action(claims, monkeypatch):
+    """Each Spark-backed check makes exactly one driver action; nested
+    calls (``first`` → ``take`` → ``collect``) count once."""
+    cls = type(claims)
+    calls: list[str] = []
+    depth = [0]
+
+    def counting(name):
+        orig = getattr(cls, name)
+
+        def wrapper(self, *args, **kwargs):
+            if depth[0] == 0:
+                calls.append(name)
+            depth[0] += 1
+            try:
+                return orig(self, *args, **kwargs)
+            finally:
+                depth[0] -= 1
+        return wrapper
+
+    for name in ("collect", "count", "first", "take", "toPandas"):
+        monkeypatch.setattr(cls, name, counting(name))
+    stats = CL.generate_stats(claims)  # uncached, as the gate runs it
+    checks = {
+        "claims_data": lambda: CK.check_claims_data(claims),
+        "stats_quality": lambda: CK.check_stats_quality(claims, stats),
+        "diagnosis_diversity": lambda: CK.check_diagnosis_diversity(claims),
+        "data_quality_sampled": lambda: CK.check_data_quality_sampled(stats),
+    }
+    for key, check in checks.items():
+        calls.clear()
+        check()
+        assert calls == ["collect"], (key, calls)
+
+
+# ---------------------------------------------------------------------------
 # critical early-exit (charge_analysis_checks.py:87-90)
 # ---------------------------------------------------------------------------
 
@@ -316,3 +443,34 @@ def test_full_check_sequence_with_settings_gate(claims, stats):
         [lambda: CFG.validate_settings(CFG.default_doc()), check2]
     )
     assert len(results) == 2 and launched == ["check2"]
+
+
+def test_run_checks_script_end_to_end(spark, claims, monkeypatch, capsys):
+    """scripts/run_checks.py (the EP2 gate) on the 1,500-claim fixture: all
+    five checks run and each reports the result, metrics included, of a
+    direct call."""
+    import importlib.util
+    import json
+
+    from data_quality_analyzer_spark import config as CFG
+
+    script = os.path.join(os.path.dirname(__file__), "..", "scripts", "run_checks.py")
+    spec = importlib.util.spec_from_file_location("run_checks_script", script)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    monkeypatch.setattr(
+        "sys.argv", ["run_checks.py", "--claims", os.path.join(FIX, "claims.parquet")]
+    )
+    mod.main()
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["checks_run"] == 5 and out["early_exit"] is False
+
+    stats = CL.generate_stats(claims)
+    direct = [
+        CFG.validate_settings(CFG.default_doc()),
+        CK.check_claims_data(claims),
+        CK.check_stats_quality(claims, stats),
+        CK.check_diagnosis_diversity(claims),
+        CK.check_data_quality_sampled(stats),
+    ]
+    assert out["checks"] == json.loads(json.dumps(direct, default=str))
