@@ -1,23 +1,58 @@
-"""Per-partition lineage + checkpoint/resume with atomic snapshot commits.
-
-Iceberg-style transactional semantics without the Iceberg jar (absent in
-this sandbox — SURVEY §7.0): a JSON *manifest* is the commit point; data
-files are written first, then the manifest is atomically replaced
-(``os.replace``).  A reader only trusts buckets listed in the manifest, so
-a killed run leaves no torn state; restart recomputes only pending buckets
-(anti-join against the ledger).  Swap this layer for a real Iceberg catalog
-when the runtime jar exists — the pipeline code does not change (see
-tests/test_resume.py::test_writer_seam_is_swappable).
+"""Per-partition lineage, checkpoint/resume, and the cross-run ledgers, all
+committed under one atomic-manifest protocol.
 
 Reference analogue: the clear-then-reload idempotence pattern
 (``scripts/load_data.py:69-77``, ``generate_stats_collection.py:87-108``
 delete-and-recreate) upgraded to partition-granular atomic commits
-(SURVEY §2.9, §4.3 checkpoint/resume row).
+(SURVEY §2.9, §4.3 checkpoint/resume row).  Iceberg-style transactional
+semantics without the Iceberg jar (absent in this sandbox — SURVEY §7.0):
+swap this layer for a real Iceberg catalog when the runtime jar exists —
+the pipeline code does not change (see
+tests/test_resume.py::test_writer_seam_is_swappable).
 
-Partitioning follows the north rule: **phash buckets** (`pmod(phash, NB)`),
-the same key the 100 TB table would be bucket-partitioned by.
+The commit protocol (every table in this module follows it):
 
-Scale design (the two round-1 scale-killers, now gone):
+* **The manifest is the commit point.**  A JSON manifest next to the data
+  is only ever replaced whole, by :func:`atomic_write_json` (temp file,
+  then an atomic rename): a reader sees the old manifest or the new one.
+* **Data before manifest.**  A batch's parquet lands first; the manifest
+  that lists it is replaced last.  Readers trust only listed partitions,
+  so a crash in between leaves a torn directory nobody reads.
+* **Torn-directory cleanup.**  Re-running an uncommitted batch first
+  removes what the failed attempt left in its directory
+  (:meth:`Ledger.batch_dir`; ``_clear_bucket_dirs`` for the verdict
+  table), then rewrites it — restart converges to the uninterrupted run.
+* **Ledger manifest fields.**  ``batches`` lists every batch ever
+  committed: it is the permanent *replay guard* — re-running a committed
+  batch is a no-op (or returns the stored result), and compaction never
+  shrinks it.  ``segments`` (compactable additive ledgers only) lists the
+  LIVE partitions the merged read scans.  *Pins* (``k``,
+  ``depth``/``width``, ``gap_us`` …) are parameters every batch must
+  share because partitions built under different values do not merge:
+  the first commit sets them, a mismatch raises — checked before the
+  replay guard, so a replay under different pins raises instead of
+  silently no-opping.
+* **Compaction crash ordering** (:meth:`Ledger.compact`).  The merged
+  base partition ``__base_<len(batches)>__`` (deterministic: no wall
+  clock, never collides with a crawl id, and a rerun at the same ledger
+  state overwrites its own torn attempt) is written first; the manifest
+  swap makes it the only segment; superseded segment directories are
+  removed only after the swap.  A crash before the swap leaves an
+  unlisted base directory, a crash after it unlisted orphan segments
+  (harmless, reclaimable by hand) — the merged read never changes.
+* **State ledgers** (sessions, recrawl: partition column ``state_batch``)
+  read only the state the last committed batch wrote, so their
+  ``batches`` keep commit order and superseded state partitions are
+  removed after each swap, in compaction's order.
+
+The verdict table (:func:`run_with_checkpoints`) keys its manifest by
+**phash bucket** (`pmod(phash, NB)` — the north rule; the key the 100 TB
+table would be bucket-partitioned by) instead of batch:
+``committed`` maps bucket → lineage row, ``num_buckets`` is its pin, and
+``schema`` records the written verdict schema so a read of an all-empty
+commit still has columns.
+
+Scale design of the verdict table:
 
 * **One input scan, one pipeline execution per run** in the default
   single-pass mode: all pending buckets are filtered in one pass, written
@@ -38,9 +73,13 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from collections.abc import Callable
+from dataclasses import dataclass
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..config import PipelineSettings
 from ..exec_utils import materialize
@@ -59,23 +98,163 @@ RULE_METRICS_DIR = "_rule_metrics"
 LANGID_HIST_DIR = "_langid_histogram"
 
 
+def read_json(path: str) -> dict | None:
+    """The JSON document at ``path``; None when it does not exist."""
+    if not os.path.exists(path):
+        return None
+    with open(path) as f:
+        return json.load(f)
+
+
+def atomic_write_json(path: str, doc: dict) -> None:
+    """Replace ``path`` with ``doc`` atomically — the one commit point of
+    every manifest and pointer in the package."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(doc, f, indent=1, sort_keys=True)
+    os.replace(tmp, path)
+
+
+def _clear(path: str) -> str:
+    """``path`` with whatever is there removed: a torn earlier attempt, or
+    a partition no manifest lists any more."""
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    return path
+
+
+def _check_pins(where: str, manifest: dict, pins: dict) -> None:
+    pinned = {k: manifest.get(k) for k in pins}
+    if any(v is not None for v in pinned.values()) and pinned != pins:
+        have, got = (
+            " ".join(f"{k}={v!r}" for k, v in d.items()) for d in (pinned, pins)
+        )
+        raise ValueError(f"ledger at {where!r} is pinned to {have}; got {got}")
+
+
+@dataclass(frozen=True)
+class Ledger:
+    """One cross-run ledger under the module's commit protocol: the
+    manifest file and data directory inside a store, the data directory's
+    partition column, whether the ledger keeps live ``segments``, and the
+    names of its pins.  The ledger functions below keep only their
+    transforms; every protocol step is a method here."""
+
+    manifest_name: str
+    data_dir: str
+    pins: tuple[str, ...] = ()
+    segments: bool = False
+    part_col: str = "batch_id"
+
+    @property
+    def _is_state(self) -> bool:
+        return self.part_col == "state_batch"
+
+    def manifest(self, store_dir: str) -> dict:
+        m = read_json(os.path.join(store_dir, self.manifest_name))
+        if m is None:
+            m = {"batches": [], **dict.fromkeys(self.pins)}
+        if self.segments:
+            m.setdefault("segments", list(m["batches"]))  # pre-compaction
+        return m
+
+    def committed(self, store_dir: str) -> dict:
+        """The manifest of a ledger that must hold a committed batch."""
+        m = self.manifest(store_dir)
+        if not m["batches"]:
+            raise ValueError(f"no committed batches at {store_dir!r}")
+        return m
+
+    def begin(self, store_dir: str, batch_id: str, **pins) -> dict | None:
+        """The manifest to commit ``batch_id`` into, pins set; None when
+        the batch is already committed (replay)."""
+        m = self.manifest(store_dir)
+        _check_pins(store_dir, m, pins)
+        if batch_id in m["batches"]:
+            return None
+        m.update(pins)
+        return m
+
+    def path(self, store_dir: str, batch_id: str) -> str:
+        return os.path.join(
+            store_dir, self.data_dir, f"{self.part_col}={batch_id}"
+        )
+
+    def batch_dir(self, store_dir: str, batch_id: str) -> str:
+        """The empty directory to write ``batch_id``'s data into."""
+        os.makedirs(store_dir, exist_ok=True)
+        return _clear(self.path(store_dir, batch_id))
+
+    def commit(self, store_dir: str, manifest: dict, batch_id: str) -> None:
+        """Commit ``batch_id``, whose data is already written."""
+        superseded = manifest["batches"] if self._is_state else []
+        batches = manifest["batches"] + [batch_id]
+        manifest["batches"] = batches if self._is_state else sorted(batches)
+        if self.segments:
+            manifest["segments"] = sorted(manifest["segments"] + [batch_id])
+        self._swap(store_dir, manifest, superseded)
+
+    def _swap(self, store_dir: str, manifest: dict, drop: list[str]) -> None:
+        atomic_write_json(os.path.join(store_dir, self.manifest_name), manifest)
+        for batch_id in drop:
+            _clear(self.path(store_dir, batch_id))
+
+    def read(
+        self, spark: SparkSession, store_dir: str, manifest: dict | None = None
+    ) -> DataFrame | None:
+        """The committed live partitions — the segments, the last state,
+        or every batch; None when nothing is committed."""
+        m = manifest or self.manifest(store_dir)
+        if not m["batches"]:
+            return None
+        live = (
+            m["segments"] if self.segments
+            else m["batches"][-1:] if self._is_state
+            else m["batches"]
+        )
+        return spark.read.parquet(os.path.join(store_dir, self.data_dir)).filter(
+            F.col(self.part_col).isin(live)
+        )
+
+    def compact(
+        self,
+        spark: SparkSession,
+        store_dir: str,
+        merge: Callable[[DataFrame], DataFrame],
+    ) -> None:
+        """Fold the live segments into one base partition whose rows are
+        ``merge`` of their union (additive ledgers only: the merged read
+        must be a pure sum/union over partitions)."""
+        m = self.committed(store_dir)
+        if len(m["segments"]) <= 1:
+            return  # already compact
+        base = f"__base_{len(m['batches'])}__"
+        # materialize BEFORE writing into the same directory tree the lazy
+        # plan would otherwise scan mid-write
+        merged = merge(self.read(spark, store_dir, m)).localCheckpoint()
+        merged.write.parquet(self.batch_dir(store_dir, base))
+        old = [s for s in m["segments"] if s != base]
+        m["segments"] = [base]
+        self._swap(store_dir, m, old)
+
+
+# ---------------------------------------------------------------------------
+# The verdict table: filter+scrub verdicts with per-bucket commits.
+# ---------------------------------------------------------------------------
+
+
 def phash_bucket(num_buckets: int):
     return F.pmod(F.col("phash"), F.lit(num_buckets)).cast("int")
 
 
 def read_manifest(out_dir: str) -> dict:
-    path = os.path.join(out_dir, MANIFEST)
-    if not os.path.exists(path):
-        return {"run_id": None, "num_buckets": None, "committed": {}}
-    with open(path) as f:
-        return json.load(f)
+    return read_json(os.path.join(out_dir, MANIFEST)) or {
+        "run_id": None, "num_buckets": None, "committed": {},
+    }
 
 
 def _commit_manifest(out_dir: str, manifest: dict) -> None:
-    tmp = os.path.join(out_dir, MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(out_dir, MANIFEST))  # atomic commit point
+    atomic_write_json(os.path.join(out_dir, MANIFEST), manifest)
 
 
 def _clear_bucket_dirs(out_dir: str, buckets: list[int]) -> None:
@@ -85,9 +264,23 @@ def _clear_bucket_dirs(out_dir: str, buckets: list[int]) -> None:
                  os.path.join(out_dir, RULE_METRICS_DIR),
                  os.path.join(out_dir, LANGID_HIST_DIR)):
         for b in buckets:
-            bucket_dir = os.path.join(base, f"bucket={b}")
-            if os.path.exists(bucket_dir):
-                shutil.rmtree(bucket_dir)
+            _clear(os.path.join(base, f"bucket={b}"))
+
+
+def _no_data_files(e: AnalysisException) -> bool:
+    return e.getCondition() in ("UNABLE_TO_INFER_SCHEMA", "PATH_NOT_FOUND")
+
+
+def _read_written(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The written verdict parquet; None when no data file exists yet (all
+    pending buckets were empty).  Any other storage error propagates, so
+    the manifest is never committed over data it could not read."""
+    try:
+        return spark.read.parquet(out_dir)
+    except AnalysisException as e:
+        if not _no_data_files(e):
+            raise
+        return None
 
 
 def _write_bucket_metrics(
@@ -98,9 +291,8 @@ def _write_bucket_metrics(
     stages never re-run): per-rule pass/fail counts and the langid
     keep/drop histogram, partitioned by bucket so each bucket's metric
     rows commit (and are cleaned on re-execution) with its data."""
-    try:
-        df = spark.read.parquet(out_dir)
-    except Exception:  # no data files (all pending buckets empty)
+    df = _read_written(spark, out_dir)
+    if df is None:
         return
     df = df.filter(F.col("bucket").isin(buckets))
     (
@@ -123,9 +315,8 @@ def _written_bucket_stats(
     """Per-bucket lineage stats from the just-written parquet — a columnar
     scan of (bucket, keep) only.  This is what replaced the round-1
     double-compute: the UDF stages never run a second time."""
-    try:
-        df = spark.read.parquet(out_dir)
-    except Exception:  # no data files yet (all pending buckets were empty)
+    df = _read_written(spark, out_dir)
+    if df is None:
         return {}
     df = df.filter(F.col("bucket").isin(buckets))
     return {
@@ -178,11 +369,7 @@ def run_with_checkpoints(
     # a resumed run MUST use the original bucket modulus: buckets committed
     # under a different num_buckets cover different row sets, so mixing
     # moduli would silently duplicate or drop rows.
-    if manifest["num_buckets"] not in (None, num_buckets):
-        raise ValueError(
-            f"out_dir was bucketed with num_buckets={manifest['num_buckets']}, "
-            f"got {num_buckets}; resume with the original value"
-        )
+    _check_pins(out_dir, manifest, {"num_buckets": num_buckets})
     manifest["run_id"] = run_id
     manifest["num_buckets"] = num_buckets
 
@@ -226,39 +413,122 @@ def run_with_checkpoints(
                 "status": "committed",
                 "committed_ts": commit_ts,
             }
+        manifest["schema"] = verdicts.drop("bytes").schema.jsonValue()
         _commit_manifest(out_dir, manifest)
     return manifest
 
 
+def _read_committed_buckets(
+    spark: SparkSession,
+    out_dir: str,
+    table_dir: str,
+    shape: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """The manifest-committed buckets of ``table_dir``.  When every
+    committed bucket was empty there is no parquet to infer a schema from:
+    ``shape`` of a 0-row frame with the verdict schema recorded at commit
+    stands in (bucket last, as partition discovery orders it)."""
+    manifest = read_manifest(out_dir)
+    try:
+        df = spark.read.parquet(table_dir)
+    except AnalysisException as e:
+        if "schema" not in manifest or not _no_data_files(e):
+            raise
+        empty = spark.createDataFrame(
+            [], StructType.fromJson(manifest["schema"])
+        )
+        df = shape(empty)
+        df = df.select(*[c for c in df.columns if c != "bucket"], "bucket")
+    committed = sorted(int(b) for b in manifest["committed"])
+    return df.filter(F.col("bucket").isin(committed))
+
+
+def read_committed(spark: SparkSession, out_dir: str) -> DataFrame:
+    """Read back only manifest-committed buckets (snapshot isolation)."""
+    return _read_committed_buckets(spark, out_dir, out_dir, lambda v: v)
+
+
+def read_committed_metrics(
+    spark: SparkSession, out_dir: str, which: str = RULE_METRICS_DIR
+) -> DataFrame:
+    """Committed per-bucket quality-metric rows (same snapshot rule as the
+    data: only manifest-listed buckets are trusted)."""
+    build = langid_histogram if which == LANGID_HIST_DIR else pipeline_metrics
+    return _read_committed_buckets(
+        spark, out_dir, os.path.join(out_dir, which),
+        lambda v: build(v, group_cols=["bucket"]),
+    )
+
+
 # ---------------------------------------------------------------------------
-# Incremental cross-run dedup: a committed fingerprint store next to the
-# verdict table.  Without it every run dedups only within itself — the first
-# thing a user hits when a 100 TB corpus arrives in increments (round-2
-# VERDICT, missing #3).
+# The cross-run ledgers.  Each stores only what the next batch must be
+# checked against (fingerprints, signatures, sketch cells, state), never
+# corpus text, partitioned by batch under the protocol above.
 # ---------------------------------------------------------------------------
 
 FINGERPRINT_DIR = "_fingerprints"
-FP_MANIFEST = "_fp_manifest.json"
+NEAR_SIG_DIR = "_near_sigs"
+IMG_FP_DIR = "_image_fps"
+EMB_DIR = "_embedding_ledger"
+CONTAM_DIR = "_contam_grams"
+LINE_FP_DIR = "_line_fps"
+KMV_DIR = "kmv_sketches"
+CMS_DIR = "cms_sketches"
+STATS_DIR = "corpus_stats"
+BLOOM_DIR = "bloom_positions"
+SESS_STATE_DIR = "session_state"
+SESS_OUT_DIR = "session_batches"
+EDGES_DIR = "link_edges"
+RECRAWL_STATE_DIR = "recrawl_state"
+
+_FP = Ledger("_fp_manifest.json", FINGERPRINT_DIR)
+_NEAR = Ledger("_near_manifest.json", NEAR_SIG_DIR)
+_IMG = Ledger("_image_fp_manifest.json", IMG_FP_DIR)
+_EMB = Ledger("_embedding_manifest.json", EMB_DIR)
+_CONTAM = Ledger("_contam_manifest.json", CONTAM_DIR, pins=("n",))
+_LINES = Ledger("_line_fp_manifest.json", LINE_FP_DIR)
+_KMV = Ledger("_kmv_manifest.json", KMV_DIR, pins=("k", "group_cols"))
+_CMS = Ledger(
+    "_cms_manifest.json", CMS_DIR, pins=("depth", "width"), segments=True
+)
+_STATS = Ledger("_stats_manifest.json", STATS_DIR, pins=("group_col",))
+_BLOOM = Ledger("_bloom_manifest.json", BLOOM_DIR, pins=("k", "m"), segments=True)
+_SESS = Ledger(
+    "_sessions_manifest.json", SESS_STATE_DIR, pins=("gap_us",),
+    part_col="state_batch",
+)
+_EDGES = Ledger("_edges_manifest.json", EDGES_DIR, segments=True)
+_RECRAWL = Ledger(
+    "_recrawl_manifest.json", RECRAWL_STATE_DIR, part_col="state_batch"
+)
+
+read_fp_manifest = _FP.manifest
+read_near_manifest = _NEAR.manifest
+read_img_manifest = _IMG.manifest
+read_emb_manifest = _EMB.manifest
+read_contam_manifest = _CONTAM.manifest
+read_line_manifest = _LINES.manifest
+read_kmv_manifest = _KMV.manifest
+read_cms_manifest = _CMS.manifest
+read_stats_manifest = _STATS.manifest
+read_bloom_manifest = _BLOOM.manifest
+read_sessions_manifest = _SESS.manifest
+read_edges_manifest = _EDGES.manifest
+read_recrawl_manifest = _RECRAWL.manifest
 
 
-def read_fp_manifest(store_dir: str) -> dict:
-    path = os.path.join(store_dir, FP_MANIFEST)
-    if not os.path.exists(path):
-        return {"batches": []}
-    with open(path) as f:
-        return json.load(f)
+# ---------------------------------------------------------------------------
+# Exact-text fingerprint ledger.  Without it every run dedups only within
+# itself — the first thing a user hits when a 100 TB corpus arrives in
+# increments (round-2 VERDICT, missing #3).
+# ---------------------------------------------------------------------------
 
 
 def read_committed_fingerprints(
     spark: SparkSession, store_dir: str
 ) -> DataFrame | None:
-    """Fingerprints of every COMMITTED batch (manifest rule: torn writes
-    are invisible).  None when the store is empty."""
-    manifest = read_fp_manifest(store_dir)
-    if not manifest["batches"]:
-        return None
-    df = spark.read.parquet(os.path.join(store_dir, FINGERPRINT_DIR))
-    return df.filter(F.col("batch_id").isin(manifest["batches"]))
+    """(fp, batch_id) of every committed batch; None when empty."""
+    return _FP.read(spark, store_dir)
 
 
 def dedup_incremental(
@@ -276,19 +546,14 @@ def dedup_incremental(
        only — a few bytes per historic row, shuffled by fp; at 10^12 rows
        the store is bucketed by fp so this is a co-located join);
     2. dedup within the surviving batch (keep min id per fp);
-    3. write the SURVIVORS' fingerprints partitioned by batch_id, then
-       atomically commit the batch to the ledger manifest.
+    3. commit the SURVIVORS' fingerprints as this batch.
 
-    Idempotent: re-ingesting an already-committed batch anti-joins against
-    its own committed fingerprints and keeps NOTHING; a crash between the
-    parquet write and the manifest commit leaves the batch uncommitted and
-    the rewrite cleans its directory first (same rule as the verdict
-    table).  Returns the kept rows."""
-    manifest = read_fp_manifest(store_dir)
-    if batch_id in manifest["batches"]:
+    Re-ingesting an already-committed batch keeps NOTHING.  Returns the
+    kept rows."""
+    m = _FP.begin(store_dir, batch_id)
+    if m is None:
         # replay of a committed batch: nothing new by definition
         return docs.filter(F.lit(False))
-    os.makedirs(store_dir, exist_ok=True)
     fresh = docs.filter(F.col(text_col).isNotNull()).withColumn(
         "_fp", F.md5(text_col)
     )
@@ -301,45 +566,23 @@ def dedup_incremental(
     # dedup_exact — a hash aggregate then a semi join, no window sort
     keep_ids = fresh.groupBy("_fp").agg(F.min(id_col).alias(id_col))
     kept = fresh.join(keep_ids, on=[id_col, "_fp"], how="left_semi")
-
-    batch_dir = os.path.join(store_dir, FINGERPRINT_DIR, f"batch_id={batch_id}")
-    if os.path.exists(batch_dir):  # torn previous attempt: clean re-write
-        shutil.rmtree(batch_dir)
     kept.select("_fp").distinct().select(
         F.col("_fp").alias("fp")
-    ).write.parquet(batch_dir)
-    kept_rows = kept.drop("_fp")
-    # ledger commit point (atomic manifest replace, same rule as data)
-    manifest["batches"] = sorted(manifest["batches"] + [batch_id])
-    tmp = os.path.join(store_dir, FP_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(store_dir, FP_MANIFEST))
-    return kept_rows
+    ).write.parquet(_FP.batch_dir(store_dir, batch_id))
+    _FP.commit(store_dir, m, batch_id)
+    return kept.drop("_fp")
 
 
-NEAR_SIG_DIR = "_near_sigs"
-NEAR_MANIFEST = "_near_manifest.json"
-
-
-def read_near_manifest(store_dir: str) -> dict:
-    path = os.path.join(store_dir, NEAR_MANIFEST)
-    if not os.path.exists(path):
-        return {"batches": []}
-    with open(path) as f:
-        return json.load(f)
+# ---------------------------------------------------------------------------
+# Near-dup minhash-signature ledger.
+# ---------------------------------------------------------------------------
 
 
 def read_committed_signatures(
     spark: SparkSession, store_dir: str
 ) -> DataFrame | None:
-    """(sid, sig) of every COMMITTED batch; None when the store is empty.
-    Torn writes are invisible (manifest rule, same as the exact ledger)."""
-    manifest = read_near_manifest(store_dir)
-    if not manifest["batches"]:
-        return None
-    df = spark.read.parquet(os.path.join(store_dir, NEAR_SIG_DIR))
-    return df.filter(F.col("batch_id").isin(manifest["batches"]))
+    """(sid, sig, batch_id) of every committed batch; None when empty."""
+    return _NEAR.read(spark, store_dir)
 
 
 def dedup_incremental_near(
@@ -376,12 +619,10 @@ def dedup_incremental_near(
        above the threshold;
     3. near-dedups WITHIN the surviving batch via :func:`dedup.dedup_near`
        (exact-Jaccard verify — the texts are present here);
-    4. writes the survivors' distinct signatures partitioned by batch_id,
-       then atomically commits the batch to the near manifest.
+    4. commits the survivors' distinct signatures as this batch.
 
     Rows that cannot be fingerprinted (null / shorter than one shingle)
-    pass through untouched, mirroring ``dedup_near``.  Idempotent replay
-    and torn-write cleanup follow the exact ledger's rules.  At 10^12 rows
+    pass through untouched, mirroring ``dedup_near``.  At 10^12 rows
     a production deployment materializes the archive's band index as a
     table partitioned by (band, fp-prefix) instead of deriving it per run.
 
@@ -395,10 +636,9 @@ def dedup_incremental_near(
     recall guarantee)."""
     from ..operators import dedup as DD
 
-    manifest = read_near_manifest(store_dir)
-    if batch_id in manifest["batches"]:
+    m = _NEAR.begin(store_dir, batch_id)
+    if m is None:
         return docs.filter(F.lit(False))
-    os.makedirs(store_dir, exist_ok=True)
     rows_per_band = num_hashes // bands
     eligible = docs.filter(
         F.col(text_col).isNotNull() & (F.length(text_col) >= k)
@@ -470,39 +710,21 @@ def dedup_incremental_near(
         )
         .dropDuplicates(["sid"])
     )
-    batch_dir = os.path.join(store_dir, NEAR_SIG_DIR, f"batch_id={batch_id}")
-    if os.path.exists(batch_dir):  # torn previous attempt: clean re-write
-        shutil.rmtree(batch_dir)
-    kept_sigs.write.parquet(batch_dir)
-    manifest["batches"] = sorted(manifest["batches"] + [batch_id])
-    tmp = os.path.join(store_dir, NEAR_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(store_dir, NEAR_MANIFEST))
+    kept_sigs.write.parquet(_NEAR.batch_dir(store_dir, batch_id))
+    _NEAR.commit(store_dir, m, batch_id)
     return survivors.unionByName(passthrough)
 
 
-IMG_FP_DIR = "_image_fps"
-IMG_MANIFEST = "_image_fp_manifest.json"
-
-
-def read_img_manifest(store_dir: str) -> dict:
-    path = os.path.join(store_dir, IMG_MANIFEST)
-    if not os.path.exists(path):
-        return {"batches": []}
-    with open(path) as f:
-        return json.load(f)
+# ---------------------------------------------------------------------------
+# Image phash ledger.
+# ---------------------------------------------------------------------------
 
 
 def read_committed_phashes(
     spark: SparkSession, store_dir: str
 ) -> DataFrame | None:
     """(phash, batch_id) of every COMMITTED batch; None when empty."""
-    manifest = read_img_manifest(store_dir)
-    if not manifest["batches"]:
-        return None
-    df = spark.read.parquet(os.path.join(store_dir, IMG_FP_DIR))
-    return df.filter(F.col("batch_id").isin(manifest["batches"]))
+    return _IMG.read(spark, store_dir)
 
 
 def dedup_incremental_image(
@@ -529,8 +751,7 @@ def dedup_incremental_image(
        ``dedup.int_band_explode`` — and drops every fingerprint group
        within ``max_hamming`` (popcount verify) of committed content,
     3. near-dedups WITHIN the surviving batch (``dedup.dedup_image_near``),
-    4. commits the survivors' fingerprints atomically (manifest rule;
-       idempotent replay, torn writes cleaned).
+    4. commits the survivors' fingerprints as this batch.
 
     Pass rows pre-filtered to valid images (decodable, the pipeline's keep
     set) — fingerprints of undecodable rows are not meaningful.
@@ -541,10 +762,9 @@ def dedup_incremental_image(
     """
     from ..operators import dedup as DD
 
-    manifest = read_img_manifest(store_dir)
-    if batch_id in manifest["batches"]:
+    m = _IMG.begin(store_dir, batch_id)
+    if m is None:
         return images.filter(F.lit(False))
-    os.makedirs(store_dir, exist_ok=True)
     band_bits = bits // bands
     survivors = images
     archive = read_committed_phashes(spark, store_dir)
@@ -577,62 +797,23 @@ def dedup_incremental_image(
         survivors, id_col=id_col, fp_col=fp_col, bands=bands,
         max_hamming=max_hamming,
     )
-    batch_dir = os.path.join(store_dir, IMG_FP_DIR, f"batch_id={batch_id}")
-    if os.path.exists(batch_dir):  # torn previous attempt: clean re-write
-        shutil.rmtree(batch_dir)
-    survivors.select(fp_col).distinct().write.parquet(batch_dir)
-    manifest["batches"] = sorted(manifest["batches"] + [batch_id])
-    tmp = os.path.join(store_dir, IMG_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(store_dir, IMG_MANIFEST))
+    survivors.select(fp_col).distinct().write.parquet(
+        _IMG.batch_dir(store_dir, batch_id)
+    )
+    _IMG.commit(store_dir, m, batch_id)
     return survivors
 
 
-def read_committed(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read back only manifest-committed buckets (snapshot isolation)."""
-    manifest = read_manifest(out_dir)
-    committed = sorted(int(b) for b in manifest["committed"])
-    df = spark.read.parquet(out_dir)
-    return df.filter(F.col("bucket").isin(committed))
-
-
-def read_committed_metrics(
-    spark: SparkSession, out_dir: str, which: str = RULE_METRICS_DIR
-) -> DataFrame:
-    """Committed per-bucket quality-metric rows (same snapshot rule as the
-    data: only manifest-listed buckets are trusted)."""
-    manifest = read_manifest(out_dir)
-    committed = sorted(int(b) for b in manifest["committed"])
-    df = spark.read.parquet(os.path.join(out_dir, which))
-    return df.filter(F.col("bucket").isin(committed))
-
-
 # ---------------------------------------------------------------------------
-# Incremental cross-run EMBEDDING near-dup dedup — fourth committed ledger.
+# Embedding near-dup ledger.
 # ---------------------------------------------------------------------------
-
-EMB_DIR = "_embedding_ledger"
-EMB_MANIFEST = "_embedding_manifest.json"
-
-
-def read_emb_manifest(store_dir: str) -> dict:
-    path = os.path.join(store_dir, EMB_MANIFEST)
-    if not os.path.exists(path):
-        return {"batches": []}
-    with open(path) as f:
-        return json.load(f)
 
 
 def read_committed_embeddings(
     spark: SparkSession, store_dir: str
 ) -> DataFrame | None:
     """(embedding, efp, batch_id) of every COMMITTED batch; None if empty."""
-    manifest = read_emb_manifest(store_dir)
-    if not manifest["batches"]:
-        return None
-    df = spark.read.parquet(os.path.join(store_dir, EMB_DIR))
-    return df.filter(F.col("batch_id").isin(manifest["batches"]))
+    return _EMB.read(spark, store_dir)
 
 
 def dedup_incremental_embedding(
@@ -667,16 +848,14 @@ def dedup_incremental_embedding(
        content are dropped;
     2. near-dedups WITHIN the surviving batch
        (``similarity.dedup_embedding_near``);
-    3. commits the survivors' (embedding, fingerprint) atomically under
-       the manifest rule (idempotent replay, torn batches invisible).
+    3. commits the survivors' (embedding, fingerprint) as this batch.
     """
     from ..operators import dedup as DD
     from ..operators import similarity as SIM
 
-    manifest = read_emb_manifest(store_dir)
-    if batch_id in manifest["batches"]:
+    m = _EMB.begin(store_dir, batch_id)
+    if m is None:
         return df.filter(F.lit(False))
-    os.makedirs(store_dir, exist_ok=True)
     band_bits = bits // bands
     fp_expr = F.expr(SIM.rp_bucket_spark_sql(vec_col, bits, dim))
     survivors = df
@@ -726,34 +905,16 @@ def dedup_incremental_embedding(
         max_hamming=max_hamming,
         min_cos=min_cos,
     )
-    batch_dir = os.path.join(store_dir, EMB_DIR, f"batch_id={batch_id}")
-    if os.path.exists(batch_dir):  # torn previous attempt: clean re-write
-        shutil.rmtree(batch_dir)
     survivors.select(F.col(vec_col), fp_expr.alias("efp")).distinct().write.parquet(
-        batch_dir
+        _EMB.batch_dir(store_dir, batch_id)
     )
-    manifest["batches"] = sorted(manifest["batches"] + [batch_id])
-    tmp = os.path.join(store_dir, EMB_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(store_dir, EMB_MANIFEST))
+    _EMB.commit(store_dir, m, batch_id)
     return survivors
 
 
 # ---------------------------------------------------------------------------
 # Contamination ledger: committed eval/benchmark n-gram fingerprints.
 # ---------------------------------------------------------------------------
-
-CONTAM_DIR = "_contam_grams"
-CONTAM_MANIFEST = "_contam_manifest.json"
-
-
-def read_contam_manifest(store_dir: str) -> dict:
-    path = os.path.join(store_dir, CONTAM_MANIFEST)
-    if not os.path.exists(path):
-        return {"batches": [], "n": None}
-    with open(path) as f:
-        return json.load(f)
 
 
 def commit_contamination(
@@ -766,55 +927,32 @@ def commit_contamination(
     n: int = 3,
 ) -> None:
     """Commit an eval/benchmark corpus's word-n-gram fingerprints as a
-    FIXED contamination ledger batch (atomic-manifest rule, idempotent
-    replay, torn writes cleaned — same contract as the dedup ledgers).
+    FIXED contamination ledger batch.
 
     Stores only ``(eval_id, gram)`` hashed grams — never eval text, so the
     ledger can ship next to a training corpus without leaking benchmark
-    content.  All batches must use one gram size ``n``; a mismatch raises
-    (mixed gram sizes would silently under-count containment).
+    content.  The gram size ``n`` is pinned: mixed gram sizes would
+    silently under-count containment.
     """
     from ..operators import decontam as DC
 
-    manifest = read_contam_manifest(store_dir)
-    # gram-size check FIRST: a replayed batch_id with a DIFFERENT n must
-    # raise, not silently no-op (the caller would believe an n-gram
-    # ledger exists that does not)
-    if manifest["n"] is not None and manifest["n"] != n:
-        raise ValueError(
-            f"contamination ledger at {store_dir!r} was built with n="
-            f"{manifest['n']}, refusing to commit a batch with n={n}"
-        )
-    if batch_id in manifest["batches"]:
+    m = _CONTAM.begin(store_dir, batch_id, n=n)
+    if m is None:
         return
-    os.makedirs(store_dir, exist_ok=True)
-    batch_dir = os.path.join(store_dir, CONTAM_DIR, f"batch_id={batch_id}")
-    if os.path.exists(batch_dir):  # torn previous attempt: clean re-write
-        shutil.rmtree(batch_dir)
     DC.eval_gram_table(eval_docs, text_col, id_col, n).write.parquet(
-        batch_dir
+        _CONTAM.batch_dir(store_dir, batch_id)
     )
-    manifest["batches"] = sorted(manifest["batches"] + [batch_id])
-    manifest["n"] = n
-    tmp = os.path.join(store_dir, CONTAM_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(store_dir, CONTAM_MANIFEST))
+    _CONTAM.commit(store_dir, m, batch_id)
 
 
 def read_contamination(
     spark: SparkSession, store_dir: str
 ) -> tuple[DataFrame, int] | None:
     """((eval_id, gram) relation of every COMMITTED batch, gram size n);
-    None when the ledger is empty.  Torn writes are invisible."""
-    manifest = read_contam_manifest(store_dir)
-    if not manifest["batches"]:
-        return None
-    df = spark.read.parquet(os.path.join(store_dir, CONTAM_DIR))
-    grams = df.filter(
-        F.col("batch_id").isin(manifest["batches"])
-    ).select("eval_id", "gram")
-    return grams, manifest["n"]
+    None when the ledger is empty."""
+    m = _CONTAM.manifest(store_dir)
+    grams = _CONTAM.read(spark, store_dir, m)
+    return None if grams is None else (grams.select("eval_id", "gram"), m["n"])
 
 
 def decontaminate_committed(
@@ -845,27 +983,13 @@ def decontaminate_committed(
 # Line-fingerprint ledger: cross-run C4-style boilerplate removal.
 # ---------------------------------------------------------------------------
 
-LINE_FP_DIR = "_line_fps"
-LINE_MANIFEST = "_line_fp_manifest.json"
-
-
-def read_line_manifest(store_dir: str) -> dict:
-    path = os.path.join(store_dir, LINE_MANIFEST)
-    if not os.path.exists(path):
-        return {"batches": []}
-    with open(path) as f:
-        return json.load(f)
-
 
 def read_committed_line_fps(
     spark: SparkSession, store_dir: str
 ) -> DataFrame | None:
     """(fp) of every COMMITTED batch's kept lines; None when empty."""
-    manifest = read_line_manifest(store_dir)
-    if not manifest["batches"]:
-        return None
-    df = spark.read.parquet(os.path.join(store_dir, LINE_FP_DIR))
-    return df.filter(F.col("batch_id").isin(manifest["batches"])).select("fp")
+    fps = _LINES.read(spark, store_dir)
+    return None if fps is None else fps.select("fp")
 
 
 def prepare_incremental_lines(
@@ -888,17 +1012,14 @@ def prepare_incremental_lines(
     retry with the same batch_id is refused (idempotence contract) and a
     retry with a new batch_id drops every line as 'already seen'.  With
     prepare/finalize, a crash before finalize leaves the batch
-    UNCOMMITTED: the torn fingerprint parquet is invisible (manifest
-    rule) and a clean retry re-prepares from scratch.
+    UNCOMMITTED and a clean retry re-prepares from scratch.
 
     Idempotent replay of a COMMITTED batch still returns the empty
     relation here."""
     from ..operators import dedup as DD
 
-    manifest = read_line_manifest(store_dir)
-    if batch_id in manifest["batches"]:
+    if _LINES.begin(store_dir, batch_id) is None:
         return docs.filter(F.lit(False))
-    os.makedirs(store_dir, exist_ok=True)
     archive = read_committed_line_fps(spark, store_dir)
     survivors = DD.dedup_lines(
         docs,
@@ -916,31 +1037,24 @@ def prepare_incremental_lines(
         .select(F.xxhash64("_line").alias("fp"))
         .distinct()
     )
-    batch_dir = os.path.join(store_dir, LINE_FP_DIR, f"batch_id={batch_id}")
-    if os.path.exists(batch_dir):  # torn previous attempt: clean re-write
-        shutil.rmtree(batch_dir)
-    kept_fps.write.parquet(batch_dir)
+    kept_fps.write.parquet(_LINES.batch_dir(store_dir, batch_id))
     return survivors
 
 
 def finalize_incremental_lines(store_dir: str, batch_id: str) -> None:
-    """FINALIZE half: atomically commit ``batch_id`` to the line-ledger
-    manifest.  Refuses if the prepare phase's parquet is absent (nothing
-    to commit); replaying an already-committed batch is a no-op."""
-    manifest = read_line_manifest(store_dir)
-    if batch_id in manifest["batches"]:
+    """FINALIZE half: commit ``batch_id`` to the line ledger.  Refuses if
+    the prepare phase's parquet is absent (nothing to commit); replaying
+    an already-committed batch is a no-op."""
+    m = _LINES.begin(store_dir, batch_id)
+    if m is None:
         return
-    batch_dir = os.path.join(store_dir, LINE_FP_DIR, f"batch_id={batch_id}")
+    batch_dir = _LINES.path(store_dir, batch_id)
     if not os.path.exists(batch_dir):
         raise ValueError(
             f"finalize_incremental_lines: no prepared fingerprints at "
             f"{batch_dir!r} — run prepare_incremental_lines first"
         )
-    manifest["batches"] = sorted(manifest["batches"] + [batch_id])
-    tmp = os.path.join(store_dir, LINE_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(store_dir, LINE_MANIFEST))
+    _LINES.commit(store_dir, m, batch_id)
 
 
 def dedup_incremental_lines(
@@ -962,11 +1076,10 @@ def dedup_incremental_lines(
     reassembled (``dedup.dedup_lines(archived_fps=...)``).
 
     The ledger stores 8 bytes per distinct kept line (xxhash64), never
-    text, partitioned by batch under the atomic-manifest rule: idempotent
-    replay, torn writes invisible.  Scale shape: the archive join is an
-    equi-join on the line fingerprint (shuffle = new batch's distinct
-    lines), and the commit writes only the SURVIVING lines' distinct
-    fingerprints — the archive grows with unique content, not crawls.
+    text.  Scale shape: the archive join is an equi-join on the line
+    fingerprint (shuffle = new batch's distinct lines), and the commit
+    writes only the SURVIVING lines' distinct fingerprints — the archive
+    grows with unique content, not crawls.
 
     This convenience form commits IMMEDIATELY (prepare + finalize in one
     call) — correct when the survivors relation itself is the output.
@@ -982,27 +1095,14 @@ def dedup_incremental_lines(
 
 
 # ---------------------------------------------------------------------------
-# Cross-run KMV sketch ledger: distinct-cardinality tracking across crawls
-# WITHOUT rescanning history.  The mergeability of bottom-k sketches
+# KMV sketch ledger: distinct-cardinality tracking across crawls WITHOUT
+# rescanning history.  The mergeability of bottom-k sketches
 # (operators/sketches.py) is exactly what a ledger needs: each crawl
 # commits only its per-group bottom-k hash sets (k · |groups| rows — KB,
 # not corpus-sized), and the union's estimate is recomputed from the
-# merged bottom-k sets alone.  Same atomic-manifest commit rule as every
-# other ledger here; k is pinned in the manifest (sketches of different
-# k do not merge at full precision — refuse loudly rather than silently
-# degrade).
+# merged bottom-k sets alone.  k is pinned: sketches of different k do not
+# merge at full precision — refuse loudly rather than silently degrade.
 # ---------------------------------------------------------------------------
-
-KMV_MANIFEST = "_kmv_manifest.json"
-KMV_DIR = "kmv_sketches"
-
-
-def read_kmv_manifest(store_dir: str) -> dict:
-    path = os.path.join(store_dir, KMV_MANIFEST)
-    if not os.path.exists(path):
-        return {"batches": [], "k": None, "group_cols": None}
-    with open(path) as f:
-        return json.load(f)
 
 
 def commit_kmv_sketch(
@@ -1019,24 +1119,14 @@ def commit_kmv_sketch(
     — the sketch algebra makes replay naturally idempotent); committing
     with a different ``k`` or group columns than the ledger was created
     with raises."""
-    from ..operators import sketches as SK
     from ..functions import hashing as HH
     from pyspark.sql import Window
 
-    manifest = read_kmv_manifest(store_dir)
-    if manifest["k"] is not None and (
-        manifest["k"] != k or manifest["group_cols"] != group_cols
-    ):
-        raise ValueError(
-            f"ledger at {store_dir!r} is pinned to k={manifest['k']} "
-            f"group_cols={manifest['group_cols']}; got k={k} "
-            f"group_cols={group_cols}"
-        )
-    if batch_id in manifest["batches"]:
+    m = _KMV.begin(store_dir, batch_id, k=k, group_cols=list(group_cols))
+    if m is None:
         return  # sketch union is idempotent; nothing to add
     if k < 2:
         raise ValueError(f"k must be >= 2, got {k}")
-    os.makedirs(store_dir, exist_ok=True)
     h = F.expr(HH.h60_spark_sql(f"CAST({value_col} AS STRING)"))
     distinct = (
         df.filter(F.col(value_col).isNotNull())
@@ -1047,17 +1137,8 @@ def commit_kmv_sketch(
     bottom = distinct.withColumn("_rn", F.row_number().over(w)).filter(
         F.col("_rn") <= k
     ).drop("_rn")
-    batch_dir = os.path.join(store_dir, KMV_DIR, f"batch_id={batch_id}")
-    if os.path.exists(batch_dir):  # torn previous attempt
-        shutil.rmtree(batch_dir)
-    bottom.write.parquet(batch_dir)
-    manifest["batches"] = sorted(manifest["batches"] + [batch_id])
-    manifest["k"] = k
-    manifest["group_cols"] = list(group_cols)
-    tmp = os.path.join(store_dir, KMV_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(store_dir, KMV_MANIFEST))
+    bottom.write.parquet(_KMV.batch_dir(store_dir, batch_id))
+    _KMV.commit(store_dir, m, batch_id)
 
 
 def kmv_ledger_estimate(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -1069,16 +1150,9 @@ def kmv_ledger_estimate(spark: SparkSession, store_dir: str) -> DataFrame:
     from ..operators import sketches as SK
     from pyspark.sql import Window
 
-    manifest = read_kmv_manifest(store_dir)
-    if not manifest["batches"]:
-        raise ValueError(f"no committed sketches at {store_dir!r}")
-    k, group_cols = manifest["k"], manifest["group_cols"]
-    rel = (
-        spark.read.parquet(os.path.join(store_dir, KMV_DIR))
-        .filter(F.col("batch_id").isin(manifest["batches"]))
-        .select(*group_cols, "h")
-        .distinct()
-    )
+    m = _KMV.committed(store_dir)
+    k, group_cols = m["k"], m["group_cols"]
+    rel = _KMV.read(spark, store_dir, m).select(*group_cols, "h").distinct()
     w = Window.partitionBy(*group_cols).orderBy("h")
     sk = (
         rel.withColumn("_rn", F.row_number().over(w))
@@ -1097,28 +1171,15 @@ def kmv_ledger_estimate(spark: SparkSession, store_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Cross-run COUNT-MIN frequency ledger (the 7th ledger): per-crawl CMS
-# cell tables committed under the same atomic-manifest rule; the merged
+# COUNT-MIN frequency ledger: per-crawl CMS cell tables; the merged
 # corpus-union sketch is the CELL-WISE SUM of committed sketches, so
 # token-frequency estimates over every crawl ever seen cost depth·width
 # rows per crawl — history is never rescanned.  Unlike the KMV ledger
 # (set union — naturally idempotent), CMS merge is ADDITIVE: replaying a
-# committed batch would double its counts, so the manifest guard is the
-# correctness mechanism here, not just bookkeeping.
+# committed batch would double its counts, so the replay guard is the
+# correctness mechanism here, not just bookkeeping.  Geometry is pinned:
+# cells from different depth/width cannot be summed.
 # ---------------------------------------------------------------------------
-
-CMS_MANIFEST = "_cms_manifest.json"
-CMS_DIR = "cms_sketches"
-
-
-def read_cms_manifest(store_dir: str) -> dict:
-    path = os.path.join(store_dir, CMS_MANIFEST)
-    if not os.path.exists(path):
-        return {"batches": [], "segments": [], "depth": None, "width": None}
-    with open(path) as f:
-        m = json.load(f)
-    m.setdefault("segments", list(m["batches"]))  # pre-compaction manifest
-    return m
 
 
 def commit_cms_sketch(
@@ -1131,37 +1192,23 @@ def commit_cms_sketch(
     width: int | None = None,
 ) -> None:
     """Commit one crawl's count-min cells.  Replaying a committed
-    ``batch_id`` is a guarded no-op (additive merge — see module note);
-    committing with different depth/width than the ledger pin raises
-    (cells from different geometries cannot be summed)."""
+    ``batch_id`` is a guarded no-op; different depth/width than the
+    ledger pin raises."""
     from ..operators import sketches as SK
 
     depth = SK.CMS_DEPTH if depth is None else depth
     width = SK.CMS_WIDTH if width is None else width
-    manifest = read_cms_manifest(store_dir)
-    if manifest["depth"] is not None and (
-        manifest["depth"] != depth or manifest["width"] != width
-    ):
-        raise ValueError(
-            f"ledger at {store_dir!r} is pinned to depth="
-            f"{manifest['depth']} width={manifest['width']}; got "
-            f"depth={depth} width={width}"
-        )
-    if batch_id in manifest["batches"]:
+    m = _CMS.begin(store_dir, batch_id, depth=depth, width=width)
+    if m is None:
         return
-    os.makedirs(store_dir, exist_ok=True)
-    cells = SK.count_min_sketch(df, value_col, depth=depth, width=width)
-    batch_dir = os.path.join(store_dir, CMS_DIR, f"batch_id={batch_id}")
-    if os.path.exists(batch_dir):  # torn previous attempt
-        shutil.rmtree(batch_dir)
-    cells.write.parquet(batch_dir)
-    manifest["batches"] = sorted(manifest["batches"] + [batch_id])
-    manifest["segments"] = sorted(manifest["segments"] + [batch_id])
-    manifest["depth"], manifest["width"] = depth, width
-    tmp = os.path.join(store_dir, CMS_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(store_dir, CMS_MANIFEST))
+    SK.count_min_sketch(df, value_col, depth=depth, width=width).write.parquet(
+        _CMS.batch_dir(store_dir, batch_id)
+    )
+    _CMS.commit(store_dir, m, batch_id)
+
+
+def _cms_merge(cells: DataFrame) -> DataFrame:
+    return cells.groupBy("row_idx", "col").agg(F.sum("cnt").alias("cnt"))
 
 
 def cms_ledger_cells(
@@ -1173,61 +1220,25 @@ def cms_ledger_cells(
     were never counted and silently UNDERestimate (breaking the
     one-sided contract); pass depth/width straight into
     :func:`..operators.sketches.cms_estimate_expr`."""
-    manifest = read_cms_manifest(store_dir)
-    if not manifest["batches"]:
-        raise ValueError(f"no committed sketches at {store_dir!r}")
-    merged = _cms_merged_df(spark, store_dir, manifest).collect()
+    m = _CMS.committed(store_dir)
+    merged = _cms_merge(_CMS.read(spark, store_dir, m)).collect()
     cells = {(r["row_idx"], r["col"]): r["cnt"] for r in merged}
-    return cells, manifest["depth"], manifest["width"]
-
-
-def _cms_merged_df(
-    spark: SparkSession, store_dir: str, manifest: dict
-) -> DataFrame:
-    return (
-        spark.read.parquet(os.path.join(store_dir, CMS_DIR))
-        .filter(F.col("batch_id").isin(manifest["segments"]))
-        .groupBy("row_idx", "col")
-        .agg(F.sum("cnt").alias("cnt"))
-    )
+    return cells, m["depth"], m["width"]
 
 
 def compact_cms_ledger(spark: SparkSession, store_dir: str) -> None:
     """Fold the CMS ledger's live segments into one base partition —
-    cell counts are pure sums, so the additive-compaction discipline
-    (see :func:`compact_link_ledger`) applies verbatim; geometry pins
-    ride along untouched in the manifest."""
-    manifest = read_cms_manifest(store_dir)
-    if not manifest["batches"]:
-        raise ValueError(f"no committed sketches at {store_dir!r}")
-    _compact_additive_ledger(
-        manifest,
-        store_dir,
-        CMS_MANIFEST,
-        CMS_DIR,
-        _cms_merged_df(spark, store_dir, manifest),
-    )
+    cell counts are pure sums, so the merged cells are unchanged."""
+    _CMS.compact(spark, store_dir, _cms_merge)
 
 
 # ---------------------------------------------------------------------------
-# Committed CORPUS-STATS baseline (drift ledger): per-group (n, kept)
-# stats of each crawl committed under the atomic-manifest rule, so the
-# q76 drift check can run "this crawl vs the last COMMITTED one" without
-# rescanning history — the operational form of the reference's
-# historical-stats comparison (charge_analysis_checks.py:617-905, which
-# reads a PERSISTED stats collection, exactly this).
+# CORPUS-STATS baseline (drift ledger): per-group (n, kept) stats of each
+# crawl, so the q76 drift check can run "this crawl vs the last COMMITTED
+# one" without rescanning history — the operational form of the
+# reference's historical-stats comparison (charge_analysis_checks.py:
+# 617-905, which reads a PERSISTED stats collection, exactly this).
 # ---------------------------------------------------------------------------
-
-STATS_MANIFEST = "_stats_manifest.json"
-STATS_DIR = "corpus_stats"
-
-
-def read_stats_manifest(store_dir: str) -> dict:
-    path = os.path.join(store_dir, STATS_MANIFEST)
-    if not os.path.exists(path):
-        return {"batches": [], "group_col": None}
-    with open(path) as f:
-        return json.load(f)
 
 
 def commit_corpus_stats(
@@ -1243,26 +1254,13 @@ def commit_corpus_stats(
     different group column than the ledger pin raises."""
     from ..operators.drift import _group_stats
 
-    manifest = read_stats_manifest(store_dir)
-    if manifest["group_col"] is not None and manifest["group_col"] != group_col:
-        raise ValueError(
-            f"stats ledger at {store_dir!r} is pinned to "
-            f"group_col={manifest['group_col']!r}; got {group_col!r}"
-        )
-    if batch_id in manifest["batches"]:
+    m = _STATS.begin(store_dir, batch_id, group_col=group_col)
+    if m is None:
         return
-    os.makedirs(store_dir, exist_ok=True)
-    stats = _group_stats(df, group_col, keep)
-    batch_dir = os.path.join(store_dir, STATS_DIR, f"batch_id={batch_id}")
-    if os.path.exists(batch_dir):  # torn previous attempt
-        shutil.rmtree(batch_dir)
-    stats.write.parquet(batch_dir)
-    manifest["batches"] = sorted(set(manifest["batches"]) | {batch_id})
-    manifest["group_col"] = group_col
-    tmp = os.path.join(store_dir, STATS_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(store_dir, STATS_MANIFEST))
+    _group_stats(df, group_col, keep).write.parquet(
+        _STATS.batch_dir(store_dir, batch_id)
+    )
+    _STATS.commit(store_dir, m, batch_id)
 
 
 def drift_vs_committed(
@@ -1279,18 +1277,16 @@ def drift_vs_committed(
     current corpus is scanned once; the baseline costs |groups| rows."""
     from ..operators import drift as DR
 
-    manifest = read_stats_manifest(store_dir)
-    if not manifest["batches"]:
-        raise ValueError(f"no committed stats at {store_dir!r}")
-    batch = baseline_batch or manifest["batches"][-1]
-    if batch not in manifest["batches"]:
+    m = _STATS.committed(store_dir)
+    batch = baseline_batch or m["batches"][-1]
+    if batch not in m["batches"]:
         raise ValueError(
             f"baseline batch {batch!r} not committed (have "
-            f"{manifest['batches']})"
+            f"{m['batches']})"
         )
-    group_col = manifest["group_col"]
+    group_col = m["group_col"]
     base = (
-        spark.read.parquet(os.path.join(store_dir, STATS_DIR))
+        _STATS.read(spark, store_dir, m)
         .filter(F.col("batch_id") == batch)
         .select(group_col, "n", "kept")
     )
@@ -1309,26 +1305,12 @@ def drift_vs_committed(
 
 
 # ---------------------------------------------------------------------------
-# Cross-crawl BLOOM frontier ledger (9th ledger): each crawl commits the
-# distinct bit POSITIONS its keys set; the merged frontier filter is the
-# plain set union of committed positions — like the KMV ledger (and
-# unlike the CMS), union is naturally idempotent, so replay is safe by
-# algebra, and the merged filter keeps the no-false-negative guarantee
-# over every crawl ever committed.  ≤ m ints per crawl.
+# BLOOM frontier ledger: each crawl commits the distinct bit POSITIONS its
+# keys set; the merged frontier filter is the plain set union of committed
+# positions — like the KMV ledger (and unlike the CMS), union is naturally
+# idempotent, and the merged filter keeps the no-false-negative guarantee
+# over every crawl ever committed.  ≤ m ints per crawl; k/m are pinned.
 # ---------------------------------------------------------------------------
-
-BLOOM_MANIFEST = "_bloom_manifest.json"
-BLOOM_DIR = "bloom_positions"
-
-
-def read_bloom_manifest(store_dir: str) -> dict:
-    path = os.path.join(store_dir, BLOOM_MANIFEST)
-    if not os.path.exists(path):
-        return {"batches": [], "segments": [], "k": None, "m": None}
-    with open(path) as f:
-        m = json.load(f)
-    m.setdefault("segments", list(m["batches"]))  # pre-compaction manifest
-    return m
 
 
 def commit_bloom(
@@ -1345,29 +1327,17 @@ def commit_bloom(
 
     k = SK.BLOOM_K if k is None else k
     m = SK.BLOOM_BITS if m is None else m
-    manifest = read_bloom_manifest(store_dir)
-    if manifest["k"] is not None and (
-        manifest["k"] != k or manifest["m"] != m
-    ):
-        raise ValueError(
-            f"bloom ledger at {store_dir!r} is pinned to k={manifest['k']} "
-            f"m={manifest['m']}; got k={k} m={m}"
-        )
-    if batch_id in manifest["batches"]:
+    manifest = _BLOOM.begin(store_dir, batch_id, k=k, m=m)
+    if manifest is None:
         return
-    os.makedirs(store_dir, exist_ok=True)
-    pos = SK.bloom_build(df, value_col, k=k, m=m)
-    batch_dir = os.path.join(store_dir, BLOOM_DIR, f"batch_id={batch_id}")
-    if os.path.exists(batch_dir):  # torn previous attempt
-        shutil.rmtree(batch_dir)
-    pos.write.parquet(batch_dir)
-    manifest["batches"] = sorted(set(manifest["batches"]) | {batch_id})
-    manifest["segments"] = sorted(set(manifest["segments"]) | {batch_id})
-    manifest["k"], manifest["m"] = k, m
-    tmp = os.path.join(store_dir, BLOOM_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(store_dir, BLOOM_MANIFEST))
+    SK.bloom_build(df, value_col, k=k, m=m).write.parquet(
+        _BLOOM.batch_dir(store_dir, batch_id)
+    )
+    _BLOOM.commit(store_dir, manifest, batch_id)
+
+
+def _bloom_merge(positions: DataFrame) -> DataFrame:
+    return positions.select("pos").distinct()
 
 
 def bloom_ledger_words(
@@ -1377,69 +1347,32 @@ def bloom_ledger_words(
     crawl — feed straight into sketches.bloom_probe."""
     from ..operators import sketches as SK
 
-    manifest = read_bloom_manifest(store_dir)
-    if not manifest["batches"]:
-        raise ValueError(f"no committed bloom filters at {store_dir!r}")
-    rows = _bloom_merged_df(spark, store_dir, manifest).collect()
-    words = SK.bloom_words((r["pos"] for r in rows), m=manifest["m"])
-    return words, manifest["k"], manifest["m"]
-
-
-def _bloom_merged_df(
-    spark: SparkSession, store_dir: str, manifest: dict
-) -> DataFrame:
-    return (
-        spark.read.parquet(os.path.join(store_dir, BLOOM_DIR))
-        .filter(F.col("batch_id").isin(manifest["segments"]))
-        .select("pos")
-        .distinct()
-    )
+    m = _BLOOM.committed(store_dir)
+    rows = _bloom_merge(_BLOOM.read(spark, store_dir, m)).collect()
+    words = SK.bloom_words((r["pos"] for r in rows), m=m["m"])
+    return words, m["k"], m["m"]
 
 
 def compact_bloom_ledger(spark: SparkSession, store_dir: str) -> None:
     """Fold the bloom ledger's live segments into one base partition —
-    set positions are a pure union (≤ m rows after distinct), so the
-    additive-compaction discipline (see :func:`compact_link_ledger`)
-    applies verbatim; the k/m geometry pins ride along untouched."""
-    manifest = read_bloom_manifest(store_dir)
-    if not manifest["batches"]:
-        raise ValueError(f"no committed bloom filters at {store_dir!r}")
-    _compact_additive_ledger(
-        manifest,
-        store_dir,
-        BLOOM_MANIFEST,
-        BLOOM_DIR,
-        _bloom_merged_df(spark, store_dir, manifest),
-    )
+    set positions are a pure union (≤ m rows after distinct)."""
+    _BLOOM.compact(spark, store_dir, _bloom_merge)
 
 
 # ---------------------------------------------------------------------------
-# Cross-run SESSIONIZATION ledger (10th ledger): gap-based sessions over
-# an append-only event log that arrives in daily/hourly batches — the
-# batch operator (operators/sessions.py) needs a user's full history in
-# one frame; this needs only |users| rows of committed state: each
-# user's last event time and running session count.  A batch's first
-# session STITCHES onto the archived tail when the cross-batch gap is
-# within the threshold; everything else offsets by the archived count.
-# State is per-user and bounded; events inside a batch may arrive in any
-# order (the window sorts them), but BATCHES must be time-ordered per
-# user (append-only log contract — a late batch would need reprocessing
-# from its own time forward, exactly as in any event-time system).
-# Atomic manifest rule as everywhere; replaying a committed batch
-# returns its stored annotation without touching state.
+# SESSIONIZATION ledger: gap-based sessions over an append-only event log
+# that arrives in daily/hourly batches — the batch operator
+# (operators/sessions.py) needs a user's full history in one frame; this
+# needs only |users| rows of committed state: each user's last event time
+# and running session count.  A batch's first session STITCHES onto the
+# archived tail when the cross-batch gap is within the threshold;
+# everything else offsets by the archived count.  Events inside a batch
+# may arrive in any order (the window sorts them), but BATCHES must be
+# time-ordered per user (append-only log contract — a late batch would
+# need reprocessing from its own time forward, exactly as in any
+# event-time system).  Replaying a committed batch returns its stored
+# annotation without touching state.
 # ---------------------------------------------------------------------------
-
-SESS_MANIFEST = "_sessions_manifest.json"
-SESS_STATE_DIR = "session_state"
-SESS_OUT_DIR = "session_batches"
-
-
-def read_sessions_manifest(store_dir: str) -> dict:
-    path = os.path.join(store_dir, SESS_MANIFEST)
-    if not os.path.exists(path):
-        return {"batches": [], "gap_us": None}
-    with open(path) as f:
-        return json.load(f)
 
 
 def sessionize_incremental(
@@ -1454,39 +1387,28 @@ def sessionize_incremental(
 ) -> DataFrame:
     """Annotate this batch's events with GLOBAL ``session_idx`` values
     that continue across every previously committed batch, then commit
-    the updated per-user state atomically.  Returns the annotated
-    batch (read back from the committed parquet — what was durably
-    written is what downstream sees)."""
+    the updated per-user state.  Returns the annotated batch (read back
+    from the written parquet — what was durably written is what
+    downstream sees)."""
     from ..operators import sessions as SN
 
     gap_us = SN.DEFAULT_GAP_US if gap_us is None else gap_us
-    manifest = read_sessions_manifest(store_dir)
-    if manifest["gap_us"] is not None and manifest["gap_us"] != gap_us:
-        raise ValueError(
-            f"session ledger at {store_dir!r} is pinned to gap_us="
-            f"{manifest['gap_us']}; got {gap_us}"
-        )
+    m = _SESS.begin(store_dir, batch_id, gap_us=gap_us)
     out_dir = os.path.join(store_dir, SESS_OUT_DIR, f"batch_id={batch_id}")
-    if batch_id in manifest["batches"]:
+    if m is None:
         return spark.read.parquet(out_dir)  # replay: stored annotation
-    os.makedirs(store_dir, exist_ok=True)
 
     local = SN.sessionize(
         events, user_col=user_col, ts_col=ts_col,
         order_col=order_col, gap_us=gap_us,
     ).withColumn("_us", F.unix_micros(F.col(ts_col).cast("timestamp")))
 
-    batches = manifest["batches"]
-    if batches:
-        prev_state = (
-            spark.read.parquet(os.path.join(store_dir, SESS_STATE_DIR))
-            .filter(F.col("state_batch") == batches[-1])
-            .select(user_col, "last_ts_us", "n_sessions")
-        )
-    else:
+    prev_state = _SESS.read(spark, store_dir, m)
+    if prev_state is None:
         prev_state = spark.createDataFrame(
             [], f"{user_col} long, last_ts_us long, n_sessions long"
         )
+    prev_state = prev_state.select(user_col, "last_ts_us", "n_sessions")
 
     firsts = local.groupBy(user_col).agg(F.min("_us").alias("_first_us"))
     stitch = (
@@ -1508,8 +1430,7 @@ def sessionize_incremental(
         )
         .drop("_base", "_stitched")
     )
-    # data first, manifest last (torn batches invisible)
-    annotated.drop("_us").write.parquet(out_dir)
+    annotated.drop("_us").write.parquet(_clear(out_dir))
 
     new_state = (
         annotated.groupBy(user_col)
@@ -1523,53 +1444,25 @@ def sessionize_incremental(
                 firsts.select(user_col), user_col, "left_anti"
             )
         )
-        .withColumn("state_batch", F.lit(batch_id))
     )
-    state_dir = os.path.join(
-        store_dir, SESS_STATE_DIR, f"state_batch={batch_id}"
-    )
-    if os.path.exists(state_dir):  # torn previous attempt
-        shutil.rmtree(state_dir)
-    new_state.drop("state_batch").write.parquet(state_dir)
-    manifest["batches"] = manifest["batches"] + [batch_id]
-    manifest["gap_us"] = gap_us
-    tmp = os.path.join(store_dir, SESS_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(store_dir, SESS_MANIFEST))
+    new_state.write.parquet(_SESS.batch_dir(store_dir, batch_id))
+    _SESS.commit(store_dir, m, batch_id)
     return spark.read.parquet(out_dir)
 
 
 # ---------------------------------------------------------------------------
-# Cross-crawl LINK-GRAPH edge ledger (11th ledger): each crawl's weighted
-# domain→domain edge list committed under the atomic-manifest rule.  Edge
-# weights are pure counts, so the merged graph is an ADDITIVE cell-wise
-# sum over committed batches (the CMS-ledger property) — by construction
-# identical to extracting edges from the concatenated crawls, which the
-# equivalence test pins.  Authority (q89's degree/PageRank report) then
-# recomputes over the merged graph without re-parsing a single page:
-# storage and merge cost are GRAPH-sized (|domains|² bound), never
-# corpus-sized.  Reference ancestor: the persisted historical-stats
-# collection (charge_analysis_checks.py:617-905) as accumulating
-# cross-run state under commit discipline.
+# LINK-GRAPH edge ledger: each crawl's weighted domain→domain edge list.
+# Edge weights are pure counts, so the merged graph is an ADDITIVE
+# cell-wise sum over committed batches (the CMS-ledger property; the
+# replay guard again prevents double counts) — by construction identical
+# to extracting edges from the concatenated crawls, which the equivalence
+# test pins.  Authority (q89's degree/PageRank report) then recomputes
+# over the merged graph without re-parsing a single page: storage and
+# merge cost are GRAPH-sized (|domains|² bound), never corpus-sized.
+# Reference ancestor: the persisted historical-stats collection
+# (charge_analysis_checks.py:617-905) as accumulating cross-run state
+# under commit discipline.
 # ---------------------------------------------------------------------------
-
-EDGES_MANIFEST = "_edges_manifest.json"
-EDGES_DIR = "link_edges"
-
-
-def read_edges_manifest(store_dir: str) -> dict:
-    """``batches`` is every batch_id EVER committed (the replay guard —
-    it must survive compaction or a replayed old batch would re-commit
-    and double-count); ``segments`` is the list of LIVE data partitions
-    the merged read actually scans (compaction shrinks it to one)."""
-    path = os.path.join(store_dir, EDGES_MANIFEST)
-    if not os.path.exists(path):
-        return {"batches": [], "segments": []}
-    with open(path) as f:
-        m = json.load(f)
-    m.setdefault("segments", list(m["batches"]))
-    return m
 
 
 def commit_link_edges(
@@ -1581,109 +1474,37 @@ def commit_link_edges(
     html_col: str = "html",
 ) -> None:
     """Extract this crawl's weighted domain edges and commit them.
-    Replaying a committed ``batch_id`` is a guarded no-op (weights are
-    summed at read time — a double commit would double-count, so the
-    manifest guard IS the correctness mechanism, as in the CMS ledger).
-    Data lands before the manifest references it (torn batches stay
-    invisible)."""
+    Replaying a committed ``batch_id`` is a guarded no-op."""
     from ..operators import linkgraph as LG
 
-    manifest = read_edges_manifest(store_dir)
-    if batch_id in manifest["batches"]:
+    m = _EDGES.begin(store_dir, batch_id)
+    if m is None:
         return
-    os.makedirs(store_dir, exist_ok=True)
-    edges = LG.domain_edges(pages, src_domain_col, html_col)
-    batch_dir = os.path.join(store_dir, EDGES_DIR, f"batch_id={batch_id}")
-    if os.path.exists(batch_dir):  # torn previous attempt
-        shutil.rmtree(batch_dir)
-    edges.write.parquet(batch_dir)
-    manifest["batches"] = sorted(manifest["batches"] + [batch_id])
-    manifest["segments"] = sorted(manifest["segments"] + [batch_id])
-    tmp = os.path.join(store_dir, EDGES_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(store_dir, EDGES_MANIFEST))
+    LG.domain_edges(pages, src_domain_col, html_col).write.parquet(
+        _EDGES.batch_dir(store_dir, batch_id)
+    )
+    _EDGES.commit(store_dir, m, batch_id)
+
+
+def _edges_merge(edges: DataFrame) -> DataFrame:
+    return edges.groupBy("src_domain", "dst_domain").agg(
+        F.sum("weight").cast("long").alias("weight")
+    )
 
 
 def link_ledger_edges(spark: SparkSession, store_dir: str) -> DataFrame:
     """The merged (weight-summed) edge list over every committed crawl —
     one graph-sized hash aggregate over the LIVE segments (post-
     compaction: a single base partition)."""
-    manifest = read_edges_manifest(store_dir)
-    if not manifest["batches"]:
-        raise ValueError(f"no committed link edges at {store_dir!r}")
-    return (
-        spark.read.parquet(os.path.join(store_dir, EDGES_DIR))
-        .filter(F.col("batch_id").isin(manifest["segments"]))
-        .groupBy("src_domain", "dst_domain")
-        .agg(F.sum("weight").cast("long").alias("weight"))
-    )
+    m = _EDGES.committed(store_dir)
+    return _edges_merge(_EDGES.read(spark, store_dir, m))
 
 
 def compact_link_ledger(spark: SparkSession, store_dir: str) -> None:
     """Fold every live segment into ONE base partition — after N crawls
     the merged read otherwise lists/scans N directories for the same
-    graph-sized result.  Correctness discipline:
-
-    * the ``batches`` replay-guard list is UNTOUCHED — a replayed old
-      batch_id stays a no-op forever, never a double count;
-    * the base segment's data lands BEFORE the manifest points at it
-      (data-then-manifest, as everywhere);
-    * old segment directories are removed only AFTER the manifest swap —
-      a crash in between leaves unreferenced orphan directories, which
-      are harmless (no reader ever lists them again) and reclaimable by
-      hand; a torn read is impossible.
-
-    The base id derives from the guard-list length, so it is
-    deterministic (no wall clock) and never collides with a SHA-named
-    crawl id; re-running compaction at the same ledger state overwrites
-    its own torn attempt."""
-    manifest = read_edges_manifest(store_dir)
-    if not manifest["batches"]:
-        raise ValueError(f"no committed link edges at {store_dir!r}")
-    if len(manifest["segments"]) <= 1:
-        return  # already compact
-    _compact_additive_ledger(
-        manifest,
-        store_dir,
-        EDGES_MANIFEST,
-        EDGES_DIR,
-        link_ledger_edges(spark, store_dir),
-    )
-
-
-def _compact_additive_ledger(
-    manifest: dict,
-    store_dir: str,
-    manifest_name: str,
-    data_dir: str,
-    merged: DataFrame,
-) -> None:
-    """Shared fold-to-one-base machinery for the additive ledgers (link
-    edges / CMS cells / bloom positions — anywhere the merged read is a
-    pure sum/union over batch partitions).  Guard-list preservation,
-    data-then-manifest ordering, and post-swap cleanup as documented on
-    :func:`compact_link_ledger`."""
-    if len(manifest["segments"]) <= 1:
-        return  # already compact
-    # materialize BEFORE writing into the same directory tree the lazy
-    # plan would otherwise scan mid-write
-    merged = merged.localCheckpoint()
-    base_id = f"__base_{len(manifest['batches'])}__"
-    base_dir = os.path.join(store_dir, data_dir, f"batch_id={base_id}")
-    if os.path.exists(base_dir):  # torn previous attempt
-        shutil.rmtree(base_dir)
-    merged.write.parquet(base_dir)
-    old_segments = [s for s in manifest["segments"] if s != base_id]
-    manifest["segments"] = [base_id]
-    tmp = os.path.join(store_dir, manifest_name + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(store_dir, manifest_name))
-    for seg in old_segments:
-        seg_dir = os.path.join(store_dir, data_dir, f"batch_id={seg}")
-        if os.path.exists(seg_dir):
-            shutil.rmtree(seg_dir)
+    graph-sized result."""
+    _EDGES.compact(spark, store_dir, _edges_merge)
 
 
 def link_ledger_authority(
@@ -1702,7 +1523,7 @@ def link_ledger_authority(
 
 
 # ---------------------------------------------------------------------------
-# Cross-crawl RECRAWL-STATE ledger (12th ledger): the incremental form of
+# RECRAWL-STATE ledger: the incremental form of
 # operators/frontier.estimate_change_rates.  The batch operator needs a
 # URL's full snapshot history in one frame; this needs only |urls| rows
 # of committed state — (last_fp, n_snapshots, n_changes) per URL — and
@@ -1711,20 +1532,8 @@ def link_ledger_authority(
 # and each batch is ONE crawl: a URL may appear at most once per batch
 # (enforced loudly — two fingerprints for one URL in one crawl is a
 # corrupt feed, and silently picking one would corrupt change counts
-# forever).  Atomic data-then-manifest rule as everywhere; replaying a
-# committed batch is a no-op.
+# forever).
 # ---------------------------------------------------------------------------
-
-RECRAWL_MANIFEST = "_recrawl_manifest.json"
-RECRAWL_STATE_DIR = "recrawl_state"
-
-
-def read_recrawl_manifest(store_dir: str) -> dict:
-    path = os.path.join(store_dir, RECRAWL_MANIFEST)
-    if not os.path.exists(path):
-        return {"batches": []}
-    with open(path) as f:
-        return json.load(f)
 
 
 def recrawl_incremental(
@@ -1740,10 +1549,9 @@ def recrawl_incremental(
     revisited URLs bump n_snapshots and bump n_changes iff the
     fingerprint moved; URLs absent from this crawl carry forward
     untouched."""
-    manifest = read_recrawl_manifest(store_dir)
-    if batch_id in manifest["batches"]:
+    m = _RECRAWL.begin(store_dir, batch_id)
+    if m is None:
         return
-    os.makedirs(store_dir, exist_ok=True)
 
     snap = snapshot.select(
         F.col(url_col).alias("url"), F.col(fp_col).alias("last_fp")
@@ -1764,14 +1572,8 @@ def recrawl_incremental(
             "drop failed fetches before committing a crawl snapshot"
         )
 
-    batches = manifest["batches"]
-    if batches:
-        prev = (
-            spark.read.parquet(os.path.join(store_dir, RECRAWL_STATE_DIR))
-            .filter(F.col("state_batch") == batches[-1])
-            .select("url", "last_fp", "n_snapshots", "n_changes")
-        )
-    else:
+    prev = _RECRAWL.read(spark, store_dir, m)
+    if prev is None:
         # fingerprint type follows the CALLER's column (md5 strings are
         # the repo's standard fingerprint; int64 works too) — a
         # hard-coded type here would ANSI-cast-crash the first commit
@@ -1782,7 +1584,8 @@ def recrawl_incremental(
         )
 
     joined = snap.join(
-        prev.withColumnsRenamed(
+        prev.select("url", "last_fp", "n_snapshots", "n_changes")
+        .withColumnsRenamed(
             {"last_fp": "_prev_fp", "n_snapshots": "_ns", "n_changes": "_nc"}
         ),
         "url",
@@ -1809,27 +1612,8 @@ def recrawl_incremental(
         .cast("long")
         .alias("n_changes"),
     )
-    state_dir = os.path.join(
-        store_dir, RECRAWL_STATE_DIR, f"state_batch={batch_id}"
-    )
-    if os.path.exists(state_dir):  # torn previous attempt
-        shutil.rmtree(state_dir)
-    new_state.write.parquet(state_dir)
-    superseded = manifest["batches"]
-    manifest["batches"] = manifest["batches"] + [batch_id]
-    tmp = os.path.join(store_dir, RECRAWL_MANIFEST + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(manifest, f, indent=1, sort_keys=True)
-    os.replace(tmp, os.path.join(store_dir, RECRAWL_MANIFEST))
-    # only batches[-1] is ever read — GC superseded state partitions
-    # AFTER the swap (compaction's crash ordering), else the store holds
-    # |urls| x N rows while claiming "|urls| rows of state"
-    for old in superseded:
-        old_dir = os.path.join(
-            store_dir, RECRAWL_STATE_DIR, f"state_batch={old}"
-        )
-        if os.path.exists(old_dir):
-            shutil.rmtree(old_dir)
+    new_state.write.parquet(_RECRAWL.batch_dir(store_dir, batch_id))
+    _RECRAWL.commit(store_dir, m, batch_id)
 
 
 def recrawl_ledger_rates(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -1837,13 +1621,9 @@ def recrawl_ledger_rates(spark: SparkSession, store_dir: str) -> DataFrame:
     operator assigns — (url, n_snapshots, n_changes, recrawl_tier)."""
     from ..operators.frontier import recrawl_tier_col
 
-    manifest = read_recrawl_manifest(store_dir)
-    if not manifest["batches"]:
-        raise ValueError(f"no committed recrawl state at {store_dir!r}")
-    state = (
-        spark.read.parquet(os.path.join(store_dir, RECRAWL_STATE_DIR))
-        .filter(F.col("state_batch") == manifest["batches"][-1])
-        .select("url", "n_snapshots", "n_changes")
+    m = _RECRAWL.committed(store_dir)
+    state = _RECRAWL.read(spark, store_dir, m).select(
+        "url", "n_snapshots", "n_changes"
     )
     # the SAME tier expression as the batch estimator — the two forms
     # can never disagree on a boundary

@@ -416,7 +416,6 @@ def streaming_near_dup_verified(
     Sink: verified (id_a, id_b, jaccard) parquet partitioned by epoch —
     idempotent replay (overwrite per epoch), exactly-once effect.
     """
-    import json  # noqa: PLC0415
     import logging  # noqa: PLC0415
     import os  # noqa: PLC0415
     import shutil  # noqa: PLC0415
@@ -424,6 +423,7 @@ def streaming_near_dup_verified(
     from pyspark.errors import AnalysisException  # noqa: PLC0415
 
     from ..operators import dedup as DD  # noqa: PLC0415
+    from ..plans.lineage import atomic_write_json, read_json  # noqa: PLC0415
 
     cands = streaming_near_dup_candidates(
         docs_stream,
@@ -440,31 +440,25 @@ def streaming_near_dup_verified(
     pointer = os.path.join(pending_base, "_current.json")
 
     def _read_pending() -> DataFrame | None:
-        if not os.path.exists(pointer):
+        current = read_json(pointer)
+        if current is None:
             return None
-        with open(pointer) as f:
-            d = json.load(f)["dir"]
-        return spark.read.parquet(os.path.join(pending_base, d))
+        return spark.read.parquet(os.path.join(pending_base, current["dir"]))
 
     def _commit_pending(df: DataFrame, epoch_id: int) -> None:
         d = f"v{epoch_id}"
         target = os.path.join(pending_base, d)
-        if os.path.exists(pointer):
-            with open(pointer) as f:
-                if json.load(f)["dir"] == d:
-                    # epoch replay AFTER a completed commit: this epoch's
-                    # pending set is already the committed current dir.
-                    # Recomputing would rmtree the very dir the lazy
-                    # `df` plan reads from (self-destruct); the replayed
-                    # computation is idempotent by construction, so skip.
-                    return
+        if (read_json(pointer) or {}).get("dir") == d:
+            # epoch replay AFTER a completed commit: this epoch's pending
+            # set is already the committed current dir.  Recomputing
+            # would rmtree the very dir the lazy `df` plan reads from
+            # (self-destruct); the replayed computation is idempotent by
+            # construction, so skip.
+            return
         if os.path.exists(target):  # torn attempt (pointer not swapped)
             shutil.rmtree(target)
         df.write.parquet(target)
-        tmp = pointer + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump({"dir": d}, f)
-        os.replace(tmp, pointer)  # atomic commit point
+        atomic_write_json(pointer, {"dir": d})  # commit point
         for old in os.listdir(pending_base):  # best-effort GC
             if old.startswith("v") and old != d:
                 shutil.rmtree(os.path.join(pending_base, old), ignore_errors=True)

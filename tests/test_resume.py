@@ -423,3 +423,334 @@ def test_incremental_line_dedup_across_runs(spark, tmp_path):
     torn_dir = os.path.join(store, LN.LINE_FP_DIR, "batch_id=torn")
     spark.createDataFrame([(999,)], "fp long").write.parquet(torn_dir)
     assert LN.read_committed_line_fps(spark, store).count() == n_fps
+
+
+def test_empty_input_reads_back_zero_rows(spark, corpus_path, clean_out):
+    """An empty increment commits every bucket with 0 rows and writes no
+    parquet; the committed readers still return 0-row frames with the
+    columns and types of a non-empty run."""
+    images = spark.read.parquet(corpus_path)
+    full, empty = os.path.join(OUT, "a"), os.path.join(OUT, "b")
+    LN.run_with_checkpoints(spark, images.limit(40), full, "r", num_buckets=4)
+    m = LN.run_with_checkpoints(
+        spark, images.limit(0), empty, "r", num_buckets=4
+    )
+    assert {b: v["rows"] for b, v in m["committed"].items()} == {
+        str(b): 0 for b in range(4)
+    }
+    readers = (
+        lambda d: LN.read_committed(spark, d),
+        lambda d: LN.read_committed_metrics(spark, d, LN.RULE_METRICS_DIR),
+        lambda d: LN.read_committed_metrics(spark, d, LN.LANGID_HIST_DIR),
+    )
+    for read in readers:
+        got = read(empty)
+        assert got.count() == 0
+        assert got.dtypes == read(full).dtypes
+
+
+@pytest.mark.parametrize("reader", ["metrics", "stats"])
+def test_storage_error_at_commit_is_not_swallowed(
+    spark, corpus_path, clean_out, monkeypatch, reader
+):
+    """Only the no-data-files case of the post-write read means 'no rows';
+    any other storage error fails the run before the manifest commits."""
+    from pyspark.sql import DataFrameReader
+
+    images = spark.read.parquet(corpus_path).limit(60)
+    d = os.path.join(OUT, "a")
+    real = DataFrameReader.parquet
+
+    def flaky(self, *paths, **kw):
+        if os.path.abspath(paths[0]) == os.path.abspath(d):
+            raise RuntimeError("injected storage error")
+        return real(self, *paths, **kw)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(DataFrameReader, "parquet", flaky)
+        if reader == "stats":  # reach the stats read with metrics skipped
+            mp.setattr(LN, "_write_bucket_metrics", lambda *a: None)
+        with pytest.raises(RuntimeError, match="injected storage error"):
+            LN.run_with_checkpoints(spark, images, d, "r", num_buckets=4)
+    assert LN.read_manifest(d)["committed"] == {}
+
+
+# ---------------------------------------------------------------------------
+# Fault injection over every cross-run ledger.  Each case maps a batch id to
+# a tiny input and returns (run, read): ``run(store, batch_id)`` commits the
+# batch and returns its collected output, ``read(store)`` the collected
+# committed state.
+# ---------------------------------------------------------------------------
+
+
+def _rows(df):
+    return sorted(repr(tuple(r)) for r in df.collect())
+
+
+def _frames(spark, schema, batches):
+    return {b: spark.createDataFrame(rows, schema) for b, rows in batches.items()}
+
+
+def _case_fp(spark):
+    docs = _frames(spark, "doc_id long, text string", {
+        "b1": [(1, "alpha doc"), (2, "bravo doc"), (3, "alpha doc")],
+        "b2": [(10, "alpha doc"), (11, "charlie doc")],
+    })
+    return (
+        lambda s, b: _rows(LN.dedup_incremental(spark, docs[b], s, b)),
+        lambda s: _rows(LN.read_committed_fingerprints(spark, s)),
+    )
+
+
+_BASE = (
+    "the quick brown fox jumps over the lazy dog near the river bank while "
+    "the morning sun rises slowly over the quiet valley"
+)
+
+
+def _case_near(spark):
+    docs = _frames(spark, "doc_id long, text string", {
+        "b1": [(1, _BASE), (2, "spark shuffle partitioning broadcast joins")],
+        "b2": [(10, _BASE.replace("fox", "cat")), (11, "parquet row groups")],
+    })
+    return (
+        lambda s, b: _rows(LN.dedup_incremental_near(spark, docs[b], s, b)),
+        lambda s: _rows(LN.read_committed_signatures(spark, s)),
+    )
+
+
+def _case_image(spark):
+    a = 0x1234_5678_9ABC_DEF0
+    imgs = _frames(spark, "image_id string, phash long", {
+        "b1": [("a1", a), ("c1", 0x0F0F_0F0F_0F0F_0F0F)],
+        "b2": [("d1", a ^ 0b100), ("e1", 0x7654_3210_0123_4567)],
+    })
+    return (
+        lambda s, b: _rows(LN.dedup_incremental_image(spark, imgs[b], s, b)),
+        lambda s: _rows(LN.read_committed_phashes(spark, s)),
+    )
+
+
+def _case_embedding(spark):
+    def vec(seed, scale=1.0):
+        return [scale * float((i * seed) % 11 - 5) for i in range(64)]
+
+    vecs = _frames(spark, "vec_id long, embedding array<float>", {
+        "b1": [(1, vec(3)), (2, vec(7))],
+        "b2": [(20, vec(3, 0.5)), (21, vec(5))],
+    })
+    return (
+        lambda s, b: _rows(LN.dedup_incremental_embedding(spark, vecs[b], s, b)),
+        lambda s: _rows(LN.read_committed_embeddings(spark, s)),
+    )
+
+
+def _case_contam(spark):
+    evals = _frames(spark, "doc_id long, text string", {
+        "b1": [(1, "what is the capital city of france")],
+        "b2": [(2, "name the largest planet in the solar system")],
+    })
+
+    def read(s):
+        grams, n = LN.read_contamination(spark, s)
+        return _rows(grams), n
+
+    return lambda s, b: LN.commit_contamination(spark, evals[b], s, b), read
+
+
+def _case_lines(spark):
+    bp = "accept all cookies to continue browsing"
+    docs = _frames(spark, "doc_id long, text string", {
+        "b1": [(1, f"first article body\n{bp}"), (2, f"{bp}\nsecond article")],
+        "b2": [(10, f"third page\n{bp}"), (11, "genuinely new line")],
+    })
+    return (
+        lambda s, b: _rows(LN.dedup_incremental_lines(spark, docs[b], s, b)),
+        lambda s: _rows(LN.read_committed_line_fps(spark, s)),
+    )
+
+
+def _case_kmv(spark):
+    vals = _frames(spark, "grp string, v string", {
+        "b1": [("g", f"a{i}") for i in range(20)],
+        "b2": [("g", f"a{i}") for i in range(10, 30)] + [("h", "x")],
+    })
+    return (
+        lambda s, b: LN.commit_kmv_sketch(spark, vals[b], s, b, "v", ["grp"], k=8),
+        lambda s: _rows(LN.kmv_ledger_estimate(spark, s)),
+    )
+
+
+def _toks(spark):
+    return _frames(spark, "tok string", {
+        "b1": [(f"w{i % 5}",) for i in range(50)],
+        "b2": [(f"w{i % 9}",) for i in range(90)],
+    })
+
+
+def _case_cms(spark):
+    toks = _toks(spark)
+    return (
+        lambda s, b: LN.commit_cms_sketch(spark, toks[b], s, b, "tok"),
+        lambda s: LN.cms_ledger_cells(spark, s),
+    )
+
+
+def _case_stats(spark):
+    frames = _frames(spark, "lang string, k boolean", {
+        "b1": [("en", True)] * 6 + [("de", False)] * 2,
+        "b2": [("en", True)] * 3 + [("de", True)] * 5,
+    })
+    keep = F.col("k")
+    return (
+        lambda s, b: LN.commit_corpus_stats(spark, frames[b], s, b, keep),
+        lambda s: [
+            _rows(LN.drift_vs_committed(spark, frames["b1"], s, keep, base))
+            for base in LN.read_stats_manifest(s)["batches"]
+        ],
+    )
+
+
+def _case_bloom(spark):
+    keys = _frames(spark, "k string", {
+        "b1": [(f"url-a-{i}",) for i in range(40)],
+        "b2": [(f"url-b-{i}",) for i in range(30)],
+    })
+    return (
+        lambda s, b: LN.commit_bloom(spark, keys[b], s, b, "k", m=512),
+        lambda s: LN.bloom_ledger_words(spark, s),
+    )
+
+
+def _case_sessions(spark):
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1, 12, 0, 0)
+
+    def ev(eid, user, offset_s):
+        return (eid, t0 + dt.timedelta(seconds=offset_s), user, 1.0)
+
+    events = _frames(
+        spark, "event_id long, ts timestamp_ntz, user_id long, value double", {
+            # user 1 stitches across the batch boundary, user 2 does not
+            "b1": [ev(1, 1, 0), ev(2, 1, 60), ev(3, 2, 0)],
+            "b2": [ev(4, 1, 600), ev(5, 2, 9000), ev(6, 3, 9000)],
+        },
+    )
+    return (
+        lambda s, b: _rows(LN.sessionize_incremental(spark, events[b], s, b)),
+        lambda s: _rows(LN._SESS.read(spark, s)),
+    )
+
+
+def _case_edges(spark):
+    from data_quality_analyzer_spark.plans.entry_queries import _q89_pages
+
+    d = spark.range(0, 40).withColumnRenamed("id", "doc_id")
+    pages = {
+        "b1": _q89_pages(d.filter(F.col("doc_id") % 2 == 0)),
+        "b2": _q89_pages(d.filter(F.col("doc_id") % 2 == 1)),
+    }
+    return (
+        lambda s, b: LN.commit_link_edges(spark, pages[b], s, b),
+        lambda s: _rows(LN.link_ledger_edges(spark, s)),
+    )
+
+
+def _case_recrawl(spark):
+    snaps = _frames(spark, "url string, content_fp string", {
+        "b1": [("A", "fp1"), ("B", "fp1")],
+        "b2": [("A", "fp2"), ("C", "fp1")],
+    })
+    return (
+        lambda s, b: LN.recrawl_incremental(spark, snaps[b], s, b),
+        lambda s: _rows(LN.recrawl_ledger_rates(spark, s)),
+    )
+
+
+_LEDGER_CASES = {
+    "fingerprints": _case_fp,
+    "near_signatures": _case_near,
+    "image_phashes": _case_image,
+    "embeddings": _case_embedding,
+    "contamination": _case_contam,
+    "lines": _case_lines,
+    "kmv": _case_kmv,
+    "cms": _case_cms,
+    "corpus_stats": _case_stats,
+    "bloom": _case_bloom,
+    "sessions": _case_sessions,
+    "link_edges": _case_edges,
+    "recrawl": _case_recrawl,
+}
+
+
+@pytest.mark.parametrize("name", list(_LEDGER_CASES))
+def test_ledger_crash_before_manifest_converges(spark, tmp_path, monkeypatch, name):
+    """A crash after a batch's data write but before its manifest replace
+    leaves the batch invisible; re-running the same batch id gives the
+    output and committed state of an uninterrupted run — additive ledgers
+    count nothing twice, KMV stays a set union, and the session/recrawl
+    state continues from the previous batch."""
+    run, read = _LEDGER_CASES[name](spark)
+    ref, torn = str(tmp_path / "ref"), str(tmp_path / "torn")
+    run(ref, "b1")
+    want_out = run(ref, "b2")
+    want = read(ref)
+
+    run(torn, "b1")
+    before = read(torn)
+
+    def crash(self, store_dir, manifest, batch_id):
+        raise RuntimeError("injected crash before the manifest replace")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(LN.Ledger, "commit", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            run(torn, "b2")
+    assert read(torn) == before
+    assert run(torn, "b2") == want_out
+    assert read(torn) == want
+    run(torn, "b2")  # replay of the now-committed batch
+    assert read(torn) == want
+
+
+_COMPACT = {
+    "cms": (LN.compact_cms_ledger, LN.read_cms_manifest),
+    "bloom": (LN.compact_bloom_ledger, LN.read_bloom_manifest),
+    "link_edges": (LN.compact_link_ledger, LN.read_edges_manifest),
+}
+
+
+@pytest.mark.parametrize("point", ["before_swap", "after_swap"])
+@pytest.mark.parametrize("name", list(_COMPACT))
+def test_compaction_crash_keeps_merged_read(
+    spark, tmp_path, monkeypatch, name, point
+):
+    """A compaction that crashes after the base write but before the
+    manifest swap, or after the swap but before the superseded segments
+    are removed, leaves the merged read unchanged; finishing it (or the
+    no-op rerun after the swap) and replaying a compacted batch do too."""
+    run, read = _LEDGER_CASES[name](spark)
+    compact, manifest = _COMPACT[name]
+    store = str(tmp_path / "store")
+    run(store, "b1")
+    run(store, "b2")
+    want = read(store)
+    real = LN.atomic_write_json
+
+    def crash(path, doc):
+        if point == "after_swap":
+            real(path, doc)
+        raise RuntimeError("injected compaction crash")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(LN, "atomic_write_json", crash)
+        with pytest.raises(RuntimeError, match="injected compaction crash"):
+            compact(spark, store)
+    assert read(store) == want
+    compact(spark, store)
+    assert manifest(store)["segments"] == ["__base_2__"]
+    assert read(store) == want
+    run(store, "b1")
+    assert read(store) == want
