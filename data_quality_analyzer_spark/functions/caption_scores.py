@@ -11,7 +11,7 @@ pays one serialization and runs the same three numpy kernels
 :func:`quality_clf.score_batch`) on the shared batch.
 
 The component models stay where they are — this module only composes
-them, so the single-scorer UDFs (used by q21/q22/q51 and
+them, so the quality-classifier UDF (used by q51/q86 and
 ``prep_text_corpus``) and the pandas oracle keep byte-identical
 behavior with the fused path (tested in test_pipeline_oracle.py).
 

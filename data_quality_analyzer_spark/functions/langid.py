@@ -3,7 +3,8 @@ linear (multinomial naive Bayes) classifier, trained deterministically from
 the embedded seed corpus (no external models exist in the sandbox;
 SURVEY §7.0).
 
-Engine side: an Arrow-batched ``pandas_udf`` whose weights travel via
+Engine side: the fused caption scorer (``functions/caption_scores.py``),
+an Arrow-batched ``pandas_udf`` whose weights travel via
 ``SparkContext.broadcast`` — one deserialization per executor, zero per-row
 Python beyond the string walk (inner loops are numpy).  Oracle side: the
 same :func:`predict_batch` run in plain pandas — engine-vs-oracle parity is
@@ -155,18 +156,3 @@ def predict_batch(texts: pd.Series, model: LangIdModel) -> pd.DataFrame:
         out_conf[rows] = scores[best, cols] - scores[second, cols]
     return pd.DataFrame({"lang_pred": out_lang, "lang_conf": out_conf})
 
-
-def langid_udf(spark):
-    """Arrow-vectorized langid scorer; weights broadcast once per executor.
-
-    Returns a pandas_udf producing ``struct<lang_pred:string, lang_conf:double>``.
-    """
-    from pyspark.sql import functions as F
-
-    bc = spark.sparkContext.broadcast(get_model())
-
-    @F.pandas_udf("lang_pred string, lang_conf double")
-    def _langid(s: pd.Series) -> pd.DataFrame:
-        return predict_batch(s, bc.value)
-
-    return _langid

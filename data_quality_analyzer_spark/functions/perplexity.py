@@ -125,15 +125,3 @@ def score_batch(texts: pd.Series, model: CharLM) -> pd.Series:
         out[lo + np.asarray(idx)] = ppl
     return pd.Series(out)
 
-
-def perplexity_udf(spark):
-    """Arrow-vectorized perplexity scorer (double), weights broadcast."""
-    from pyspark.sql import functions as F
-
-    bc = spark.sparkContext.broadcast(get_model())
-
-    @F.pandas_udf("double")
-    def _ppl(s: pd.Series) -> pd.Series:
-        return score_batch(s, bc.value)
-
-    return _ppl

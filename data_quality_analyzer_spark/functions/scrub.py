@@ -6,9 +6,8 @@ anywhere (SURVEY §2.8) — this is new work, designed Spark-first:
 
 * The scrub itself is **native `regexp_replace`** (JVM, whole-stage codegen)
   — strictly faster than any Python/pandas UDF because it never crosses the
-  JVM/Python boundary.  A `pandas_udf` twin is provided for parity testing
-  of the Arrow path and as the extension point for patterns that would need
-  Python's `regex` module.
+  JVM/Python boundary.  :func:`scrub_python` is its pure-Python twin for
+  the pandas oracle.
 * Patterns are RE2-compatible (no lookarounds/backrefs) so the same pattern
   string runs identically under Java regex (Spark), RE2 (DuckDB oracle) and
   Python `re` (pandas oracle).
@@ -18,7 +17,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -188,20 +186,3 @@ def scrub_python(text: str | None) -> str | None:
     for rx, repl in _COMPILED:
         text = rx.sub(repl, text)
     return text
-
-
-def scrub_pandas_udf():
-    """Arrow-vectorized twin of :func:`scrub` (patterns compiled once per
-    executor at module import; no per-row Python objects besides the str).
-
-    Built lazily — `pandas_udf` needs an active SparkSession to parse the
-    return type, so the decorator cannot run at import time.
-    """
-
-    @F.pandas_udf("string")
-    def _scrub(s: pd.Series) -> pd.Series:
-        for rx, repl in _COMPILED:
-            s = s.str.replace(rx, repl, regex=True)
-        return s
-
-    return _scrub

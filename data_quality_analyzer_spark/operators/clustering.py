@@ -6,26 +6,31 @@ WITHIN clusters).
 Design for the 1000-executor case, mirroring what Spark MLlib's KMeans
 does under the hood but kept oracle-twinnable:
 
-* **Assignment is MAP-ONLY**: the k×dim centroid matrix rides into the
-  plan as literal arrays (k·dim ≤ a few thousand doubles — plan-size
-  noise), each row folds ``zip_with`` squared differences per centroid
-  and takes ``array_min`` over (dist, cluster) structs.  Zero shuffle,
-  zero UDF, whole-stage codegen.
+* **Assignment is MAP-ONLY**: the k×dim centroid matrix rides into an
+  Arrow-batched pandas UDF (k·dim ≤ a few thousand doubles), which
+  computes squared L2 distances with an ORDER-EXACT numpy kernel and
+  takes the first minimal cluster.  Zero shuffle.
 * **Update is ONE hash aggregate per iteration**: ``posexplode`` the
   vector, ``groupBy(cluster, pos)`` with map-side partial aggregation
   (k·dim grouping keys — tiny), and the k·dim (sum, count) rows come
-  back to the driver to form the next centroid literals.  This
+  back to the driver to form the next centroids.  This
   driver-synchronization point is inherent to Lloyd's algorithm (MLlib
   ``collectAsMap``s the same reduction); the collected relation is
   k·dim rows regardless of corpus size.
+* **Driver fast path for the fit**: below
+  :data:`KMEANS_DRIVER_MAX_ROWS` valid vectors the whole init + Lloyd
+  chain runs on one driver-side collect with the same kernels and the
+  same exact decimal sums (see the note above :func:`_fit_driver`);
+  above it the distributed job chain runs.
 * **Cross-engine float discipline** (the repo rule): element sums are
   accumulated as ``DECIMAL(38,12)`` — exact, ORDER-INDEPENDENT decimal
   addition — so Spark's unordered partial aggs and DuckDB's sequential
   sum produce the same centroid to the last bit; only then one
-  double division per element.  Distances fold left-to-right in list
-  order in both engines (``aggregate``/``list_sum`` precedent from the
-  q29 cosine oracle), so argmin ties cannot diverge; ties on equal
-  distance break by cluster index in both engines.
+  double division per element.  The numpy kernels accumulate distances
+  and dot products dimension by dimension, the same left-to-right order
+  as DuckDB's ``list_sum`` (the q29 cosine oracle precedent), so argmin
+  ties and cosine thresholds cannot diverge; ties on equal distance
+  break by cluster index in both engines.
 * **Deterministic, portable init** (no RNG): ``init="farthest"``
   (default) is farthest-point traversal — seed 0 is the row with the
   smallest ``(vec_id * 2654435761) % 2147483647`` (Knuth multiplicative
@@ -61,17 +66,16 @@ MOD31 = 2147483647
 
 
 # ---------------------------------------------------------------------------
-# Order-exact numpy kernels (the Arrow fast path)
+# Order-exact numpy kernels
 #
 # Higher-order-function folds are CodegenFallback-INTERPRETED in Spark —
-# correct, oracle-portable, and ~100× too slow for the hot paths here.
-# These kernels vectorize over rows but accumulate DIM-SEQUENTIALLY
-# (`acc += term_d` for d = 0..dim-1), reproducing the fold's
-# left-to-right IEEE double addition BIT-EXACTLY — so the Arrow path,
-# the HOF path and the DuckDB twin agree to the last ulp and the
-# three-form equality is testable, not hoped for.  No np.sum / matmul /
-# einsum in the comparisons: pairwise-summation order would break the
-# bit contract at threshold boundaries.
+# measured ~100× slower than these kernels.  The kernels vectorize over
+# rows but accumulate DIM-SEQUENTIALLY (`acc += term_d` for
+# d = 0..dim-1), reproducing a left-to-right IEEE double fold
+# BIT-EXACTLY — so the engine and the DuckDB twin (`list_sum`) agree to
+# the last ulp and the equality is testable, not hoped for.  No np.sum /
+# matmul / einsum in the comparisons: pairwise-summation order would
+# break the bit contract at threshold boundaries.
 # ---------------------------------------------------------------------------
 
 
@@ -144,13 +148,16 @@ def _init_order(id_col: str):
 # `_sq_dists` is the very function the Arrow kernels call, orderings
 # replicate the (hash, id) / (dist desc, id) sort keys with integer /
 # exact-double keys, and the decimal(38,12) centroid sums are replayed
-# with exact scaled-int arithmetic (`_dec12_scaled`).  Distributed path
-# unchanged and still the default above the cap; `driver_max_rows=0`
-# forces it (how the equality test pins the two paths to the bit).
+# with exact scaled-int arithmetic (`_dec12_scaled`).  Those int64 sums
+# are exact only while no per-cluster sum can overflow, so the fast path
+# also requires (max|x|·1e12 + 1)·n < 2^63 for the probe's n rows
+# (`_dec12_fits`); a probe outside that envelope takes the distributed
+# path.  Distributed path unchanged and still the default above the cap;
+# `driver_max_rows=0` forces it (how the equality test pins the two paths
+# to the bit).
 # ---------------------------------------------------------------------------
 
 KMEANS_DRIVER_MAX_ROWS = 100_000  # ~64 MB of 64-dim float64 on the driver
-_DEC12_MAX_ABS = 16.0  # |x| bound: 1e5 rows × 1.6e13 scaled ≈ 1.6e18 < 2^63
 
 
 def _dec12_scaled(xs: np.ndarray) -> np.ndarray:
@@ -174,6 +181,19 @@ def _dec12_scaled(xs: np.ndarray) -> np.ndarray:
             d = Decimal(repr(float(xs[i]))).quantize(q, ROUND_HALF_UP)
             out[i] = int(d.scaleb(12))
     return out
+
+
+def _dec12_fits(vals: np.ndarray, n: int) -> bool:
+    """True iff every ``_dec12_scaled`` sum over at most ``n`` of
+    ``vals`` fits int64: each scaled term is at most
+    ceil(max|x|·1e12) + 1 in magnitude (the +1 covers HALF_UP rounding
+    and the float product's error), summed in exact Python ints."""
+    if not len(vals):
+        return True
+    if not np.isfinite(vals).all():
+        return False
+    term = int(np.ceil(float(np.abs(vals).max()) * 1e12)) + 1
+    return term * n < 2**63
 
 
 def _fit_driver(
@@ -230,53 +250,6 @@ def _valid(df: DataFrame, vec_col: str, dim: int) -> DataFrame:
     )
 
 
-def _centroid_lits(centroids: list[list[float]]):
-    return [
-        F.array(*[F.lit(float(x)).cast("double") for x in c])
-        for c in centroids
-    ]
-
-
-def _assign_expr(vec, centroids: list[list[float]]):
-    """Cluster index of the nearest centroid (squared L2, left-to-right
-    fold; ties -> lowest cluster index)."""
-    dists = []
-    for j, lit in enumerate(_centroid_lits(centroids)):
-        d = F.aggregate(
-            # explicit product, NOT pow(x, 2): JVM Math.pow is not
-            # bit-guaranteed to equal x*x, DuckDB's twin multiplies
-            F.zip_with(
-                vec,
-                lit,
-                lambda x, y: (x.cast("double") - y)
-                * (x.cast("double") - y),
-            ),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-        dists.append(F.struct(d.alias("d"), F.lit(j).alias("c")))
-    return F.array_min(F.array(*dists)).getField("c")
-
-
-def _min_dist_expr(vec, centroids: list[list[float]]):
-    """Distance to the NEAREST of ``centroids`` (squared L2)."""
-    dists = []
-    for lit in _centroid_lits(centroids):
-        dists.append(
-            F.aggregate(
-                F.zip_with(
-                    vec,
-                    lit,
-                    lambda x, y: (x.cast("double") - y)
-                    * (x.cast("double") - y),
-                ),
-                F.lit(0.0).cast("double"),
-                lambda acc, x: acc + x,
-            )
-        )
-    return F.least(*dists) if len(dists) > 1 else dists[0]
-
-
 def kmeans_fit_assign(
     vectors: DataFrame,
     k: int = 8,
@@ -285,35 +258,22 @@ def kmeans_fit_assign(
     vec_col: str = "embedding",
     dim: int = 64,
     init: str = "farthest",
-    use_arrow: bool = True,
     driver_max_rows: int | None = None,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Run ``iters`` Lloyd iterations from the deterministic init and
     return ``(assignments, centroids)`` where assignments is
     ``(id_col, cluster)`` and centroids the final k×dim list.  The
     returned assignment plan is map-only (centroids ride inside the
-    Arrow kernel / as literals) — write it, sample against it, or join
-    it without re-clustering.  ``use_arrow=True`` (default) runs the
-    order-exact numpy kernels; ``False`` runs the pure-Catalyst HOF
-    form — bit-identical outputs (tested), ~100× apart in speed.
-    ``driver_max_rows`` caps the driver fast path for the fit (None →
-    :data:`KMEANS_DRIVER_MAX_ROWS`, 0 → always distributed)."""
+    Arrow kernel) — write it, sample against it, or join it without
+    re-clustering.  ``driver_max_rows`` caps the driver fast path for
+    the fit (None → :data:`KMEANS_DRIVER_MAX_ROWS`, 0 → always
+    distributed)."""
     if k < 1 or iters < 0:
         raise ValueError(f"need k >= 1 and iters >= 0, got {k=} {iters=}")
     if init not in ("farthest", "hash"):
         raise ValueError(f"init must be 'farthest' or 'hash', got {init!r}")
     if driver_max_rows is None:
         driver_max_rows = KMEANS_DRIVER_MAX_ROWS
-
-    def assign(col, cents):
-        if use_arrow:
-            return _assign_arrow(cents, dim)(col)
-        return _assign_expr(col, cents)
-
-    def min_dist(col, cents):
-        if use_arrow:
-            return _min_dist_arrow(cents, dim)(col)
-        return _min_dist_expr(col, cents)
 
     from ..exec_utils import materialize
 
@@ -336,11 +296,7 @@ def kmeans_fit_assign(
         vals = np.array(
             [x for r in probe for x in r[vec_col]], dtype=np.float64
         )
-        in_envelope = bool(
-            np.isfinite(vals).all()
-            and (np.abs(vals) <= _DEC12_MAX_ABS).all()
-        ) if len(vals) else True
-        if in_envelope:
+        if _dec12_fits(vals, len(probe)):
             if len(probe) < n_seeds:
                 raise ValueError(
                     f"k={k} but only {len(probe)} valid vectors"
@@ -349,7 +305,8 @@ def kmeans_fit_assign(
                 probe, k, iters, id_col, vec_col, init
             )
             out = v.select(
-                id_col, assign(F.col(vec_col), centroids).alias("cluster")
+                id_col,
+                _assign_arrow(centroids, dim)(F.col(vec_col)).alias("cluster"),
             )
             return out, centroids
     seed_rows = v.orderBy(*_init_order(id_col)).limit(n_seeds).collect()
@@ -361,7 +318,7 @@ def kmeans_fit_assign(
     while len(centroids) < k:  # farthest-point traversal
         nxt = (
             v.orderBy(
-                min_dist(F.col(vec_col), centroids).desc(),
+                _min_dist_arrow(centroids, dim)(F.col(vec_col)).desc(),
                 F.col(id_col).asc(),
             )
             .limit(1)
@@ -377,7 +334,7 @@ def kmeans_fit_assign(
         assigned = v.select(
             id_col,
             vec_col,
-            assign(F.col(vec_col), centroids).alias("cluster"),
+            _assign_arrow(centroids, dim)(F.col(vec_col)).alias("cluster"),
         )
         stats = (
             assigned.select(
@@ -401,7 +358,7 @@ def kmeans_fit_assign(
             for j in range(k)
         ]
     out = v.select(
-        id_col, assign(F.col(vec_col), centroids).alias("cluster")
+        id_col, _assign_arrow(centroids, dim)(F.col(vec_col)).alias("cluster")
     )
     return out, centroids
 
@@ -432,13 +389,12 @@ def semantic_dedup(
     vec_col: str = "embedding",
     dim: int = 64,
     init: str = "farthest",
-    use_arrow: bool = True,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023): k-means-cluster the corpus, then
     drop rows whose EXACT cosine similarity to a lower-id member of the
     same cluster reaches ``cos_threshold``.  Clustering makes the
     quadratic step tractable: pairs are only formed WITHIN a cluster, so
-    the self-join's key is the cluster id and its cost is
+    the pair scan's key is the cluster id and its cost is
     Σ|cluster|² — the paper's trick, with k as the knob (production:
     k ≈ corpus/⟨a few thousand⟩; the LSH-banded path in
     operators/similarity.py is the alternative when no clustering is
@@ -449,7 +405,7 @@ def semantic_dedup(
     vectors (NULL / ragged / null-element) pass through unexamined,
     the similarity.py convention.
 
-    Scale notes: the cluster self-join shuffles on the cluster id; a
+    Scale notes: the pair scan shuffles on (cluster, chunk pair); a
     degenerate mega-cluster (all-identical corpus) degrades to the
     quadratic worst case — the same failure mode as a hot LSH band, and
     the same remedy (raise k, or pre-collapse exact duplicates with
@@ -457,173 +413,132 @@ def semantic_dedup(
     left-to-right folds and IEEE sqrt — bit-identical across engines,
     so the threshold verdict itself is oracle-checkable.
 
-    ``use_arrow=True`` (default) runs the in-cluster pair scan as ONE
-    ``applyInPandas`` per cluster with the order-exact numpy kernel
-    (block-chunked m×b cosine slabs — memory bounded even for large
-    clusters; each group's member matrix must fit an executor, the
-    SemDeDup operating assumption).  ``False`` runs the pure-Catalyst
-    self-join — bit-identical drops (tested), interpreted-fold slow."""
+    The in-cluster pair scan runs as ``applyInPandas`` groups with the
+    order-exact numpy kernel (tiled cosine slabs — memory bounded even
+    for large clusters; each group's member matrix must fit an
+    executor, the SemDeDup operating assumption)."""
     assigned, _ = kmeans_fit_assign(
-        vectors, k, iters, id_col, vec_col, dim, init, use_arrow
+        vectors, k, iters, id_col, vec_col, dim, init
     )
     v = _valid(vectors, vec_col, dim)
-    if use_arrow:
-        tau = float(cos_threshold)
-        # Parallelize the Σ|cluster|² pair scan beyond k tasks (guide
-        # §2.5/§2.6: one group per cluster leaves cores idle whenever
-        # k < cores).  Each cluster's members are hash-chunked into C
-        # id-buckets; every unordered chunk pair (ga ≤ gb) becomes an
-        # independent applyInPandas group, so the scan runs as
-        # k·C(C+1)/2 tasks.  A row joins exactly C groups, so shuffle
-        # duplication is C× the (id, vec) rows — bounded and chosen
-        # from the session parallelism.  Pair verdicts are unchanged:
-        # every (i, j) pair is examined exactly once (in the block
-        # owning its two chunks) with the same dim-sequential fold.
-        par = vectors.sparkSession.sparkContext.defaultParallelism
-        C = 1
-        while C * (C + 1) // 2 * max(k, 1) < 2 * par and C < 12:
-            C += 1
-        TI = TJ = 512  # cache-resident cosine tiles (TI×TJ float64)
+    tau = float(cos_threshold)
+    # Parallelize the Σ|cluster|² pair scan beyond k tasks (guide
+    # §2.5/§2.6: one group per cluster leaves cores idle whenever
+    # k < cores).  Each cluster's members are hash-chunked into C
+    # id-buckets; every unordered chunk pair (ga ≤ gb) becomes an
+    # independent applyInPandas group, so the scan runs as
+    # k·C(C+1)/2 tasks.  A row joins exactly C groups, so shuffle
+    # duplication is C× the (id, vec) rows — bounded and chosen
+    # from the session parallelism.  Pair verdicts are unchanged:
+    # every (i, j) pair is examined exactly once (in the block
+    # owning its two chunks) with the same dim-sequential fold.
+    par = vectors.sparkSession.sparkContext.defaultParallelism
+    C = 1
+    while C * (C + 1) // 2 * max(k, 1) < 2 * par and C < 12:
+        C += 1
+    TI = TJ = 512  # cache-resident cosine tiles (TI×TJ float64)
 
-        def _nrm(X: np.ndarray) -> np.ndarray:
-            nrm2 = np.zeros(X.shape[0], dtype=np.float64)
-            for d in range(X.shape[1]):
-                nrm2 += X[:, d] * X[:, d]
-            return np.sqrt(nrm2)
+    def _nrm(X: np.ndarray) -> np.ndarray:
+        nrm2 = np.zeros(X.shape[0], dtype=np.float64)
+        for d in range(X.shape[1]):
+            nrm2 += X[:, d] * X[:, d]
+        return np.sqrt(nrm2)
 
-        def _cos_tile(A: np.ndarray, B: np.ndarray) -> np.ndarray:
-            """A·Bᵀ with the dim-sequential (bit-exact) fold order."""
-            acc = np.zeros((A.shape[0], B.shape[0]), dtype=np.float64)
-            tmp = np.empty_like(acc)
-            for d in range(A.shape[1]):
-                np.multiply(A[:, d, None], B[None, :, d], out=tmp)
-                acc += tmp
-            return acc
+    def _cos_tile(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+        """A·Bᵀ with the dim-sequential (bit-exact) fold order."""
+        acc = np.zeros((A.shape[0], B.shape[0]), dtype=np.float64)
+        tmp = np.empty_like(acc)
+        for d in range(A.shape[1]):
+            np.multiply(A[:, d, None], B[None, :, d], out=tmp)
+            acc += tmp
+        return acc
 
-        def _dropped(key, pdf: pd.DataFrame) -> pd.DataFrame:
-            ga, gb = int(key[1]), int(key[2])
-            if ga == gb:  # diagonal block: triangular scan within chunk
-                pdf = pdf.sort_values("_id").reset_index(drop=True)
-                X = _to_mat(pdf["_v"], dim)
-                m = X.shape[0]
-                ids = pdf["_id"].to_numpy()
-                nrm = _nrm(X)
-                dropped = np.zeros(m, dtype=bool)
-                for j0 in range(1, m, TJ):
-                    j1 = min(j0 + TJ, m)
-                    bn = nrm[j0:j1]
-                    for i0 in range(0, j1, TI):
-                        i1 = min(i0 + TI, j1)
-                        with np.errstate(divide="ignore", invalid="ignore"):
-                            cos = _cos_tile(X[i0:i1], X[j0:j1]) / np.outer(
-                                nrm[i0:i1], bn
-                            )
-                        ok = (
-                            (np.arange(i0, i1)[:, None]
-                             < np.arange(j0, j1)[None, :])
-                            & (nrm[i0:i1, None] > 0)
-                            & (bn[None, :] > 0)
-                        )
-                        dropped[j0:j1] |= (ok & (cos >= tau)).any(axis=0)
-                return pd.DataFrame({"_id": ids[dropped]})
-            A = pdf[pdf["_side"] == 0]
-            B = pdf[pdf["_side"] == 1]
-            XA = _to_mat(A["_v"], dim)
-            XB = _to_mat(B["_v"], dim)
-            ia = A["_id"].to_numpy()
-            ib = B["_id"].to_numpy()
-            na = _nrm(XA)
-            nb = _nrm(XB)
-            da = np.zeros(len(ia), dtype=bool)
-            db = np.zeros(len(ib), dtype=bool)
-            for i0 in range(0, XA.shape[0], TI):
-                i1 = min(i0 + TI, XA.shape[0])
-                for j0 in range(0, XB.shape[0], TJ):
-                    j1 = min(j0 + TJ, XB.shape[0])
+    def _dropped(key, pdf: pd.DataFrame) -> pd.DataFrame:
+        ga, gb = int(key[1]), int(key[2])
+        if ga == gb:  # diagonal block: triangular scan within chunk
+            pdf = pdf.sort_values("_id").reset_index(drop=True)
+            X = _to_mat(pdf["_v"], dim)
+            m = X.shape[0]
+            ids = pdf["_id"].to_numpy()
+            nrm = _nrm(X)
+            dropped = np.zeros(m, dtype=bool)
+            for j0 in range(1, m, TJ):
+                j1 = min(j0 + TJ, m)
+                bn = nrm[j0:j1]
+                for i0 in range(0, j1, TI):
+                    i1 = min(i0 + TI, j1)
                     with np.errstate(divide="ignore", invalid="ignore"):
-                        cos = _cos_tile(XA[i0:i1], XB[j0:j1]) / np.outer(
-                            na[i0:i1], nb[j0:j1]
+                        cos = _cos_tile(X[i0:i1], X[j0:j1]) / np.outer(
+                            nrm[i0:i1], bn
                         )
-                    qual = (
-                        (na[i0:i1, None] > 0)
-                        & (nb[None, j0:j1] > 0)
-                        & (cos >= tau)
+                    ok = (
+                        (np.arange(i0, i1)[:, None]
+                         < np.arange(j0, j1)[None, :])
+                        & (nrm[i0:i1, None] > 0)
+                        & (bn[None, :] > 0)
                     )
-                    lt = ia[i0:i1, None] < ib[None, j0:j1]
-                    db[j0:j1] |= (qual & lt).any(axis=0)
-                    da[i0:i1] |= (qual & ~lt).any(axis=1)
-            return pd.DataFrame(
-                {"_id": np.concatenate([ia[da], ib[db]])}
-            )
-
-        members = v.join(assigned, id_col).select(
-            F.col(id_col).alias("_id"),
-            F.col("cluster"),
-            F.col(vec_col).alias("_v"),
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(C)).alias("_c"),
-        )
-        blocks = members.select(
-            "_id",
-            "cluster",
-            "_v",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {C - 1}), x -> "
-                    "IF(x >= _c, named_struct('ga', _c, 'gb', bigint(x), 'side', 0), "
-                    "named_struct('ga', bigint(x), 'gb', _c, 'side', 1)))"
+                    dropped[j0:j1] |= (ok & (cos >= tau)).any(axis=0)
+            return pd.DataFrame({"_id": ids[dropped]})
+        A = pdf[pdf["_side"] == 0]
+        B = pdf[pdf["_side"] == 1]
+        XA = _to_mat(A["_v"], dim)
+        XB = _to_mat(B["_v"], dim)
+        ia = A["_id"].to_numpy()
+        ib = B["_id"].to_numpy()
+        na = _nrm(XA)
+        nb = _nrm(XB)
+        da = np.zeros(len(ia), dtype=bool)
+        db = np.zeros(len(ib), dtype=bool)
+        for i0 in range(0, XA.shape[0], TI):
+            i1 = min(i0 + TI, XA.shape[0])
+            for j0 in range(0, XB.shape[0], TJ):
+                j1 = min(j0 + TJ, XB.shape[0])
+                with np.errstate(divide="ignore", invalid="ignore"):
+                    cos = _cos_tile(XA[i0:i1], XB[j0:j1]) / np.outer(
+                        na[i0:i1], nb[j0:j1]
+                    )
+                qual = (
+                    (na[i0:i1, None] > 0)
+                    & (nb[None, j0:j1] > 0)
+                    & (cos >= tau)
                 )
-            ).alias("_blk"),
-        ).select(
-            "_id",
-            "cluster",
-            "_v",
-            F.col("_blk.ga").alias("_ga"),
-            F.col("_blk.gb").alias("_gb"),
-            F.col("_blk.side").alias("_side"),
+                lt = ia[i0:i1, None] < ib[None, j0:j1]
+                db[j0:j1] |= (qual & lt).any(axis=0)
+                da[i0:i1] |= (qual & ~lt).any(axis=1)
+        return pd.DataFrame(
+            {"_id": np.concatenate([ia[da], ib[db]])}
         )
-        dropped = (
-            blocks.groupBy("cluster", "_ga", "_gb")
-            .applyInPandas(_dropped, schema="_id long")
-            .select(F.col("_id").alias(id_col))
-        )
-        # a node may be dropped by several blocks — the anti join is
-        # duplicate-insensitive, no distinct needed
-        return vectors.join(dropped, id_col, "left_anti")
-    norm = F.sqrt(
-        F.aggregate(
-            F.transform(
-                F.col(vec_col),
-                lambda x: x.cast("double") * x.cast("double"),
-            ),
-            F.lit(0.0).cast("double"),
-            lambda acc, x: acc + x,
-        )
-    )
+
     members = v.join(assigned, id_col).select(
         F.col(id_col).alias("_id"),
         F.col("cluster"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("_e"),
-        norm.alias("_n"),
+        F.col(vec_col).alias("_v"),
+        F.pmod(F.xxhash64(F.col(id_col)), F.lit(C)).alias("_c"),
     )
-    b = members.select(
-        F.col("_id").alias("_id2"),
-        F.col("cluster"),
-        F.col("_e").alias("_e2"),
-        F.col("_n").alias("_n2"),
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("_e"), F.col("_e2"), lambda x, y: x * y),
-        F.lit(0.0).cast("double"),
-        lambda acc, x: acc + x,
+    blocks = members.select(
+        "_id",
+        "cluster",
+        "_v",
+        F.explode(
+            F.expr(
+                f"transform(sequence(0, {C - 1}), x -> "
+                "IF(x >= _c, named_struct('ga', _c, 'gb', bigint(x), 'side', 0), "
+                "named_struct('ga', bigint(x), 'gb', _c, 'side', 1)))"
+            )
+        ).alias("_blk"),
+    ).select(
+        "_id",
+        "cluster",
+        "_v",
+        F.col("_blk.ga").alias("_ga"),
+        F.col("_blk.gb").alias("_gb"),
+        F.col("_blk.side").alias("_side"),
     )
     dropped = (
-        members.join(b, "cluster")
-        .filter(F.col("_id") < F.col("_id2"))
-        .filter((F.col("_n") > 0) & (F.col("_n2") > 0))
-        .filter(
-            dot / (F.col("_n") * F.col("_n2")) >= F.lit(cos_threshold)
-        )
-        .select(F.col("_id2").alias(id_col))
-        .distinct()
+        blocks.groupBy("cluster", "_ga", "_gb")
+        .applyInPandas(_dropped, schema="_id long")
+        .select(F.col("_id").alias(id_col))
     )
+    # a node may be dropped by several blocks — the anti join is
+    # duplicate-insensitive, no distinct needed
     return vectors.join(dropped, id_col, "left_anti")

@@ -362,16 +362,15 @@ def image_validator_udf(min_dim: int = MIN_DIM, max_dim: int = MAX_DIM):
 
 
 # ---------------------------------------------------------------------------
-# Structural integrity pre-gate: magic + trailer framing decided JVM-SIDE,
-# before any byte crosses to the Arrow decoder.  A truncated download is
-# the single most common corruption in crawled image corpora (the
+# Structural integrity flags: magic + trailer framing decided JVM-SIDE,
+# without any byte crossing to the Arrow decoder.  A truncated download
+# is the single most common corruption in crawled image corpora (the
 # connection died mid-transfer; the header is pristine, the end-of-image
 # marker is gone).  Spark's substring/length/equality all operate on
 # BinaryType natively, so this check is pure whole-stage codegen over the
-# bytes column — at 10^12 images every row it rejects never pays Arrow
-# serialization or a decode attempt.  The decoder's own sniff
-# (validate_batch above) remains the authority on DECODABILITY; this gate
-# only certifies framing, which is exactly what makes it free.
+# bytes column.  The decoder's own sniff (validate_batch above) remains
+# the authority on DECODABILITY; these flags only certify framing and
+# feed q90's corruption report, never the pipeline's decode input.
 # Format constants are the public file-format magics (ISO/IEC 10918 JPEG
 # SOI/EOI, RFC 2083 PNG signature + IEND chunk, GIF89a trailer).
 # ---------------------------------------------------------------------------
@@ -443,41 +442,13 @@ def structural_flag_sql(bytes_sql: str, fmt_sql: str, which: str) -> str:
     )
 
 
-def sniffable(bytes_col):
-    """True iff the decoder's own magic table (``sources/codecs.MAGIC``)
-    would sniff these bytes — i.e. ``sniff_format`` returns non-None.
-    Built FROM that table so the Catalyst predicate and the Python sniff
-    can never drift.  This is the verdict-neutral decode pre-mask:
-    unsniffable bytes are exactly the rows where ``validate_batch``
-    yields magic_ok=False, decodable=False without reading past the
-    prefix, so masking them out of the Arrow batch changes no flag.
-    (A declared-format mismatch is NOT maskable: the decoder decodes by
-    sniffed content, not the label.)"""
-    from pyspark.sql import functions as F
-
-    from ..sources.codecs import MAGIC
-
-    pred = F.lit(False)
-    for magic in MAGIC.values():
-        pred = pred | (
-            F.substring(bytes_col, 1, len(magic)) == F.lit(bytes(magic))
-        )
-    # NULL bytes must be False, not NULL: sniff_format(None) is None, and
-    # a three-valued result would silently drop NULL-byte rows from BOTH
-    # sides of a filter/anti-filter pair
-    return F.coalesce(pred, F.lit(False))
-
-
 def structural_gate(df, bytes_col: str, fmt_col: str, out_col: str = "framing"):
     """Annotate ``df`` with a struct<header_ok, trailer_ok, intact>
     column — a REPORTING/triage signal (q90's corruption dashboard), not
     a decode mask.  Do NOT mask decoder input on ``intact``: decode_png
     is deliberately lenient about a missing IEND (as libpng is), so a
     trailer-broken file can still be decodable and an intact-based mask
-    would flip keep verdicts.  The verdict-neutral decode pre-mask is
-    :func:`sniffable` (wired as run_pipeline's ``structural_pregate``),
-    which masks only bytes the decoder provably rejects from the prefix
-    alone."""
+    would flip keep verdicts."""
     from pyspark.sql import functions as F
 
     flags = structural_flags(F.col(bytes_col), F.col(fmt_col))

@@ -23,12 +23,13 @@ Metric definitions (pinned, identical in Spark / numpy / DuckDB):
 
 Docs with fewer than n tokens emit no row for that n.
 
-Two physical forms, equal by test:
+Two physical forms, equal by test (and to the DuckDB twin
+:func:`token_ngram_metrics_duck_sql`):
 
-* :func:`token_ngram_metrics` — the NATIVE analytics form: one explode
-  of (n, gram) pairs → two hash aggregates.  Shuffle = total n-gram
-  rows (corpus × ~tokens-per-doc × |ns|), the same explode-shape as the
-  q49/q50 paths; right for audits and for the q56 oracle-checked query.
+* :func:`token_ngram_metrics` — the NATIVE analytics form: each doc's
+  gram array is sorted and run-length-encoded by one ``aggregate`` HOF,
+  map-only (no gram-row shuffle); right for audits and for the q56
+  oracle-checked query.
 * :func:`repetition_metrics_udf` — the MAP-ONLY Arrow kernel for
   filter-stage use at 10^12 rows (no shuffle): chunk-global numpy —
   one utf-32-free token hash pass (``hashing.poly60_token_np``),
@@ -48,7 +49,7 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import hashing as HH
@@ -63,37 +64,7 @@ DEFAULT_NS = (2, 3, 5)
 _TOKS = TXF.WS_TOKENS_SPARK
 
 
-def _grams_expr(toks: str, ns: tuple[int, ...]) -> Column:
-    """(n, gram) struct array of every n-gram for every n in ``ns``.
-
-    ``toks`` must be a CHEAP reference (a let-bound array column), not
-    the tokenizer expression itself — it appears many times below (the
-    q49 HOF let-binding lesson).
-
-    Construction is a ``zip_with`` LADDER: gram_k[i] = gram_{k-1}[i] +
-    ' ' + toks[i+k-1], i.e. each level is one elementwise concat of two
-    aligned slices.  The previous form (``transform(sequence(1, W), i ->
-    concat_ws(' ', slice(toks, i, n)))``) paid an O(n) array copy per
-    WINDOW inside the lambda — measured 10× slower per gram on sf0.1
-    (4.2 s vs 0.4 s for the n=2 level alone).  Short docs fall out
-    naturally: size < k makes both slices empty (slice length
-    ``greatest(size-k+1, 0)``; zip_with of equal-length arrays never
-    null-pads)."""
-    levels: dict[int, str] = {1: toks}
-    for k in range(2, max(ns) + 1):
-        m = f"greatest(size({toks}) - {k - 1}, 0)"
-        levels[k] = (
-            f"zip_with(slice({levels[k - 1]}, 1, {m}), "
-            f"slice({toks}, {k}, {m}), (a, b) -> concat(a, ' ', b))"
-        )
-    per_n = ", ".join(
-        f"transform({levels[n]}, g -> named_struct('n', {n}, 'gram', g))"
-        for n in ns
-    )
-    return F.expr(f"flatten(array({per_n}))")
-
-
-# sorted-RLE fold pieces shared by the map-only form: finalize the run
+# sorted-RLE fold pieces of the native form: finalize the run
 # that just ended (cover = count × gram chars)
 _RLE_COVER = (
     "IF(s.prev IS NULL, s.best, "
@@ -130,13 +101,18 @@ def token_ngram_metrics(
     emit no row for that n.  ``carry_cols`` ride through unchanged.
 
     Both metrics are within-document statistics, so exploding grams
-    into a corpus-wide groupBy (``token_ngram_metrics_explode``) buys
-    nothing but a gram-row shuffle; instead each doc sorts its own gram
-    array and one ``aggregate`` HOF run-length-encodes it — top cover =
-    max run·chars, dup cover = Σ runs ≥ 2 — entirely inside whole-stage
-    codegen, zero exchange on the corpus-sized side (measured 5.8 s →
-    1.6 s for q56 at sf0.1; at 10^12 docs this removes the largest
-    shuffle the operator family had).  Equality with the explode form
+    into a corpus-wide groupBy buys nothing but a gram-row shuffle;
+    instead each doc sorts its own gram array and one ``aggregate`` HOF
+    run-length-encodes it — top cover = max run·chars, dup cover = Σ
+    runs ≥ 2 — entirely inside whole-stage codegen, zero exchange on the
+    corpus-sized side (measured 5.8 s → 1.6 s for q56 at sf0.1 against
+    the explode + two-aggregate form it replaced).
+
+    Grams are built by a ``zip_with`` LADDER: gram_k[i] = gram_{k-1}[i]
+    + ' ' + toks[i+k-1], one elementwise concat of two aligned slices
+    per level (a ``slice`` per window inside a ``transform`` lambda
+    measured 10× slower per gram).  Short docs fall out naturally: size
+    < k makes both slices empty.  Exact equality with the DuckDB twin
     and the Arrow kernel is pinned in tests/test_repetition.py."""
     toks = F.expr(_TOKS.format(c=text_col))
     levels: dict[int, str] = {1: "_toks"}
@@ -170,64 +146,6 @@ def token_ngram_metrics(
             F.col("_m.n").alias("n"),
             F.col("_m.top_frac").alias("top_frac"),
             F.col("_m.dup_frac").alias("dup_frac"),
-        )
-    )
-
-
-def token_ngram_metrics_explode(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    ns: tuple[int, ...] = DEFAULT_NS,
-    carry_cols: tuple[str, ...] = (),
-) -> DataFrame:
-    """The explode + two-hash-aggregate form of the same metrics — kept
-    as the independent cross-check the tests compare against (its gram
-    relation is also the shape you want when you really do need
-    corpus-wide gram statistics rather than per-doc ones)."""
-    # tokenize ONCE into a let-bound column, and project _L and the gram
-    # array BELOW the explode: an expression sharing a SELECT with a
-    # generator lands in the post-Generate projection and is re-evaluated
-    # once per GRAM row (for _L that is a full re-tokenize per gram)
-    base = (
-        df.filter(F.col(text_col).isNotNull())
-        .select(
-            F.col(id_col),
-            *[F.col(c) for c in carry_cols],
-            F.expr(_TOKS.format(c=text_col)).alias("_toks"),
-        )
-        .select(
-            F.col(id_col),
-            *[F.col(c) for c in carry_cols],
-            F.expr("length(concat_ws(' ', _toks))").alias("_L"),
-            _grams_expr("_toks", ns).alias("_gs"),
-        )
-        .select(
-            id_col, *carry_cols, "_L", F.explode(F.col("_gs")).alias("_g")
-        )
-        .select(
-            id_col, *carry_cols, "_L",
-            F.col("_g.n").alias("n"), F.col("_g.gram").alias("_gram"),
-        )
-    )
-    counts = base.groupBy(id_col, *carry_cols, "_L", "n", "_gram").agg(
-        F.count("*").alias("_cnt")
-    )
-    cover = F.col("_cnt") * F.length("_gram")
-    return (
-        counts.groupBy(id_col, *carry_cols, "n")
-        .agg(
-            F.round(
-                F.least(F.lit(1.0), F.max(cover) / F.first("_L")), 6
-            ).alias("top_frac"),
-            F.round(
-                F.least(
-                    F.lit(1.0),
-                    F.sum(F.when(F.col("_cnt") >= 2, cover).otherwise(0))
-                    / F.first("_L"),
-                ),
-                6,
-            ).alias("dup_frac"),
         )
     )
 
@@ -277,7 +195,7 @@ _SCORE_CHUNK = 2048
 
 # Java-regex \s = [ \t\n\x0B\f\r] (ASCII only) — Python str.split()
 # splits on UNICODE whitespace (U+00A0 etc.), which would silently
-# diverge from the explode form on crawled HTML; pin the Java set.
+# diverge from the native form on crawled HTML; pin the Java set.
 _JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
 
@@ -349,7 +267,7 @@ def _metrics_chunk(
 def repetition_metrics_udf(ns: tuple[int, ...] = DEFAULT_NS):
     """Arrow-vectorized map-only twin of :func:`token_ngram_metrics`:
     struct<top_frac_<n> double, dup_frac_<n> double, ...> per row (0.0
-    where the doc has < n tokens or is NULL — the explode form emits no
+    where the doc has < n tokens or is NULL — the native form emits no
     row there; the flat 0.0 is the filter-stage convention, matching
     'nothing repeated')."""
     fields = ", ".join(

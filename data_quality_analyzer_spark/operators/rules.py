@@ -131,31 +131,6 @@ def _caption_rules() -> tuple[Rule, ...]:
 CAPTION_RULES: tuple[Rule, ...] = _caption_rules()
 
 
-def rule_flag_columns(col: Column, rules: tuple[Rule, ...] = CAPTION_RULES) -> dict[str, Column]:
-    """One boolean 'passes' column per rule — nulls collapsed to False so a
-    missing caption fails every rule deterministically."""
-    return {
-        f"pass_{r.key}": F.coalesce(r.spark_pred(col), F.lit(False)) for r in rules
-    }
-
-
-def with_verdict(
-    df: DataFrame,
-    text_col: str,
-    rules: tuple[Rule, ...] = CAPTION_RULES,
-    keep_col: str = "keep",
-) -> DataFrame:
-    """Attach per-rule pass flags + the AND-of-all keep/drop verdict column
-    (record-level analogue of the check pass/fail verdicts, SURVEY §1.1)."""
-    c = F.col(text_col)
-    out = df
-    keep = F.lit(True)
-    for name, flag in rule_flag_columns(c, rules).items():
-        out = out.withColumn(name, flag)
-        keep = keep & F.col(name)
-    return out.withColumn(keep_col, keep)
-
-
 def rule_metrics(
     df: DataFrame, text_col: str, rules: tuple[Rule, ...] = CAPTION_RULES
 ) -> DataFrame:

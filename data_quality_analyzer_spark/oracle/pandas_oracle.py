@@ -67,7 +67,6 @@ def _stopword_ratio(text: str | None, words: tuple[str, ...]) -> float:
 def oracle_verdicts(
     images: pd.DataFrame,
     settings: PipelineSettings | None = None,
-    short_circuit: bool = True,
 ) -> pd.DataFrame:
     """images pdf (input_hint schema) → oracle verdict pdf (same columns as
     plans.pipeline.run_pipeline output, minus the passthrough bytes).
@@ -92,10 +91,7 @@ def oracle_verdicts(
         b = images["bytes"].iloc[i]
         return b is not None and len(b) > 0  # bytes_present
 
-    gate = pd.Series(
-        [True] * n if not short_circuit else [_gate(i) for i in range(n)],
-        index=images.index,
-    )
+    gate = pd.Series([_gate(i) for i in range(n)], index=images.index)
     cap_gated = cap.where(gate)
 
     li_model = LI.get_model()

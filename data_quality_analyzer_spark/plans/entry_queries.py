@@ -94,10 +94,6 @@ def _dsum(col, alias: str):
     return F.sum(F.col(col).cast("decimal(18,2)")).cast("double").alias(alias)
 
 
-def _dsum_sql(col: str, alias: str) -> str:
-    return f"CAST(SUM(CAST({col} AS DECIMAL(18,2))) AS DOUBLE) AS {alias}"
-
-
 # ---------------------------------------------------------------------------
 # Relational core (TPC-H-ish) — the generic aggregation layer that backs the
 # reference's ~60 checks (SURVEY §2.4).
@@ -3035,9 +3031,13 @@ _Q67_SRC = (
 )
 
 
-def _q67_oracle() -> str:
+def _semdedup_oracle_sql(
+    k: int, iters: int, dim: int, src: str, cos_threshold: float
+) -> str:
+    """SemDeDup over ``src``: the unrolled k-means chain, then the
+    in-cluster pair self-join; returns the kept ``vec_id``s."""
     return (
-        _kmeans_oracle_cte(k=4, iters=1, dim=64, src=_Q67_SRC)
+        _kmeans_oracle_cte(k=k, iters=iters, dim=dim, src=src)
         + f""",
     m AS (
       SELECT vec_id, cluster, e,
@@ -3049,12 +3049,16 @@ def _q67_oracle() -> str:
       FROM m a JOIN m b ON a.cluster = b.cluster AND a.vec_id < b.vec_id
       WHERE a.nrm > 0 AND b.nrm > 0
         AND list_sum(list_transform(a.e, (x, i) -> x * b.e[i]))
-            / (a.nrm * b.nrm) >= 0.995
+            / (a.nrm * b.nrm) >= {cos_threshold}
     )
-    SELECT e0.vec_id FROM {_Q67_SRC} e0
+    SELECT e0.vec_id FROM {src} e0
     WHERE e0.vec_id NOT IN (SELECT vec_id FROM drp)
     """
     )
+
+
+def _q67_oracle() -> str:
+    return _semdedup_oracle_sql(4, 1, 64, _Q67_SRC, 0.995)
 
 
 @_register("q67_semantic_dedup", _q67_oracle)
@@ -4825,9 +4829,9 @@ def q90(spark, sf_dir):
     JVM-side on the binary column — substring/length/equality on
     BinaryType are pure whole-stage codegen, so a truncated download
     (header pristine, trailer gone: the dominant crawl corruption) is
-    rejected before its bytes ever pay Arrow serialization or a decode
-    attempt.  Tri-state semantics: formats with no framing rule stay
-    NULL-verdict, distinct from "checked and failed".  The corrupt-set
+    reported without its bytes ever crossing to Python.  Tri-state
+    semantics: formats with no framing rule stay NULL-verdict, distinct
+    from "checked and failed".  The corrupt-set
     checksum value-proves exactly WHICH files each engine rejected.
     Oracle: an independent hex-string decomposition (DuckDB has no blob
     substring — left/right over hex(blob)).  Reference ancestor: U1's

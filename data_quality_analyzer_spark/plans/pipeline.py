@@ -6,8 +6,9 @@ One declarative DataFrame plan per batch of rows:
 1. **Caption heuristics** — native JVM column expressions (whole-stage
    codegen; zero Python): blank/length/token/symbol/repetition/word-length/
    toxicity rules + PII scrub via ``regexp_replace``.
-2. **Model scores** — two Arrow-batched pandas UDFs (langid, perplexity),
-   weights broadcast once per executor.
+2. **Model scores** — one fused Arrow-batched pandas UDF returning
+   (langid, perplexity, quality-classifier) as a struct, weights
+   broadcast once per executor.
 3. **Language-aware stopword rule** — native expression selected by the
    predicted language (per-language stopword lists baked as literals).
 4. **Image validation** — one pandas UDF over exactly (bytes,w,h,fmt);
@@ -40,9 +41,6 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import caption_scores as CS
-from ..functions import langid as LI
-from ..functions import perplexity as PX
-from ..functions import quality_clf as QC
 from ..functions import scrub as SC
 from ..functions import text as TX
 from ..operators import images as IM
@@ -103,42 +101,18 @@ def run_pipeline(
     spark: SparkSession,
     images: DataFrame,
     settings: CFG.PipelineSettings | None = None,
-    short_circuit: bool = True,
-    fuse_scores: bool = True,
-    with_quality_clf: bool = True,
-    structural_pregate: bool = False,
 ) -> DataFrame:
     """images(input_hint schema) → verdict table.
 
     Output: all input columns (bytes untouched) + caption_scrubbed,
-    lang_pred, lang_conf, perplexity, has_email/ssn/phone,
+    lang_pred, lang_conf, perplexity, quality_score, has_email/ssn/phone,
     pass_<rule> flags, keep, fail_rules.
 
-    ``short_circuit=False`` disables the critical-gate masking (every UDF
-    sees every row) — the keep verdict is identical either way because a
-    gated row already failed a critical rule; only the skipped rules' flags
-    and fail_rules entries differ (tested both ways).
-
-    ``fuse_scores=False`` runs the three caption scorers as separate
-    pandas UDFs (the pre-round-5 shape: three Arrow copies of the caption
-    column) instead of the fused struct UDF — identical results, kept as
-    the measurable A/B for the attribution bench.  ``with_quality_clf=
-    False`` skips the trained-classifier stage entirely (its rule passes
-    vacuously) — bench attribution only; production keeps it on.
-
-    ``structural_pregate=True`` additionally masks the decoder's bytes
-    input for rows the sniffer PROVABLY rejects — bytes carrying none of
-    the decoder's known magics (operators/images.sniffable, pure JVM
-    codegen over the same ``codecs.MAGIC`` table) never pay Arrow
-    serialization.  Verdict-neutral BY CONSTRUCTION: ``validate_batch``
-    produces magic_ok=False, decodable=False for unsniffable bytes
-    without reading past the prefix, so a masked row's flags are
-    identical (row-for-row tested on the fixture corpus).  Two stricter
-    masks were considered and rejected: declared-format mismatch (the
-    decoder decodes by sniffed CONTENT, so such rows can be decodable)
-    and q90's trailer-truncation check (decode_png is lenient about a
-    missing IEND, as libpng is) — both would flip verdicts; q90 stays a
-    reporting/triage signal.
+    One plan shape: the critical gate always masks the UDF inputs, the
+    three caption scorers run as one fused struct UDF, and the image
+    decoder sees every gated row's bytes.  The plan has exactly one
+    ``ArrowEvalPython`` node and no exchange (pinned in
+    tests/test_pipeline_oracle.py).
     """
     s = settings or CFG.DEFAULT_SETTINGS
     c = F.col("caption")
@@ -185,39 +159,22 @@ def run_pipeline(
         F.col("pass_caption_present")
         & F.col("pass_toxicity")
         & F.col("pass_bytes_present")
-        if short_circuit
-        else F.lit(True)
     )
     c_gated = F.when(gate, c)
 
-    # -- stage 2: model scores (Arrow-batched pandas UDFs).  Default path:
-    # ONE fused struct-returning UDF — the caption batch crosses the Arrow
-    # channel once for all three scorers (round-4 VERDICT finding 2) -------
-    if fuse_scores and with_quality_clf:
-        scores = CS.caption_scores_udf(spark)
-        df = df.withColumn("_cs", scores(c_gated))
-        df = df.withColumns(
-            {
-                "lang_pred": F.col("_cs.lang_pred"),
-                "lang_conf": F.col("_cs.lang_conf"),
-                "perplexity": F.col("_cs.perplexity"),
-                "quality_score": F.col("_cs.quality"),
-            }
-        ).drop("_cs")
-    else:
-        # same output column ORDER as the fused path (lang_pred, lang_conf,
-        # perplexity, quality_score) so the two are frame-identical
-        df = df.withColumn("_li", LI.langid_udf(spark)(c_gated))
-        df = df.withColumn("lang_pred", F.col("_li.lang_pred")).withColumn(
-            "lang_conf", F.col("_li.lang_conf")
-        ).drop("_li")
-        df = df.withColumn("perplexity", PX.perplexity_udf(spark)(c_gated))
-        df = df.withColumn(
-            "quality_score",
-            QC.quality_udf(spark)(c_gated)
-            if with_quality_clf
-            else F.lit(1.0),
-        )
+    # -- stage 2: model scores.  ONE fused struct-returning pandas UDF —
+    # the caption batch crosses the Arrow channel once for all three
+    # scorers (langid, perplexity, quality classifier) ---------------------
+    scores = CS.caption_scores_udf(spark)
+    df = df.withColumn("_cs", scores(c_gated))
+    df = df.withColumns(
+        {
+            "lang_pred": F.col("_cs.lang_pred"),
+            "lang_conf": F.col("_cs.lang_conf"),
+            "perplexity": F.col("_cs.perplexity"),
+            "quality_score": F.col("_cs.quality"),
+        }
+    ).drop("_cs")
     df = df.withColumns(
         {
             "pass_lang_confident": F.coalesce(
@@ -245,16 +202,11 @@ def run_pipeline(
     # -- stage 4: image validation (bytes cross Python exactly once, and
     # only for rows that survived the critical gate) ------------------------
     validator = IM.image_validator_udf(min_dim=s.min_dim, max_dim=s.max_dim)
-    bytes_in = F.col("bytes")
-    if structural_pregate:
-        # mask ONLY unsniffable bytes (no known magic): the decoder would
-        # reject them from the prefix alone, so no flag can change; a
-        # declared-format mismatch must still cross — the decoder decodes
-        # by sniffed content, not the label
-        bytes_in = F.when(IM.sniffable(F.col("bytes")), F.col("bytes"))
     df = df.withColumn(
         "_img",
-        validator(F.when(gate, bytes_in), F.col("w"), F.col("h"), F.col("fmt")),
+        validator(
+            F.when(gate, F.col("bytes")), F.col("w"), F.col("h"), F.col("fmt")
+        ),
     )
     df = df.withColumns(
         {

@@ -36,18 +36,6 @@ from ..operators.sampling import seeded_key_hash
 SHARD_COL = "shard"
 
 
-def shard_id(key_col: str, num_shards: int, seed: int = 0):
-    """Deterministic shard id column: h60(seed || key) mod num_shards.
-    The hash is :func:`..operators.sampling.seeded_key_hash` — ONE
-    derivation shared with every sampler, and NULL keys hash as the
-    empty string, so a NULL-key row lands in a real numbered shard
-    instead of the invisible __HIVE_DEFAULT_PARTITION__ directory that
-    no ``read_shard`` call ever requests (silent loss)."""
-    return F.pmod(seeded_key_hash(key_col, seed), F.lit(num_shards)).cast(
-        "int"
-    )
-
-
 def write_training_shards(
     df: DataFrame,
     path: str,
@@ -56,6 +44,14 @@ def write_training_shards(
     seed: int = 0,
     max_records_per_file: int | None = None,
 ) -> None:
+    """Write ``df`` as ``num_shards`` shard directories under ``path``:
+    shard = h60(seed || key) mod num_shards, rows sorted by (hash, key)
+    inside each shard.  The hash is
+    :func:`..operators.sampling.seeded_key_hash` — ONE derivation shared
+    with every sampler, and NULL keys hash as the empty string, so a
+    NULL-key row lands in a real numbered shard instead of the invisible
+    __HIVE_DEFAULT_PARTITION__ directory that no ``read_shard`` call ever
+    requests (silent loss)."""
     if num_shards <= 0:
         raise ValueError(f"num_shards must be positive, got {num_shards}")
     h = seeded_key_hash(key_col, seed)

@@ -18,6 +18,12 @@ Local smoke (this sandbox):
 
 The job is resumable: re-running with the same --output/--run-id recomputes
 only phash buckets missing from the atomic manifest.
+
+Each committed bucket also gets its per-rule pass/fail counts and langid
+histogram, written in the same commit (``<output>/_rule_metrics`` and
+``<output>/_langid_histogram``).  Read them back with
+``plans.lineage.read_committed_metrics(spark, output, which)``; summing
+over ``bucket`` gives the run-level tables.
 """
 
 from __future__ import annotations
@@ -55,11 +61,6 @@ def main() -> None:
         spark = SparkSession.builder.appName("filter_scrub").getOrCreate()
 
     from data_quality_analyzer_spark.plans import lineage as LN
-    from data_quality_analyzer_spark.plans.pipeline import (
-        langid_histogram,
-        pipeline_metrics,
-        run_pipeline,
-    )
 
     images = spark.read.parquet(args.input)
     manifest = LN.run_with_checkpoints(
@@ -67,11 +68,6 @@ def main() -> None:
         num_buckets=args.num_buckets, chunk_size=args.chunk_size,
     )
     verdicts = LN.read_committed(spark, args.output)
-    metrics = pipeline_metrics(verdicts)
-    metrics.write.mode("overwrite").parquet(os.path.join(args.output, "_metrics"))
-    hist = langid_histogram(verdicts)
-    hist.write.mode("overwrite").parquet(os.path.join(args.output, "_langid_histogram"))
-
     total = verdicts.count()
     kept = verdicts.filter("keep").count()
     print(json.dumps({

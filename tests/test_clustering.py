@@ -171,11 +171,33 @@ def test_semantic_dedup(spark):
     assert kept.columns == df.columns
 
 
+def _duck_emb(df):
+    """DuckDB connection with ``df``'s rows registered as the view
+    ``emb`` — read back from Spark, so both engines see the same
+    float32-rounded values."""
+    import duckdb
+    import pandas as pd
+
+    con = duckdb.connect()
+    con.register(
+        "emb",
+        pd.DataFrame(
+            [(r["vec_id"], list(r["embedding"])) for r in df.collect()],
+            columns=["vec_id", "embedding"],
+        ),
+    )
+    return con
+
+
 def test_arrow_and_hof_paths_bit_identical(spark):
-    """The numpy kernels accumulate dim-sequentially, so the Arrow path
-    must reproduce the interpreted HOF fold BIT-exactly — assignments,
-    centroids and SemDeDup drops all equal."""
+    """The numpy kernels accumulate dim-sequentially, so the engine must
+    reproduce the DuckDB unrolled k-means chain (left-to-right
+    ``list_sum`` folds, decimal(38,12) centroid sums) BIT-exactly —
+    centroids, assignments and SemDeDup keeps all equal, on both the
+    driver fast path and the distributed fit."""
     import numpy as np
+
+    from data_quality_analyzer_spark.plans import entry_queries as EQ
 
     rng = np.random.default_rng(7)
     rows = [
@@ -186,22 +208,32 @@ def test_arrow_and_hof_paths_bit_identical(spark):
     rows.append((900, [x * 1.0001 for x in rows[3][1]]))
     rows.append((901, [x for x in rows[10][1]]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    a_fast, c_fast = CL.kmeans_fit_assign(df, k=4, iters=2, dim=DIM)
-    a_slow, c_slow = CL.kmeans_fit_assign(
-        df, k=4, iters=2, dim=DIM, use_arrow=False
+    con = _duck_emb(df)
+    cte = EQ._kmeans_oracle_cte(k=4, iters=2, dim=DIM, src="emb")
+    want_a = sorted(
+        con.sql(cte + " SELECT vec_id, CAST(cluster AS INT) FROM af")
+        .fetchall()
     )
-    assert c_fast == c_slow  # bit-equal centroids
-    assert sorted(map(tuple, a_fast.collect())) == sorted(
-        map(tuple, a_slow.collect())
-    )
-    k_fast = CL.semantic_dedup(df, k=4, iters=2, cos_threshold=0.99, dim=DIM)
-    k_slow = CL.semantic_dedup(
-        df, k=4, iters=2, cos_threshold=0.99, dim=DIM, use_arrow=False
-    )
-    ids_fast = {r["vec_id"] for r in k_fast.select("vec_id").collect()}
-    ids_slow = {r["vec_id"] for r in k_slow.select("vec_id").collect()}
-    assert ids_fast == ids_slow
-    assert 900 not in ids_fast and 901 not in ids_fast  # drops happened
+    want_c = [
+        list(e)
+        for _, e in sorted(con.sql(cte + " SELECT cluster, e FROM c2").fetchall())
+    ]
+    for driver_max_rows in (None, 0):
+        a, c = CL.kmeans_fit_assign(
+            df, k=4, iters=2, dim=DIM, driver_max_rows=driver_max_rows
+        )
+        assert c == want_c  # bit-equal centroids
+        assert sorted(map(tuple, a.collect())) == want_a
+    kept = CL.semantic_dedup(df, k=4, iters=2, cos_threshold=0.99, dim=DIM)
+    ids = {r["vec_id"] for r in kept.select("vec_id").collect()}
+    want_ids = {
+        r[0]
+        for r in con.sql(
+            EQ._semdedup_oracle_sql(4, 2, DIM, "emb", 0.99)
+        ).fetchall()
+    }
+    assert ids == want_ids
+    assert 900 not in ids and 901 not in ids  # drops happened
 
 
 def test_semantic_dedup_chunked_blocks_match_hof(spark):
@@ -209,8 +241,10 @@ def test_semantic_dedup_chunked_blocks_match_hof(spark):
     C id-hash chunks and scans chunk-pair blocks as independent groups.
     With k=1 every pair crosses the chunking (C is maximal), so this
     pins the off-diagonal drop-the-larger-id rule and the diagonal
-    triangle against the unchunked interpreted HOF self-join."""
+    triangle against the unchunked DuckDB in-cluster self-join."""
     import numpy as np
+
+    from data_quality_analyzer_spark.plans import entry_queries as EQ
 
     rng = np.random.default_rng(13)
     rows = [
@@ -223,15 +257,45 @@ def test_semantic_dedup_chunked_blocks_match_hof(spark):
         rows.append((800 + j, [x * 1.0001 for x in rows[src][1]]))
         rows.append((900 + j, list(rows[src][1])))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    k_fast = CL.semantic_dedup(df, k=1, iters=1, cos_threshold=0.99, dim=DIM)
-    k_slow = CL.semantic_dedup(
-        df, k=1, iters=1, cos_threshold=0.99, dim=DIM, use_arrow=False
-    )
-    ids_fast = {r["vec_id"] for r in k_fast.select("vec_id").collect()}
-    ids_slow = {r["vec_id"] for r in k_slow.select("vec_id").collect()}
-    assert ids_fast == ids_slow
+    kept = CL.semantic_dedup(df, k=1, iters=1, cos_threshold=0.99, dim=DIM)
+    ids = {r["vec_id"] for r in kept.select("vec_id").collect()}
+    con = _duck_emb(df)
+    want = {
+        r[0]
+        for r in con.sql(
+            EQ._semdedup_oracle_sql(1, 1, DIM, "emb", 0.99)
+        ).fetchall()
+    }
+    assert ids == want
     # every planted twin lost to its (lower-id) source
-    assert ids_fast.isdisjoint(set(range(800, 806)) | set(range(900, 906)))
+    assert ids.isdisjoint(set(range(800, 806)) | set(range(900, 906)))
+
+
+def test_driver_fit_refuses_int64_overflow(spark):
+    """A caller may raise ``driver_max_rows`` past the default cap.  The
+    driver fit's exact decimal(38,12) sums are int64, so 599,995 values
+    of 15.9 in one cluster (Σ·1e12 ≈ 9.5e18 > 2^63) must not take the
+    driver path: the result must equal the distributed fit."""
+    from pyspark.sql import functions as F
+
+    n = 600_000
+    df = spark.range(n).select(
+        F.col("id").alias("vec_id"),
+        F.array(
+            F.when(F.col("id") < 5, F.lit(-15.9)).otherwise(F.lit(15.9))
+        ).alias("embedding"),
+    )
+    fast_a, fast_c = CL.kmeans_fit_assign(
+        df, k=2, iters=1, dim=1, driver_max_rows=2 * n
+    )
+    dist_a, dist_c = CL.kmeans_fit_assign(
+        df, k=2, iters=1, dim=1, driver_max_rows=0
+    )
+    assert fast_c == dist_c
+    assert sorted(round(c[0], 9) for c in fast_c) == [-15.9, 15.9]
+    joined = fast_a.alias("f").join(dist_a.alias("d"), "vec_id")
+    assert joined.count() == n
+    assert joined.filter(F.col("f.cluster") != F.col("d.cluster")).count() == 0
 
 
 def test_prep_embedding_corpus(spark):

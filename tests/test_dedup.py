@@ -821,7 +821,7 @@ def test_connected_components_distributed_path_on_q44_graph(spark):
     the REAL q44 near-dup pair graph (not just synthetic shapes) or it
     rots.  Forces ``driver_max_edges=0`` on the exact q37/q44 pair
     pipeline and asserts label-identical output.  Timing for both paths
-    at bench scale lives in PLANS.md (scripts/cc_path_timing.py)."""
+    at bench scale lives in PLANS.md."""
     from data_quality_analyzer_spark.operators import dedup as DD
     from data_quality_analyzer_spark.plans import entry_queries as EQ
 

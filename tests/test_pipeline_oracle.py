@@ -86,23 +86,19 @@ def test_every_rule_has_failures(aligned):
 
 
 def test_fused_scores_identical_and_single_arrow_node(spark, corpus_path):
-    """Round-5 UDF fusion contract: the fused struct-returning caption
-    scorer produces a frame IDENTICAL to the three separate UDFs, and the
-    verdict plan stays ONE ArrowEvalPython node with zero exchanges (the
-    caption batch crosses the Arrow channel once)."""
+    """Round-5 UDF fusion contract: the verdict plan stays ONE
+    ArrowEvalPython node with zero exchanges (the caption batch crosses
+    the Arrow channel once).  The fused scores themselves are pinned to
+    the pandas oracle by the flag tests above."""
     import re
 
     images = spark.read.parquet(corpus_path)
-    fused = run_pipeline(spark, images, fuse_scores=True).drop("bytes")
-    split = run_pipeline(spark, images, fuse_scores=False).drop("bytes")
-    a = fused.toPandas().sort_values(
-        ["image_id", "caption"], na_position="first"
-    ).reset_index(drop=True)
-    b = split.toPandas().sort_values(
-        ["image_id", "caption"], na_position="first"
-    ).reset_index(drop=True)
-    pd.testing.assert_frame_equal(a, b)
-    plan = fused._jdf.queryExecution().executedPlan().toString()
+    plan = (
+        run_pipeline(spark, images)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
     assert len(re.findall(r"ArrowEvalPython", plan)) == 1
     assert "Exchange" not in plan
 

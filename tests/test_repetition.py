@@ -1,11 +1,11 @@
-"""Gopher n-gram repetition metrics: the three physical forms (native
-explode, DuckDB twin, map-only Arrow kernel) agree; a phrase loop that
-EVADES the distinct-token-ratio heuristic is caught; edge cases."""
+"""Gopher n-gram repetition metrics: the native sorted-RLE form equals
+its DuckDB twin exactly and the map-only Arrow kernel agrees with both;
+a phrase loop that EVADES the distinct-token-ratio heuristic is caught;
+edge cases."""
 
 from __future__ import annotations
 
 import duckdb
-import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -44,12 +44,7 @@ def test_native_matches_duckdb(docs):
         .sort_values(["doc_id", "n"])
         .reset_index(drop=True)
     )
-    assert list(native["doc_id"]) == list(duck["doc_id"])
-    assert list(native["n"]) == list(duck["n"])
-    assert np.allclose(
-        native[["top_frac", "dup_frac"]], duck[["top_frac", "dup_frac"]],
-        atol=1e-6,
-    )
+    pd.testing.assert_frame_equal(native, duck, check_exact=True)
 
 
 def test_udf_matches_native(docs):
@@ -67,7 +62,7 @@ def test_udf_matches_native(docs):
         g = got.loc[r["doc_id"]]
         assert abs(g[f"top_frac_{n}"] - r["top_frac"]) < 1e-6
         assert abs(g[f"dup_frac_{n}"] - r["dup_frac"]) < 1e-6
-    # rows the explode form omits (null / < n tokens) read 0.0 in the UDF
+    # rows the native form omits (null / < n tokens) read 0.0 in the UDF
     assert (got.loc[4] == 0.0).all()
     assert got.loc[5, "top_frac_3"] == 0.0 and got.loc[5, "dup_frac_5"] == 0.0
 
@@ -146,7 +141,7 @@ def test_prep_gopher_gate(spark):
 def test_udf_matches_native_on_unicode_whitespace(spark):
     """Java \\s is ASCII-only: U+00A0 (non-breaking space, ubiquitous in
     crawled HTML) must be part of a TOKEN, not a separator, in BOTH the
-    explode form and the numpy kernel (round-5 review finding)."""
+    native form and the numpy kernel (round-5 review finding)."""
     doc = "buy now buy now buy now and buy now today"
     df = spark.createDataFrame([(1, doc)], "doc_id long, text string")
     native = {
@@ -163,26 +158,6 @@ def test_udf_matches_native_on_unicode_whitespace(spark):
     # and the repeated token really is 'buy\xa0now' (one token, 4 copies
     # of a 2-gram would differ if \xa0 split)
     assert native[1 + 1]["dup_frac"] > 0
-
-
-def test_rle_form_matches_explode_form(docs):
-    """The map-only sorted-RLE default must equal the explode+groupBy
-    form exactly (same rows, bit-equal fractions) — the fourth engine
-    in the agreement web."""
-    key = ["doc_id", "n"]
-    a = (
-        RP.token_ngram_metrics(docs)
-        .toPandas()
-        .sort_values(key)
-        .reset_index(drop=True)
-    )
-    b = (
-        RP.token_ngram_metrics_explode(docs)
-        .toPandas()
-        .sort_values(key)
-        .reset_index(drop=True)
-    )
-    pd.testing.assert_frame_equal(a, b[a.columns], check_exact=True)
 
 
 def test_crossdoc_dup_metrics(spark):

@@ -213,6 +213,65 @@ def test_per_bucket_metric_tables_committed(spark, corpus_path, clean_out):
     assert set(rm2["bucket"].unique()) <= committed
 
 
+def test_run_pipeline_script_end_to_end(
+    spark, corpus_path, clean_out, monkeypatch, capsys
+):
+    """scripts/run_pipeline.py on the fixture corpus: the printed summary
+    matches the committed verdicts, and both committed per-bucket metric
+    tables still read back afterwards and sum to the run-level metrics
+    of the committed data."""
+    import importlib.util
+    import json
+
+    from data_quality_analyzer_spark.plans.pipeline import (
+        langid_histogram,
+        pipeline_metrics,
+    )
+
+    script = os.path.join(
+        os.path.dirname(__file__), "..", "scripts", "run_pipeline.py"
+    )
+    spec = importlib.util.spec_from_file_location("run_pipeline_script", script)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    d = os.path.join(OUT, "a")
+    monkeypatch.setattr(
+        "sys.argv",
+        ["run_pipeline.py", "--input", corpus_path, "--output", d,
+         "--run-id", "r1", "--num-buckets", "4"],
+    )
+    mod.main()
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    verdicts = LN.read_committed(spark, d)
+    assert out["buckets_committed"] == 4
+    assert out["rows"] == verdicts.count() == 2000
+    assert out["kept"] == verdicts.filter("keep").count()
+
+    def summed(df, keys, cols):
+        return (
+            df.groupBy(*keys)
+            .agg(*[F.sum(c).cast("long").alias(c) for c in cols])
+            .toPandas()
+            .sort_values(keys, na_position="first")
+            .reset_index(drop=True)
+        )
+
+    keys, cols = ["rule_key", "severity"], [
+        "pass_count", "fail_count", "n_keep", "n_total",
+    ]
+    pd.testing.assert_frame_equal(
+        summed(LN.read_committed_metrics(spark, d, LN.RULE_METRICS_DIR),
+               keys, cols),
+        summed(pipeline_metrics(verdicts), keys, cols),
+    )
+    keys, cols = ["lang_pred"], ["n", "n_keep"]
+    pd.testing.assert_frame_equal(
+        summed(LN.read_committed_metrics(spark, d, LN.LANGID_HIST_DIR),
+               keys, cols),
+        summed(langid_histogram(verdicts), keys, cols),
+    )
+
+
 def test_incremental_dedup_across_runs(spark, tmp_path):
     """Cross-run dedup via the committed fingerprint ledger: batch 2 keeps
     only content unseen in committed batches; re-ingesting an

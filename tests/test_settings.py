@@ -1,9 +1,7 @@
-"""Settings-object parity + Check 1 (App Settings Validation) semantics +
-critical short-circuit equivalence.
+"""Settings-object parity + Check 1 (App Settings Validation) semantics.
 
 Reference analogues: appsettings.py:14-160 (MAppSettings defaults),
-charge_analysis_checks.py:135-350 (Check 1 five-step validation),
-charge_analysis_checks.py:87-90 (critical failure stops further checks).
+charge_analysis_checks.py:135-350 (Check 1 five-step validation).
 """
 
 from __future__ import annotations
@@ -63,43 +61,6 @@ def test_pipeline_under_nondefault_settings(spark, corpus_path, corpus_pdf):
     # strict settings must actually change the verdicts vs defaults
     d, _ = _aligned(spark, corpus_path, corpus_pdf, None)
     assert (m["keep"] != d["keep"]).any()
-
-
-def test_short_circuit_keep_equivalence(spark, corpus_path, corpus_pdf):
-    """keep is identical with and without the critical-gate masking — the
-    gate only skips work on rows that are already dropped."""
-    images = spark.read.parquet(corpus_path)
-    on = (
-        run_pipeline(spark, images, short_circuit=True)
-        .select("image_id", "caption", "keep")
-        .toPandas()
-        .sort_values(["image_id", "caption"], na_position="first")
-        .reset_index(drop=True)
-    )
-    off = (
-        run_pipeline(spark, images, short_circuit=False)
-        .select("image_id", "caption", "keep")
-        .toPandas()
-        .sort_values(["image_id", "caption"], na_position="first")
-        .reset_index(drop=True)
-    )
-    assert on.equals(off)
-    # and the no-short-circuit engine matches the no-short-circuit oracle
-    m = (
-        run_pipeline(spark, images, short_circuit=False)
-        .drop("bytes")
-        .toPandas()
-        .sort_values(["image_id", "caption"], na_position="first")
-        .reset_index(drop=True)
-    )
-    o = (
-        oracle_verdicts(corpus_pdf, short_circuit=False)
-        .join(corpus_pdf[["caption"]])
-        .sort_values(["image_id", "caption"], na_position="first")
-        .reset_index(drop=True)
-    )
-    for k in RULE_KEYS:
-        assert (m[f"pass_{k}"] == o[f"pass_{k}"]).all(), k
 
 
 # ---------------------------------------------------------------------------

@@ -7,7 +7,6 @@ from __future__ import annotations
 import duckdb
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from data_quality_analyzer_spark.operators import images as IM
 
@@ -92,58 +91,6 @@ def test_structural_duck_twin_parity(imgs):
         ).fetchall()
     }
     assert spark_rows == duck_rows
-
-
-def test_pipeline_structural_pregate_verdict_neutral(spark, corpus_path):
-    """structural_pregate=True must change NOTHING about the verdict
-    table on the fixture corpus (which plants garbled-magic and
-    truncated rows): every codec rejects a bad magic before reading
-    anything else, so masking those bytes out of the Arrow batch
-    collapses to the same False flags.  Row-for-row equality over keep,
-    fail_rules and every pass_ column is the proof."""
-    from data_quality_analyzer_spark.plans.pipeline import run_pipeline
-
-    images = spark.read.parquet(corpus_path)
-    cols = None
-
-    def table(pregate: bool) -> dict:
-        nonlocal cols
-        out = run_pipeline(spark, images, structural_pregate=pregate)
-        cols = ["keep", "fail_rules"] + sorted(
-            c for c in out.columns if c.startswith("pass_")
-        )
-        return {
-            r["image_id"]: tuple(r[c] for c in cols)
-            for r in out.select("image_id", *cols).collect()
-        }
-
-    assert table(True) == table(False)
-
-
-def test_sniffable_matches_python_sniff(spark):
-    """The Catalyst predicate must agree with codecs.sniff_format on
-    every decoder magic, garbled bytes, and prefixes of magics."""
-    from data_quality_analyzer_spark.sources import codecs as C
-
-    rows = [(f"m_{name}", bytes(m) + b"rest") for name, m in C.MAGIC.items()]
-    rows += [
-        ("garbled", b"XX" + bytes(C.MAGIC["png"])[2:]),
-        ("empty", b""),
-        ("prefix", bytes(C.MAGIC["png"])[:-1]),  # partial magic: not sniffable
-        ("jpeg", bytes.fromhex("ffd8ffd9")),  # no jpeg decoder -> not sniffable
-        ("nullb", None),  # NULL bytes: must be False, NOT NULL (3VL trap)
-    ]
-    df = spark.createDataFrame(rows, "k string, b binary")
-    got = {
-        r["k"]: r["s"]
-        for r in df.select(
-            "k", IM.sniffable(F.col("b")).alias("s")
-        ).collect()
-    }
-    for k, b in rows:
-        assert got[k] == (C.sniff_format(b) is not None), k
-    assert got["nullb"] is False  # a NULL here would drop the row from
-    # BOTH sides of a filter/anti-filter pair
 
 
 def test_structural_gate_stays_jvm_side(imgs):
