@@ -55,11 +55,11 @@ def word_gram_hashes(text_col: str, n: int = DEFAULT_N):
     words = (
         f"filter(split(lower({text_col}), '\\\\s+'), x -> x != '')"
     )
-    # HOF let-binding (the minhash_signature trick): evaluate the words
-    # array ONCE per row and bind it as the lambda variable `w` — higher-
-    # order functions are CodegenFallback-interpreted, so without the
-    # binding the split+filter would re-run for the size check, the
-    # sequence bound, and every slice.  Null text → null words array; the
+    # HOF let-binding: evaluate the words array ONCE per row and bind it
+    # as the lambda variable `w` — higher-order functions are
+    # CodegenFallback-interpreted, so without the binding the
+    # split+filter would re-run for the size check, the sequence bound,
+    # and every slice.  Null text → null words array; the
     # explicit IS NULL arm matters because ANSI size(NULL) is NULL, which
     # would fall through to the ELSE and null the whole result.
     return F.expr(

@@ -5,16 +5,20 @@ Scale design (10^12 rows):
 * **exact** — fingerprint (md5) group-by; one shuffle on the fingerprint,
   AQE handles skew.  Quirk-5 semantics available (duplicate_rows counts
   rows, not groups — ``claim_analysis.py:225-247``).
-* **MinHash+LSH** — signatures are computed per-row with higher-order
-  functions (no explode, no shuffle); banding turns near-dup search into an
-  equi-join on (band, band_signature) — the only shuffle, on a key whose
-  cardinality we control via bands×rows-per-band.
-* **SimHash** — per-row 60-bit fingerprint (HOF fold), near-dups = equal
-  fingerprints (or banded Hamming buckets).
+* **MinHash+LSH** — signatures are computed per-row by one vectorized
+  Arrow UDF over the polynomial shingle hash (no explode, no shuffle);
+  :func:`_signatures` and :func:`band_fp_explode` are the one place that
+  decides which rows get a signature and how it becomes band keys, for
+  the batch, cross-run ledger and streaming paths alike.  Banding turns
+  near-dup search into an equi-join on (band, band_signature) — the only
+  shuffle, on a key whose cardinality we control via bands×rows-per-band.
+* **SimHash** — per-row 60-bit fingerprint (Arrow bit-vote fold),
+  near-dups = equal fingerprints (or banded Hamming buckets).
 * **n-gram Jaccard** — exact verification for candidate pairs produced by
   LSH: computed only on the (tiny) candidate set, never all-pairs.
 
-All hashing is md5-derived (deterministic, engine-independent).
+All hashing is deterministic integer arithmetic (md5- or
+polynomial-derived) with exact DuckDB twins.
 """
 
 from __future__ import annotations
@@ -81,30 +85,6 @@ def _check_minhash_params(num_hashes: int, bands: int | None = None) -> None:
             )
 
 
-def minhash_signature(
-    text_col: str, num_hashes: int = DEFAULT_NUM_HASHES, k: int = DEFAULT_SHINGLE
-) -> Column:
-    """array<long> of minhashes computed entirely per-row.
-
-    One md5 per shingle; per-seed permutations are the overflow-free affine
-    mixes of functions/hashing.py (portable to the DuckDB oracle, and
-    `num_hashes`× cheaper than hashing per seed)."""
-    from ..functions import hashing as HH
-
-    _check_minhash_params(num_hashes)
-    hs = (
-        f"transform(transform(sequence(1, greatest(length({text_col}), {k}) - {k - 1}), "
-        f"i -> substring({text_col}, i, {k})), x -> {HH.h60_spark_sql('x')})"
-    )
-    mins = ", ".join(
-        f"array_min(transform(hs, h -> {HH.mix_spark_sql('h', seed)}))"
-        for seed in range(num_hashes)
-    )
-    # HOF let-binding: evaluate the shingle-hash array ONCE, bind it as the
-    # lambda variable `hs`, then derive all seeds from it.
-    return F.expr(f"transform(array({hs}), hs -> array({mins}))[0]")
-
-
 def _h60_py(s: str) -> int:
     """Python twin of the 60-bit md5 hash (functions/hashing.py) —
     bit-identical to Spark's conv(substring(md5(x),1,15),16,10)."""
@@ -114,12 +94,13 @@ def _h60_py(s: str) -> int:
 def minhash_signature_udf(
     num_hashes: int = DEFAULT_NUM_HASHES, k: int = DEFAULT_SHINGLE
 ):
-    """Arrow-batched numpy twin of :func:`minhash_signature`, bit-identical
-    (same md5 base hash, same affine mixes in int64 — every intermediate
-    < 2^63).  The HOF form is a Catalyst CodegenFallback expression that
-    re-interprets per call; this vectorized path is the hot-query variant
-    (~3-5× at sf0.1) while the HOF form remains the oracle-portable
-    reference."""
+    """array<long> of minhashes over md5 k-char shingles, Arrow-batched.
+
+    One md5 per shingle (:func:`_h60_py`); per-seed permutations are the
+    overflow-free affine mixes of functions/hashing.py (int64, every
+    intermediate < 2^63), so the signature has an exact DuckDB twin (the
+    q26 oracle).  The near-dup pipelines use the polynomial family of
+    :func:`minhash_signature_poly_udf` instead."""
     from ..functions import hashing as HH
 
     _check_minhash_params(num_hashes)
@@ -149,10 +130,8 @@ def minhash_signature_poly_udf(
     codepoint window matrix) + the same affine per-seed mixes.  Replaces
     the per-shingle ``hashlib.md5`` interpreter loop of
     :func:`minhash_signature_udf` (~1000 Python calls per 1000-char doc —
-    round-2 VERDICT finding 1) with fully vectorized numpy; the md5 form
-    remains available for oracle-portability comparisons, and the
-    polynomial form has its own exact DuckDB twin
-    (hashing.poly60_duck_sql), so BOTH families are engine-portable."""
+    round-2 VERDICT finding 1) with fully vectorized numpy; it has its
+    own exact DuckDB twin (hashing.poly60_duck_sql)."""
     from ..functions import hashing as HH
 
     _check_minhash_params(num_hashes)
@@ -224,16 +203,17 @@ _SIMHASH_CHUNK_TOKENS = 200_000  # bounds the (tokens × bits) vote slab
 def simhash_udf(bits: int = 60, hash_family: str = "md5"):
     """Arrow-batched numpy SimHash.
 
-    ``hash_family="md5"``: bit-identical twin of the HOF reference form
-    :func:`simhash` — same md5 token hashes, same bit-vote fold.
-    Tokenization mirrors the engine form exactly: ``trim`` strips SPACES
-    only (so a leading tab survives and yields an empty first token, which
-    votes as md5("")), and the split class is Java's ASCII ``\\s``
-    (see ``_WS_RE``).
+    ``hash_family="md5"`` (q27's fingerprints): bit-identical twin of the
+    HOF reference form :func:`simhash` — same md5 token hashes, same
+    bit-vote fold.  Tokenization mirrors the engine form exactly: ``trim``
+    strips SPACES only (so a leading tab survives and yields an empty
+    first token, which votes as md5("")), and the split class is Java's
+    ASCII ``\\s`` (see ``_WS_RE``).
 
-    ``hash_family="poly"``: the PRODUCTION fast path — the variable-length
-    polynomial token family (``hashing.poly60_token_np``; same recipe that
-    took minhash from md5-interpreter-bound to two int64 matmuls), hashed
+    ``hash_family="poly"`` (the family of :func:`simhash_near_duplicates`,
+    q38): the fast path — the variable-length polynomial token family
+    (``hashing.poly60_token_np``; same recipe that took minhash from
+    md5-interpreter-bound to two int64 matmuls), hashed
     once per DISTINCT batch token fully vectorized, with a chunk-global
     bit-vote fold (one reduceat per chunk instead of one numpy round-trip
     per row).  Different family ⇒ different fingerprints than md5 — pick
@@ -333,6 +313,25 @@ def simhash_udf(bits: int = 60, hash_family: str = "md5"):
     return _shp
 
 
+def _signatures(
+    df: DataFrame, text_col: str, id_col: str, num_hashes: int, bands: int,
+    k: int,
+) -> DataFrame:
+    """(_id, _sig) over the rows that can be fingerprinted (non-NULL text
+    of at least one shingle): the one signature step of the batch
+    (:func:`lsh_candidate_pairs`), cross-run ledger
+    (plans/lineage.py:dedup_incremental_near) and streaming
+    (streaming/stream.py:streaming_near_dup_candidates) paths, so all
+    three sign the same rows with the same family and validate the same
+    banding.  Not materialized: each caller decides (a stream cannot
+    checkpoint)."""
+    _check_minhash_params(num_hashes, bands)
+    sig = minhash_signature_poly_udf(num_hashes, k)(F.col(text_col))
+    return df.filter(
+        F.col(text_col).isNotNull() & (F.length(text_col) >= k)
+    ).select(F.col(id_col).alias("_id"), sig.alias("_sig"))
+
+
 def lsh_candidate_pairs(
     df: DataFrame,
     text_col: str,
@@ -340,18 +339,14 @@ def lsh_candidate_pairs(
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
     k: int = DEFAULT_SHINGLE,
-    hash_family: str = "poly",
 ) -> DataFrame:
     """MinHash+LSH near-dup candidates: (id_a, id_b, n_bands_shared).
 
-    Plan: per-row signature (map-only, Arrow/numpy UDF) → explode into
-    `bands` rows → group-join on (band, band_fp).  The self-join is on the
-    *bucket*, so shuffle volume is rows×bands, never rows².
-
-    ``hash_family``: ``"poly"`` (default — vectorized polynomial shingle
-    hash, the production path) or ``"md5"`` (per-shingle md5, bit-identical
-    to the HOF reference form).  Both have exact DuckDB twins; pick one and
-    keep it — signatures from different families never collide.
+    Plan: per-row signature (map-only, Arrow/numpy UDF over the
+    polynomial shingle hash, :func:`_signatures`) → explode into `bands`
+    rows (:func:`band_fp_explode`) → group-join on (band, band_fp).  The
+    self-join is on the *bucket*, so shuffle volume is rows×bands, never
+    rows².
 
     **Shingle size is the candidate-volume dial**: same-domain corpora
     share many common k-grams, so small k inflates the background Jaccard
@@ -359,14 +354,7 @@ def lsh_candidate_pairs(
     the 5k-doc template corpus → 5.4M candidate pairs ≈ 43% of all pairs;
     k=9 → a few hundred).  Pick k large enough that unrelated documents'
     shingle sets are nearly disjoint."""
-    _check_minhash_params(num_hashes, bands)
-    if hash_family not in ("poly", "md5"):
-        raise ValueError(f"hash_family must be 'poly' or 'md5', got {hash_family!r}")
     rows_per_band = num_hashes // bands
-    sig_udf = (
-        minhash_signature_poly_udf if hash_family == "poly" else minhash_signature_udf
-    )
-    sig = sig_udf(num_hashes, k)(F.col(text_col))
     # materialize (id, signature) ONCE: the banded self-join consumes it on
     # both sides, and when the planner broadcasts one side the two
     # exchanges differ, so without this the signature UDF — the dominant
@@ -374,10 +362,8 @@ def lsh_candidate_pairs(
     # (id + num_hashes ints, no text).  On a real cluster prefer a
     # reliable checkpoint dir for fault tolerance; localCheckpoint blocks
     # are lost with their executor.
-    with_sig = (
-        df.filter(F.col(text_col).isNotNull() & (F.length(text_col) >= k))
-        .select(F.col(id_col).alias("_id"), sig.alias("_sig"))
-        .transform(materialize)
+    with_sig = _signatures(df, text_col, id_col, num_hashes, bands, k).transform(
+        materialize
     )
     band_rows = with_sig.select(
         "_id", band_fp_explode("_sig", bands, rows_per_band).alias("bf")
@@ -461,7 +447,6 @@ def simhash_near_duplicates(
     bands: int = 4,
     bits: int = 60,
     max_hamming: int = 3,
-    hash_family: str = "md5",
     max_band_size: int | None = None,
 ) -> DataFrame:
     """Banded-Hamming SimHash near-dup search (the bucketed search promised
@@ -471,14 +456,14 @@ def simhash_near_duplicates(
     band_bits) — shuffle volume rows×bands, never all-pairs — then verify
     with an exact popcount on the XOR.
 
-    ``hash_family`` selects the token hash (see :func:`simhash_udf`):
-    "md5" is the HOF-reference-identical form, "poly" the vectorized
-    production path.
+    Fingerprints use the polynomial token family
+    (``simhash_udf(bits, "poly")``, exact DuckDB twin
+    ``hashing.poly60_token_duck_sql``).
 
     Returns (id_a, id_b, hamming ≤ max_hamming).  Callers should keep
     max_hamming < bands for full recall (pigeonhole guarantee).
     """
-    fp = simhash_udf(bits, hash_family)(F.col(text_col))
+    fp = simhash_udf(bits, "poly")(F.col(text_col))
     # materialized once for the same both-sides reason as lsh_candidate_pairs
     with_fp = (
         df.filter(F.col(text_col).isNotNull() & (F.length(F.trim(text_col)) > 0))
@@ -800,7 +785,6 @@ def near_duplicates(
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
     k: int = DEFAULT_SHINGLE,
-    hash_family: str = "poly",
 ) -> DataFrame:
     """Full MinHash-LSH → exact-Jaccard verification pipeline.
 
@@ -815,9 +799,7 @@ def near_duplicates(
     # consumer — a second checkpoint of the same rows would be pure
     # added latency (the signature relation inside lsh_candidate_pairs
     # is already checkpointed, so the UDF still runs once)
-    cands = lsh_candidate_pairs(
-        df, text_col, id_col, num_hashes, bands, k, hash_family
-    )
+    cands = lsh_candidate_pairs(df, text_col, id_col, num_hashes, bands, k)
     return verify_candidate_pairs(
         df, cands, text_col, id_col, jaccard_threshold, k
     )
@@ -1020,7 +1002,6 @@ def dedup_near(
     num_hashes: int = DEFAULT_NUM_HASHES,
     bands: int = DEFAULT_BANDS,
     k: int = DEFAULT_SHINGLE,
-    hash_family: str = "poly",
 ) -> DataFrame:
     """The near-dup dedup *action*: LSH pairs → connected components →
     keep ONE canonical doc (min id) per near-dup cluster, drop the rest.
@@ -1029,8 +1010,7 @@ def dedup_near(
     one keeper even when A≁C directly).  Rows that are in no cluster
     (including null/short texts) pass through untouched."""
     pairs = near_duplicates(
-        df, text_col, id_col, jaccard_threshold, num_hashes, bands, k,
-        hash_family,
+        df, text_col, id_col, jaccard_threshold, num_hashes, bands, k
     )
     labels = connected_components(pairs)
     drop = labels.filter(F.col("node") != F.col("label")).select(

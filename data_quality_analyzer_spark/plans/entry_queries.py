@@ -767,10 +767,6 @@ _DUCK_SHINGLE_HASHES = (
     "list_transform(list_transform(range(1, length(text) - 3), i -> substr(text, i, 5)), "
     f"x -> {HH.h60_sql('x')})"
 )
-_SPARK_SHINGLE_HASHES = (
-    "transform(transform(sequence(1, length(text) - 4), i -> substring(text, i, 5)), "
-    f"x -> {HH.h60_spark_sql('x')})"
-)
 
 
 @_register(
@@ -786,10 +782,9 @@ def q26(spark, sf_dir):
     """MinHash signatures over 5-char shingles — the signature stage of
     MinHash+LSH near-dup detection.  Map-only (NO explode, NO shuffle —
     embarrassingly parallel at 100 TB), via the Arrow-batched numpy UDF
-    twin (operators/dedup.py:minhash_signature_udf): the higher-order-
-    function form is a Catalyst CodegenFallback that re-interprets per
-    call, the numpy path is ~3-5× faster and bit-identical (same md5 base
-    hash + affine mixes, proven equal in tests/test_dedup.py)."""
+    (operators/dedup.py:minhash_signature_udf): one md5 per shingle plus
+    the affine per-seed mixes, integer arithmetic ⇒ exact agreement with
+    the oracle's list_transform formulation."""
     from ..operators import dedup as DD
 
     d = (
@@ -1375,8 +1370,7 @@ def q38(spark, sf_dir):
     )
     full = d.unionByName(twins)
     out = DD.simhash_near_duplicates(
-        full, "text", "doc_id", bands=4, bits=60, max_hamming=3,
-        hash_family="poly",
+        full, "text", "doc_id", bands=4, bits=60, max_hamming=3
     )
     return out.withColumn("hamming", F.col("hamming").cast("int"))
 
@@ -4553,6 +4547,40 @@ def _q88_oracle() -> str:
     """
 
 
+def _q88_sessions(events: DataFrame) -> DataFrame:
+    """(user_id, session_idx, _ev): one row per session of ``events``,
+    with ``_ev`` the session's timestamped funnel events as (us, t)
+    structs.  A NULL user_id is no user: the oracle's staged `JOIN …
+    USING (user_id, session_idx)` drops those events, while the groupBy
+    below would keep them as one (all-NULL-users) session."""
+    from ..operators import sessions as SN
+
+    r = SN.sessionize(
+        events.filter(F.col("user_id").isNotNull()), gap_us=_Q88_GAP_US
+    ).withColumn("_us", F.unix_micros(F.col("ts").cast("timestamp")))
+    # ONE aggregation instead of the step-wise `r ⋈ s1 ⋈ s2` chain
+    # (round-6, guide §2.4): the sessionize window already hash-
+    # partitions by user_id, which clusters (user_id, session_idx), so
+    # this groupBy adds NO exchange — the old form recomputed the
+    # sessionize window three times and re-exchanged per step.  Only
+    # funnel events with a timestamp are collected (collect_list skips
+    # the NULL `when` yields), so a list is bounded by its session's
+    # funnel events, not by the session's length; the aggregate still
+    # runs over every row, so a session without funnel events keeps its
+    # row (and counts in n_sessions).
+    return r.groupBy("user_id", "session_idx").agg(
+        F.collect_list(
+            F.when(
+                F.col("event_type").isin(*_Q88_STEPS)
+                & F.col("_us").isNotNull(),
+                F.struct(
+                    F.col("_us").alias("us"), F.col("event_type").alias("t")
+                ),
+            )
+        ).alias("_ev")
+    )
+
+
 @_register("q88_session_funnel", _q88_oracle)
 def q88(spark, sf_dir):
     """In-session FUNNEL conversion (view → click → purchase): the
@@ -4566,32 +4594,15 @@ def q88(spark, sf_dir):
     completed all three steps.  Reference ancestor: Check-2's staged
     escalation (charge_analysis_checks.py:352-620) as an ordered
     event-sequence rule."""
-    from ..operators import sessions as SN
-
     a, b, c = _Q88_STEPS
-    e = _t(spark, sf_dir, "events")
-    r = SN.sessionize(e, gap_us=_Q88_GAP_US).withColumn(
-        "_us", F.unix_micros(F.col("ts").cast("timestamp"))
-    )
-    keys = ["user_id", "session_idx"]
-    # ONE aggregation instead of the step-wise `r ⋈ s1 ⋈ s2` chain
-    # (round-6, guide §2.4): the sessionize window already hash-
-    # partitions by user_id, which clusters (user_id, session_idx), so
-    # this groupBy adds NO exchange — the old form recomputed the
-    # sessionize window three times and re-exchanged per step.  Each
-    # step-k time is a min over the session's events filtered by
-    # "step-k type AND at/after step k−1's time" — a pure min, so the
-    # collected event list needs no ordering, and NULL thresholds or
-    # NULL timestamps drop out of the HOF filter exactly as they
-    # dropped out of the old `min(when(...))` (null predicate ⇒ row
-    # excluded ⇒ min over the empty set is NULL).  Step-by-step
-    # equality with the old join chain is pinned by the q88 oracle
-    # (unchanged) which still computes the three staged joins.
-    ev = F.filter(
-        F.collect_list(F.struct(F.col("_us").alias("us"),
-                                F.col("event_type").alias("t"))),
-        lambda x: x["us"].isNotNull(),
-    )
+    # Each step-k time is a min over the session's funnel events filtered
+    # by "step-k type AND at/after step k−1's time" — a pure min, so the
+    # collected event list needs no ordering, and a NULL threshold drops
+    # out of the HOF filter exactly as it dropped out of the old
+    # `min(when(...))` (null predicate ⇒ row excluded ⇒ min over the
+    # empty set is NULL).  Step-by-step equality with the old join chain
+    # is pinned by the q88 oracle (unchanged) which still computes the
+    # three staged joins.
     step = lambda lst, typ, thr: F.array_min(  # noqa: E731
         F.transform(
             F.filter(lst, lambda x: (x["t"] == typ) & (x["us"] >= thr)),
@@ -4599,8 +4610,7 @@ def q88(spark, sf_dir):
         )
     )
     s3 = (
-        r.groupBy(*keys)
-        .agg(ev.alias("_ev"))
+        _q88_sessions(_t(spark, sf_dir, "events"))
         .withColumn(
             "t1",
             F.array_min(

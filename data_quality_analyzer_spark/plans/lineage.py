@@ -646,14 +646,10 @@ def dedup_incremental_near(
     passthrough = docs.filter(
         F.col(text_col).isNull() | (F.length(text_col) < k)
     )
-    sig_udf = DD.minhash_signature_poly_udf(num_hashes, k)
     # (id, sig) feeds the band join, the estimate join and the ledger
     # write — materialize once (same both-sides rule as lsh_candidate_pairs)
-    sigs = (
-        eligible.select(
-            F.col(id_col).alias("_id"), sig_udf(F.col(text_col)).alias("_sig")
-        )
-        .transform(materialize)
+    sigs = DD._signatures(docs, text_col, id_col, num_hashes, bands, k).transform(
+        materialize
     )
     archive = read_committed_signatures(spark, store_dir)
     drop_ids = None

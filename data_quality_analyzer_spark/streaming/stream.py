@@ -240,13 +240,13 @@ def streaming_near_dup_candidates(
     bands: int = 4,
     k: int = 5,
     num_buckets: int = 64,
-    hash_family: str = "poly",
     timeout_minutes: float | None = None,
 ) -> DataFrame:
     """Cross-micro-batch NEAR-dup candidate detection — the streaming
     recast of ``dedup.lsh_candidate_pairs``: minhash band fingerprints are
-    computed in-stream with the same signature UDF the batch path uses,
-    then a stateful operator keyed by a uniform hash bucket of the band
+    computed in-stream by the batch path's own signature and band-key
+    steps (``dedup._signatures``, ``dedup.band_fp_explode``), then a
+    stateful operator keyed by a uniform hash bucket of the band
     fingerprint registers first sightings and emits (id_first, id_new,
     band, fp) whenever a later document collides on a band — across
     micro-batches, unbounded.
@@ -264,26 +264,11 @@ def streaming_near_dup_candidates(
     from ..operators import dedup as DD  # noqa: PLC0415
     from pyspark.sql.streaming.state import GroupStateTimeout  # noqa: PLC0415
 
-    DD._check_minhash_params(num_hashes, bands)
-    rows_per_band = num_hashes // bands
-    sig_udf = (
-        DD.minhash_signature_poly_udf
-        if hash_family == "poly"
-        else DD.minhash_signature_udf
-    )
-    sig = sig_udf(num_hashes, k)(F.col(text_col))
     band_rows = (
-        docs.filter(F.col(text_col).isNotNull() & (F.length(text_col) >= k))
-        .select(F.col(id_col).alias("doc_id"), sig.alias("_sig"))
+        DD._signatures(docs, text_col, id_col, num_hashes, bands, k)
         .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform(sequence(0, {bands - 1}), b -> "
-                    f"named_struct('band', b, 'fp', md5(concat_ws(',', "
-                    f"slice(_sig, b * {rows_per_band} + 1, {rows_per_band})))))"
-                )
-            ).alias("bf"),
+            F.col("_id").alias("doc_id"),
+            DD.band_fp_explode("_sig", bands, num_hashes // bands).alias("bf"),
         )
         .select(
             "doc_id",
@@ -383,7 +368,6 @@ def streaming_near_dup_verified(
     bands: int = 4,
     k: int = 5,
     num_buckets: int = 64,
-    hash_family: str = "poly",
     timeout_minutes: float | None = None,
 ):
     """END-TO-END streaming near-dup: the stateful candidate stage
@@ -433,7 +417,6 @@ def streaming_near_dup_verified(
         bands=bands,
         k=k,
         num_buckets=num_buckets,
-        hash_family=hash_family,
         timeout_minutes=timeout_minutes,
     )
     pending_base = os.path.join(out_dir, "_pending_pairs")

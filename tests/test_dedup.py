@@ -62,20 +62,32 @@ def test_simhash_property(docs):
     assert ham < ham_far
 
 
-def test_minhash_udf_twin_bit_identical(docs):
-    """The Arrow/numpy fast path must produce the exact HOF signatures."""
-    valid = docs.filter(F.col("text").isNotNull() & (F.length("text") >= 5))
-    hof = {
+def test_minhash_udf_twin_bit_identical(spark):
+    """The md5-family Arrow/numpy signature (q26's) is bit-identical to
+    its pure-python reference — md5 per shingle, then the same affine
+    per-seed mixes — including non-ASCII text and len == k."""
+    from data_quality_analyzer_spark.functions import hashing as HH
+
+    texts = [
+        "the quick brown fox jumps over the lazy dog",
+        "ünïcode — naïve café text with €uro signs",
+        "short",
+        "exact",  # len == k → exactly one window
+    ]
+    k, num = 5, 8
+    df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
+    )
+    got = {
         r["doc_id"]: list(r["sig"])
-        for r in valid.select("doc_id", DD.minhash_signature("text").alias("sig")).collect()
-    }
-    udf = {
-        r["doc_id"]: list(r["sig"])
-        for r in valid.select(
-            "doc_id", DD.minhash_signature_udf()(F.col("text")).alias("sig")
+        for r in df.select(
+            "doc_id", DD.minhash_signature_udf(num, k)(F.col("text")).alias("sig")
         ).collect()
     }
-    assert hof == udf and len(hof) > 0
+    for i, t in enumerate(texts):
+        hs = [DD._h60_py(t[j : j + k]) for j in range(len(t) - k + 1)]
+        want = [min(HH.mix_python(h, s) for h in hs) for s in range(num)]
+        assert got[i] == want, f"doc {i}"
 
 
 def test_simhash_udf_twin_bit_identical(docs):
@@ -93,7 +105,7 @@ def test_simhash_udf_twin_bit_identical(docs):
 
 def test_minhash_param_validation(docs):
     with pytest.raises(ValueError, match="num_hashes"):
-        DD.minhash_signature("text", num_hashes=99)
+        DD.minhash_signature_udf(num_hashes=99)
     with pytest.raises(ValueError, match="bands must divide"):
         DD.lsh_candidate_pairs(docs, "text", "doc_id", num_hashes=16, bands=5)
     with pytest.raises(ValueError, match="num_hashes"):
@@ -116,7 +128,9 @@ def test_simhash_banded_hamming_search(spark):
     df = spark.createDataFrame(rows, "doc_id int, text string")
     fp = {
         r["doc_id"]: r["s"]
-        for r in df.select("doc_id", DD.simhash("text").alias("s")).collect()
+        for r in df.select(
+            "doc_id", DD.simhash_udf(60, "poly")(F.col("text")).alias("s")
+        ).collect()
     }
     ham13 = bin(fp[1] ^ fp[3]).count("1")
     pairs = {
@@ -316,21 +330,6 @@ def test_poly60_np_matches_python_and_duck():
     """
     duck = duckdb.connect().execute(q, [t]).fetchone()[0]
     assert list(duck) == ref
-
-
-def test_lsh_hash_family_poly_default(docs):
-    """The default (poly) family finds the same planted near-dups as the
-    md5 family — end to end through verification."""
-    for fam in ("poly", "md5"):
-        pairs = DD.near_duplicates(
-            docs, "text", "doc_id", jaccard_threshold=0.5, hash_family=fam
-        )
-        got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
-        assert (1, 2) in got and (1, 3) in got, fam
-    import pytest
-
-    with pytest.raises(ValueError, match="hash_family"):
-        DD.lsh_candidate_pairs(docs, "text", "doc_id", hash_family="xxh")
 
 
 def test_connected_components_chain(spark):
@@ -719,9 +718,7 @@ def test_simhash_poly_family(spark):
             (F.col("doc_id") + 100).alias("doc_id"), "text"
         )
     )
-    pairs = DD.simhash_near_duplicates(
-        twins, "text", "doc_id", hash_family="poly"
-    ).collect()
+    pairs = DD.simhash_near_duplicates(twins, "text", "doc_id").collect()
     assert any(
         {p["id_a"], p["id_b"]} == {0, 100} and p["hamming"] == 0 for p in pairs
     )

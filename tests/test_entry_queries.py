@@ -30,3 +30,81 @@ def test_flagship_entry(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert {"lang", "n_docs", "n_keep", "n_drop"} == set(df.columns)
+
+
+
+def _event_rows(extra) -> list[dict]:
+    """Rows of the events table for (event_id, second, user_id,
+    event_type) tuples, ``second`` counted from 2024-02-01."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 2, 1)
+    return [
+        {"event_id": eid, "ts": t0 + dt.timedelta(seconds=s), "user_id": uid,
+         "event_type": typ, "value": 1.0, "props": "{}"}
+        for eid, s, uid, typ in extra
+    ]
+
+
+def _tables_with_events(tmp_path, extra) -> str:
+    """The sf0.001 tables copied to ``tmp_path`` with ``extra`` events
+    appended to the events table (see :func:`_event_rows`)."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for f in os.listdir(SF_DIR):
+        shutil.copy(os.path.join(SF_DIR, f), tmp_path / f)
+    events = pq.read_table(tmp_path / "events.parquet")
+    extra_t = pa.Table.from_pylist(_event_rows(extra), schema=events.schema)
+    pq.write_table(
+        pa.concat_tables([events, extra_t]), tmp_path / "events.parquet"
+    )
+    return str(tmp_path)
+
+
+def test_q88_drops_null_user_sessions(spark, tmp_path):
+    """Events without a user form no session: a NULL-user_id view →
+    click → purchase run must not add a (converted) session, matching
+    the oracle's staged USING-joins."""
+    steps = ["view", "click", "purchase"]
+    sf = _tables_with_events(
+        tmp_path, [(10_000 + i, 60 * i, None, t) for i, t in enumerate(steps)]
+    )
+    r = run_compare(spark, sf, ["q88_session_funnel"])[0]
+    assert r.ok, r.issues
+
+
+def test_q88_mega_session_collects_only_funnel_events(spark, tmp_path):
+    """One 20,003-event session with three funnel events: its collected
+    list holds those three, not the session's length, it converts, and
+    a session without any funnel event still counts in n_sessions."""
+    uid_a, uid_b = 1_000, 1_001  # users the fixture does not have
+    extra = [(20_000 + i, i, uid_a, "error") for i in range(20_000)]
+    extra += [(40_000, 100, uid_a, "view"), (40_001, 200, uid_a, "click"),
+              (40_002, 300, uid_a, "purchase"), (40_003, 50, uid_b, "error")]
+    events = spark.createDataFrame(
+        _event_rows(extra),
+        "event_id long, ts timestamp_ntz, user_id long, event_type string,"
+        " value double, props string",
+    )
+    sizes = {
+        r["user_id"]: r["n"]
+        for r in EQ._q88_sessions(events)
+        .selectExpr("user_id", "size(_ev) AS n").collect()
+    }
+    assert sizes == {uid_a: 3, uid_b: 0}
+
+    q88 = EQ.queries()["q88_session_funnel"]
+    sf = _tables_with_events(tmp_path, extra)
+    r = run_compare(spark, sf, ["q88_session_funnel"])[0]
+    assert r.ok, r.issues
+    base, out = q88(spark, SF_DIR).first(), q88(spark, sf).first()
+    assert out["n_sessions"] == base["n_sessions"] + 2
+    for col in ("n_step1", "n_step2", "n_step3"):
+        assert out[col] == base[col] + 1
+    assert out["converted_checksum"] == base["converted_checksum"] ^ (
+        uid_a * 1000003 + 1
+    )
