@@ -28,7 +28,11 @@ With the Mersenne mix, agreement is unbiased with the textbook
 
 from __future__ import annotations
 
+import hashlib
+
 import numpy as np
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 NUM_SEEDS = 16
 _LO_MASK = (1 << 30) - 1
@@ -52,6 +56,17 @@ def h60_sql(expr: str) -> str:
 def h60_spark_sql(expr: str) -> str:
     """Spark-SQL (expression string) form of the same 60-bit hash."""
     return f"CAST(conv(substring(md5({expr}), 1, 15), 16, 10) AS BIGINT)"
+
+
+def h60(col: Column) -> Column:
+    """Column form of the same 60-bit hash."""
+    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
+
+
+def h60_python(s: str) -> int:
+    """Python twin of the same 60-bit hash (60 bits, always non-negative,
+    so ``% n`` equals Spark's ``pmod``)."""
+    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
 
 
 def mix_sql(h: str, seed: int) -> str:

@@ -28,6 +28,8 @@ from typing import Any, Callable
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .claims import _blank
+
 
 @dataclass(frozen=True)
 class ReadinessSettings:
@@ -128,10 +130,6 @@ def sampled_quality_severity(valid_pct: float) -> str:
 # ---------------------------------------------------------------------------
 # array-existential helpers (P8; quirk-1 blank collapse)
 # ---------------------------------------------------------------------------
-
-def _blank(c: Column) -> Column:
-    return c.isNull() | (c == "")
-
 
 def _has_valid_elem(arr: str, field: str) -> Column:
     """$elemMatch {field: exists, != null, != ''} (charge_analysis_checks.py

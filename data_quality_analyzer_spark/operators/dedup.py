@@ -23,7 +23,6 @@ polynomial-derived) with exact DuckDB twins.
 
 from __future__ import annotations
 
-import hashlib
 import re
 
 import numpy as np
@@ -31,15 +30,11 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from ..exec_utils import materialize
+from ..functions import hashing as HH
 
 DEFAULT_SHINGLE = 5
 DEFAULT_NUM_HASHES = 16
 DEFAULT_BANDS = 4  # 4 bands x 4 rows -> catches jaccard ≳ 0.7
-
-
-def _h60(col: Column) -> Column:
-    """60-bit hash via md5 (bit-identical across engines)."""
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
 
 
 def exact_duplicates(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -71,8 +66,6 @@ def _check_minhash_params(num_hashes: int, bands: int | None = None) -> None:
     """Validate against the fixed seed table (hashing.MINHASH_PARAMS) and
     the banding arithmetic — a clear error at plan-build time instead of an
     IndexError from seed lookup."""
-    from ..functions import hashing as HH
-
     if not (0 < num_hashes <= HH.NUM_SEEDS):
         raise ValueError(
             f"num_hashes must be in [1, {HH.NUM_SEEDS}] "
@@ -85,24 +78,16 @@ def _check_minhash_params(num_hashes: int, bands: int | None = None) -> None:
             )
 
 
-def _h60_py(s: str) -> int:
-    """Python twin of the 60-bit md5 hash (functions/hashing.py) —
-    bit-identical to Spark's conv(substring(md5(x),1,15),16,10)."""
-    return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-
-
 def minhash_signature_udf(
     num_hashes: int = DEFAULT_NUM_HASHES, k: int = DEFAULT_SHINGLE
 ):
     """array<long> of minhashes over md5 k-char shingles, Arrow-batched.
 
-    One md5 per shingle (:func:`_h60_py`); per-seed permutations are the
-    overflow-free affine mixes of functions/hashing.py (int64, every
-    intermediate < 2^63), so the signature has an exact DuckDB twin (the
-    q26 oracle).  The near-dup pipelines use the polynomial family of
+    One md5 per shingle (``hashing.h60_python``); per-seed permutations
+    are the overflow-free affine mixes of functions/hashing.py (int64,
+    every intermediate < 2^63), so the signature has an exact DuckDB twin
+    (the q26 oracle).  The near-dup pipelines use the polynomial family of
     :func:`minhash_signature_poly_udf` instead."""
-    from ..functions import hashing as HH
-
     _check_minhash_params(num_hashes)
 
     @F.pandas_udf(f"array<long>")
@@ -113,7 +98,7 @@ def minhash_signature_udf(
                 out.append(None)
                 continue
             hs = np.fromiter(
-                (_h60_py(t[i : i + k]) for i in range(len(t) - k + 1)),
+                (HH.h60_python(t[i : i + k]) for i in range(len(t) - k + 1)),
                 dtype=np.int64,
             )
             out.append(HH.mix_np(hs, num_hashes).min(axis=1))
@@ -132,8 +117,6 @@ def minhash_signature_poly_udf(
     :func:`minhash_signature_udf` (~1000 Python calls per 1000-char doc —
     round-2 VERDICT finding 1) with fully vectorized numpy; it has its
     own exact DuckDB twin (hashing.poly60_duck_sql)."""
-    from ..functions import hashing as HH
-
     _check_minhash_params(num_hashes)
     if k > HH.POLY_MAX_K:
         raise ValueError(f"k must be ≤ {HH.POLY_MAX_K} for the poly family")
@@ -240,7 +223,7 @@ def simhash_udf(bits: int = 60, hash_family: str = "md5"):
                 hv = np.fromiter(
                     (
                         memo[tok] if tok in memo
-                        else memo.setdefault(tok, _h60_py(tok))
+                        else memo.setdefault(tok, HH.h60_python(tok))
                         for tok in toks
                     ),
                     dtype=np.int64,
@@ -250,8 +233,6 @@ def simhash_udf(bits: int = 60, hash_family: str = "md5"):
             return pd.Series(out)
 
         return _sh
-
-    from ..functions import hashing as HH
 
     @F.pandas_udf("long")
     def _shp(texts: pd.Series) -> pd.Series:
@@ -413,8 +394,6 @@ def band_fp_explode(sig_col: str, bands: int, rows_per_band: int) -> Column:
 def simhash(text_col: str, bits: int = 60) -> Column:
     """60-bit SimHash over whitespace tokens, folded per-row (no shuffle).
     One md5 per token; bit-votes fold over the pre-hashed array."""
-    from ..functions import hashing as HH
-
     th = (
         f"transform(split(lower(trim({text_col})), '\\\\s+'), "
         f"t -> {HH.h60_spark_sql('t')})"
@@ -762,18 +741,21 @@ def consolidate_captions(
     )
 
 
+def _shingle_set_sql(c: str, k: int) -> str:
+    """Spark-SQL array of the distinct k-char shingles of ``c``."""
+    return (
+        f"array_distinct(transform(sequence(1, greatest(length({c}), {k}) - {k - 1}), "
+        f"i -> substring({c}, i, {k})))"
+    )
+
+
 def ngram_jaccard(a_col: str, b_col: str, k: int = DEFAULT_SHINGLE) -> Column:
-    """Exact Jaccard of k-shingle sets of two text columns (verification
-    stage for LSH candidates — runs on the candidate pairs only)."""
-
-    def sh(c: str) -> str:
-        return (
-            f"array_distinct(transform(sequence(1, greatest(length({c}), {k}) - {k - 1}), "
-            f"i -> substring({c}, i, {k})))"
-        )
-
-    inter = f"size(array_intersect({sh(a_col)}, {sh(b_col)}))"
-    union = f"size(array_union({sh(a_col)}, {sh(b_col)}))"
+    """Exact Jaccard of k-shingle sets of two text columns — the per-pair
+    form of the shingle sets :func:`verify_candidate_pairs` builds once
+    per candidate document."""
+    sa, sb = _shingle_set_sql(a_col, k), _shingle_set_sql(b_col, k)
+    inter = f"size(array_intersect({sa}, {sb}))"
+    union = f"size(array_union({sa}, {sb}))"
     return F.expr(f"CAST({inter} AS DOUBLE) / {union}")
 
 
@@ -791,9 +773,6 @@ def near_duplicates(
     Returns (id_a, id_b, jaccard ≥ threshold).  The expensive exact Jaccard
     runs only on LSH candidates (slim pair ids broadcast back to the texts).
     """
-    # materialize the candidate pair list: it feeds THREE consumers below
-    # (the candidate-id set and both per-side lookups) and is small by
-    # LSH design
     # no materialize here: verify_candidate_pairs immediately
     # materializes the slim distinct pair relation, which is the only
     # consumer — a second checkpoint of the same rows would be pure
@@ -828,10 +807,7 @@ def verify_candidate_pairs(
     # to candidate docs, and the materialized result is what both side
     # lookups consume — previously each side re-scanned the full corpus
     # and re-built every doc's shingles.
-    shingles = F.expr(
-        f"array_distinct(transform(sequence(1, greatest(length({text_col}), {k})"
-        f" - {k - 1}), i -> substring({text_col}, i, {k})))"
-    )
+    shingles = F.expr(_shingle_set_sql(text_col, k))
     cand_ids = (
         slim.select(F.col("id_a").alias("_tid"))
         .unionByName(slim.select(F.col("id_b").alias("_tid")))

@@ -54,14 +54,16 @@ def _clean(line: Column) -> Column:
     return F.regexp_replace(F.lower(line), _EDGE_WS, "")
 
 
-def _tokens(line: Column) -> Column:
+def tokens(line: Column) -> Column:
+    """Lower-cased, edge-trimmed ``\\s+`` tokens — the tokenizer the
+    DSIR sampler shares (DuckDB twin :func:`tokens_sql`)."""
     return F.split(_clean(line), _WS)
 
 
 def _word_count(line: Column) -> Column:
     # split('') == [''] — count a blank line as 0 words, not 1
     return F.when(_clean(line) == "", F.lit(0)).otherwise(
-        F.size(_tokens(line))
+        F.size(tokens(line))
     )
 
 
@@ -74,7 +76,7 @@ def line_flags(line: Column) -> dict[str, Column]:
         ~short
         & ~long_
         & ~F.arrays_overlap(
-            _tokens(line), F.array(*[F.lit(s) for s in STOPWORDS])
+            tokens(line), F.array(*[F.lit(s) for s in STOPWORDS])
         )
     )
     boiler = (
@@ -139,7 +141,7 @@ def _wc_sql(l: str) -> str:
     )
 
 
-def _toks_sql(l: str) -> str:
+def tokens_sql(l: str) -> str:
     return f"string_split_regex({_clean_sql(l)}, '{_WS}')"
 
 
@@ -149,7 +151,7 @@ def line_flag_sql(l: str, reason: str) -> str:
     stop_list = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
     short = f"({wc} < {MIN_WORDS})"
     long_ = f"(NOT {short} AND {wc} > {MAX_WORDS})"
-    has_stop = f"len(list_intersect({_toks_sql(l)}, {stop_list})) > 0"
+    has_stop = f"len(list_intersect({tokens_sql(l)}, {stop_list})) > 0"
     no_stop = f"(NOT {short} AND NOT {long_} AND NOT ({has_stop}))"
     boiler = (
         f"(NOT {short} AND NOT {long_} AND NOT {no_stop} "

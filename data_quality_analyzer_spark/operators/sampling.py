@@ -33,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import hashing as HH
+from . import lines as LN
 
 SAMPLE_DENOM = 1_000_000  # fraction resolution: 1e-6
 
@@ -312,34 +313,13 @@ def split_corpus_duck_sql(
 DSIR_BUCKETS = 512
 
 
-def _dsir_tokens(text):
-    # same tri-engine tokenizer discipline as operators/lines.py: full
-    # regex edge-trim first, then \s+ split
-    return F.split(
-        F.regexp_replace(F.lower(text), r"^\s+|\s+$", ""), r"\s+"
-    )
-
-
-def _dsir_tokens_sql(c: str) -> str:
-    return (
-        f"string_split_regex(regexp_replace(lower({c}), "
-        f"'^\\s+|\\s+$', '', 'g'), '\\s+')"
-    )
-
-
 def _dsir_bucket(tok, num_buckets: int):
-    h = F.conv(F.substring(F.md5(tok), 1, 15), 16, 10).cast("long")
-    return F.pmod(h, F.lit(num_buckets))
+    return F.pmod(HH.h60(tok), F.lit(num_buckets))
 
 
 def _dsir_bucket_py(tok: str, num_buckets: int) -> int:
-    """Python twin of :func:`_dsir_bucket` — ``int(md5hex[:15], 16)`` is
-    bit-identical to Spark's ``conv(substring(md5(x),1,15),16,10)`` (60
-    bits, always positive, so ``pmod`` == ``%``; the dedup._h60_py
-    precedent)."""
-    import hashlib
-
-    return int(hashlib.md5(tok.encode("utf-8")).hexdigest()[:15], 16) % num_buckets
+    """Python twin of :func:`_dsir_bucket`."""
+    return HH.h60_python(tok) % num_buckets
 
 
 def _dsir_bucket_counts_arrow(tt: DataFrame, num_buckets: int):
@@ -434,7 +414,7 @@ def dsir_weights(
     English docs"); the raw distribution is all of ``df``."""
     import math
 
-    toks = _dsir_tokens(F.col(text_col))
+    toks = LN.tokens(F.col(text_col))
     # pass 1 via the Arrow histogram kernel: tokenization and the target
     # conjunction stay JVM-side (the _t projection BELOW the kernel
     # matters for the same reason it sat below the explode — a shared
@@ -503,7 +483,7 @@ def dsir_weights_duck_sql(
     """DuckDB twin: per-doc (id, weight) relation equivalent to
     :func:`dsir_weights` (unnest+join instead of the literal map; the
     mean is over the same per-token 6 dp ratios)."""
-    toks = _dsir_tokens_sql(text_col)
+    toks = LN.tokens_sql(text_col)
     b = _dsir_bucket_sql("tk", num_buckets)
     return f"""
     WITH _dsir_docs AS (

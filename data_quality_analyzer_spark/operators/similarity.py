@@ -1,13 +1,23 @@
 """Similarity search over embedding columns (array<float>).
 
+* :func:`cosine_expr` — the one Spark cosine fold (JVM higher-order
+  functions, zero Python) every kNN operator scores with.
 * :func:`knn_bruteforce` — exact cosine top-k: broadcast the query vector,
-  score rows with a JVM higher-order-function dot product (zero Python),
-  TakeOrderedAndProject for the k.  O(N) scan — the correctness baseline.
+  TakeOrderedAndProject for the k.  O(N) scan — the correctness baseline
+  (q29).
 * :func:`with_lsh_bucket` / :func:`knn_lsh` — sign-hyperplane LSH bucket as
   a *partition-prunable column*: at 10^12 rows the table is written
-  partitioned by bucket and a query touches ~1/2^bits of the data.
+  partitioned by bucket and a query touches ~1/2^bits of the data (q30).
+* :func:`with_rp_bucket` / :func:`knn_rp` — the same bucket over seeded
+  random projections, valid for trained embeddings (q39).
+* :func:`with_ivf_bucket` / :func:`knn_ivf` — IVF coarse-quantizer lists,
+  untrained anchors or :func:`train_ivf_kmeans` centroids (q41).
 * :func:`pairwise_topk_within_buckets` — near-dup pair search restricted to
   LSH buckets: the self-join is on the bucket key, never all-pairs.
+
+DuckDB twins for the oracles: :func:`lsh_bucket_duck_sql`,
+:func:`rp_bucket_duck_sql` and :func:`ivf_dists_duck_sql`.  Both engines'
+bucket ids come from one renderer, ``_sign_bucket_sql``.
 """
 
 from __future__ import annotations
@@ -46,16 +56,24 @@ def knn_bruteforce(
     )
 
 
+def _sign_bucket_sql(projections: list[str]) -> str:
+    """Bucket id Σ 2^i over the projections i that are > 0 — the one
+    rendering of the sign-LSH bucket for both engines and both families."""
+    terms = [
+        f"(CASE WHEN {p} > 0 THEN {1 << i} ELSE 0 END)"
+        for i, p in enumerate(projections)
+    ]
+    return "(" + " + ".join(terms) + ")"
+
+
 def lsh_bucket_expr(vec_col: str, bits: int = 8):
     """Sign of the first `bits` components → integer bucket id.
     (First-components signs are a valid random-hyperplane family when the
     embedding basis is itself unstructured; swap in a broadcast random
     projection matrix for trained embeddings.)"""
-    terms = [
-        f"(CASE WHEN CAST(element_at({vec_col}, {i + 1}) AS DOUBLE) > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(bits)
-    ]
-    return F.expr("(" + " + ".join(terms) + ")")
+    return F.expr(_sign_bucket_sql(
+        [f"CAST(element_at({vec_col}, {i + 1}) AS DOUBLE)" for i in range(bits)]
+    ))
 
 
 def with_lsh_bucket(df: DataFrame, vec_col: str = "embedding", bits: int = 8) -> DataFrame:
@@ -86,12 +104,9 @@ def _rp_dot_spark(vec_col: str, row: list[float]) -> str:
 
 def rp_bucket_spark_sql(vec_col: str, bits: int = 8, dim: int = 64) -> str:
     """Spark-SQL expression: sign of each random projection → bucket id."""
-    m = rp_matrix(bits, dim)
-    terms = [
-        f"(CASE WHEN {_rp_dot_spark(vec_col, m[i])} > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(bits)
-    ]
-    return "(" + " + ".join(terms) + ")"
+    return _sign_bucket_sql(
+        [_rp_dot_spark(vec_col, row) for row in rp_matrix(bits, dim)]
+    )
 
 
 def _rp_dot_duck(vec_col: str, row: list[float]) -> str:
@@ -104,12 +119,16 @@ def _rp_dot_duck(vec_col: str, row: list[float]) -> str:
 
 def rp_bucket_duck_sql(vec_col: str, bits: int = 8, dim: int = 64) -> str:
     """DuckDB twin of :func:`rp_bucket_spark_sql` — same literals."""
-    m = rp_matrix(bits, dim)
-    terms = [
-        f"(CASE WHEN {_rp_dot_duck(vec_col, m[i])} > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(bits)
-    ]
-    return "(" + " + ".join(terms) + ")"
+    return _sign_bucket_sql(
+        [_rp_dot_duck(vec_col, row) for row in rp_matrix(bits, dim)]
+    )
+
+
+def lsh_bucket_duck_sql(vec_col: str, bits: int = 8) -> str:
+    """DuckDB twin of :func:`lsh_bucket_expr` (1-indexed lists)."""
+    return _sign_bucket_sql(
+        [f"CAST({vec_col}[{i + 1}] AS DOUBLE)" for i in range(bits)]
+    )
 
 
 def with_rp_bucket(

@@ -23,8 +23,10 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions import hashing as HH
 from ..functions import scrub as SC
 from ..functions import text as TX
+from ..operators import similarity as SIM
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -693,14 +695,6 @@ def q23(spark, sf_dir):
     )
 
 
-def _h60_sql(expr: str) -> str:
-    return f"CAST(('0x' || substr(md5({expr}), 1, 15)) AS BIGINT)"
-
-
-def _h60_spark(col):
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 @_register(
     "q24_pii_scrub",
     f"""
@@ -710,7 +704,7 @@ def _h60_spark(col):
            CAST(SUM(CASE WHEN {SC.pii_flag_sql('text', 'ssn')} THEN 1 ELSE 0 END) AS BIGINT) AS n_ssn,
            CAST(SUM(CASE WHEN {SC.pii_flag_sql('text', 'phone')} THEN 1 ELSE 0 END) AS BIGINT) AS n_phone,
            CAST(SUM(CASE WHEN {SC.scrub_sql('text')} <> text THEN 1 ELSE 0 END) AS BIGINT) AS n_changed,
-           bit_xor({_h60_sql(SC.scrub_sql('text'))}) AS scrub_checksum
+           bit_xor({HH.h60_sql(SC.scrub_sql('text'))}) AS scrub_checksum
     FROM documents GROUP BY source
     """,
 )
@@ -728,7 +722,7 @@ def q24(spark, sf_dir):
         F.sum(F.when(flags["has_ssn"], 1).otherwise(0)).cast("long").alias("n_ssn"),
         F.sum(F.when(flags["has_phone"], 1).otherwise(0)).cast("long").alias("n_phone"),
         F.sum(F.when(scrubbed != c, 1).otherwise(0)).cast("long").alias("n_changed"),
-        F.bit_xor(_h60_spark(scrubbed)).alias("scrub_checksum"),
+        F.bit_xor(HH.h60(scrubbed)).alias("scrub_checksum"),
     )
 
 
@@ -760,8 +754,6 @@ def q25(spark, sf_dir):
 
 
 _MINHASH_SEEDS = tuple(range(8))
-
-from ..functions import hashing as HH  # noqa: E402
 
 _DUCK_SHINGLE_HASHES = (
     "list_transform(list_transform(range(1, length(text) - 3), i -> substr(text, i, 5)), "
@@ -802,12 +794,12 @@ def q26(spark, sf_dir):
 
 @_register(
     "q27_simhash",
-    """
+    f"""
     WITH toks AS (
       SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS t
       FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0
     ), h AS (
-      SELECT doc_id, CAST(('0x' || substr(md5(t), 1, 15)) AS BIGINT) AS hv FROM toks
+      SELECT doc_id, {HH.h60_sql('t')} AS hv FROM toks
     ), bits AS (
       SELECT doc_id, j, SUM(CASE WHEN (hv >> j) & 1 = 1 THEN 1 ELSE -1 END) AS s
       FROM h, range(60) r(j) GROUP BY doc_id, j
@@ -844,9 +836,9 @@ _BOW_SQL = (
     "q28_ngram_fingerprint",
     f"""
     SELECT doc_id,
-           {_h60_sql("substr(text, 1, 64)")} AS prefix_fp,
+           {HH.h60_sql("substr(text, 1, 64)")} AS prefix_fp,
            CAST({TX.n_tokens_sql("text")} AS BIGINT) AS n_tokens,
-           {_h60_sql(_BOW_SQL)} AS bow_fp
+           {HH.h60_sql(_BOW_SQL)} AS bow_fp
     FROM documents WHERE text IS NOT NULL
     """,
 )
@@ -859,9 +851,9 @@ def q28(spark, sf_dir):
     bow = F.array_join(F.array_sort(F.array_distinct(toks_l)), " ")
     return d.select(
         "doc_id",
-        _h60_spark(F.substring("text", 1, 64)).alias("prefix_fp"),
+        HH.h60(F.substring("text", 1, 64)).alias("prefix_fp"),
         F.size(toks).cast("long").alias("n_tokens"),
-        _h60_spark(bow).alias("bow_fp"),
+        HH.h60(bow).alias("bow_fp"),
     )
 
 # ---------------------------------------------------------------------------
@@ -881,19 +873,6 @@ def _cos_sql(a: str, b: str) -> str:
     return f"ROUND({_dot_sql(a, b)} / sqrt({_dot_sql(a, a)}) / sqrt({_dot_sql(b, b)}), 6)"
 
 
-_DOT_SPARK = (
-    "aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-    "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-)
-
-
-def _cos_spark(a: str, b: str):
-    dot = _DOT_SPARK.format(a=a, b=b)
-    na = _DOT_SPARK.format(a=a, b=a)
-    nb = _DOT_SPARK.format(a=b, b=b)
-    return F.expr(f"round({dot} / sqrt({na}) / sqrt({nb}), 6)")
-
-
 @_register(
     "q29_knn_bruteforce",
     f"""
@@ -911,40 +890,18 @@ def q29(spark, sf_dir):
     no shuffle except the final top-k), TakeOrderedAndProject for the k."""
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
-    return (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", _cos_spark("embedding", "qvec").alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(10)
-    )
-
-
-def _bucket_sql(e: str) -> str:
-    terms = [
-        f"(CASE WHEN CAST({e}[{i + 1}] AS DOUBLE) > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(8)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
-def _bucket_spark(e: str):
-    terms = [
-        f"(CASE WHEN CAST(element_at({e}, {i + 1}) AS DOUBLE) > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(8)
-    ]
-    return F.expr("(" + " + ".join(terms) + ")")
+    return SIM.knn_bruteforce(e.filter(F.col("vec_id") != 0), q, k=10)
 
 
 @_register(
     "q30_ann_lsh_bucket",
     f"""
-    SELECT e.vec_id, {_bucket_sql("e.embedding")} AS bucket,
+    SELECT e.vec_id, {SIM.lsh_bucket_duck_sql("e.embedding", 8)} AS bucket,
            {_cos_sql("e.embedding", "q.embedding")} AS cos_sim
     FROM embeddings e
     CROSS JOIN (SELECT embedding FROM embeddings WHERE vec_id = 0) q
     WHERE e.vec_id <> 0
-      AND {_bucket_sql("e.embedding")} = {_bucket_sql("q.embedding")}
+      AND {SIM.lsh_bucket_duck_sql("e.embedding", 8)} = {SIM.lsh_bucket_duck_sql("q.embedding", 8)}
     ORDER BY cos_sim DESC, e.vec_id ASC
     LIMIT 5
     """,
@@ -952,19 +909,11 @@ def _bucket_spark(e: str):
 def q30(spark, sf_dir):
     """LSH-bucketed ANN scale path: sign-bit bucket (8 hyperplane signs) is
     a partition-prunable key — at 100 TB the bucket column is a partition
-    key and only ~1/256 of the data is scanned; here the filter expresses
-    the same pruning."""
+    key and only ~1/256 of the data is scanned; here the broadcast
+    bucket equi-join expresses the same pruning."""
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
-    return (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .withColumn("bucket", _bucket_spark("embedding"))
-        .filter(F.col("bucket") == _bucket_spark("qvec"))
-        .select("vec_id", "bucket", _cos_spark("embedding", "qvec").alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(5)
-    )
+    return SIM.knn_lsh(e.filter(F.col("vec_id") != 0), q, k=5, bits=8)
 
 
 @_register(
@@ -1375,8 +1324,6 @@ def q38(spark, sf_dir):
     return out.withColumn("hamming", F.col("hamming").cast("int"))
 
 
-from ..operators import similarity as SIM  # noqa: E402
-
 _RP_BITS = 6
 _RP_DIM = 64
 
@@ -1403,16 +1350,8 @@ def q39(spark, sf_dir):
     is a partition-prunable key at 100 TB, exactly like q30."""
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
-    bucket = SIM.rp_bucket_spark_sql("embedding", _RP_BITS, _RP_DIM)
-    qbucket = SIM.rp_bucket_spark_sql("qvec", _RP_BITS, _RP_DIM)
-    return (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .withColumn("bucket", F.expr(bucket))
-        .filter(F.col("bucket") == F.expr(qbucket))
-        .select("vec_id", "bucket", _cos_spark("embedding", "qvec").alias("cos_sim"))
-        .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-        .limit(5)
+    return SIM.knn_rp(
+        e.filter(F.col("vec_id") != 0), q, k=5, bits=_RP_BITS, dim=_RP_DIM
     )
 
 
@@ -1697,20 +1636,11 @@ def q46(spark, sf_dir):
     )
 
 
-def _bucket6_sql(e: str) -> str:
-    """DuckDB twin of similarity.lsh_bucket_expr(bits=6) (1-indexed lists)."""
-    terms = [
-        f"(CASE WHEN CAST({e}[{i + 1}] AS DOUBLE) > 0 THEN {1 << i} ELSE 0 END)"
-        for i in range(6)
-    ]
-    return "(" + " + ".join(terms) + ")"
-
-
 @_register(
     "q47_embedding_near_dup",
     f"""
     WITH b AS (
-      SELECT vec_id, embedding, {_bucket6_sql("embedding")} AS bucket
+      SELECT vec_id, embedding, {SIM.lsh_bucket_duck_sql("embedding", 6)} AS bucket
       FROM embeddings
     )
     SELECT a.vec_id AS id_a, c.vec_id AS id_b,
@@ -3213,10 +3143,10 @@ def q69(spark, sf_dir):
 
 
 def _q70_oracle() -> str:
-    from ..operators import sampling as SP
+    from ..operators import lines as LN
     from ..operators import sketches as SK
 
-    toks = SP._dsir_tokens_sql("text")
+    toks = LN.tokens_sql("text")
     rel = (
         f"(SELECT source, tok FROM (SELECT source, unnest({toks}) AS tok "
         f"FROM documents WHERE text IS NOT NULL) WHERE tok <> '')"
@@ -3236,14 +3166,14 @@ def q70(spark, sf_dir):
     The query also carries the true distinct count so the estimate
     error is visible in the result, not asserted blindly.  Reference
     ancestor: A4/A5 distinct counts upgraded to bounded memory."""
-    from ..operators import sampling as SP
+    from ..operators import lines as LN
     from ..operators import sketches as SK
 
     d = _spread(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     toks = (
         d.select(
             "source",
-            F.explode(SP._dsir_tokens(F.col("text"))).alias("tok"),
+            F.explode(LN.tokens(F.col("text"))).alias("tok"),
         )
         .filter(F.col("tok") != "")
     )
@@ -3606,10 +3536,10 @@ def q77(spark, sf_dir):
 
 
 def _q78_oracle() -> str:
-    from ..operators import sampling as SP
+    from ..operators import lines as LN
     from ..operators import sketches as SK
 
-    toks = SP._dsir_tokens_sql("text")
+    toks = LN.tokens_sql("text")
     rel = (
         f"(SELECT tok FROM (SELECT unnest({toks}) AS tok FROM documents "
         f"WHERE text IS NOT NULL) WHERE tok <> '')"
@@ -3651,7 +3581,7 @@ def q78(spark, sf_dir):
     (estimate ≥ truth) is visible in the overcount column and pinned in
     tests.  Reference ancestor: A14 group-count distribution upgraded
     to bounded memory."""
-    from ..operators import sampling as SP
+    from ..operators import lines as LN
     from ..operators import sketches as SK
 
     from ..exec_utils import materialize
@@ -3660,7 +3590,7 @@ def q78(spark, sf_dir):
     # materialized: the token relation feeds BOTH the sketch build and
     # the exact top-20 — without the cut the corpus tokenizes twice
     toks = materialize(
-        d.select(F.explode(SP._dsir_tokens(F.col("text"))).alias("tok"))
+        d.select(F.explode(LN.tokens(F.col("text"))).alias("tok"))
         .filter(F.col("tok") != "")
     )
     cells = {

@@ -8,8 +8,6 @@ for the reference's secondary indexes (S6, ``scripts/load_data.py:116-120``).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
 TABLES = (
     "region",
     "nation",
@@ -22,9 +20,3 @@ TABLES = (
     "documents",
     "embeddings",
 )
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name not in TABLES:
-        raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")

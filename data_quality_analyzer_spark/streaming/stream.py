@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions import hashing as HH
+
 EVENTS_SCHEMA = (
     "event_id long, ts timestamp, user_id long, event_type string, "
     "value double, props string"
@@ -170,8 +172,7 @@ def streaming_dedup(
         "_fp", F.md5(text_col)
     ).withColumn(
         "_bucket",
-        F.pmod(F.conv(F.substring(F.md5(text_col), 1, 15), 16, 10).cast("long"),
-               F.lit(num_buckets)).cast("int"),
+        F.pmod(HH.h60(F.col(text_col)), F.lit(num_buckets)).cast("int"),
     )
     out_schema = f"{id_col} long, {text_col} string, _fp string"
     state_schema = "seen string"

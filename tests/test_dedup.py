@@ -85,7 +85,7 @@ def test_minhash_udf_twin_bit_identical(spark):
         ).collect()
     }
     for i, t in enumerate(texts):
-        hs = [DD._h60_py(t[j : j + k]) for j in range(len(t) - k + 1)]
+        hs = [HH.h60_python(t[j : j + k]) for j in range(len(t) - k + 1)]
         want = [min(HH.mix_python(h, s) for h in hs) for s in range(num)]
         assert got[i] == want, f"doc {i}"
 
@@ -194,6 +194,47 @@ def test_random_projection_ann(spark):
     ds = SIM.rp_bucket_duck_sql("embedding", 4, dim)
     for row in SIM.rp_matrix(4, dim):
         assert str(row[0]) in ss and str(row[0]) in ds
+
+
+@pytest.mark.parametrize("bits", [4, 6, 8])
+def test_lsh_bucket_duck_twin(spark, bits):
+    """lsh_bucket_expr and its DuckDB twin lsh_bucket_duck_sql give the
+    same bucket for positive, negative, exactly-zero and NULL components
+    (zero and NULL both read as a 0 bit) and for a NULL vector."""
+    import duckdb
+
+    vecs = [
+        [0.5, -0.25, 0.0, None, 1.0, -1.0, 0.0, 2.0, 0.125],
+        [-0.5] * 8,
+        [1.5] * 8,
+        [0.0] * 8,
+        [None] * 8,
+        [0.0, None, 0.3, -0.3, None, 0.0, 7.0, -7.0],
+        [None, 0.1, -0.0, 0.2, 0.0, 0.4, None, 0.9],
+        None,
+    ]
+    rows = list(enumerate(vecs))
+    df = spark.createDataFrame(rows, "vec_id int, embedding array<float>")
+    got = {
+        r["vec_id"]: r["b"]
+        for r in df.select(
+            "vec_id", SIM.lsh_bucket_expr("embedding", bits).alias("b")
+        ).collect()
+    }
+    con = duckdb.connect()
+    con.execute("CREATE TABLE e (vec_id INTEGER, embedding FLOAT[])")
+    con.executemany("INSERT INTO e VALUES (?, ?)", rows)
+    duck = dict(
+        con.execute(
+            f"SELECT vec_id, {SIM.lsh_bucket_duck_sql('embedding', bits)} FROM e"
+        ).fetchall()
+    )
+    want = {
+        i: sum(1 << j for j, x in enumerate((v or [])[:bits]) if x and x > 0)
+        for i, v in rows
+    }
+    assert got == want
+    assert duck == want
 
 
 def test_ivf_ann(spark):

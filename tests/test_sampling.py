@@ -7,6 +7,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from data_quality_analyzer_spark.operators import lines as LN
 from data_quality_analyzer_spark.operators import sampling as SP
 
 
@@ -340,7 +341,7 @@ def test_dsir_pass1_kernel_matches_explode(spark, dsir_docs):
     for df in (dsir_docs, extra):
         tt = df.filter(F.col("text").isNotNull()).select(
             F.coalesce(F.col("is_target"), F.lit(False)).alias("_t"),
-            SP._dsir_tokens(F.col("text")).alias("_toks"),
+            LN.tokens(F.col("text")).alias("_toks"),
         )
         kernel = {
             r["_b"]: (r["tc"], r["rc"])
