@@ -156,29 +156,10 @@ def is_blank(col: Column) -> Column:
     return col.isNull() | (F.trim(col) == "")
 
 
-def keep_verdict(col: Column) -> Column:
-    """Gopher/C4-style keep/drop conjunction over a text column.
-
-    The record-level analogue of the reference's CheckResult pass/fail
-    (``base_standalone.py:44-66``): every sub-rule is a boolean column and
-    keep = AND of all of them.
-    """
-    nc, nt = n_chars(col), n_tokens(col)
-    mwl = mean_word_len(col)
-    return (
-        ~is_blank(col)
-        & nc.between(MIN_CHARS, MAX_CHARS)
-        & nt.between(MIN_TOKENS, MAX_TOKENS)
-        & (symbol_ratio(col) <= MAX_SYMBOL_RATIO)
-        & (stopword_ratio(col) >= MIN_STOPWORD_RATIO)
-        & (distinct_token_ratio(col) >= MIN_DISTINCT_RATIO)
-        & mwl.between(MIN_MEAN_WORD_LEN, MAX_MEAN_WORD_LEN)
-        & ~has_toxicity(col)
-    )
-
-
 # ---------------------------------------------------------------------------
-# DuckDB SQL twins — rendered from the SAME constants.
+# DuckDB SQL twins — rendered from the SAME constants.  The rule
+# predicates and the keep verdict built on these live in the one registry,
+# ``operators/rules.py`` (``RU.HEURISTIC_RULES``, ``RU.keep_verdict_sql``).
 # ---------------------------------------------------------------------------
 
 def _sql_tokens(c: str) -> str:
@@ -236,19 +217,6 @@ def has_toxicity_sql(c: str) -> str:
 
 def is_blank_sql(c: str) -> str:
     return f"({c} IS NULL OR trim({c}) = '')"
-
-
-def keep_verdict_sql(c: str) -> str:
-    return (
-        f"(NOT {is_blank_sql(c)} "
-        f"AND coalesce(length({c}), 0) BETWEEN {MIN_CHARS} AND {MAX_CHARS} "
-        f"AND {n_tokens_sql(c)} BETWEEN {MIN_TOKENS} AND {MAX_TOKENS} "
-        f"AND {symbol_ratio_sql(c)} <= {MAX_SYMBOL_RATIO} "
-        f"AND {stopword_ratio_sql(c)} >= {MIN_STOPWORD_RATIO} "
-        f"AND {distinct_token_ratio_sql(c)} >= {MIN_DISTINCT_RATIO} "
-        f"AND {mean_word_len_sql(c)} BETWEEN {MIN_MEAN_WORD_LEN} AND {MAX_MEAN_WORD_LEN} "
-        f"AND NOT {has_toxicity_sql(c)})"
-    )
 
 
 # ---------------------------------------------------------------------------

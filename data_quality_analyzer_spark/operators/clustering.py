@@ -408,10 +408,10 @@ def semantic_dedup(
     Scale notes: the pair scan shuffles on (cluster, chunk pair); a
     degenerate mega-cluster (all-identical corpus) degrades to the
     quadratic worst case — the same failure mode as a hot LSH band, and
-    the same remedy (raise k, or pre-collapse exact duplicates with
-    dedup_embedding_exact).  Cosine is computed in double with
-    left-to-right folds and IEEE sqrt — bit-identical across engines,
-    so the threshold verdict itself is oracle-checkable.
+    the same remedy (raise k, or pre-collapse bit-identical vectors, as
+    similarity.dedup_embedding_near does first).  Cosine is computed in
+    double with left-to-right folds and IEEE sqrt — bit-identical across
+    engines, so the threshold verdict itself is oracle-checkable.
 
     The in-cluster pair scan runs as ``applyInPandas`` groups with the
     order-exact numpy kernel (tiled cosine slabs — memory bounded even

@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..functions import hashing as HH
 from ..functions import scrub as SC
 from ..functions import text as TX
+from ..operators import rules as RU
 from ..operators import similarity as SIM
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -629,12 +630,11 @@ def q20(spark, sf_dir):
         """
     )
 
+
 # ---------------------------------------------------------------------------
 # Text-analysis / quality-filter layer over `documents` — the flagship
 # pipeline's caption-side rules (north_rule) expressed with full SQL oracles.
 # ---------------------------------------------------------------------------
-
-from ..operators import rules as RU  # noqa: E402  (placed after relational core)
 
 
 @_register(
@@ -673,25 +673,31 @@ def q22(spark, sf_dir):
     )
 
 
+def _keep_counts_by_lang(d: DataFrame) -> DataFrame:
+    """Per-language document, keep and drop counts (q23, flagship)."""
+    keep = F.coalesce(RU.keep_verdict(F.col("text")), F.lit(False))
+    return d.groupBy("lang").agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.when(keep, 1).otherwise(0)).cast("long").alias("n_keep"),
+        F.sum(F.when(keep, 0).otherwise(1)).cast("long").alias("n_drop"),
+    )
+
+
 @_register(
     "q23_quality_verdict",
     f"""
     SELECT lang,
            COUNT(*) AS n_docs,
-           CAST(SUM(CASE WHEN {TX.keep_verdict_sql('text')} THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
-           CAST(SUM(CASE WHEN {TX.keep_verdict_sql('text')} THEN 0 ELSE 1 END) AS BIGINT) AS n_drop
+           CAST(SUM(CASE WHEN {RU.keep_verdict_sql('text')} THEN 1 ELSE 0 END) AS BIGINT) AS n_keep,
+           CAST(SUM(CASE WHEN {RU.keep_verdict_sql('text')} THEN 0 ELSE 1 END) AS BIGINT) AS n_drop
     FROM documents GROUP BY lang
     """,
 )
 def q23(spark, sf_dir):
     """The keep/drop verdict aggregate — Gopher/C4 heuristic conjunction
     (F14 _validate_stats shape, additional_charge_checks.py:840-868)."""
-    d = _spread(spark, sf_dir, "documents", "lang", "text")
-    keep = F.coalesce(TX.keep_verdict(F.col("text")), F.lit(False))
-    return d.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.when(keep, 1).otherwise(0)).cast("long").alias("n_keep"),
-        F.sum(F.when(keep, 0).otherwise(1)).cast("long").alias("n_drop"),
+    return _keep_counts_by_lang(
+        _spread(spark, sf_dir, "documents", "lang", "text")
     )
 
 
@@ -1052,7 +1058,7 @@ def q35(spark, sf_dir):
     "q36_doc_verdicts",
     f"""
     SELECT doc_id,
-           {TX.keep_verdict_sql('text')} AS keep,
+           {RU.keep_verdict_sql('text')} AS keep,
            CAST({TX.n_tokens_sql('text')} AS BIGINT) AS n_tokens,
            ROUND({TX.symbol_ratio_sql('text')}, 6) AS symbol_ratio,
            md5({SC.scrub_sql('text')}) AS scrub_fp
@@ -1066,7 +1072,7 @@ def q36(spark, sf_dir):
     c = F.col("text")
     return d.select(
         "doc_id",
-        TX.keep_verdict(c).alias("keep"),
+        RU.keep_verdict(c).alias("keep"),
         TX.n_tokens(c).cast("long").alias("n_tokens"),
         F.round(TX.symbol_ratio(c), 6).alias("symbol_ratio"),
         F.md5(SC.scrub(c)).alias("scrub_fp"),
@@ -1258,7 +1264,6 @@ def q44(spark, sf_dir):
 
 
 def _q38_oracle() -> str:
-    from ..functions import hashing as HH
 
     return f"""
     WITH base AS (
@@ -1672,7 +1677,6 @@ def _q48_oracle() -> str:
     """Keep-set of the embedding dedup ACTION: exact-vector collapse →
     16-bit RP fingerprint → 4×4-bit banded Hamming ≤ 2 → cosine ≥ 0.995
     verify → connected components (recursive CTE) → canonical reps."""
-    from ..operators import similarity as SIM
 
     fp = SIM.rp_bucket_duck_sql("v", 16, 64)
     cos = _cos_sql("va", "vb")
@@ -1737,7 +1741,6 @@ def q48(spark, sf_dir):
     with their originals.  Scale shape: exact collapse is one shuffle,
     candidates are rows×bands, cosine runs on candidates only, and CC
     converges in O(log diameter) rounds over the tiny verified graph."""
-    from ..operators import similarity as SIM
 
     base = (
         _t(spark, sf_dir, "embeddings")
@@ -2018,7 +2021,6 @@ _Q53_BUDGET = 100_000  # chars — lands mid-corpus at every test SF
 
 
 def _q53_oracle() -> str:
-    from ..functions import hashing as HH
     from ..operators import sampling as SP
 
     key = "concat('7:', CAST(doc_id AS VARCHAR))"
@@ -2072,7 +2074,6 @@ _Q54_BUDGET = 15_000  # BPE tokens — lands mid-corpus at every test SF
 
 
 def _q54_oracle() -> str:
-    from ..functions import hashing as HH
     from ..operators import sampling as SP
 
     key = "concat('11:', CAST(doc_id AS VARCHAR))"
@@ -2386,7 +2387,7 @@ def _q59_oracle() -> str:
     from ..operators import domains as DM
 
     return DM.domain_reputation_sql(
-        "documents", TX.keep_verdict_sql("text"), "source"
+        "documents", RU.keep_verdict_sql("text"), "source"
     )
 
 
@@ -2405,7 +2406,7 @@ def q59(spark, sf_dir):
     from ..operators import domains as DM
 
     d = _spread(spark, sf_dir, "documents", "source", "text")
-    return DM.domain_reputation(d, TX.keep_verdict(F.col("text")), "source")
+    return DM.domain_reputation(d, RU.keep_verdict(F.col("text")), "source")
 
 
 def _q60_oracle() -> str:
@@ -2580,7 +2581,7 @@ def _q62_oracle() -> str:
     from ..operators import sampling as SP
 
     w = SP.dsir_weights_duck_sql(
-        "documents", TX.keep_verdict_sql("text"), "text", "doc_id"
+        "documents", RU.keep_verdict_sql("text"), "text", "doc_id"
     )
     return f"""
     WITH w AS ({w})
@@ -2623,7 +2624,7 @@ def q62(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").repartition(
         spark.sparkContext.defaultParallelism
     )
-    w = SP.dsir_weights(d, TX.keep_verdict(F.col("text")), text_col="text")
+    w = SP.dsir_weights(d, RU.keep_verdict(F.col("text")), text_col="text")
     pos = F.col("dsir_weight") > 0
     return w.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -2640,7 +2641,6 @@ def q62(spark, sf_dir):
 
 
 def _q63_oracle() -> str:
-    from ..functions import hashing as HH
     from ..operators import html as HT
 
     frag = (
@@ -2694,7 +2694,6 @@ def q63(spark, sf_dir):
     checksums — a byte-exact extraction proof, not a length heuristic.
     Reference ancestor: P12 computed column (claim_analysis.py) as a
     derived-text stage."""
-    from ..functions import hashing as HH
     from ..operators import html as HT
 
     d = _spread(spark, sf_dir, "documents", "source", "doc_id", "text")
@@ -3022,7 +3021,7 @@ def _q68_oracle() -> str:
     from ..operators import sampling as SP
 
     w = SP.dsir_weights_duck_sql(
-        "documents", TX.keep_verdict_sql("text"), "text", "doc_id"
+        "documents", RU.keep_verdict_sql("text"), "text", "doc_id"
     )
     sel = SP.weighted_sample_duck_sql("d", "dsir_weight", 0.3, "doc_id", 5)
     return f"""
@@ -3066,7 +3065,7 @@ def q68(spark, sf_dir):
     # column twice (mean scalar + accept filter) and the DSIR fold is
     # the expensive part (at 100 TB weights would be a stored column)
     w = materialize(
-        SP.dsir_weights(d, TX.keep_verdict(F.col("text")), text_col="text")
+        SP.dsir_weights(d, RU.keep_verdict(F.col("text")), text_col="text")
     )
     kept = SP.weighted_sample(w, "dsir_weight", 0.3, "doc_id", seed=5)
     return kept.groupBy("source").agg(
@@ -3082,7 +3081,6 @@ def q68(spark, sf_dir):
 
 
 def _q69_oracle() -> str:
-    from ..functions import hashing as HH
     from ..operators import sampling as SP
 
     tok = TX.bpe_token_count_sql("text")
@@ -3181,7 +3179,6 @@ def q70(spark, sf_dir):
 
 
 def _q71_oracle() -> str:
-    from ..functions import hashing as HH
     from ..operators import chunking as CH
 
     chunks = CH.chunk_documents_sql(
@@ -3213,7 +3210,6 @@ def q71(spark, sf_dir):
     exact chunk boundaries — including the shorter final window — are
     byte-proven against the oracle's integer-arithmetic twin.
     Reference ancestor: P15 unnest applied to derived windows."""
-    from ..functions import hashing as HH
     from ..operators import chunking as CH
 
     d = _t(spark, sf_dir, "documents")
@@ -3290,7 +3286,6 @@ def q72(spark, sf_dir):
 
 
 def _q73_oracle() -> str:
-    from ..functions import hashing as HH
     from ..operators import alignment as AL
 
     p = HH.h60_sql("concat('img:', CAST(doc_id AS VARCHAR))")
@@ -3311,7 +3306,6 @@ def q73(spark, sf_dir):
     agg); the oracle proves the fold with an independent unnest+groupBy
     decomposition.  Reference ancestor: F14 validity conjunction as a
     cross-modal consistency rule."""
-    from ..functions import hashing as HH
     from ..operators import alignment as AL
 
     d = _spread(
@@ -3422,7 +3416,7 @@ def q75(spark, sf_dir):
 def _q76_oracle() -> str:
     from ..operators import drift as DR
 
-    keep = TX.keep_verdict_sql("text")
+    keep = RU.keep_verdict_sql("text")
     return DR.stats_drift_duck_sql(
         "(SELECT * FROM documents WHERE doc_id % 2 = 1)",
         "(SELECT * FROM documents WHERE doc_id % 2 = 0)",
@@ -3449,7 +3443,7 @@ def q76(spark, sf_dir):
     from ..operators import drift as DR
 
     d = _spread(spark, sf_dir, "documents")
-    keep = TX.keep_verdict(F.col("text"))
+    keep = RU.keep_verdict(F.col("text"))
     return DR.stats_drift(
         d.filter(F.col("doc_id") % 2 == 1),
         d.filter(F.col("doc_id") % 2 == 0),
@@ -3460,7 +3454,6 @@ def q76(spark, sf_dir):
 
 
 def _q77_oracle() -> str:
-    from ..functions import hashing as HH
     from ..operators import images as IM
     from ..operators import sampling as SP
 
@@ -4036,7 +4029,6 @@ _Q84_SUFFIX = " résumé français"  # decomposed accents
 
 
 def _q84_oracle() -> str:
-    from ..functions import hashing as HH
 
     t = f"(text || '{_Q84_SUFFIX}')"
     return f"""
@@ -4069,7 +4061,6 @@ def q84(spark, sf_dir):
     composition.  The mojibake-repair half has no SQL twin (codec
     round-trips) and is pinned by Python-twin tests instead.
     Reference ancestor: U1 row validator as a repair."""
-    from ..functions import hashing as HH
     from ..functions import normalize as NZ
 
     d = (
@@ -4270,7 +4261,7 @@ def q85(spark, sf_dir):
 def _q86_oracle() -> str:
     from ..functions import quality_clf as QC
 
-    keep = TX.keep_verdict_sql("text")
+    keep = RU.keep_verdict_sql("text")
     score = QC.score_duck_sql("text")
     return f"""
     WITH v AS (
@@ -4315,7 +4306,7 @@ def q86(spark, sf_dir):
     v = d.select(
         "doc_id",
         "lang",
-        F.coalesce(TX.keep_verdict(F.col("text")), F.lit(False)).alias("heur"),
+        F.coalesce(RU.keep_verdict(F.col("text")), F.lit(False)).alias("heur"),
         # threshold on the 4 dp-rounded score: the scorer twins agree
         # on the rounded grid, so a boundary-straddling raw float can
         # never flip the verdict between engines
@@ -5686,11 +5677,4 @@ def oracle_sql() -> dict[str, str]:
 def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> DataFrame:
     """Flagship: the one-pass rule-metrics + verdict summary over documents
     (the caption half of the image+caption quality filter)."""
-    d = _t(spark, sf_dir, "documents")
-    keep = F.coalesce(TX.keep_verdict(F.col("text")), F.lit(False))
-    verdicts = d.groupBy("lang").agg(
-        F.count("*").alias("n_docs"),
-        F.sum(F.when(keep, 1).otherwise(0)).cast("long").alias("n_keep"),
-        F.sum(F.when(keep, 0).otherwise(1)).cast("long").alias("n_drop"),
-    )
-    return verdicts
+    return _keep_counts_by_lang(_t(spark, sf_dir, "documents"))

@@ -44,6 +44,7 @@ from ..functions import caption_scores as CS
 from ..functions import scrub as SC
 from ..functions import text as TX
 from ..operators import images as IM
+from ..operators import rules as RU
 from ..sources import seed_corpus as SCorp
 
 from .. import config as CFG
@@ -121,9 +122,10 @@ def run_pipeline(
     df = images.withColumns(
         {
             "caption_scrubbed": SC.scrub(c),
-            "has_email": F.coalesce(c.rlike(SC.PII_PATTERNS[0][1]), F.lit(False)),
-            "has_ssn": F.coalesce(c.rlike(SC.PII_PATTERNS[1][1]), F.lit(False)),
-            "has_phone": F.coalesce(c.rlike(SC.PII_PATTERNS[2][1]), F.lit(False)),
+            **{
+                name: F.coalesce(hit, F.lit(False))
+                for name, hit in SC.pii_flags(c).items()
+            },
             "pass_caption_present": ~TX.is_blank(c),
             # NULL caption fails every caption rule (missing ∨ null ∨ ''
             # collapse, SURVEY §1.3) — hence raw length, not coalesced-to-0.
@@ -248,29 +250,15 @@ def pipeline_metrics(
     ``group_cols`` produces the per-partition variant (e.g. ["bucket"] for
     the transactional per-bucket quality-metric tables the north rule asks
     for): one grouped aggregation, still a single scan."""
-    aggs = []
-    for key, _sev in PIPELINE_RULES:
-        p = F.col(f"pass_{key}")
-        aggs.append(F.sum(F.when(p, 1).otherwise(0)).cast("long").alias(f"p_{key}"))
-        aggs.append(F.sum(F.when(p, 0).otherwise(1)).cast("long").alias(f"f_{key}"))
-    aggs.append(F.sum(F.when(F.col("keep"), 1).otherwise(0)).cast("long").alias("n_keep"))
-    aggs.append(F.count("*").alias("n_total"))
-    wide = (
-        verdicts.groupBy(*group_cols).agg(*aggs)
-        if group_cols
-        else verdicts.agg(*aggs)
+    return RU.pass_fail_counts(
+        verdicts,
+        ((key, sev, F.col(f"pass_{key}")) for key, sev in PIPELINE_RULES),
+        group_cols,
+        totals={
+            "n_keep": F.sum(F.when(F.col("keep"), 1).otherwise(0)).cast("long"),
+            "n_total": F.count("*"),
+        },
     )
-    stack_args = ", ".join(
-        f"'{k}', '{sev}', p_{k}, f_{k}" for k, sev in PIPELINE_RULES
-    )
-    long = wide.selectExpr(
-        *(group_cols or []),
-        f"stack({len(PIPELINE_RULES)}, {stack_args}) AS "
-        "(rule_key, severity, pass_count, fail_count)",
-        "n_keep",
-        "n_total",
-    )
-    return long
 
 
 def langid_histogram(

@@ -30,11 +30,33 @@ analysis stage and combines the results (``main.py:17-45``
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .. import config as CFG
+from ..exec_utils import materialize
 from .pipeline import run_pipeline
+
+
+def _funnel_boundary(funnel, out, stage, prev_rows, line_count=None):
+    """One audited stage boundary of the prep funnel: with ``funnel=None``
+    a no-op; else materialize, count, and append ``{stage, rows,
+    dropped}`` (plus ``lines_out``, the sum of the per-row ``line_count``
+    Column, when given).  Returns (out, rows_at_boundary)."""
+    if funnel is None:
+        return out, None
+    out = materialize(out)
+    entry = {"stage": stage, "rows": out.count()}
+    if prev_rows is not None:
+        entry["dropped"] = prev_rows - entry["rows"]
+    if line_count is not None:
+        entry["lines_out"] = out.agg(
+            F.sum(line_count).cast("long")
+        ).collect()[0][0] or 0
+    funnel.append(entry)
+    return out, entry["rows"]
 
 
 def prep_corpus(
@@ -154,7 +176,7 @@ def prep_text_corpus(
     0c. **Unicode normalization** (``normalize_unicode=True``: NFC +
        input-masked mojibake repair, functions/normalize.py) — before
        any fingerprinting stage, independent of ``html_col``;
-    1. **heuristic quality filter** (``TX.keep_verdict``: length/token/
+    1. **heuristic quality filter** (``RU.keep_verdict``: length/token/
        symbol/stopword/repetition bounds) — map-only;
     1b. **Gopher phrase-repetition gate** (``repetition_metrics_udf``)
        when ``max_dup5_frac`` is given — drops docs whose duplicated
@@ -217,14 +239,12 @@ def prep_text_corpus(
     yourself AFTER persisting the result; the un-chosen case raises.
     """
     from ..functions import quality_clf as QC
-    from ..functions import text as TX
     from ..operators import dedup as DD
     from ..operators import domains as DM
+    from ..operators import rules as RU
     from ..operators import sampling as SP
     from . import lineage as LN
     from . import shards as SH
-
-    from ..exec_utils import materialize
 
     n_lines = F.size(
         F.filter(
@@ -233,20 +253,7 @@ def prep_text_corpus(
         )
     )
 
-    def audit(out, stage, prev_rows, lines=False):
-        """Stage-boundary funnel row; returns (out, rows_at_boundary)."""
-        if funnel is None:
-            return out, None
-        out = materialize(out)
-        entry = {"stage": stage, "rows": out.count()}
-        if prev_rows is not None:
-            entry["dropped"] = prev_rows - entry["rows"]
-        if lines:
-            entry["lines_out"] = out.agg(
-                F.sum(n_lines).cast("long")
-            ).collect()[0][0] or 0
-        funnel.append(entry)
-        return out, entry["rows"]
+    audit = functools.partial(_funnel_boundary, funnel)
 
     out, n = audit(docs, "input", None)
     if blocked_sources is not None:
@@ -276,7 +283,7 @@ def prep_text_corpus(
         out = NZ.normalize_text(out, text_col)
         out, n = audit(out, "normalize_unicode", n)
     out = out.filter(
-        F.coalesce(TX.keep_verdict(F.col(text_col)), F.lit(False))
+        F.coalesce(RU.keep_verdict(F.col(text_col)), F.lit(False))
     )
     out, n = audit(out, "heuristics", n)
     if max_dup5_frac is not None:
@@ -351,7 +358,7 @@ def prep_text_corpus(
     else:
         out = DD.dedup_lines(out, text_col=text_col, id_col=id_col)
     # dropped here = docs emptied by line removal (drop_blank_docs)
-    out, n = audit(out, "line_dedup", n, lines=True)
+    out, n = audit(out, "line_dedup", n, line_count=n_lines)
     if funnel is not None:
         funnel[-1]["lines_in"] = lines_in
     out = DD.dedup_exact(out, text_col, id_col)
@@ -468,20 +475,10 @@ def prep_embedding_corpus(
     from ..operators import sampling as SP
     from ..operators import similarity as SIM
 
-    from ..exec_utils import materialize
-
     if method not in ("semantic", "lsh"):
         raise ValueError(f"method must be 'semantic' or 'lsh', got {method!r}")
 
-    def audit(out, stage, prev_rows):
-        if funnel is None:
-            return out, None
-        out = materialize(out)
-        entry = {"stage": stage, "rows": out.count()}
-        if prev_rows is not None:
-            entry["dropped"] = prev_rows - entry["rows"]
-        funnel.append(entry)
-        return out, entry["rows"]
+    audit = functools.partial(_funnel_boundary, funnel)
 
     out, n = audit(vectors, "input", None)
     out = CL._valid(out, vec_col, dim)

@@ -34,6 +34,7 @@ def main() -> None:
     from data_quality_analyzer_spark import config as CFG
     from data_quality_analyzer_spark.operators import checks as CK
     from data_quality_analyzer_spark.operators import claims as CL
+    from data_quality_analyzer_spark.operators import rules as RU
     from data_quality_analyzer_spark.session import get_spark
 
     doc = (
@@ -45,7 +46,7 @@ def main() -> None:
     claims = spark.read.parquet(args.claims)
     stats = CL.generate_stats(claims)
 
-    results = CK.run_readiness_checks([
+    checks = [
         lambda: CFG.validate_settings(doc),
         lambda: CK.check_claims_data(claims, rs),
         lambda: CK.check_stats_quality(
@@ -53,23 +54,15 @@ def main() -> None:
         ),
         lambda: CK.check_diagnosis_diversity(claims, rs),
         lambda: CK.check_data_quality_sampled(stats, rs),
-    ])
-
+    ]
+    results = CK.run_readiness_checks(checks)
     # severity-weighted readiness score (base_standalone.py:300-376)
-    weights = {"critical": 0.4, "high": 0.3, "medium": 0.2, "low": 0.1}
-    total_w = passed_w = 0.0
-    for r in results:
-        w = 0.2 if r["status"] == "passed" else weights.get(r["severity"], 0.2)
-        total_w += w
-        if r["status"] == "passed":
-            passed_w += w
-    score = round(passed_w / total_w * 100, 4) if total_w else 0.0
-    status = "Ready" if score >= 80 else ("Partial" if score >= 50 else "Not Ready")
+    score, status = RU.score_check_results(results)
 
     print(json.dumps({
         "checks": results,
         "checks_run": len(results),
-        "early_exit": len(results) < 5,
+        "early_exit": len(results) < len(checks),
         "readiness_score": score,
         "readiness_status": status,
     }, default=str))

@@ -166,8 +166,13 @@ def test_verdict_invariant_under_repartition(spark, corpus_path):
 
 
 def test_readiness_score_semantics(spark):
-    """base_standalone.py:300-376 semantics on a crafted metrics table."""
-    from data_quality_analyzer_spark.operators.rules import readiness_score
+    """base_standalone.py:300-376 semantics on a crafted metrics table,
+    through both the Spark scorer and the driver-side scorer over the
+    equivalent CheckResult dicts."""
+    from data_quality_analyzer_spark.operators.rules import (
+        readiness_score,
+        score_check_results,
+    )
 
     pdf = pd.DataFrame(
         {
@@ -182,6 +187,20 @@ def test_readiness_score_semantics(spark):
     # score = (0.2+0.2)/(0.2+0.3+0.2+0.1)*100 = 50.0 -> Partial
     assert got["score"] == 50.0
     assert got["status"] == "Partial"
+    # the driver-side scorer agrees on this table and on one per band,
+    # including a severity outside the weight table
+    for sevs, fails in [
+        (pdf["severity"], pdf["fail_count"]),
+        (["critical", "low", "high"], [0, 1, 0]),  # 0.4/0.5 -> Ready
+        (["critical", "bogus", "high"], [1, 1, 0]),  # 0.2/0.8 -> Not Ready
+    ]:
+        rows = pd.DataFrame({"severity": sevs, "fail_count": fails})
+        want = readiness_score(spark.createDataFrame(rows)).collect()[0]
+        results = [
+            {"severity": sev, "status": "passed" if n == 0 else "failed"}
+            for sev, n in zip(rows["severity"], rows["fail_count"])
+        ]
+        assert score_check_results(results) == (want["score"], want["status"])
 
 
 def test_prep_corpus_composition(spark, corpus_path):
@@ -294,11 +313,11 @@ def test_prep_text_corpus_every_stage(spark, tmp_path):
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
     # sanity: the mash row passes heuristics but fails the classifier
-    from data_quality_analyzer_spark.functions import text as TX
+    from data_quality_analyzer_spark.operators import rules as RU
     import pandas as pd
 
     assert docs.filter(
-        (F.col("doc_id") == 8) & TX.keep_verdict(F.col("text"))
+        (F.col("doc_id") == 8) & RU.keep_verdict(F.col("text"))
     ).count() == 1
     assert QC.score_batch(pd.Series([mash]), QC.get_model()).iloc[0] < 0.3
 

@@ -11,6 +11,10 @@ from pyspark.sql import functions as F
 
 from data_quality_analyzer_spark.functions import scrub as SC
 from data_quality_analyzer_spark.functions import text as TX
+from data_quality_analyzer_spark.operators import rules as RU
+
+# 2,600 distinct-ish tokens, ~18k chars: fails max_length only
+_LONG_VARIED = " ".join(f"the word{i}" for i in range(1300))
 
 EDGE_TEXTS = [
     "Contact me at john.doe@example.com or (555) 123-4567 today",
@@ -25,6 +29,10 @@ EDGE_TEXTS = [
     "x",
     "the  double   spaces \t tabs \n newlines here and there",
     "email@no-tld@double.at@x.com mixed 123-45-6789-extra",
+    # the catalog fixtures hold no text over MAX_CHARS / MAX_TOKENS:
+    _LONG_VARIED,
+    _LONG_VARIED[: TX.MAX_CHARS],  # exactly at the char bound
+    "ab " * 2600,  # 5,200 tokens of two words: over every upper bound
 ]
 
 
@@ -48,7 +56,7 @@ def test_heuristics_match_duckdb(frames):
         F.round(TX.mean_word_len(c), 6).alias("mwl"),
         TX.has_toxicity(c).alias("tox"),
         TX.is_blank(c).alias("blank"),
-        F.coalesce(TX.keep_verdict(c), F.lit(False)).alias("keep"),
+        F.coalesce(RU.keep_verdict(c), F.lit(False)).alias("keep"),
     ).toPandas()
     want = con.sql(
         f"""SELECT {TX.n_tokens_sql('text')} nt,
@@ -58,13 +66,83 @@ def test_heuristics_match_duckdb(frames):
         round({TX.mean_word_len_sql('text')}, 6) mwl,
         {TX.has_toxicity_sql('text')} tox,
         {TX.is_blank_sql('text')} blank,
-        coalesce({TX.keep_verdict_sql('text')}, FALSE) keep
+        coalesce({RU.keep_verdict_sql('text')}, FALSE) keep
         FROM t"""
     ).df()
     for col in want.columns:
         a = got[col].fillna(-999).tolist()
         b = want[col].fillna(-999).tolist()
         assert a == b, f"{col}: spark={a} duck={b}"
+
+
+def _nullable(values) -> list:
+    return [None if pd.isna(v) else bool(v) for v in values]
+
+
+def test_caption_rule_twins_agree(frames):
+    """Every registry rule's Spark predicate equals its DuckDB predicate,
+    NULL for NULL, on the edge texts (NULL, '', blank, over-long)."""
+    sdf, con = frames
+    c = F.col("text")
+    got = sdf.select(
+        *[r.spark_pred(c).alias(r.key) for r in RU.CAPTION_RULES]
+    ).toPandas()
+    want = con.sql(
+        "SELECT "
+        + ", ".join(f"{r.sql_pred('text')} AS {r.key}" for r in RU.CAPTION_RULES)
+        + " FROM t"
+    ).df()
+    for r in RU.CAPTION_RULES:
+        a, b = _nullable(got[r.key]), _nullable(want[r.key])
+        assert a == b, f"{r.key}: spark={a} duck={b}"
+
+
+def test_keep_verdict_is_and_of_heuristic_rules(frames):
+    """On both engines the keep verdict is exactly the row-wise AND of
+    the heuristic rules (NULL predicate = fail), and the PII rules take
+    no part in it."""
+    sdf, con = frames
+    c = F.col("text")
+    keys = [r.key for r in RU.HEURISTIC_RULES]
+    got = sdf.select(
+        F.coalesce(RU.keep_verdict(c), F.lit(False)).alias("keep"),
+        *[
+            F.coalesce(r.spark_pred(c), F.lit(False)).alias(r.key)
+            for r in RU.HEURISTIC_RULES
+        ],
+    ).toPandas()
+    want = con.sql(
+        f"SELECT coalesce({RU.keep_verdict_sql('text')}, FALSE) AS keep, "
+        + ", ".join(
+            f"coalesce({r.sql_pred('text')}, FALSE) AS {r.key}"
+            for r in RU.HEURISTIC_RULES
+        )
+        + " FROM t"
+    ).df()
+    for frame in (got, want):
+        assert frame["keep"].tolist() == frame[keys].all(axis=1).tolist()
+    assert got["keep"].tolist() == want["keep"].tolist()
+    # the planted texts reach both outcomes and each upper bound
+    assert any(got["keep"]) and not all(got["keep"])
+    assert not got["max_length"].all() and not got["token_bounds"].all()
+    assert set(RU.CAPTION_RULES) - set(RU.HEURISTIC_RULES) == set(RU.PII_RULES)
+
+
+def test_rule_metrics_twins_agree(frames):
+    sdf, con = frames
+    got = (
+        RU.rule_metrics(sdf, "text").toPandas()
+        .sort_values("rule_key").reset_index(drop=True)
+    )
+    want = (
+        con.sql(RU.rule_metrics_sql("t", "text")).df()
+        .sort_values("rule_key").reset_index(drop=True)
+    )
+    assert got.columns.tolist() == want.columns.tolist()
+    for col in got.columns:
+        assert got[col].tolist() == want[col].tolist(), col
+    assert len(got) == len(RU.CAPTION_RULES)
+    assert (got["pass_count"] + got["fail_count"] == len(EDGE_TEXTS)).all()
 
 
 def test_scrub_three_engines(frames):
