@@ -44,6 +44,7 @@ from dataclasses import dataclass
 import numpy as np
 import pandas as pd
 
+from ..session import per_context
 from ..sources import seed_corpus
 from . import hashing as HH
 
@@ -203,8 +204,11 @@ def score_batch(texts: pd.Series, model: QualityModel) -> pd.Series:
     return pd.Series(out)
 
 
+@per_context
 def quality_udf(spark):
-    """Arrow-vectorized quality scorer (double), weights broadcast."""
+    """Arrow-vectorized quality scorer (double).  Made once per
+    SparkContext, so its weights are broadcast once per context, not once
+    per query that scores text (q51, q86, ``prep_text_corpus``)."""
     from pyspark.sql import functions as F
 
     bc = spark.sparkContext.broadcast(get_model())

@@ -12,10 +12,15 @@ delegated to Spark instead of mongod):
 * UTC session timezone — required for bit-parity with the DuckDB oracle.
 * shuffle partitions default to ~cores locally; on a real cluster the caller
   passes ``shuffle_partitions`` sized to executors*cores*2-3.
+
+:func:`per_context` is the one memo for driver-side objects that belong to
+a SparkContext (model broadcasts, UDF wrappers, the pipeline's Column
+program), so they are made once per context instead of once per call.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import SparkSession
@@ -55,3 +60,25 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def per_context(build):
+    """Memoize ``build(spark, *key)`` on ``(spark.sparkContext, *key)``.
+
+    ``key`` must be hashable.  Only one SparkContext is live in a process,
+    so meeting a new one (``bench.py --scaling`` stops and restarts its
+    session) drops every entry of the old one: its broadcasts died with
+    it."""
+    memo: dict = {}
+
+    @functools.wraps(build)
+    def cached(spark, *key):
+        sc = spark.sparkContext
+        if any(k[0] is not sc for k in memo):
+            memo.clear()
+        k = (sc, *key)
+        if k not in memo:
+            memo[k] = build(spark, *key)
+        return memo[k]
+
+    return cached

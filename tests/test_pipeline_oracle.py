@@ -5,10 +5,14 @@ property-based invariants (SURVEY §5 item 3)."""
 
 from __future__ import annotations
 
+import dataclasses
+from collections import Counter, defaultdict
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from data_quality_analyzer_spark import config as CFG
 from data_quality_analyzer_spark.oracle.pandas_oracle import (
     f1_keep,
     oracle_metrics,
@@ -93,14 +97,129 @@ def test_fused_scores_identical_and_single_arrow_node(spark, corpus_path):
     import re
 
     images = spark.read.parquet(corpus_path)
-    plan = (
-        run_pipeline(spark, images)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
+    # the second call replays the memoized Column program: same shape
+    for _ in range(2):
+        plan = (
+            run_pipeline(spark, images)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert len(re.findall(r"ArrowEvalPython", plan)) == 1
+        assert "Exchange" not in plan
+
+
+def _counting(monkeypatch, targets):
+    """Wrap each ``(owner, attr)`` in a call counter; returns the counts."""
+    calls = Counter()
+
+    def wrap(name, fn):
+        def counted(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        return counted
+
+    for owner, attr in targets:
+        monkeypatch.setattr(owner, attr, wrap(attr, getattr(owner, attr)))
+    return calls
+
+
+def test_program_built_once_per_context_and_settings(
+    spark, corpus_path, monkeypatch
+):
+    """``run_pipeline`` builds its Column program (and the two UDFs with
+    their model broadcasts) once per SparkContext and settings value, then
+    replays it; a different settings value builds its own."""
+    from pyspark import SparkContext
+
+    from data_quality_analyzer_spark.functions import caption_scores as CS
+    from data_quality_analyzer_spark.operators import images as IM
+
+    calls = _counting(
+        monkeypatch,
+        [
+            (CS, "caption_scores_udf"),
+            (IM, "image_validator_udf"),
+            (SparkContext, "broadcast"),
+        ],
     )
-    assert len(re.findall(r"ArrowEvalPython", plan)) == 1
-    assert "Exchange" not in plan
+    images = spark.read.parquet(corpus_path)
+    cold = dataclasses.replace(CFG.DEFAULT_SETTINGS, max_chars=9_999)
+    first = run_pipeline(spark, images, settings=cold)
+    assert calls["caption_scores_udf"] == calls["image_validator_udf"] == 1
+    broadcasts = calls["broadcast"]
+    second = run_pipeline(spark, images, settings=cold)
+    assert calls["caption_scores_udf"] == calls["image_validator_udf"] == 1
+    assert calls["broadcast"] == broadcasts
+    assert _verdict_rows(first) == _verdict_rows(second)
+    run_pipeline(spark, images, settings=dataclasses.replace(cold, max_chars=9_998))
+    assert calls["caption_scores_udf"] == calls["image_validator_udf"] == 2
+
+
+def test_quality_udf_broadcasts_once_per_context(spark, monkeypatch):
+    """Two ``quality_udf`` calls share one UDF and one weight broadcast
+    (none at all when an earlier query already made it)."""
+    from pyspark import SparkContext
+
+    from data_quality_analyzer_spark.functions import quality_clf as QC
+
+    calls = _counting(monkeypatch, [(SparkContext, "broadcast")])
+    assert QC.quality_udf(spark) is QC.quality_udf(spark)
+    assert calls["broadcast"] <= 1
+
+
+_VERDICT_COLS = ["image_id", "caption", "keep", "fail_rules", "lang_pred"]
+
+
+def _verdict_rows(df, cols=_VERDICT_COLS):
+    """The rows of ``df[cols]`` as a multiset (arrays as tuples)."""
+    return Counter(
+        tuple(tuple(v) if isinstance(v, list) else v for v in r)
+        for r in df.select(*cols).collect()
+    )
+
+
+def test_reused_program_on_disjoint_halves(spark, corpus_path):
+    """The replayed UDF expressions keep their result ids across
+    DataFrames; a union of two runs over disjoint halves still equals one
+    run over the whole corpus, row for row."""
+    images = spark.read.parquet(corpus_path)
+    half = F.pmod(F.hash("image_id", "caption", "w", "h"), 2) == 0
+    halves = run_pipeline(spark, images.filter(half)).unionByName(
+        run_pipeline(spark, images.filter(~half))
+    )
+    whole = _verdict_rows(run_pipeline(spark, images))
+    assert sum(whole.values()) == images.count()
+    assert _verdict_rows(halves) == whole
+
+
+def test_reused_program_self_join(spark, corpus_path):
+    """A self-join of two runs (same replayed UDF expressions on both
+    sides) resolves each side's columns and returns the rows a
+    driver-side self-merge of one run's output gives."""
+    images = spark.read.parquet(corpus_path)
+    a = run_pipeline(spark, images).alias("a")
+    b = run_pipeline(spark, images).alias("b")
+    joined = a.join(b, F.col("a.image_id") == F.col("b.image_id")).select(
+        F.col("a.image_id").alias("image_id"),
+        *[
+            F.col(f"{side}.{c}").alias(f"{c}_{side}")
+            for side in ("a", "b")
+            for c in _VERDICT_COLS[1:]
+        ],
+    )
+    by_id = defaultdict(list)
+    for r in _verdict_rows(run_pipeline(spark, images)).elements():
+        by_id[r[0]].append(r[1:])
+    want = Counter(
+        (i, *x, *y)
+        for i, rs in by_id.items()
+        if i is not None
+        for x in rs
+        for y in rs
+    )
+    assert _verdict_rows(joined, joined.columns) == want
 
 
 def test_bytes_passthrough(spark, corpus_path, spark_verdicts):
