@@ -74,15 +74,20 @@ def _table_bytes(sf_dir: str, name: str) -> int:
 
 
 def _spread(spark: SparkSession, sf_dir: str, name: str, *cols) -> DataFrame:
-    """Read a table for a heavy-per-row map stage, round-robin
-    repartitioned to the session parallelism WHEN the scan itself cannot
-    reach it (small single-row-group files: one parquet row group = one
-    scan task no matter how many cores are idle — guide §2.5 input skew).
-    Scale-adaptive: a table already big enough to scan wide
-    (>= parallelism x 128 MB split size) passes through untouched, so on
-    a production cluster this is a no-op and the payload is never
-    shuffled.  ``cols`` projects before the exchange (guide §2.3: shuffle
-    only the columns the stage needs)."""
+    """The single owner of the input-spread decision: every heavy
+    per-row builder reads its catalog input through here, and no builder
+    repartitions on its own.
+
+    The table is round-robin repartitioned to the session parallelism
+    WHEN the scan itself cannot reach it (small single-row-group files:
+    one parquet row group = one scan task no matter how many cores are
+    idle — guide §2.5 input skew).  Scale-adaptive: a table already big
+    enough to scan wide (>= parallelism x 128 MB split size) passes
+    through untouched, so on a production cluster this is a no-op and
+    the payload is never shuffled.  ``cols`` projects before the
+    exchange (guide §2.3: shuffle only the columns the stage needs);
+    filters may follow the call, as Catalyst pushes them below the
+    exchange."""
     df = _t(spark, sf_dir, name)
     if cols:
         df = df.select(*cols)
@@ -785,11 +790,8 @@ def q26(spark, sf_dir):
     the oracle's list_transform formulation."""
     from ..operators import dedup as DD
 
-    d = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull() & (F.length("text") >= 5))
-        # sf documents is a single scan split; spread the map-only UDF stage
-        .repartition(spark.sparkContext.defaultParallelism)
+    d = _spread(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull() & (F.length("text") >= 5)
     )
     d = d.withColumn("_sig", DD.minhash_signature_udf(len(_MINHASH_SEEDS))(F.col("text")))
     cols = [F.col("doc_id")]
@@ -823,10 +825,8 @@ def q27(spark, sf_dir):
     formulation.  Integer arithmetic ⇒ exact agreement."""
     from ..operators import dedup as DD
 
-    d = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
-        .repartition(spark.sparkContext.defaultParallelism)
+    d = _spread(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
     )
     return d.select("doc_id", DD.simhash_udf()(F.col("text")).alias("simhash"))
 
@@ -1203,14 +1203,8 @@ def _q37_input(spark, sf_dir):
     """The near-dup input corpus shared by q37/q44: sf documents plus
     deterministically synthesized suffix-perturbed twins (the sf tables
     carry no planted near-dups)."""
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("text").isNotNull() & (F.length("text") >= _K_37))
-        # the sf table is one parquet file (one scan split) — spread the
-        # map-only signature stage; at 100 TB the scan has many splits and
-        # this repartition is unnecessary
-        .repartition(spark.sparkContext.defaultParallelism)
+    d = _spread(spark, sf_dir, "documents", "doc_id", "text").filter(
+        F.col("text").isNotNull() & (F.length("text") >= _K_37)
     )
     twins = d.filter(F.col("doc_id") % 20 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
@@ -1313,11 +1307,8 @@ def q38(spark, sf_dir):
     simhash_near_duplicates).  Exact twin rows guarantee hamming-0 hits."""
     from ..operators import dedup as DD
 
-    d = (
-        _t(spark, sf_dir, "documents")
-        .select("doc_id", "text")
-        .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
-        .repartition(spark.sparkContext.defaultParallelism)
+    d = _spread(spark, sf_dir, "documents", "doc_id", "text").filter(
+        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
     )
     twins = d.filter(F.col("doc_id") % 25 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), F.col("text")
@@ -1556,10 +1547,8 @@ def q43(spark, sf_dir):
     the fast path is engine-portable, not just fast."""
     from ..operators import dedup as DD
 
-    d = (
-        _t(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull() & (F.length("text") >= _K_43))
-        .repartition(spark.sparkContext.defaultParallelism)
+    d = _spread(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull() & (F.length("text") >= _K_43)
     )
     d = d.withColumn(
         "_sig", DD.minhash_signature_poly_udf(_POLY_SEEDS_43, _K_43)(F.col("text"))
@@ -1619,10 +1608,9 @@ def q46(spark, sf_dir):
     from ..operators import dedup as DD
 
     base = (
-        _t(spark, sf_dir, "documents")
+        _spread(spark, sf_dir, "documents", "doc_id", "text")
         .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
         .select("doc_id", F.expr(HH.h60_spark_sql("text")).alias("fp"))
-        .repartition(spark.sparkContext.defaultParallelism)
     )
     twins = base.filter(F.col("doc_id") % 25 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"),
@@ -1742,11 +1730,7 @@ def q48(spark, sf_dir):
     candidates are rows×bands, cosine runs on candidates only, and CC
     converges in O(log diameter) rounds over the tiny verified graph."""
 
-    base = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    base = _spread(spark, sf_dir, "embeddings", "vec_id", "embedding")
     copies = base.filter(F.col("vec_id") % 20 == 0).select(
         (F.col("vec_id") + 1000000).alias("vec_id"), "embedding"
     )
@@ -1828,12 +1812,7 @@ def q49(spark, sf_dir):
     over ledger-hit grams."""
     from ..operators import decontam as DC
 
-    # the sf parquet is one small file → one scan partition; the gram
-    # explode is the per-row cost center, so spread it (at corpus scale
-    # the scan has thousands of partitions and this is a no-op concern)
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(spark, sf_dir, "documents")
     ev = d.filter((F.col("doc_id") % 101 == 7) & F.col("text").isNotNull())
     grams = DC.eval_gram_table(ev, "text", "doc_id", n=3)
     hits = DC.contamination_hits(d, grams, "text", "doc_id", n=3)
@@ -2621,9 +2600,7 @@ def q62(spark, sf_dir):
     importance-weighted selection."""
     from ..operators import sampling as SP
 
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(spark, sf_dir, "documents")
     w = SP.dsir_weights(d, RU.keep_verdict(F.col("text")), text_col="text")
     pos = F.col("dsir_weight") > 0
     return w.groupBy("source").agg(
@@ -2787,9 +2764,7 @@ def q64(spark, sf_dir):
     phrases."""
     from ..operators import repetition as RP
 
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(spark, sf_dir, "documents")
     return RP.crossdoc_dup_metrics(d, "text", "doc_id", n=5)
 
 
@@ -2940,9 +2915,7 @@ def q66(spark, sf_dir):
     MLlib's collectAsMap)."""
     from ..operators import clustering as CL
 
-    v = _t(spark, sf_dir, "embeddings").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    v = _spread(spark, sf_dir, "embeddings")
     assigned, _ = CL.kmeans_fit_assign(v, k=4, iters=2, dim=64)
     return assigned
 
@@ -3002,11 +2975,7 @@ def q67(spark, sf_dir):
     planted-copy pattern."""
     from ..operators import clustering as CL
 
-    base = (
-        _t(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
+    base = _spread(spark, sf_dir, "embeddings", "vec_id", "embedding")
     copies = base.filter(F.col("vec_id") < 50).select(
         (F.col("vec_id") + 10000).alias("vec_id"), "embedding"
     )
@@ -3058,9 +3027,7 @@ def q68(spark, sf_dir):
 
     from ..exec_utils import materialize
 
-    d = _t(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    d = _spread(spark, sf_dir, "documents")
     # materialize the annotated frame: the sampler consumes the weight
     # column twice (mean scalar + accept filter) and the DSIR fold is
     # the expensive part (at 100 TB weights would be a stored column)

@@ -83,6 +83,7 @@ from pyspark.sql.types import StructType
 
 from ..config import PipelineSettings
 from ..exec_utils import materialize
+from ..operators import dedup as DD
 from .pipeline import langid_histogram, pipeline_metrics, run_pipeline
 
 # underscore prefix: Spark's parquet reader skips _-prefixed files, so the
@@ -585,6 +586,28 @@ def read_committed_signatures(
     return _NEAR.read(spark, store_dir)
 
 
+def _cap_hot_bands(
+    new_bands: DataFrame,
+    old_bands: DataFrame,
+    keys: list[str],
+    max_band_size: int | None,
+    what: str,
+) -> DataFrame:
+    """The ledgers' hot-band cap, ON by default: ``None`` takes the
+    ``dedup.LEDGER_MAX_BAND_SIZE`` dial as it stands at call time, ``0``
+    disables the cap.  The census spans new batch + archive (a bucket
+    small in the batch but huge in the archive still joins
+    quadratically); oversized buckets are excluded LOUDLY
+    (``dedup.exclude_hot_band_buckets``)."""
+    if max_band_size is None:
+        max_band_size = DD.LEDGER_MAX_BAND_SIZE
+    if not max_band_size:
+        return new_bands
+    return DD.exclude_hot_band_buckets(
+        new_bands, keys, max_band_size, what=what, extra_rows=old_bands
+    )
+
+
 def dedup_incremental_near(
     spark: SparkSession,
     docs: DataFrame,
@@ -626,16 +649,10 @@ def dedup_incremental_near(
     a production deployment materializes the archive's band index as a
     table partitioned by (band, fp-prefix) instead of deriving it per run.
 
-    **Hot-band cap is ON by default here** (``max_band_size=None`` →
-    ``dedup.LEDGER_MAX_BAND_SIZE``): ledger joins run unattended across
-    crawls, exactly where a degenerate band bucket accretes.  The census
-    spans new batch + archive (a bucket small in the batch but huge in
-    the archive still joins quadratically); oversized buckets are
-    excluded LOUDLY (``dedup.exclude_hot_band_buckets``).  Pass
-    ``max_band_size=0`` to disable (restores the unconditional pigeonhole
-    recall guarantee)."""
-    from ..operators import dedup as DD
-
+    **Hot-band cap is ON by default here** (:func:`_cap_hot_bands`):
+    ledger joins run unattended across crawls, exactly where a degenerate
+    band bucket accretes.  Pass ``max_band_size=0`` to disable (restores
+    the unconditional pigeonhole recall guarantee)."""
     m = _NEAR.begin(store_dir, batch_id)
     if m is None:
         return docs.filter(F.lit(False))
@@ -654,19 +671,16 @@ def dedup_incremental_near(
     archive = read_committed_signatures(spark, store_dir)
     drop_ids = None
     if archive is not None:
-        if max_band_size is None:
-            max_band_size = DD.LEDGER_MAX_BAND_SIZE
         new_bands = sigs.select(
             "_id", DD.band_fp_explode("_sig", bands, rows_per_band).alias("bf")
         ).select("_id", "bf.band", "bf.fp")
         old_bands = archive.select(
             "sid", DD.band_fp_explode("sig", bands, rows_per_band).alias("bf")
         ).select("sid", "bf.band", "bf.fp")
-        if max_band_size:
-            new_bands = DD.exclude_hot_band_buckets(
-                new_bands, ["band", "fp"], max_band_size,
-                what="dedup_incremental_near", extra_rows=old_bands,
-            )
+        new_bands = _cap_hot_bands(
+            new_bands, old_bands, ["band", "fp"], max_band_size,
+            "dedup_incremental_near",
+        )
         cand = (
             new_bands.join(old_bands, ["band", "fp"])
             .select("_id", "sid")
@@ -752,12 +766,10 @@ def dedup_incremental_image(
     Pass rows pre-filtered to valid images (decodable, the pipeline's keep
     set) — fingerprints of undecodable rows are not meaningful.
 
-    Hot-band cap ON by default (census = new ∪ archive, loud exclusion;
+    Hot-band cap ON by default (:func:`_cap_hot_bands`;
     ``max_band_size=0`` disables) — same rationale as
     :func:`dedup_incremental_near`.
     """
-    from ..operators import dedup as DD
-
     m = _IMG.begin(store_dir, batch_id)
     if m is None:
         return images.filter(F.lit(False))
@@ -765,8 +777,6 @@ def dedup_incremental_image(
     survivors = images
     archive = read_committed_phashes(spark, store_dir)
     if archive is not None:
-        if max_band_size is None:
-            max_band_size = DD.LEDGER_MAX_BAND_SIZE
         new_fps = images.select(F.col(fp_col).alias("_fp")).distinct()
         new_bands = new_fps.select(
             "_fp", DD.int_band_explode("_fp", bands, band_bits).alias("bf")
@@ -774,11 +784,10 @@ def dedup_incremental_image(
         old_bands = archive.select(F.col(fp_col).alias("_ofp")).distinct().select(
             "_ofp", DD.int_band_explode("_ofp", bands, band_bits).alias("bf")
         ).select("_ofp", "bf.band", "bf.bb")
-        if max_band_size:
-            new_bands = DD.exclude_hot_band_buckets(
-                new_bands, ["band", "bb"], max_band_size,
-                what="dedup_incremental_image", extra_rows=old_bands,
-            )
+        new_bands = _cap_hot_bands(
+            new_bands, old_bands, ["band", "bb"], max_band_size,
+            "dedup_incremental_image",
+        )
         hit = (
             new_bands.join(old_bands, ["band", "bb"])
             .filter(
@@ -845,8 +854,10 @@ def dedup_incremental_embedding(
     2. near-dedups WITHIN the surviving batch
        (``similarity.dedup_embedding_near``);
     3. commits the survivors' (embedding, fingerprint) as this batch.
+
+    Hot-band cap ON by default (:func:`_cap_hot_bands`;
+    ``max_band_size=0`` disables), as in :func:`dedup_incremental_near`.
     """
-    from ..operators import dedup as DD
     from ..operators import similarity as SIM
 
     m = _EMB.begin(store_dir, batch_id)
@@ -857,8 +868,6 @@ def dedup_incremental_embedding(
     survivors = df
     archive = read_committed_embeddings(spark, store_dir)
     if archive is not None:
-        if max_band_size is None:
-            max_band_size = DD.LEDGER_MAX_BAND_SIZE
         new_rows = (
             df.select(id_col, vec_col)
             .withColumn("_efp", fp_expr)
@@ -875,11 +884,10 @@ def dedup_incremental_embedding(
             "efp",
             DD.int_band_explode("efp", bands, band_bits).alias("bf"),
         ).select("_ov", "efp", "bf.band", "bf.bb")
-        if max_band_size:
-            new_bands = DD.exclude_hot_band_buckets(
-                new_bands, ["band", "bb"], max_band_size,
-                what="dedup_incremental_embedding", extra_rows=old_bands,
-            )
+        new_bands = _cap_hot_bands(
+            new_bands, old_bands, ["band", "bb"], max_band_size,
+            "dedup_incremental_embedding",
+        )
         hit = (
             new_bands.join(old_bands, ["band", "bb"])
             .filter(
@@ -1012,8 +1020,6 @@ def prepare_incremental_lines(
 
     Idempotent replay of a COMMITTED batch still returns the empty
     relation here."""
-    from ..operators import dedup as DD
-
     if _LINES.begin(store_dir, batch_id) is None:
         return docs.filter(F.lit(False))
     archive = read_committed_line_fps(spark, store_dir)

@@ -32,6 +32,50 @@ def test_flagship_entry(spark):
     assert {"lang", "n_docs", "n_keep", "n_drop"} == set(df.columns)
 
 
+# `_spread` readers among the near-dup, decontamination, sampling and
+# clustering builders
+_SPREAD_QUERIES = [
+    "q26_minhash_signatures", "q27_simhash", "q37_near_dup_pairs",
+    "q38_simhash_hamming", "q43_minhash_poly_signatures",
+    "q44_near_dup_clusters", "q45_near_dup_dedup_action",
+    "q46_fingerprint_group_near_dup", "q48_embedding_dedup_action",
+    "q49_decontamination", "q62_dsir_importance", "q64_crossdoc_dup_ngrams",
+    "q66_kmeans_clusters", "q67_semantic_dedup", "q68_dsir_weighted_sample",
+]
+
+
+@pytest.mark.parametrize("name", _SPREAD_QUERIES)
+def test_big_table_is_not_spread(spark, monkeypatch, name):
+    """A table big enough to scan wide is read as is: no round-robin
+    exchange anywhere in the plan, and the oracle still agrees (the
+    spread-on side is test_query_matches_oracle at sf0.001)."""
+    monkeypatch.setattr(EQ, "_table_bytes", lambda sf_dir, table: 1 << 60)
+    r = run_compare(spark, SF_DIR, [name])[0]
+    assert r.ok, f"{name}: {r.issues}"
+    df = EQ.queries()[name](spark, SF_DIR)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" not in plan, plan
+
+
+def test_only_spread_repartitions():
+    """The input-spread decision has one owner: no builder in
+    entry_queries.py calls ``.repartition(`` outside ``_spread``."""
+    import ast
+    import inspect
+
+    tree = ast.parse(inspect.getsource(EQ))
+    offenders = [
+        f"{getattr(top, 'name', '<module>')}:{node.lineno}"
+        for top in tree.body
+        if getattr(top, "name", None) != "_spread"
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "repartition"
+    ]
+    assert not offenders, offenders
+
+
 
 def _event_rows(extra) -> list[dict]:
     """Rows of the events table for (event_id, second, user_id,
