@@ -28,6 +28,7 @@ from ..functions import scrub as SC
 from ..functions import text as TX
 from ..operators import rules as RU
 from ..operators import similarity as SIM
+from ..sources.catalog import read_table, table_files, table_path
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -51,26 +52,11 @@ def _register(name: str, sql):
     return deco
 
 
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
 def _table_bytes(sf_dir: str, name: str) -> int:
     """On-disk size of a table, or 'huge' when it cannot be cheaply
     stat'ed (remote filesystem) — callers treat unknown as big."""
-    import os
-
-    p = f"{sf_dir}/{name}.parquet"
-    try:
-        if os.path.isdir(p):
-            return sum(
-                os.path.getsize(os.path.join(r, f))
-                for r, _, fs in os.walk(p)
-                for f in fs
-            )
-        return os.path.getsize(p)
-    except OSError:
-        return 1 << 60
+    files = table_files(table_path(sf_dir, name))
+    return 1 << 60 if files is None else sum(size for _, size, _ in files)
 
 
 def _spread(spark: SparkSession, sf_dir: str, name: str, *cols) -> DataFrame:
@@ -88,7 +74,7 @@ def _spread(spark: SparkSession, sf_dir: str, name: str, *cols) -> DataFrame:
     exchange (guide §2.3: shuffle only the columns the stage needs);
     filters may follow the call, as Catalyst pushes them below the
     exchange."""
-    df = _t(spark, sf_dir, name)
+    df = read_table(spark, sf_dir, name)
     if cols:
         df = df.select(*cols)
     par = spark.sparkContext.defaultParallelism
@@ -126,7 +112,7 @@ def _dsum(col, alias: str):
 def q01(spark, sf_dir):
     """A6+A8 hash group-by multi-aggregate (payer_analysis.py:17-77 shape) —
     TPC-H Q1 over lineitem; one scan, partial aggregation map-side."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -161,7 +147,7 @@ def q01(spark, sf_dir):
 def q02(spark, sf_dir):
     """P1+P2+P3+A2 equality/membership/range filter + filtered count
     (claim_analysis.py:14-35, count_documents shape)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     return o.filter(
         F.col("o_orderstatus").isin("O", "P")
         & F.col("o_totalprice").between(1000, 200000)
@@ -190,7 +176,7 @@ def q02(spark, sf_dir):
 def q03(spark, sf_dir):
     """A7 conditional aggregates + F3 safe-divide (payer_analysis.py:26-74:
     $cond count/sum then avg_denied_amount with divide-by-zero guard)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     fin = F.when(F.col("o_orderstatus") == "F", 1).otherwise(0)
     fin_amt = F.sum(
         F.when(
@@ -223,7 +209,7 @@ def q03(spark, sf_dir):
 def q04(spark, sf_dir):
     """A8+A9 global aggregate block incl. stddev_pop
     (chargespattern_analysis.py:31-58, generate_stats_collection.py:143-187)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     s = F.sum(F.col("l_extendedprice").cast("decimal(18,2)")).cast("double")
     return li.agg(
         F.count("*").alias("n"),
@@ -242,7 +228,7 @@ def q04(spark, sf_dir):
 def q05(spark, sf_dir):
     """A4 distinct values (payer_analysis.py:9-10 distinct('payerMCO'))."""
     return (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .select(F.col("c_mktsegment").alias("segment"))
         .distinct()
     )
@@ -260,7 +246,7 @@ def q06(spark, sf_dir):
     """A5 distinct count via group ($group _id:$code → $count,
     diagnosis_analysis.py:197-213)."""
     return (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .groupBy("l_returnflag")
         .agg(
             F.countDistinct("l_partkey").alias("n_parts"),
@@ -283,8 +269,8 @@ def q06(spark, sf_dir):
 def q07(spark, sf_dir):
     """T1+T2 sort+limit top-k over a J2 broadcast equi-join
     (cpt_code_analysis.py:100-114 top revenue CPTs; stats join shape)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    p = read_table(spark, sf_dir, "part")
     rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,4)")
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -307,7 +293,7 @@ def q07(spark, sf_dir):
 def q08(spark, sf_dir):
     """T4 rank assignment (cpt_code_analysis.py:39-48 enumerate→rank) as a
     window row_number with total tie-break."""
-    counts = _t(spark, sf_dir, "part").groupBy("p_type").agg(
+    counts = read_table(spark, sf_dir, "part").groupBy("p_type").agg(
         F.count("*").alias("n_items")
     )
     w = Window.orderBy(F.desc("n_items"), F.asc("p_type"))
@@ -327,8 +313,8 @@ def q08(spark, sf_dir):
 def q09(spark, sf_dir):
     """T5 threshold slice — 'rare codes' with usage ≤ k
     (cpt_code_analysis.py:50-60)."""
-    li = _t(spark, sf_dir, "lineitem")
-    p = _t(spark, sf_dir, "part")
+    li = read_table(spark, sf_dir, "lineitem")
+    p = read_table(spark, sf_dir, "part")
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .groupBy(F.col("p_brand").alias("code"))
@@ -372,7 +358,7 @@ def q10(spark, sf_dir):
     """A16 bucketed histogram — the reference runs 6 scans, one per charge
     range (chargespattern_analysis.py:60-97); here ONE pass with half-open
     buckets (SURVEY §1.3 quirk 2: gapped [0,500],[501,1000] → [lo,hi))."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     return (
         o.withColumn("bucket", _bucket_label_spark("o_totalprice"))
         .groupBy("bucket")
@@ -392,7 +378,7 @@ def q10(spark, sf_dir):
 def q11(spark, sf_dir):
     """A12 re-aggregation duplicates — Σ(count) over groups with count>1,
     counting ROWS not groups (claim_analysis.py:225-247, SURVEY quirk 5)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     groups = li.groupBy("l_orderkey").agg(F.count("*").alias("cnt")).filter(
         F.col("cnt") > 1
     )
@@ -418,9 +404,9 @@ def q12(spark, sf_dir):
     """J1 set-coverage semi/anti join — |stats ∩ claims| / |claims| CPT
     coverage (charge_analysis_checks.py:666-699) as ONE distributed plan:
     distinct keys, broadcast left join marker, conditional count."""
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey").distinct()
+    li = read_table(spark, sf_dir, "lineitem").select("l_partkey").distinct()
     p = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .select("p_partkey")
         .distinct()
         .withColumn("m", F.lit(1))
@@ -444,8 +430,8 @@ def q12(spark, sf_dir):
 )
 def q13(spark, sf_dir):
     """J1 anti-join — the uncovered set (charge_analysis_checks.py:666-699)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").select("o_custkey")
+    c = read_table(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders").select("o_custkey")
     n = c.join(o, c.c_custkey == o.o_custkey, "left_anti").agg(
         F.count("*").alias("n_customers_without_orders")
     )
@@ -468,10 +454,10 @@ def q13(spark, sf_dir):
 def q14(spark, sf_dir):
     """J2 multi-way equi-join with broadcast dims (Catalyst join reordering;
     the stats-join-back shape of generate_stats_collection.py:143-148)."""
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region")
+    o = read_table(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer")
+    n = read_table(spark, sf_dir, "nation")
+    r = read_table(spark, sf_dir, "region")
     return (
         o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
@@ -494,7 +480,7 @@ def q14(spark, sf_dir):
 def q15(spark, sf_dir):
     """A15 per-group quality bands (generate_stats_collection.py:278-306:
     record_count ≥10 / 3-9 / <3 quality histogram) in ONE pass."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     v = F.col("value")
     return e.groupBy("event_type").agg(
         F.sum(F.when(v >= 100, 1).otherwise(0)).alias("high_quality"),
@@ -514,7 +500,7 @@ def q16(spark, sf_dir):
     """T3 bottom-10 slice (payer_analysis.py:124 payer_table[-10:]) done as
     an ascending TakeOrderedAndProject, never a driver-side slice."""
     return (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .select("c_custkey", "c_acctbal")
         .orderBy(F.asc("c_acctbal"), F.asc("c_custkey"))
         .limit(10)
@@ -533,7 +519,7 @@ def q16(spark, sf_dir):
 def q17(spark, sf_dir):
     """F10 date bucketing + A6 (events daily rollup; date_format shapes of
     shared/utils.py:50-51)."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     s = F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
     return (
         e.withColumn("day", F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd"))
@@ -558,7 +544,7 @@ def q18(spark, sf_dir):
     """S8 point lookup max-by + F11 staleness gate
     (charge_analysis_checks.py:813-846: find_one(sort last_updated desc),
     datediff > threshold). Fixed anchor date keeps the test deterministic."""
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     latest = F.max("ts").cast("date")
     days = F.datediff(F.lit("2026-01-01").cast("date"), latest)
     return e.agg(
@@ -588,7 +574,7 @@ def q19(spark, sf_dir):
     the row_number()=1 window but runs as a hash aggregate with map-side
     partial aggregation — one shuffle of pre-aggregated groups instead of a
     full sort of every row within partitions (the round-1 window form)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     # (l_orderkey, l_linenumber) is NOT unique in the test data — the full
     # tie-break makes $first deterministic on both engines.
     firsts = (
@@ -622,7 +608,7 @@ def q20(spark, sf_dir):
     """Per-dimension + global metrics in one pass via GROUPING SETS — the
     rebuild's generalization of the reference's separate per-dimension
     queries (SURVEY §2.4 note)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     li.createOrReplaceTempView("lineitem")
     return spark.sql(
         """
@@ -649,7 +635,7 @@ def q20(spark, sf_dir):
 def q21(spark, sf_dir):
     """A14 group-count distribution — the langid histogram metric
     (cpt_code_analysis.py:11-32 shape; north-star langid histogram)."""
-    return _t(spark, sf_dir, "documents").groupBy("lang").agg(
+    return read_table(spark, sf_dir, "documents").groupBy("lang").agg(
         F.count("*").alias("n")
     )
 
@@ -751,7 +737,7 @@ def q25(spark, sf_dir):
     """Exact deduplication by content fingerprint (hash-groupBy) — quirk-5
     row-counting semantics (claim_analysis.py:225-247): Σcount over groups
     with count>1, plus the removable surplus."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d = read_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     groups = (
         d.groupBy(F.md5("text").alias("fp"))
         .agg(F.count("*").alias("cnt"))
@@ -894,7 +880,7 @@ def q29(spark, sf_dir):
     """Brute-force cosine top-k ANN baseline: broadcast the query vector,
     score every row with a JVM higher-order-function dot product (no Python,
     no shuffle except the final top-k), TakeOrderedAndProject for the k."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = read_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
     return SIM.knn_bruteforce(e.filter(F.col("vec_id") != 0), q, k=10)
 
@@ -917,7 +903,7 @@ def q30(spark, sf_dir):
     a partition-prunable key — at 100 TB the bucket column is a partition
     key and only ~1/256 of the data is scanned; here the broadcast
     bucket equi-join expresses the same pruning."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = read_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
     return SIM.knn_lsh(e.filter(F.col("vec_id") != 0), q, k=5, bits=8)
 
@@ -939,7 +925,7 @@ def q31(spark, sf_dir):
     ($elemMatch / $nor, charge_analysis_checks.py:410-422,
     diagnosis_analysis.py:31-36) via higher-order exists/forall — no
     explode."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = read_table(spark, sf_dir, "embeddings")
     has_large = F.exists("embedding", lambda x: x.cast("double") > 0.4)
     all_bounded = F.forall(
         "embedding", lambda x: x.cast("double").between(-0.45, 0.45)
@@ -968,7 +954,7 @@ def q32(spark, sf_dir):
     """P15 unnest/$unwind + A9 full stats block per group
     (generate_stats_collection.py:120-187: unwind→group→mean/min/max/
     stddev_pop) — explode then one-pass aggregate, no collect_list."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = read_table(spark, sf_dir, "embeddings")
     x = F.col("x").cast("double")
     return (
         e.select("label", F.explode("embedding").alias("x"))
@@ -1043,7 +1029,7 @@ def q35(spark, sf_dir):
     """EP3 materialized stats table (generate_stats_collection.py:120-197:
     group by composite key → mean/min/max/stddev_pop + record_count) —
     direct partial+final aggregation, no $push/collect_list intermediate."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     s = F.sum("n_chars").cast("double")
     return d.groupBy("lang", "source").agg(
         F.count("*").alias("record_count"),
@@ -1202,15 +1188,22 @@ def _q44_oracle() -> str:
 def _q37_input(spark, sf_dir):
     """The near-dup input corpus shared by q37/q44: sf documents plus
     deterministically synthesized suffix-perturbed twins (the sf tables
-    carry no planted near-dups)."""
+    carry no planted near-dups).  Each twin is made in the same pass as
+    its base row (an exploded two-slot array whose second slot is NULL
+    for non-twins), so the table is scanned and spread once, not once per
+    branch of a union."""
     d = _spread(spark, sf_dir, "documents", "doc_id", "text").filter(
         F.col("text").isNotNull() & (F.length("text") >= _K_37)
     )
-    twins = d.filter(F.col("doc_id") % 20 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.concat(F.col("text"), F.lit(" near dup twin")).alias("text"),
+    twin = F.when(
+        F.col("doc_id") % 20 == 0,
+        F.struct(
+            (F.col("doc_id") + 1000000).alias("doc_id"),
+            F.concat(F.col("text"), F.lit(" near dup twin")).alias("text"),
+        ),
     )
-    return d.unionByName(twins)
+    rows = F.explode(F.array(F.struct("doc_id", "text"), twin)).alias("r")
+    return d.select(rows).filter(F.col("r").isNotNull()).select("r.doc_id", "r.text")
 
 
 @_register("q37_near_dup_pairs", _q37_oracle())
@@ -1344,7 +1337,7 @@ def q39(spark, sf_dir):
     valid for unstructured bases).  The seeded projection matrix is a plan
     literal on both engines (operators/similarity.py:rp_matrix); the bucket
     is a partition-prunable key at 100 TB, exactly like q30."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = read_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
     return SIM.knn_rp(
         e.filter(F.col("vec_id") != 0), q, k=5, bits=_RP_BITS, dim=_RP_DIM
@@ -1383,7 +1376,7 @@ def q41(spark, sf_dir):
     like q30/q39's LSH buckets but with data-adaptive cell shapes once the
     anchor table is swapped for trained k-means|| centroids
     (operators/similarity.py:ivf_anchors)."""
-    e = _t(spark, sf_dir, "embeddings")
+    e = read_table(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qvec"))
     return SIM.knn_ivf(
         e.filter(F.col("vec_id") != 0), q, topk=5, k=_IVF_K, dim=_RP_DIM, nprobe=1
@@ -1415,7 +1408,7 @@ def q42(spark, sf_dir):
     Java regex and RE2 agree).  Pure regexp_count — JVM-side, codegen, no
     UDF; the per-language bpe/ws ratio is the fertility metric training
     pipelines budget token counts with."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d = read_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     bpe = F.regexp_count("text", F.lit(_BPE_PAT)).cast("long")
     ws = TX.n_tokens(F.col("text")).cast("long")
     return d.groupBy("lang").agg(
@@ -1447,7 +1440,7 @@ def q40(spark, sf_dir):
     stats table GROUPED BY the payer dimension (here lang over the
     documents stats of q35) — two cascaded hash aggregations, the second on
     the strictly-smaller stats table."""
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     stats = d.groupBy("lang", "source").agg(F.count("*").alias("n"))
     n = F.col("n")
     return (
@@ -1884,7 +1877,7 @@ def q50(spark, sf_dir):
     test scale; the Spark side deliberately avoids it)."""
     from ..operators import dedup as DD
 
-    d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d = read_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     body = F.transform(
         F.array_sort(F.collect_list(F.struct("doc_id", "text"))),
         lambda s: s["text"],
@@ -1985,7 +1978,7 @@ def q52(spark, sf_dir):
     from "any 100 docs" to a deterministic, auditable selection."""
     from ..operators import sampling as SP
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return (
         SP.stratified_sample(d, _Q52_MIX, "lang", "doc_id", seed=7)
         .groupBy("lang")
@@ -2038,7 +2031,7 @@ def q53(spark, sf_dir):
     the driver hash-compares count + sum + id-XOR."""
     from ..operators import sampling as SP
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     got = SP.sample_token_budget(
         d, _Q53_BUDGET, "n_chars", "doc_id", seed=7, num_buckets=1024
     )
@@ -2091,7 +2084,7 @@ def q54(spark, sf_dir):
     the identical DuckDB token count."""
     from ..operators import sampling as SP
 
-    d = _t(spark, sf_dir, "documents").withColumn(
+    d = read_table(spark, sf_dir, "documents").withColumn(
         "_tok", TX.bpe_token_count(F.col("text"))
     )
     got = SP.sample_token_budget(
@@ -2131,7 +2124,7 @@ def q55(spark, sf_dir):
     (claim_analysis.py:30-35 ``$in`` over a category column)."""
     from ..operators import domains as DM
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     return DM.domain_keep_stats(d, list(_Q55_BLOCKED), "source")
 
 
@@ -2339,7 +2332,7 @@ def q58(spark, sf_dir):
     validity conjunction per line; C4 §2.2 Raffel et al. 2020."""
     from ..operators import lines as LN
 
-    d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d = read_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     body = F.transform(
         F.array_sort(F.collect_list(F.struct("doc_id", "text"))),
         lambda s: s["text"],
@@ -2436,7 +2429,7 @@ def q60(spark, sf_dir):
     full-corpus metadata rule."""
     from ..operators import images as IM
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     w = F.lit(16) + (F.col("doc_id") * 37) % 1200
     h = F.lit(16) + (F.col("doc_id") * 61) % 1200
     nb = F.col("n_chars") * 211 + F.col("doc_id") % 7919
@@ -2515,7 +2508,7 @@ def q61(spark, sf_dir):
     + A10 first-per-group (claim_analysis.py) on the canonical-URL axis."""
     from ..operators import domains as DM
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     page = F.floor(F.col("doc_id") / 4).cast("string")
     m = F.col("doc_id") % 4
     url = (
@@ -2794,7 +2787,7 @@ def q65(spark, sf_dir):
     (t-digest, map-side-combining, bounded error) — same plan shape,
     no oracle equality.  Reference ancestor: A8 global stats
     (base_standalone.py) extended to order statistics."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d = read_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     nc = F.length("text")
     pct = lambda p, a: F.round(  # noqa: E731
         F.percentile(nc, F.lit(p)), 4
@@ -3093,7 +3086,7 @@ def q69(spark, sf_dir):
     size-balanced deterministic layout."""
     from ..plans import shards as SH
 
-    d = _t(spark, sf_dir, "documents").withColumn(
+    d = read_table(spark, sf_dir, "documents").withColumn(
         "_tok", F.coalesce(TX.bpe_token_count(F.col("text")), F.lit(0))
     )
     out = SH.assign_token_shards(
@@ -3179,7 +3172,7 @@ def q71(spark, sf_dir):
     Reference ancestor: P15 unnest applied to derived windows."""
     from ..operators import chunking as CH
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     c = CH.chunk_documents(d, chunk_chars=400, overlap=80)
     chk = F.expr(
         HH.h60_spark_sql(
@@ -3223,7 +3216,7 @@ def q72(spark, sf_dir):
     bucketed histogram (payer_analysis.py) on the aspect axis."""
     from ..operators import images as IM
 
-    d = _t(spark, sf_dir, "documents").select(
+    d = read_table(spark, sf_dir, "documents").select(
         "doc_id",
         (F.lit(16) + (F.col("doc_id") * 37) % 1200).alias("w"),
         (F.lit(16) + (F.col("doc_id") * 61) % 1200).alias("h"),
@@ -3327,7 +3320,7 @@ def q74(spark, sf_dir):
     F10/F11 freshness windows upgraded to run structure."""
     from ..operators import sessions as SN
 
-    e = _t(spark, sf_dir, "events")
+    e = read_table(spark, sf_dir, "events")
     sess = SN.session_stats(e)
     return sess.groupBy("n_events").agg(
         F.count("*").alias("n_sessions"),
@@ -3371,7 +3364,7 @@ def q75(spark, sf_dir):
     (additional_charge_checks.py:741) upgraded to a partition."""
     from ..operators import sampling as SP
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     s = SP.split_corpus(d, _Q75_SPLITS, "doc_id", seed=3)
     return s.groupBy("split").agg(
         F.count("*").alias("n_docs"),
@@ -3474,7 +3467,7 @@ def q77(spark, sf_dir):
     from ..operators import images as IM
     from ..plans import shards as SH
 
-    d = _t(spark, sf_dir, "documents").select(
+    d = read_table(spark, sf_dir, "documents").select(
         "doc_id",
         (F.lit(16) + (F.col("doc_id") * 37) % 1200).alias("w"),
         (F.lit(16) + (F.col("doc_id") * 61) % 1200).alias("h"),
@@ -3917,7 +3910,7 @@ def q82(spark, sf_dir):
     pkey = F.concat(
         F.lit("u/p"), F.expr("CAST((doc_id * 2) div 3 AS STRING)")
     )
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     build = d.filter(F.col("doc_id") % 2 == 0).select(key.alias("k"))
     words = SK.bloom_words(
         (r["pos"] for r in SK.bloom_build(build, "k", m=_Q82_M).collect()),
@@ -3983,7 +3976,7 @@ def q83(spark, sf_dir):
     size contract."""
     from ..operators import sampling as SP
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     s = SP.sample_exact_k(d, 30, "doc_id", seed=6, strata_col="lang")
     return s.groupBy("lang").agg(
         F.count("*").alias("n_selected"),
@@ -4197,7 +4190,7 @@ def q85(spark, sf_dir):
     per-domain policy."""
     from ..operators import robots as RB
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     robots = (
         d.select("source").distinct().select(
             F.concat(F.col("source"), F.lit(".example.com")).alias("domain"),
@@ -4498,7 +4491,7 @@ def q88(spark, sf_dir):
         )
     )
     s3 = (
-        _q88_sessions(_t(spark, sf_dir, "events"))
+        _q88_sessions(read_table(spark, sf_dir, "events"))
         .withColumn(
             "t1",
             F.array_min(
@@ -4737,7 +4730,7 @@ def q90(spark, sf_dir):
     cheap structural half of the q60→decode cost ladder."""
     from ..operators import images as IM
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     imgs = IM.structural_gate(_q90_images(d), "bytes", "fmt")
     fl = F.col("framing")
     return imgs.groupBy("fmt").agg(
@@ -4792,7 +4785,7 @@ def q91(spark, sf_dir):
     (additional_charge_checks.py:741) as bounded-batch work dispatch."""
     from ..operators import frontier as FR
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     urls = d.select(
         F.concat(
             F.lit("https://"),
@@ -4972,7 +4965,7 @@ def q93(spark, sf_dir):
     + A16 bucketed histogram (payer_analysis.py)."""
     from ..operators import skew as SK
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     buckets = d.select(
         F.expr(_q93_bucket_sql("spark")).alias("phash_bucket"), "doc_id"
     )
@@ -5159,7 +5152,7 @@ def q95(spark, sf_dir):
     (claim_analysis.py re-aggregation) lifted to the two-modality key
     lattice."""
     img, cap = _q95_keys("spark")
-    d = _t(spark, sf_dir, "documents").select(
+    d = read_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.expr(img).alias("img_key"),
         F.expr(cap).alias("cap_key"),
@@ -5231,7 +5224,7 @@ def q96(spark, sf_dir):
     check) upgraded from 'how old' to 'how fast does it change'."""
     from ..operators import frontier as FR
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     snaps = d.select(
         F.concat(
             F.lit("https://"),
@@ -5297,7 +5290,7 @@ def q97(spark, sf_dir):
     shuffle) + a single-row report agg; all outputs exact integers.
     Reference ancestor: quirk-5 duplicate-row counting
     (claim_analysis.py:225-247) extended to byte accounting."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
+    d = read_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     content = F.when(
         F.col("doc_id") % 4 < 2,
         F.concat(
@@ -5376,7 +5369,7 @@ def q98(spark, sf_dir):
     relation joined against its own transpose."""
     from ..operators import linkgraph as LG
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     edges = LG.domain_edges(_q89_pages(d), "src_domain", "html")
     return LG.reciprocity(edges)
 
@@ -5427,7 +5420,7 @@ def q99(spark, sf_dir):
     incidence."""
     from ..operators import mirrors as MI
 
-    d = _t(spark, sf_dir, "documents").select(
+    d = read_table(spark, sf_dir, "documents").select(
         "source", F.expr(_q99_fp_sql("spark")).alias("fp")
     )
     return MI.mirror_pairs(
@@ -5469,7 +5462,7 @@ def q100(spark, sf_dir):
     family lifted from rows to SITES."""
     from ..operators import mirrors as MI
 
-    d = _t(spark, sf_dir, "documents").select(
+    d = read_table(spark, sf_dir, "documents").select(
         "doc_id", "source", F.expr(_q99_fp_sql("spark")).alias("fp")
     )
     return MI.collapse_mirrors(
@@ -5521,7 +5514,7 @@ def q101(spark, sf_dir):
     (payer_analysis.py) on the normalized-path axis."""
     from ..operators import frontier as FR
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     host = F.concat(F.lit("https://"), F.col("source"), F.lit(".example.com"))
     base = d.select(
         F.concat(host, F.lit("/page/"), F.col("doc_id").cast("string")).alias(
@@ -5606,7 +5599,7 @@ def q102(spark, sf_dir):
     dispatch axis."""
     from ..operators import frontier as FR
 
-    d = _t(spark, sf_dir, "documents")
+    d = read_table(spark, sf_dir, "documents")
     urls = d.select(
         F.concat(
             F.lit("https://"),
@@ -5644,4 +5637,4 @@ def oracle_sql() -> dict[str, str]:
 def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> DataFrame:
     """Flagship: the one-pass rule-metrics + verdict summary over documents
     (the caption half of the image+caption quality filter)."""
-    return _keep_counts_by_lang(_t(spark, sf_dir, "documents"))
+    return _keep_counts_by_lang(read_table(spark, sf_dir, "documents"))

@@ -28,6 +28,17 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_mem() -> str:
+    """The driver heap when ``SPARK_GRAFT_DRIVER_MEM`` is unset: 48g, or
+    half of physical memory on a smaller machine, so the JVM cannot grow
+    past what the box has."""
+    try:
+        half = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2
+    except (ValueError, OSError):
+        return "48g"
+    return "48g" if half >= 48 << 30 else f"{half >> 20}m"
+
+
 def get_spark(
     app_name: str = "data_quality_analyzer_spark",
     cpus: int | None = None,
@@ -51,7 +62,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_mem())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -18,6 +19,30 @@ SF_CORRECT = "/root/testdata/sf0.01"
 def spark():
     s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
     yield s
+
+
+def job_counter(spark):
+    """A function ``count(fn)`` that returns ``(fn(), the number of Spark
+    jobs fn ran)``, counted through a job group of its own."""
+    sc = spark.sparkContext
+    seq = itertools.count()
+
+    def run(fn):
+        group = f"count-jobs-{next(seq)}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture(scope="session")
+def count_jobs(spark):
+    return job_counter(spark)
 
 
 @pytest.fixture(scope="session")

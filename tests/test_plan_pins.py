@@ -18,6 +18,24 @@ def _plan(spark, name: str) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
+def test_near_dup_input_scans_documents_once(spark):
+    """q37/q44/q45's input makes each twin in the same pass as its base
+    row: one documents scan under one round-robin spread, no Union of a
+    second scan."""
+    plan = EQ._q37_input(spark, SF)._jdf.queryExecution().executedPlan().toString()
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 1 and "/documents.parquet" in scans[0], plan
+    assert plan.count("RoundRobinPartitioning") == 1, plan
+    assert "Union" not in plan, plan
+
+
+def test_near_dup_input_keeps_text_not_null_filter(spark):
+    """The catalog reader's schema is all-nullable, so Catalyst keeps the
+    ``text IS NOT NULL`` filter of the near-dup input."""
+    df = EQ._q37_input(spark, SF)
+    assert "isnotnull(text" in df._jdf.queryExecution().optimizedPlan().toString()
+
+
 def test_q07_topk_uses_take_ordered(spark):
     """Server-side top-k must stay TakeOrderedAndProject — a global sort
     of the corpus for a k-row answer is the classic scale killer."""
