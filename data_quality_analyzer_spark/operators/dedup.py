@@ -16,6 +16,13 @@ Scale design (10^12 rows):
   near-dups = equal fingerprints (or banded Hamming buckets).
 * **n-gram Jaccard** — exact verification for candidate pairs produced by
   LSH: computed only on the (tiny) candidate set, never all-pairs.
+* **cluster resolution** — one step turns any verified pair list into a
+  keep-set: :func:`_keep_canonical` (optionally after the exact-key
+  :func:`_collapse` to min-id representatives) → :func:`connected_components`
+  → keep each cluster's min id.  The text (:func:`dedup_near`), image
+  (:func:`dedup_image_near`) and embedding
+  (``similarity.dedup_embedding_near``) actions differ only in their pair
+  finder; rows whose key is NULL pass through all three untouched.
 
 All hashing is deterministic integer arithmetic (md5- or
 polynomial-derived) with exact DuckDB twins.
@@ -24,6 +31,7 @@ polynomial-derived) with exact DuckDB twins.
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -616,24 +624,15 @@ def image_near_duplicates(
     Returns (id_a, id_b, hamming, n_rows_a, n_rows_b): representative ids
     of fingerprint groups within `max_hamming`, with group sizes.
     """
-    # materialize the (distinct-fingerprint-sized) reps relation ONCE: it
-    # feeds both sides of the banded self-join plus the two size lookups,
-    # and without this the phash aggregate — a full corpus scan — appears
-    # four times in the physical plan (broadcast and shuffle exchanges
-    # don't reuse each other)
-    reps = (
-        images.groupBy(F.col(fp_col).alias("_fp"))
-        .agg(F.min(id_col).alias("_id"), F.count("*").alias("_n"))
-        .transform(materialize)
-    )
+    reps = _collapse(images, fp_col, id_col, F.count("*").alias("_n"))
     pairs = fingerprint_near_duplicates(
-        reps, "_fp", "_id", bands=bands, bits=bits, max_hamming=max_hamming,
+        reps, "_key", "_rep", bands=bands, bits=bits, max_hamming=max_hamming,
         max_band_size=max_band_size,
     )
-    sizes = reps.select("_id", "_n")
+    sizes = reps.select("_rep", "_n")
     return (
-        pairs.join(sizes.withColumnsRenamed({"_id": "id_a", "_n": "n_rows_a"}), "id_a")
-        .join(sizes.withColumnsRenamed({"_id": "id_b", "_n": "n_rows_b"}), "id_b")
+        pairs.join(sizes.withColumnsRenamed({"_rep": "id_a", "_n": "n_rows_a"}), "id_a")
+        .join(sizes.withColumnsRenamed({"_rep": "id_b", "_n": "n_rows_b"}), "id_b")
         .select("id_a", "id_b", "hamming", "n_rows_a", "n_rows_b")
     )
 
@@ -653,26 +652,16 @@ def dedup_image_near(
     A row survives iff (1) it is its fingerprint group's representative
     (min id — the exact-dup collapse) and (2) its representative is its
     Hamming-cluster's canonical node (connected components over the
-    representative pair graph).  Rows should be pre-filtered to valid
-    images — fingerprints of undecodable rows are not meaningful.
+    representative pair graph) — :func:`_keep_canonical`.  Rows with a
+    NULL fingerprint pass through untouched.  Rows should be pre-filtered
+    to valid images — fingerprints of undecodable rows are not meaningful.
     """
-    reps = (
-        images.groupBy(F.col(fp_col).alias("_fp"))
-        .agg(F.min(id_col).alias("_rep"))
-        .transform(materialize)  # one corpus scan, reused on every side
-    )
-    pairs = fingerprint_near_duplicates(
-        reps, "_fp", "_rep", bands=bands, bits=64, max_hamming=max_hamming
-    )
-    labels = connected_components(pairs)
-    drop_reps = labels.filter(F.col("node") != F.col("label")).select(
-        F.col("node").alias("_rep")
-    )
-    keep_reps = reps.join(drop_reps, "_rep", "left_anti")
-    return images.join(
-        keep_reps.withColumnsRenamed({"_fp": fp_col, "_rep": id_col}),
-        on=[fp_col, id_col],
-        how="left_semi",
+    return _keep_canonical(
+        images, id_col,
+        lambda reps: fingerprint_near_duplicates(
+            reps, "_key", "_rep", bands=bands, bits=64, max_hamming=max_hamming
+        ),
+        key_col=fp_col,
     )
 
 
@@ -700,7 +689,8 @@ def consolidate_captions(
     [0, 1) to a universal tie); NULL scores rank as −∞, below every
     real score.  Rows with a NULL fingerprint are EXCLUDED up front
     (an unjudgeable image belongs to no perceptual cluster — count
-    them upstream), mirroring dedup_image_near's pre-filter contract.
+    them upstream); the dedup actions pass such rows through instead,
+    but a table of clusters has no row to put them in.
 
     Scale shape: identical to the dedup action it extends — exact-fp
     collapse (one hash agg) → banded Hamming over DISTINCT fps → CC on
@@ -708,17 +698,13 @@ def consolidate_captions(
     combiner-friendly agg per cluster.  Election is a map-side-combining
     hash aggregate, never a window."""
     df = df.filter(F.col(fp_col).isNotNull())
-    reps = (
-        df.groupBy(F.col(fp_col).alias("_fp"))
-        .agg(F.min(id_col).alias("_rep"))
-        .transform(materialize)
-    )
+    reps = _collapse(df, fp_col, id_col)
     pairs = fingerprint_near_duplicates(
-        reps, "_fp", "_rep", bands=bands, bits=64, max_hamming=max_hamming
+        reps, "_key", "_rep", bands=bands, bits=64, max_hamming=max_hamming
     )
     labels = connected_components(pairs)
     rows = (
-        df.join(reps.withColumnRenamed("_fp", fp_col), fp_col)
+        df.join(reps.withColumnRenamed("_key", fp_col), fp_col)
         .join(labels, F.col("_rep") == F.col("node"), "left")
         .withColumn("_label", F.coalesce(F.col("label"), F.col("_rep")))
     )
@@ -852,6 +838,8 @@ def verify_candidate_pairs(
 
 
 DRIVER_CC_MAX_EDGES = 1_000_000  # ~32 MB of int64 pairs on the driver
+# backstop of the distributed loop: it converges in O(log diameter) rounds
+CC_MAX_ROUNDS = 25
 
 
 def _driver_union_find(edge_rows) -> list[tuple[int, int]]:
@@ -880,14 +868,11 @@ def _driver_union_find(edge_rows) -> list[tuple[int, int]]:
 
 
 def connected_components(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iter: int = 25,
-    driver_max_edges: int = DRIVER_CC_MAX_EDGES,
+    pairs: DataFrame, driver_max_edges: int = DRIVER_CC_MAX_EDGES
 ) -> DataFrame:
-    """Connected components of an undirected pair graph → (node, label)
-    with label = the MINIMUM node id in the component (the canonical doc).
+    """Connected components of the undirected (id_a, id_b) pair graph →
+    (node, label) with label = the MINIMUM node id in the component (the
+    canonical doc).
 
     **Small-graph fast path**: verified near-dup edge lists are tiny by
     construction (bounded by the true duplicate population, not the
@@ -905,11 +890,11 @@ def connected_components(
     halving) — so convergence is O(log diameter) rounds, not
     O(diameter).  No external graph library; every step is a plain
     DataFrame join, so AQE/skew handling applies as everywhere else.
-    ``max_iter`` is a loud backstop — non-convergence raises instead of
-    returning a wrong clustering.  Lineage is cut per round (the
+    ``CC_MAX_ROUNDS`` is a loud backstop — non-convergence raises instead
+    of returning a wrong clustering.  Lineage is cut per round (the
     iterative plan would otherwise grow exponentially).
     """
-    edges = pairs.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+    edges = pairs.select(F.col("id_a").alias("_s"), F.col("id_b").alias("_d"))
     sym_plan = edges.unionByName(
         edges.select(F.col("_d").alias("_s"), F.col("_s").alias("_d"))
     ).distinct()
@@ -940,7 +925,7 @@ def connected_components(
         .withColumn("label", F.col("node"))
         .transform(materialize)
     )
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         # (1) neighbor-min: candidate labels flow one hop along edges
         nbr = sym.join(
             labels.select(F.col("node").alias("_d"), "label"), "_d"
@@ -965,9 +950,61 @@ def connected_components(
         if changed == 0:
             return labels
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds "
-        "(pathologically long chain? raise max_iter)"
+        f"connected_components did not converge in CC_MAX_ROUNDS="
+        f"{CC_MAX_ROUNDS} rounds (pathologically long chain?)"
     )
+
+
+def _collapse(df: DataFrame, key_col: str, id_col: str, *aggs: Column) -> DataFrame:
+    """The exact-key collapse of the keyed near-dup paths: one row per
+    distinct ``key_col`` value — (``_key``, ``_rep`` = its min
+    ``id_col``, then ``aggs``).  One hash aggregate, so a hot duplicated
+    key costs one group instead of quadratic pairs.  Materialized: the
+    banded self-join reads it on both sides and the caller reads it
+    again, and without the checkpoint each read is a full corpus scan
+    (broadcast and shuffle exchanges don't reuse each other)."""
+    return (
+        df.groupBy(F.col(key_col).alias("_key"))
+        .agg(F.min(id_col).alias("_rep"), *aggs)
+        .transform(materialize)
+    )
+
+
+def _keep_canonical(
+    df: DataFrame,
+    id_col: str,
+    find_pairs: Callable[[DataFrame], DataFrame],
+    key_col: str | None = None,
+) -> DataFrame:
+    """The one cluster-resolution step of the near-dup dedup actions:
+    ``find_pairs`` → :func:`connected_components` → drop every cluster
+    member but its canonical (min) id.
+
+    Without ``key_col`` the pair finder runs over ``df`` itself and the
+    drop is an anti-join on ``id_col`` (the text path, where collapsing
+    identical texts first would shuffle full texts).  With ``key_col``
+    the rows first collapse to one representative per exact key
+    (:func:`_collapse`), the same step resolves those (``_key``,
+    ``_rep``) rows with ``_rep`` as their id, and a row survives iff it
+    is a surviving representative.
+
+    Rows whose key is NULL pass through untouched on both paths: they
+    are in no pair, and the keyed path unions them back instead of
+    letting the final equi-join (NULL never matches) delete them."""
+    if key_col is not None:
+        passthrough = df.filter(F.col(key_col).isNull())
+        df = df.filter(F.col(key_col).isNotNull())
+        reps = _keep_canonical(_collapse(df, key_col, id_col), "_rep", find_pairs)
+        return df.join(
+            reps.withColumnsRenamed({"_key": key_col, "_rep": id_col}),
+            on=[key_col, id_col],
+            how="left_semi",
+        ).unionByName(passthrough)
+    labels = connected_components(find_pairs(df))
+    drop = labels.filter(F.col("node") != F.col("label")).select(
+        F.col("node").alias(id_col)
+    )
+    return df.join(drop, on=id_col, how="left_anti")
 
 
 def dedup_near(
@@ -984,15 +1021,14 @@ def dedup_near(
     Mirror of :func:`dedup_exact` for the near-dup graph (a pair list is
     not a dedup — clusters must resolve transitively: A~B~C collapses to
     one keeper even when A≁C directly).  Rows that are in no cluster
-    (including null/short texts) pass through untouched."""
-    pairs = near_duplicates(
-        df, text_col, id_col, jaccard_threshold, num_hashes, bands, k
+    (including NULL/short texts) pass through untouched.  No exact-text
+    collapse runs first: it would shuffle the full texts."""
+    return _keep_canonical(
+        df, id_col,
+        lambda rows: near_duplicates(
+            rows, text_col, id_col, jaccard_threshold, num_hashes, bands, k
+        ),
     )
-    labels = connected_components(pairs)
-    drop = labels.filter(F.col("node") != F.col("label")).select(
-        F.col("node").alias(id_col)
-    )
-    return df.join(drop, on=id_col, how="left_anti")
 
 
 # ---------------------------------------------------------------------------

@@ -26,7 +26,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from ..exec_utils import materialize
+from . import dedup as DD
 
 RP_SEED = 20260816
 
@@ -378,8 +378,6 @@ def pairwise_topk_within_buckets(
     hot-bucket exclusion the banded-Hamming paths use
     (``dedup.exclude_hot_band_buckets``) when a hot identical vector
     degenerates a bucket."""
-    from . import dedup as DD
-
     b = with_lsh_bucket(
         df.filter(F.col(vec_col).isNotNull()), vec_col, bits
     ).select(
@@ -434,8 +432,6 @@ def embedding_near_duplicates(
     rows (:func:`dedup_embedding_near` does) or a hot identical vector
     degenerates to quadratic pairs, exactly like the image phash path.
     Returns (id_a, id_b, hamming, cos_sim)."""
-    from . import dedup as DD
-
     fp = df.select(id_col, vec_col).withColumn(
         "_efp", F.expr(rp_bucket_spark_sql(vec_col, bits, dim))
     )
@@ -491,36 +487,20 @@ def dedup_embedding_near(
     would otherwise silently delete them).  Mirrors the reference's
     duplicate-resolution intent (claim_analysis.py:225-247) on the
     embedding payload."""
-    from . import dedup as DD
-
-    passthrough = df.filter(F.col(vec_col).isNull())
-    df = df.filter(F.col(vec_col).isNotNull())
-    reps = (
-        df.groupBy(F.col(vec_col).alias("_v"))
-        .agg(F.min(id_col).alias("_rep"))
-        .transform(materialize)  # one scan; feeds pair join + keep join
+    return DD._keep_canonical(
+        df, id_col,
+        lambda reps: embedding_near_duplicates(
+            reps.select(F.col("_rep").alias(id_col), F.col("_key").alias(vec_col)),
+            id_col=id_col,
+            vec_col=vec_col,
+            bits=bits,
+            dim=dim,
+            bands=bands,
+            max_hamming=max_hamming,
+            min_cos=min_cos,
+        ),
+        key_col=vec_col,
     )
-    pairs = embedding_near_duplicates(
-        reps.select(F.col("_rep").alias(id_col), F.col("_v").alias(vec_col)),
-        id_col=id_col,
-        vec_col=vec_col,
-        bits=bits,
-        dim=dim,
-        bands=bands,
-        max_hamming=max_hamming,
-        min_cos=min_cos,
-    )
-    labels = DD.connected_components(pairs)
-    drop = labels.filter(F.col("node") != F.col("label")).select(
-        F.col("node").alias("_rep")
-    )
-    keep_reps = reps.join(drop, "_rep", "left_anti")
-    kept = df.join(
-        keep_reps.withColumnsRenamed({"_v": vec_col, "_rep": id_col}),
-        on=[vec_col, id_col],
-        how="left_semi",
-    )
-    return kept.unionByName(passthrough)
 
 
 # ---------------------------------------------------------------------------

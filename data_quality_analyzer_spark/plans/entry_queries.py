@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from ..functions import hashing as HH
 from ..functions import scrub as SC
 from ..functions import text as TX
+from ..operators import dedup as DD
 from ..operators import rules as RU
 from ..operators import similarity as SIM
 from ..sources.catalog import read_table, table_files, table_path
@@ -774,8 +775,6 @@ def q26(spark, sf_dir):
     (operators/dedup.py:minhash_signature_udf): one md5 per shingle plus
     the affine per-seed mixes, integer arithmetic ⇒ exact agreement with
     the oracle's list_transform formulation."""
-    from ..operators import dedup as DD
-
     d = _spread(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.length("text") >= 5)
     )
@@ -809,8 +808,6 @@ def q27(spark, sf_dir):
     — bit-identical to the higher-order-function reference form (which is
     CodegenFallback-interpreted) and to the oracle's unnest+group
     formulation.  Integer arithmetic ⇒ exact agreement."""
-    from ..operators import dedup as DD
-
     d = _spread(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
     )
@@ -1155,17 +1152,12 @@ def _q37_oracle() -> str:
     )
 
 
-def _q44_oracle() -> str:
-    """Connected components over the verified near-dup pair graph: the
-    recursive CTE computes full reachability, then each node's label is
-    the minimum reachable id — the textbook SQL form of the min-label
-    clustering the Spark side runs iteratively."""
-    return (
-        "WITH RECURSIVE "
-        + _near_dup_cte()
-        + f"""
-    , pairs AS (SELECT id_a, id_b FROM jac WHERE j >= 0.8),
-    edges AS (
+# Connected components of the oracles' undirected ``pairs(id_a, id_b)``
+# relation (q44, q45, q48, q80; the query must open WITH RECURSIVE): the
+# recursive CTE computes full reachability, then each node's label is the
+# minimum reachable id — the textbook SQL form of the min-label clustering
+# dedup.connected_components computes.  Plain SQL, no engine code.
+_COMPONENTS_CTE = """edges AS (
       SELECT id_a AS s, id_b AS d FROM pairs
       UNION
       SELECT id_b AS s, id_a AS d FROM pairs
@@ -1176,7 +1168,18 @@ def _q44_oracle() -> str:
       UNION
       SELECT e.s, r.r FROM edges e JOIN reach r ON e.d = r.node
     ),
-    labels AS (SELECT node, MIN(r) AS label FROM reach GROUP BY node)
+    labels AS (SELECT node, MIN(r) AS label FROM reach GROUP BY node)"""
+
+
+def _q44_oracle() -> str:
+    """Connected components over the verified near-dup pair graph
+    (``_COMPONENTS_CTE``), one row per cluster."""
+    return (
+        "WITH RECURSIVE "
+        + _near_dup_cte()
+        + f"""
+    , pairs AS (SELECT id_a, id_b FROM jac WHERE j >= 0.8),
+    {_COMPONENTS_CTE}
     SELECT label AS cluster_id,
            COUNT(*) AS n_members,
            array_to_string(list_sort(list(node)), ',') AS members
@@ -1215,8 +1218,6 @@ def q37(spark, sf_dir):
     candidate-pair ids broadcast back to the texts (operators/dedup.py:
     near_duplicates).  Twin rows are synthesized deterministically so the
     pipeline has genuine near-dups to find at every SF."""
-    from ..operators import dedup as DD
-
     return DD.near_duplicates(
         _q37_input(spark, sf_dir), "text", "doc_id",
         jaccard_threshold=0.8, num_hashes=_NUM_HASHES_37, bands=_BANDS_37,
@@ -1227,14 +1228,15 @@ def q37(spark, sf_dir):
 @_register("q44_near_dup_clusters", _q44_oracle())
 def q44(spark, sf_dir):
     """Near-dup CLUSTER RESOLUTION: the q37 pair graph collapsed to
-    connected components via distributed min-label propagation with
-    pointer jumping (operators/dedup.py:connected_components — pure
-    DataFrame joins, O(log diameter) rounds, localCheckpoint per round).
-    A pair list is not a dedup: A~B~C must resolve to ONE canonical doc
-    even when A≁C directly; the cluster label (min id) is the keeper
-    `dedup_near` retains.  Oracle: DuckDB recursive-CTE reachability."""
-    from ..operators import dedup as DD
-
+    connected components (operators/dedup.py:connected_components).  At
+    every catalog scale the verified graph is far below
+    ``DRIVER_CC_MAX_EDGES``, so this runs the driver union-find path: one
+    probe job collects the edges.  Graphs above that cap take the
+    distributed min-label propagation with pointer jumping (DataFrame
+    joins, O(log diameter) rounds, a checkpoint per round).  A pair list
+    is not a dedup: A~B~C must resolve to ONE canonical doc even when
+    A≁C directly; the cluster label (min id) is the keeper `dedup_near`
+    retains.  Oracle: DuckDB recursive-CTE reachability."""
     pairs = DD.near_duplicates(
         _q37_input(spark, sf_dir), "text", "doc_id",
         jaccard_threshold=0.8, num_hashes=_NUM_HASHES_37, bands=_BANDS_37,
@@ -1298,8 +1300,6 @@ def q38(spark, sf_dir):
     on (band, band_bits) — shuffle = rows×4, never all-pairs — verified by
     an exact popcount on the XOR (operators/dedup.py:
     simhash_near_duplicates).  Exact twin rows guarantee hamming-0 hits."""
-    from ..operators import dedup as DD
-
     d = _spread(spark, sf_dir, "documents", "doc_id", "text").filter(
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
     )
@@ -1466,20 +1466,9 @@ def _q45_oracle() -> str:
     return (
         "WITH RECURSIVE "
         + _near_dup_cte()
-        + """
+        + f"""
     , pairs AS (SELECT id_a, id_b FROM jac WHERE j >= 0.8),
-    edges AS (
-      SELECT id_a AS s, id_b AS d FROM pairs
-      UNION
-      SELECT id_b AS s, id_a AS d FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT s AS node FROM edges),
-    reach(node, r) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.s, r.r FROM edges e JOIN reach r ON e.d = r.node
-    ),
-    labels AS (SELECT node, MIN(r) AS label FROM reach GROUP BY node)
+    {_COMPONENTS_CTE}
     SELECT b.doc_id FROM base b
     WHERE b.doc_id NOT IN (SELECT node FROM labels WHERE node != label)
     """
@@ -1495,8 +1484,6 @@ def q45(spark, sf_dir):
     must vanish (its cluster's canonical doc is the original) and every
     unclustered doc must survive; the oracle recomputes the keep-set with
     recursive-CTE reachability."""
-    from ..operators import dedup as DD
-
     kept = DD.dedup_near(
         _q37_input(spark, sf_dir), "text", "doc_id",
         jaccard_threshold=0.8, num_hashes=_NUM_HASHES_37, bands=_BANDS_37,
@@ -1538,8 +1525,6 @@ def q43(spark, sf_dir):
     vectorized, zero Python per shingle.  The DuckDB oracle computes the
     identical hash with plain BIGINT arithmetic (poly60_duck_sql), proving
     the fast path is engine-portable, not just fast."""
-    from ..operators import dedup as DD
-
     d = _spread(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.length("text") >= _K_43)
     )
@@ -1598,8 +1583,6 @@ def q46(spark, sf_dir):
     text (functions/hashing.py:h60) standing in for `phash` — the operator
     is column-generic; planted twins (fp XOR 0b11 → Hamming exactly 2) and
     exact copies exercise both the pairing and the collapse."""
-    from ..operators import dedup as DD
-
     base = (
         _spread(spark, sf_dir, "documents", "doc_id", "text")
         .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
@@ -1693,18 +1676,7 @@ def _q48_oracle() -> str:
       SELECT id_a, id_b FROM cands
       WHERE bit_count(xor(fa, fb)) <= 2 AND {cos} >= 0.995
     ),
-    edges AS (
-      SELECT id_a AS s, id_b AS d FROM pairs
-      UNION
-      SELECT id_b AS s, id_a AS d FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT s AS node FROM edges),
-    reach(node, r) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.s, r.r FROM edges e JOIN reach r ON e.d = r.node
-    ),
-    labels AS (SELECT node, MIN(r) AS label FROM reach GROUP BY node)
+    {_COMPONENTS_CTE}
     SELECT rep AS vec_id FROM reps
     WHERE rep NOT IN (SELECT node FROM labels WHERE node != label)
     """
@@ -1875,8 +1847,6 @@ def q50(spark, sf_dir):
     combiner row per partition, never a window-sort pile-up.  The oracle
     expresses the same semantics with a ROW_NUMBER window (fine at DuckDB
     test scale; the Spark side deliberately avoids it)."""
-    from ..operators import dedup as DD
-
     d = read_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
     body = F.transform(
         F.array_sort(F.collect_list(F.struct("doc_id", "text"))),
@@ -3633,23 +3603,13 @@ def _q80_oracle() -> str:
         ON x.band = y.band AND x.bb = y.bb AND x.rep < y.rep
       WHERE bit_count(xor(x.fp, y.fp)) <= 3
     ),
-    edges AS (
-      SELECT id_a AS s, id_b AS d FROM pairs
-      UNION SELECT id_b, id_a FROM pairs
-    ),
-    nodes AS (SELECT DISTINCT s AS node FROM edges),
-    reach(node, r) AS (
-      SELECT node, node FROM nodes
-      UNION
-      SELECT e.s, r.r FROM edges e JOIN reach r ON e.d = r.node
-    ),
-    lbl AS (SELECT node, MIN(r) AS label FROM reach GROUP BY node),
+    {_COMPONENTS_CTE},
     rows_l AS (
       SELECT a.id, a.caption, COALESCE(l.label, r.rep) AS label,
              COALESCE({score}, -1) AS s
       FROM allrows a
       JOIN reps r USING (fp)
-      LEFT JOIN lbl l ON r.rep = l.node
+      LEFT JOIN labels l ON r.rep = l.node
     ),
     winners AS (
       SELECT *, ROW_NUMBER() OVER (
@@ -3680,8 +3640,6 @@ def q80(spark, sf_dir):
     chain (banding, recursive-CTE components, winner rule) and
     value-hashes (cluster, winner, caption) triples.  Reference
     ancestor: A10 $first-in-group upgraded to a scored election."""
-    from ..operators import dedup as DD
-
     base = (
         _spread(spark, sf_dir, "documents")
         .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))

@@ -608,6 +608,40 @@ def _cap_hot_bands(
     )
 
 
+def _archive_hits(
+    new: DataFrame,
+    new_fp: str,
+    old: DataFrame,
+    old_fp: str,
+    bands: int,
+    bits: int,
+    max_hamming: int,
+    max_band_size: int | None,
+    what: str,
+) -> DataFrame:
+    """The Hamming ledgers' cross-run candidate step: band the new and
+    the archived int64 fingerprints identically
+    (``dedup.int_band_explode``), cap hot buckets (:func:`_cap_hot_bands`),
+    equi-join on (band, bb) and keep the pairs within ``max_hamming``
+    (popcount of the XOR).  Returns the joined rows with every column of
+    both sides; the caller adds any further verify and picks the key it
+    drops."""
+    band_bits = bits // bands
+
+    def banded(rows: DataFrame, fp: str) -> DataFrame:
+        return rows.select(
+            *rows.columns, DD.int_band_explode(fp, bands, band_bits).alias("bf")
+        ).select(*rows.columns, "bf.band", "bf.bb")
+
+    new_bands, old_bands = banded(new, new_fp), banded(old, old_fp)
+    new_bands = _cap_hot_bands(
+        new_bands, old_bands, ["band", "bb"], max_band_size, what
+    )
+    return new_bands.join(old_bands, ["band", "bb"]).filter(
+        F.bit_count(F.col(new_fp).bitwiseXOR(F.col(old_fp))) <= max_hamming
+    )
+
+
 def dedup_incremental_near(
     spark: SparkSession,
     docs: DataFrame,
@@ -764,7 +798,8 @@ def dedup_incremental_image(
     4. commits the survivors' fingerprints as this batch.
 
     Pass rows pre-filtered to valid images (decodable, the pipeline's keep
-    set) — fingerprints of undecodable rows are not meaningful.
+    set) — fingerprints of undecodable rows are not meaningful.  Rows with
+    a NULL fingerprint pass through untouched and commit nothing.
 
     Hot-band cap ON by default (:func:`_cap_hot_bands`;
     ``max_band_size=0`` disables) — same rationale as
@@ -773,38 +808,21 @@ def dedup_incremental_image(
     m = _IMG.begin(store_dir, batch_id)
     if m is None:
         return images.filter(F.lit(False))
-    band_bits = bits // bands
     survivors = images
     archive = read_committed_phashes(spark, store_dir)
     if archive is not None:
-        new_fps = images.select(F.col(fp_col).alias("_fp")).distinct()
-        new_bands = new_fps.select(
-            "_fp", DD.int_band_explode("_fp", bands, band_bits).alias("bf")
-        ).select("_fp", "bf.band", "bf.bb")
-        old_bands = archive.select(F.col(fp_col).alias("_ofp")).distinct().select(
-            "_ofp", DD.int_band_explode("_ofp", bands, band_bits).alias("bf")
-        ).select("_ofp", "bf.band", "bf.bb")
-        new_bands = _cap_hot_bands(
-            new_bands, old_bands, ["band", "bb"], max_band_size,
-            "dedup_incremental_image",
-        )
-        hit = (
-            new_bands.join(old_bands, ["band", "bb"])
-            .filter(
-                F.bit_count(F.col("_fp").bitwiseXOR(F.col("_ofp")))
-                <= max_hamming
-            )
-            .select(F.col("_fp").alias(fp_col))
-            .distinct()
-        )
+        hit = _archive_hits(
+            images.select(F.col(fp_col).alias("_fp")).distinct(), "_fp",
+            archive.select(F.col(fp_col).alias("_ofp")).distinct(), "_ofp",
+            bands, bits, max_hamming, max_band_size, "dedup_incremental_image",
+        ).select(F.col("_fp").alias(fp_col)).distinct()
         survivors = images.join(hit, on=fp_col, how="left_anti")
     survivors = DD.dedup_image_near(
         survivors, id_col=id_col, fp_col=fp_col, bands=bands,
         max_hamming=max_hamming,
     )
-    survivors.select(fp_col).distinct().write.parquet(
-        _IMG.batch_dir(store_dir, batch_id)
-    )
+    kept_fps = survivors.select(fp_col).filter(F.col(fp_col).isNotNull())
+    kept_fps.distinct().write.parquet(_IMG.batch_dir(store_dir, batch_id))
     _IMG.commit(store_dir, m, batch_id)
     return survivors
 
@@ -863,36 +881,19 @@ def dedup_incremental_embedding(
     m = _EMB.begin(store_dir, batch_id)
     if m is None:
         return df.filter(F.lit(False))
-    band_bits = bits // bands
     fp_expr = F.expr(SIM.rp_bucket_spark_sql(vec_col, bits, dim))
     survivors = df
     archive = read_committed_embeddings(spark, store_dir)
     if archive is not None:
-        new_rows = (
-            df.select(id_col, vec_col)
-            .withColumn("_efp", fp_expr)
-            .transform(materialize)
-        )
-        new_bands = new_rows.select(
-            id_col,
-            F.col(vec_col).alias("_v"),
-            "_efp",
-            DD.int_band_explode("_efp", bands, band_bits).alias("bf"),
-        ).select(id_col, "_v", "_efp", "bf.band", "bf.bb")
-        old_bands = archive.select(
-            F.col(vec_col).alias("_ov"),
-            "efp",
-            DD.int_band_explode("efp", bands, band_bits).alias("bf"),
-        ).select("_ov", "efp", "bf.band", "bf.bb")
-        new_bands = _cap_hot_bands(
-            new_bands, old_bands, ["band", "bb"], max_band_size,
-            "dedup_incremental_embedding",
-        )
+        new_rows = df.select(
+            id_col, F.col(vec_col).alias("_v"), fp_expr.alias("_efp")
+        ).transform(materialize)
         hit = (
-            new_bands.join(old_bands, ["band", "bb"])
-            .filter(
-                F.bit_count(F.col("_efp").bitwiseXOR(F.col("efp")))
-                <= max_hamming
+            _archive_hits(
+                new_rows, "_efp",
+                archive.select(F.col(vec_col).alias("_ov"), "efp"), "efp",
+                bands, bits, max_hamming, max_band_size,
+                "dedup_incremental_embedding",
             )
             .filter(SIM.cosine_expr("_v", "_ov") >= min_cos)
             .select(id_col)

@@ -93,7 +93,8 @@ def prep_corpus(
     With ``store_dir``+``batch_id``, image dedup goes through the
     committed cross-run ledger (drops near-copies of previously committed
     batches, commits this batch's surviving fingerprints atomically);
-    without, it dedups within the batch only.  With ``contamination_dir``,
+    without, it dedups within the batch only; rows with a NULL ``phash``
+    pass through either dedup untouched.  With ``contamination_dir``,
     rows whose captions contain committed eval/benchmark text are dropped
     between the filter and the dedup (an empty ledger is a no-op).
     """

@@ -570,9 +570,10 @@ def test_image_near_duplicates_on_fixture_corpus(spark, corpus_path):
 
 
 def test_dedup_image_near_action(spark, corpus_path):
-    """The image dedup ACTION: the base+variant cohorts (two fingerprint
-    groups within Hamming 2) collapse to ONE surviving row; the hot exact
-    group collapses to one; untouched singletons all survive."""
+    """The image dedup ACTION on the fixture corpus: the base+variant
+    cohorts (two fingerprint groups within Hamming 2) collapse to ONE
+    surviving row; the hot exact group collapses to one.  The transitive
+    chain and NULL cases are in test_dedup_action_keep_set."""
     from data_quality_analyzer_spark.sources.fixtures import (
         _block_image,
         ahash64,
@@ -588,14 +589,6 @@ def test_dedup_image_near_action(spark, corpus_path):
         images.groupBy("phash").count().orderBy(F.desc("count")).first()["phash"]
     )
     assert kept.filter(F.col("phash") == hot_fp).count() == 1
-    # transitive chain on constructed fps: A~B (2 bits), B~C (2 bits),
-    # A!~C (4 bits > max_hamming) -> ONE keeper for the whole chain
-    a = 0x1234_5678_9ABC_DEF0
-    chain = spark.createDataFrame(
-        [("a", a), ("b", a ^ 0b11), ("c", a ^ 0b11 ^ 0b1100)],
-        "image_id string, phash long",
-    )
-    assert DD.dedup_image_near(chain).count() == 1
 
 
 def test_dedup_embedding_near_action(spark):
@@ -886,20 +879,88 @@ def test_connected_components_distributed_path_on_q44_graph(spark):
     assert fast == dist and fast
 
 
-def test_embedding_dedup_null_vectors_pass_through(spark):
-    """Round-5 review: NULL-embedding rows must survive the dedup action
-    untouched (the final equi-join's NULL-never-matches semantics used to
-    silently delete them)."""
-    from data_quality_analyzer_spark.operators import similarity as SIM
+def _keep_set_rows(payload):
+    """(id, key) rows for one dedup action: exact copies (1, 2) and a near
+    variant (3) of one item, a chain 10~11~12 whose ends are NOT near each
+    other, a singleton (20) and two NULL keys (30, 31).  Each action must
+    keep {1, 10, 20, 30, 31}."""
+    import numpy as np
 
-    v = [float(i) for i in range(64)]
-    rows = [(1, v), (2, v), (3, None), (4, None)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    kept = {
-        r["vec_id"]
-        for r in SIM.dedup_embedding_near(df).collect()
-    }
-    assert kept == {1, 3, 4}  # exact dup 2 collapsed; NULLs untouched
+    if payload == "text":
+        words = [f"w{i:03d}" for i in range(40)]
+        a = " ".join(f"m{i:03d}" for i in range(40))
+        near = " ".join([f"m{i:03d}" for i in range(38)] + ["p0", "p1"])
+        # the chain of test_dedup_near_collapses_transitive_cluster, whose
+        # geometry (A~B, B~C, A!~C at k=9, threshold 0.65) that test checks
+        c0 = " ".join(words)
+        c1 = " ".join(words[:34] + [f"x{i}" for i in range(6)])
+        c2 = " ".join(
+            [f"y{i}" for i in range(6)] + words[6:34] + [f"x{i}" for i in range(6)]
+        )
+        single = " ".join(f"z{i:03d}" for i in range(40))
+        keys = [a, a, near, c0, c1, c2, single]
+    elif payload == "image":
+        a, c = 0x1234_5678_9ABC_DEF0, 0x0F0F_0F0F_0F0F_0F0F
+        # chain: Hamming 2, then 2 more bits; ends are 4 > max_hamming apart
+        keys = [a, a, a ^ 1, c, c ^ 0b11, c ^ 0b1111, 0x7654_3210_0123_4567]
+    else:
+        rng = np.random.default_rng(0)
+        v, u, w, s = rng.standard_normal((4, 64))
+        u /= np.linalg.norm(u)
+        w -= (w @ u) * u
+        w /= np.linalg.norm(w)
+        t = np.radians(5)  # cos 5° ≥ 0.995 > cos 10°: the chain ends are not near
+        chain = [np.cos(k * t) * u + np.sin(k * t) * w for k in range(3)]
+        keys = [v, v, 1.5 * v, *chain, s]  # 1.5·v: cosine 1, different bits
+        keys = [[float(x) for x in k] for k in keys]
+    ids = [1, 2, 3, 10, 11, 12, 20]
+    return list(zip(ids, keys)) + [(30, None), (31, None)]
+
+
+@pytest.mark.parametrize("payload", ["text", "image", "embedding"])
+def test_dedup_action_keep_set(spark, payload):
+    """Every near-dup dedup action resolves clusters the same way: one
+    keeper per cluster (its min id) over exact copies, near variants and a
+    transitive chain; singletons kept; NULL-key rows pass through
+    untouched (the image action used to delete them)."""
+    rows = _keep_set_rows(payload)
+    if payload == "text":
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        kept = DD.dedup_near(
+            df, "text", "doc_id", jaccard_threshold=0.65,
+            num_hashes=16, bands=8, k=9,
+        )
+    elif payload == "image":
+        df = spark.createDataFrame(rows, "image_id long, phash long")
+        kept = DD.dedup_image_near(df)
+    else:
+        df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+        kept = SIM.dedup_embedding_near(df)
+    assert sorted(kept.columns) == sorted(df.columns)
+    id_col = df.columns[0]
+    assert sorted(r[id_col] for r in kept.collect()) == [1, 10, 20, 30, 31]
+
+
+def test_image_ledger_passes_null_phash(spark, tmp_path):
+    """NULL-phash rows survive both batches of the cross-run image ledger
+    untouched, and the ledger commits no NULL fingerprint."""
+    from data_quality_analyzer_spark.plans import lineage as LN
+
+    store = str(tmp_path / "img_store")
+    schema = "image_id long, phash long"
+    a = 0x1234_5678_9ABC_DEF0
+
+    def run(rows, batch):
+        b = spark.createDataFrame(rows, schema)
+        return sorted(
+            r["image_id"]
+            for r in LN.dedup_incremental_image(spark, b, store, batch).collect()
+        )
+
+    assert run([(1, a), (2, a), (3, None)], "r1") == [1, 3]
+    assert run([(4, a ^ 1), (5, None), (6, None)], "r2") == [5, 6]
+    fps = LN.read_committed_phashes(spark, store)
+    assert fps.filter(F.col("phash").isNull()).count() == 0
 
 
 def test_ivf_assign_malformed_vectors(spark):
