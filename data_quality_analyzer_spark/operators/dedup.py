@@ -12,6 +12,9 @@ Scale design (10^12 rows):
   the batch, cross-run ledger and streaming paths alike.  Banding turns
   near-dup search into an equi-join on (band, band_signature) — the only
   shuffle, on a key whose cardinality we control via bands×rows-per-band.
+  :func:`_band_pairs` is that join for every batch and ledger path
+  (MinHash, banded Hamming, sign buckets), with the one optional
+  hot-bucket cap.
 * **SimHash** — per-row 60-bit fingerprint (Arrow bit-vote fold),
   near-dups = equal fingerprints (or banded Hamming buckets).
 * **n-gram Jaccard** — exact verification for candidate pairs produced by
@@ -30,6 +33,7 @@ polynomial-derived) with exact DuckDB twins.
 
 from __future__ import annotations
 
+import logging
 import re
 from collections.abc import Callable
 
@@ -333,9 +337,10 @@ def lsh_candidate_pairs(
 
     Plan: per-row signature (map-only, Arrow/numpy UDF over the
     polynomial shingle hash, :func:`_signatures`) → explode into `bands`
-    rows (:func:`band_fp_explode`) → group-join on (band, band_fp).  The
-    self-join is on the *bucket*, so shuffle volume is rows×bands, never
-    rows².
+    rows (:func:`band_fp_explode`) → the banded self-join on (band,
+    band_fp) (:func:`_band_pairs`, no hot-bucket cap) → count shared
+    bands per pair.  The self-join is on the *bucket*, so shuffle volume
+    is rows×bands, never rows².
 
     **Shingle size is the candidate-volume dial**: same-domain corpora
     share many common k-grams, so small k inflates the background Jaccard
@@ -357,11 +362,8 @@ def lsh_candidate_pairs(
     band_rows = with_sig.select(
         "_id", band_fp_explode("_sig", bands, rows_per_band).alias("bf")
     ).select("_id", F.col("bf.band").alias("band"), F.col("bf.fp").alias("fp"))
-    a = band_rows.alias("a")
-    b = band_rows.alias("b")
     return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.fp") == F.col("b.fp")))
-        .filter(F.col("a._id") < F.col("b._id"))
+        _band_pairs(band_rows, ["band", "fp"], None, "lsh_candidate_pairs")
         .groupBy(
             F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
         )
@@ -482,15 +484,10 @@ def exclude_hot_band_buckets(
     what: str,
     extra_rows: DataFrame | None = None,
 ) -> DataFrame:
-    """Drop rows of ``band_rows`` whose band-bucket key holds more than
-    ``max_band_size`` rows — LOUDLY (count + worst sizes logged, never a
-    silent cap).  ``extra_rows`` adds a second relation to the bucket
-    CENSUS only (the ledger case: a bucket may be small in the new batch
-    but huge in the archive, and the quadratic cost is the PRODUCT —
-    census over the union, then excluding the bucket from one equi-join
-    side kills all its pairs, so only ``band_rows`` needs filtering).
-
-    One aggregation pass: oversized buckets are few by definition
+    """Drop rows of ``band_rows`` whose bucket key holds more than
+    ``max_band_size`` rows of ``band_rows`` plus ``extra_rows`` (a census
+    only) — LOUDLY (count + worst sizes logged, never a silent cap).  One
+    aggregation pass: oversized buckets are few by definition
     (≤ rows/max_band_size), so they collect to the driver and broadcast
     back as an anti-join relation."""
     census = band_rows.select(*key_cols)
@@ -504,8 +501,6 @@ def exclude_hot_band_buckets(
     )
     if not hot_rows:
         return band_rows
-    import logging
-
     worst = sorted(hot_rows, key=lambda r: -r["_n"])[:5]
     logging.getLogger(__name__).warning(
         "%s: excluding %d oversized band bucket(s) > max_band_size=%d "
@@ -525,6 +520,35 @@ def exclude_hot_band_buckets(
         [tuple(r[c] for c in key_cols) for r in hot_rows], schema
     )
     return band_rows.join(F.broadcast(hot_df), on=key_cols, how="left_anti")
+
+
+def _band_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    max_band_size: int | None,
+    what: str,
+    archive: DataFrame | None = None,
+) -> DataFrame:
+    """The one banded candidate join of the near-dup paths: ``rows`` (side
+    ``a``) equi-joined on the bucket ``keys`` with side ``b`` — ``rows``
+    again, each unordered pair once (``a._id < b._id``), or a cross-run
+    ledger's ``archive`` band rows.  The caller verifies the joined rows.
+
+    A truthy ``max_band_size`` first drops, loudly under the label
+    ``what``, every bucket holding more rows than that in ``rows`` and
+    ``archive`` together (:func:`exclude_hot_band_buckets`); filtering
+    ``rows`` alone suffices, as a bucket missing from one side yields no
+    pair.  A falsy cap is off."""
+    if max_band_size:
+        rows = exclude_hot_band_buckets(
+            rows, keys, max_band_size, what, extra_rows=archive
+        )
+    a = rows.alias("a")
+    b = (rows if archive is None else archive).alias("b")
+    pairs = a.join(b, [F.col(f"a.{k}") == F.col(f"b.{k}") for k in keys])
+    if archive is None:
+        pairs = pairs.filter(F.col("a._id") < F.col("b._id"))
+    return pairs
 
 
 def fingerprint_near_duplicates(
@@ -554,10 +578,11 @@ def fingerprint_near_duplicates(
     because every image shares a border.  That bucket joins quadratically
     even though verify rejects almost all of it.  ``max_band_size=N``
     excludes buckets holding more than N fingerprints from candidate
-    generation and logs them LOUDLY (count + worst sizes — never a silent
-    cap).  Recall contract: a pair is lost only if oversized buckets were
-    its ONLY shared bands, so choose N well above the plausible true
-    near-dup cluster size; an oversized band carries almost no
+    generation (:func:`_band_pairs`; ``None`` or ``0`` is off) and logs
+    them LOUDLY (count + worst sizes — never a silent cap).  Recall
+    contract: a pair is lost only if oversized buckets were its ONLY
+    shared bands, so choose N well above the plausible true near-dup
+    cluster size; an oversized band carries almost no
     discriminative signal (it says "shares a constant region", not "is a
     near duplicate").  Widening ``bits``/``bands`` is the structural fix
     (more band entropy); the cap is the operational guard.
@@ -565,17 +590,8 @@ def fingerprint_near_duplicates(
     band_bits = bits // bands
     with_fp = df.select(F.col(id_col).alias("_id"), F.col(fp_col).alias("_fp"))
     band_rows = with_fp.select(
-        "_id",
-        "_fp",
-        int_band_explode("_fp", bands, band_bits).alias("bf"),
+        "_id", "_fp", int_band_explode("_fp", bands, band_bits).alias("bf")
     ).select("_id", "_fp", F.col("bf.band").alias("band"), F.col("bf.bb").alias("bb"))
-    if max_band_size is not None:
-        band_rows = exclude_hot_band_buckets(
-            band_rows, ["band", "bb"], max_band_size,
-            what="fingerprint_near_duplicates",
-        )
-    a = band_rows.alias("a")
-    b = band_rows.alias("b")
     # verify (popcount) BEFORE the dedup exchange, not after (guide §2.3:
     # shuffle fewer bytes): the raw band join can emit orders of magnitude
     # more candidate rows than true near-dups (low-entropy bands — e.g.
@@ -585,8 +601,10 @@ def fingerprint_near_duplicates(
     # filter-then-distinct returns exactly the same (id_a, id_b, hamming)
     # set while the exchange carries only verified pairs.
     return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.bb") == F.col("b.bb")))
-        .filter(F.col("a._id") < F.col("b._id"))
+        _band_pairs(
+            band_rows, ["band", "bb"], max_band_size,
+            "fingerprint_near_duplicates",
+        )
         .select(
             F.col("a._id").alias("id_a"),
             F.col("b._id").alias("id_b"),
@@ -995,11 +1013,12 @@ def _keep_canonical(
         passthrough = df.filter(F.col(key_col).isNull())
         df = df.filter(F.col(key_col).isNotNull())
         reps = _keep_canonical(_collapse(df, key_col, id_col), "_rep", find_pairs)
+        # the semi-join's `on` columns come out first: restore df's order
         return df.join(
             reps.withColumnsRenamed({"_key": key_col, "_rep": id_col}),
             on=[key_col, id_col],
             how="left_semi",
-        ).unionByName(passthrough)
+        ).select(*df.columns).unionByName(passthrough)
     labels = connected_components(find_pairs(df))
     drop = labels.filter(F.col("node") != F.col("label")).select(
         F.col("node").alias(id_col)

@@ -35,6 +35,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import exclude_hot_band_buckets
+
 #: default cap on how many domains may share one fingerprint before the
 #: group is dropped as boilerplate (quadratic-pair guard)
 MAX_FP_GROUP = 50
@@ -54,8 +56,6 @@ def mirror_pairs(
     loudly (boilerplate guard — see module docstring)."""
     if max_group < 2:
         raise ValueError(f"max_group must be >= 2, got {max_group}")
-    from .dedup import exclude_hot_band_buckets
-
     inc = df.select(
         F.col(domain_col).alias("domain"), F.col(fp_col).alias("_fp")
     ).filter(F.col("_fp").isNotNull()).distinct()

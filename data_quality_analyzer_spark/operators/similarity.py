@@ -374,11 +374,11 @@ def pairwise_topk_within_buckets(
 
     NULL embeddings are excluded up front — the sign-LSH CASE would map
     every one of them to bucket 0 and the self-join would pay quadratic
-    pairs with NULL cosines.  ``max_bucket_size`` applies the same loud
-    hot-bucket exclusion the banded-Hamming paths use
-    (``dedup.exclude_hot_band_buckets``) when a hot identical vector
-    degenerates a bucket."""
-    b = with_lsh_bucket(
+    pairs with NULL cosines.  The self-join is ``dedup._band_pairs``, so
+    ``max_bucket_size`` is the same loud hot-bucket exclusion the
+    banded-Hamming paths use, for when a hot identical vector degenerates
+    a bucket (``None`` or ``0`` is off)."""
+    rows = with_lsh_bucket(
         df.filter(F.col(vec_col).isNotNull()), vec_col, bits
     ).select(
         F.col(id_col).alias("_id"),
@@ -390,20 +390,13 @@ def pairwise_topk_within_buckets(
         # every pair's cosine is bit-identical to the three-fold form)
         F.expr(f"sqrt({_DOT.format(a='_v', b='_v')})").alias("_nrm"),
     )
-    if max_bucket_size is not None:
-        b = DD.exclude_hot_band_buckets(
-            b, ["bucket"], max_bucket_size,
-            what="pairwise_topk_within_buckets",
-        )
-    a, c = b.alias("a"), b.alias("c")
-    dot = _DOT.format(a="a._v", b="c._v")
-    pairs = (
-        a.join(c, (F.col("a.bucket") == F.col("c.bucket")) & (F.col("a._id") < F.col("c._id")))
-        .select(
-            F.col("a._id").alias("id_a"),
-            F.col("c._id").alias("id_b"),
-            F.expr(f"round({dot} / a._nrm / c._nrm, 6)").alias("cos_sim"),
-        )
+    dot = _DOT.format(a="a._v", b="b._v")
+    pairs = DD._band_pairs(
+        rows, ["bucket"], max_bucket_size, "pairwise_topk_within_buckets"
+    ).select(
+        F.col("a._id").alias("id_a"),
+        F.col("b._id").alias("id_b"),
+        F.expr(f"round({dot} / a._nrm / b._nrm, 6)").alias("cos_sim"),
     )
     return pairs.orderBy(F.desc("cos_sim"), F.asc("id_a"), F.asc("id_b")).limit(k)
 

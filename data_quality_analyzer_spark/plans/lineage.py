@@ -44,6 +44,11 @@ The commit protocol (every table in this module follows it):
   read only the state the last committed batch wrote, so their
   ``batches`` keep commit order and superseded state partitions are
   removed after each swap, in compaction's order.
+* **Near-dup ledgers' hot-band cap.**  The minhash, phash and embedding
+  ledgers join new band rows to the archive's through
+  ``dedup._band_pairs``, with the cap ON by default (they run unattended
+  across crawls, where a degenerate bucket accretes): ``max_band_size=
+  None`` reads ``dedup.LEDGER_MAX_BAND_SIZE`` at call time, ``0`` is off.
 
 The verdict table (:func:`run_with_checkpoints`) keys its manifest by
 **phash bucket** (`pmod(phash, NB)` — the north rule; the key the 100 TB
@@ -586,28 +591,6 @@ def read_committed_signatures(
     return _NEAR.read(spark, store_dir)
 
 
-def _cap_hot_bands(
-    new_bands: DataFrame,
-    old_bands: DataFrame,
-    keys: list[str],
-    max_band_size: int | None,
-    what: str,
-) -> DataFrame:
-    """The ledgers' hot-band cap, ON by default: ``None`` takes the
-    ``dedup.LEDGER_MAX_BAND_SIZE`` dial as it stands at call time, ``0``
-    disables the cap.  The census spans new batch + archive (a bucket
-    small in the batch but huge in the archive still joins
-    quadratically); oversized buckets are excluded LOUDLY
-    (``dedup.exclude_hot_band_buckets``)."""
-    if max_band_size is None:
-        max_band_size = DD.LEDGER_MAX_BAND_SIZE
-    if not max_band_size:
-        return new_bands
-    return DD.exclude_hot_band_buckets(
-        new_bands, keys, max_band_size, what=what, extra_rows=old_bands
-    )
-
-
 def _archive_hits(
     new: DataFrame,
     new_fp: str,
@@ -621,11 +604,12 @@ def _archive_hits(
 ) -> DataFrame:
     """The Hamming ledgers' cross-run candidate step: band the new and
     the archived int64 fingerprints identically
-    (``dedup.int_band_explode``), cap hot buckets (:func:`_cap_hot_bands`),
-    equi-join on (band, bb) and keep the pairs within ``max_hamming``
-    (popcount of the XOR).  Returns the joined rows with every column of
-    both sides; the caller adds any further verify and picks the key it
-    drops."""
+    (``dedup.int_band_explode``), join them on (band, bb) through
+    ``dedup._band_pairs`` with the ledger hot-band cap (see the module
+    docstring), and keep the pairs within ``max_hamming`` (popcount of
+    the XOR).  Returns the joined rows with every column of both sides
+    (``band``/``bb`` twice, as ``a.`` and ``b.``); the caller adds any
+    further verify and picks the key it drops."""
     band_bits = bits // bands
 
     def banded(rows: DataFrame, fp: str) -> DataFrame:
@@ -633,11 +617,11 @@ def _archive_hits(
             *rows.columns, DD.int_band_explode(fp, bands, band_bits).alias("bf")
         ).select(*rows.columns, "bf.band", "bf.bb")
 
-    new_bands, old_bands = banded(new, new_fp), banded(old, old_fp)
-    new_bands = _cap_hot_bands(
-        new_bands, old_bands, ["band", "bb"], max_band_size, what
-    )
-    return new_bands.join(old_bands, ["band", "bb"]).filter(
+    return DD._band_pairs(
+        banded(new, new_fp), ["band", "bb"],
+        DD.LEDGER_MAX_BAND_SIZE if max_band_size is None else max_band_size,
+        what, archive=banded(old, old_fp),
+    ).filter(
         F.bit_count(F.col(new_fp).bitwiseXOR(F.col(old_fp))) <= max_hamming
     )
 
@@ -683,10 +667,10 @@ def dedup_incremental_near(
     a production deployment materializes the archive's band index as a
     table partitioned by (band, fp-prefix) instead of deriving it per run.
 
-    **Hot-band cap is ON by default here** (:func:`_cap_hot_bands`):
-    ledger joins run unattended across crawls, exactly where a degenerate
-    band bucket accretes.  Pass ``max_band_size=0`` to disable (restores
-    the unconditional pigeonhole recall guarantee)."""
+    **Hot-band cap is ON by default here** (module docstring): ledger
+    joins run unattended across crawls, exactly where a degenerate band
+    bucket accretes.  Pass ``max_band_size=0`` to disable (restores the
+    unconditional recall of the band join)."""
     m = _NEAR.begin(store_dir, batch_id)
     if m is None:
         return docs.filter(F.lit(False))
@@ -711,12 +695,13 @@ def dedup_incremental_near(
         old_bands = archive.select(
             "sid", DD.band_fp_explode("sig", bands, rows_per_band).alias("bf")
         ).select("sid", "bf.band", "bf.fp")
-        new_bands = _cap_hot_bands(
-            new_bands, old_bands, ["band", "fp"], max_band_size,
-            "dedup_incremental_near",
-        )
         cand = (
-            new_bands.join(old_bands, ["band", "fp"])
+            DD._band_pairs(
+                new_bands, ["band", "fp"],
+                DD.LEDGER_MAX_BAND_SIZE if max_band_size is None
+                else max_band_size,
+                "dedup_incremental_near", archive=old_bands,
+            )
             .select("_id", "sid")
             .distinct()
         )
@@ -801,9 +786,8 @@ def dedup_incremental_image(
     set) — fingerprints of undecodable rows are not meaningful.  Rows with
     a NULL fingerprint pass through untouched and commit nothing.
 
-    Hot-band cap ON by default (:func:`_cap_hot_bands`;
-    ``max_band_size=0`` disables) — same rationale as
-    :func:`dedup_incremental_near`.
+    Hot-band cap ON by default (``max_band_size=0`` disables) — same
+    rationale as :func:`dedup_incremental_near`.
     """
     m = _IMG.begin(store_dir, batch_id)
     if m is None:
@@ -873,8 +857,9 @@ def dedup_incremental_embedding(
        (``similarity.dedup_embedding_near``);
     3. commits the survivors' (embedding, fingerprint) as this batch.
 
-    Hot-band cap ON by default (:func:`_cap_hot_bands`;
-    ``max_band_size=0`` disables), as in :func:`dedup_incremental_near`.
+    Rows with a NULL embedding pass through untouched: they neither probe
+    the archive nor commit.  Hot-band cap ON by default
+    (``max_band_size=0`` disables), as in :func:`dedup_incremental_near`.
     """
     from ..operators import similarity as SIM
 
@@ -885,7 +870,7 @@ def dedup_incremental_embedding(
     survivors = df
     archive = read_committed_embeddings(spark, store_dir)
     if archive is not None:
-        new_rows = df.select(
+        new_rows = df.filter(F.col(vec_col).isNotNull()).select(
             id_col, F.col(vec_col).alias("_v"), fp_expr.alias("_efp")
         ).transform(materialize)
         hit = (
@@ -910,9 +895,9 @@ def dedup_incremental_embedding(
         max_hamming=max_hamming,
         min_cos=min_cos,
     )
-    survivors.select(F.col(vec_col), fp_expr.alias("efp")).distinct().write.parquet(
-        _EMB.batch_dir(store_dir, batch_id)
-    )
+    survivors.filter(F.col(vec_col).isNotNull()).select(
+        F.col(vec_col), fp_expr.alias("efp")
+    ).distinct().write.parquet(_EMB.batch_dir(store_dir, batch_id))
     _EMB.commit(store_dir, m, batch_id)
     return survivors
 

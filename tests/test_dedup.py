@@ -936,7 +936,7 @@ def test_dedup_action_keep_set(spark, payload):
     else:
         df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
         kept = SIM.dedup_embedding_near(df)
-    assert sorted(kept.columns) == sorted(df.columns)
+    assert kept.columns == df.columns
     id_col = df.columns[0]
     assert sorted(r[id_col] for r in kept.collect()) == [1, 10, 20, 30, 31]
 
