@@ -5,8 +5,8 @@ Base hash: first 15 hex chars of md5 → 60-bit non-negative int64 — identical
 in Spark (``conv(substring(md5(x),1,15),16,10)``) and DuckDB
 (``('0x'||substr(md5(x),1,15))::BIGINT``).
 
-Per-seed MinHash permutations avoid re-hashing the shingle per seed (md5 is
-the expensive part): one base hash per shingle, then the Carter-Wegman mix
+Per-seed MinHash permutations avoid re-hashing the shingle per seed (the
+base hash is the expensive part): one base hash per shingle, then the Carter-Wegman mix
     h_s = (a_s·h + b_s) mod P,   P = 2^61 - 1 (Mersenne prime)
 computed overflow-free in signed 64-bit via a split mulmod (DuckDB BIGINT
 errors on overflow, so the naive product would not be portable):
@@ -115,10 +115,11 @@ def mix_np(hs: "np.ndarray", num_hashes: int) -> "np.ndarray":
 
 
 # ---------------------------------------------------------------------------
-# Polynomial 60-bit shingle hash — the PRODUCTION fast path for MinHash.
+# Polynomial 60-bit shingle hash — the one MinHash shingle hash (its
+# variable-length token form below is the one SimHash token hash).
 #
 # md5-per-shingle (h60 above) is engine-portable but pays one interpreter
-# round-trip per shingle in the numpy twin (~1000 hashlib calls for a
+# round-trip per shingle in a numpy kernel (~1000 hashlib calls for a
 # 1000-char doc) — the single largest CPU line of the dedup stage at scale
 # (round-2 VERDICT finding 1).  The polynomial form hashes EVERY window of
 # a document with two int64 matmuls: two independent base/modulus pairs

@@ -27,8 +27,11 @@ Scale design (10^12 rows):
   (``similarity.dedup_embedding_near``) actions differ only in their pair
   finder; rows whose key is NULL pass through all three untouched.
 
-All hashing is deterministic integer arithmetic (md5- or
-polynomial-derived) with exact DuckDB twins.
+MinHash and SimHash have one hash family each, the polynomial one
+(``hashing.poly60_np`` over k-char shingles, ``hashing.poly60_token_np``
+over whitespace tokens); md5 is only the exact-dup fingerprint and the
+LSH band key.  All hashing is deterministic integer arithmetic with
+exact DuckDB twins.
 """
 
 from __future__ import annotations
@@ -90,45 +93,14 @@ def _check_minhash_params(num_hashes: int, bands: int | None = None) -> None:
             )
 
 
-def minhash_signature_udf(
-    num_hashes: int = DEFAULT_NUM_HASHES, k: int = DEFAULT_SHINGLE
-):
-    """array<long> of minhashes over md5 k-char shingles, Arrow-batched.
-
-    One md5 per shingle (``hashing.h60_python``); per-seed permutations
-    are the overflow-free affine mixes of functions/hashing.py (int64,
-    every intermediate < 2^63), so the signature has an exact DuckDB twin
-    (the q26 oracle).  The near-dup pipelines use the polynomial family of
-    :func:`minhash_signature_poly_udf` instead."""
-    _check_minhash_params(num_hashes)
-
-    @F.pandas_udf(f"array<long>")
-    def _mh(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            if not isinstance(t, str) or len(t) < k:
-                out.append(None)
-                continue
-            hs = np.fromiter(
-                (HH.h60_python(t[i : i + k]) for i in range(len(t) - k + 1)),
-                dtype=np.int64,
-            )
-            out.append(HH.mix_np(hs, num_hashes).min(axis=1))
-        return pd.Series(out, dtype=object)
-
-    return _mh
-
-
 def minhash_signature_poly_udf(
     num_hashes: int = DEFAULT_NUM_HASHES, k: int = DEFAULT_SHINGLE
 ):
-    """PRODUCTION minhash fast path: polynomial 60-bit shingle hash
+    """The MinHash signature kernel: polynomial 60-bit shingle hash
     (functions/hashing.py:poly60_np — two int64 matmuls over the
-    codepoint window matrix) + the same affine per-seed mixes.  Replaces
-    the per-shingle ``hashlib.md5`` interpreter loop of
-    :func:`minhash_signature_udf` (~1000 Python calls per 1000-char doc —
-    round-2 VERDICT finding 1) with fully vectorized numpy; it has its
-    own exact DuckDB twin (hashing.poly60_duck_sql)."""
+    codepoint window matrix, no Python call per shingle) + the affine
+    per-seed mixes of functions/hashing.py.  Exact DuckDB twin:
+    hashing.poly60_duck_sql + hashing.mix_sql."""
     _check_minhash_params(num_hashes)
     if k > HH.POLY_MAX_K:
         raise ValueError(f"k must be ≤ {HH.POLY_MAX_K} for the poly family")
@@ -184,67 +156,34 @@ def minhash_signature_poly_udf(
     return _mh
 
 
-# Java-regex \s (ASCII: space, tab, LF, VT, FF, CR) — NOT Python's Unicode
-# \s, which also matches NBSP etc.; the twin must tokenize exactly like the
-# engine's split(lower(trim(text)), '\\s+') or fingerprints silently diverge
-# on whitespace-edge texts (leading tab → empty first token, NBSP → kept
-# inside its token).
-_WS_RE = re.compile(r"[ \t\n\x0b\f\r]+")
+# The SimHash token separator: the ASCII whitespace class (space, tab, LF,
+# VT, FF, CR), written out so that one string means the same thing to
+# Python's re (the kernel) and to RE2 (the DuckDB twins' string_split_regex).
+# Neither engine's \s would do: Python's also matches NBSP and other
+# Unicode spaces, RE2's omits VT.
+WS_CLASS = r"[ \t\n\x0b\f\r]"
+_WS_RE = re.compile(WS_CLASS + "+")
 
+# poly60_token_* hashes are < 2^60, so a wider fingerprint would only add
+# bits that are always 0
+SIMHASH_BITS = 60
 
 _SIMHASH_CHUNK_TOKENS = 200_000  # bounds the (tokens × bits) vote slab
 
 
-def simhash_udf(bits: int = 60, hash_family: str = "md5"):
-    """Arrow-batched numpy SimHash.
+def simhash_udf():
+    """Arrow-batched numpy SimHash: a ``SIMHASH_BITS``-bit fingerprint
+    over the polynomial token family (``hashing.poly60_token_np``).
 
-    ``hash_family="md5"`` (q27's fingerprints): bit-identical twin of the
-    HOF reference form :func:`simhash` — same md5 token hashes, same
-    bit-vote fold.  Tokenization mirrors the engine form exactly: ``trim``
-    strips SPACES only (so a leading tab survives and yields an empty
-    first token, which votes as md5("")), and the split class is Java's
-    ASCII ``\\s`` (see ``_WS_RE``).
-
-    ``hash_family="poly"`` (the family of :func:`simhash_near_duplicates`,
-    q38): the fast path — the variable-length polynomial token family
-    (``hashing.poly60_token_np``; same recipe that took minhash from
-    md5-interpreter-bound to two int64 matmuls), hashed
-    once per DISTINCT batch token fully vectorized, with a chunk-global
-    bit-vote fold (one reduceat per chunk instead of one numpy round-trip
-    per row).  Different family ⇒ different fingerprints than md5 — pick
-    one per corpus and keep it.  Exact DuckDB twin:
-    ``hashing.poly60_token_duck_sql``.
+    Tokens are ``lower(trim(text))`` split on :data:`WS_CLASS` runs;
+    ``trim`` strips SPACES only, so a leading tab survives and yields an
+    empty first token.  Each distinct token of an Arrow batch is hashed
+    once, fully vectorized, and the bit-vote fold is chunk-global (one
+    reduceat per chunk instead of one numpy round-trip per row).  Exact
+    DuckDB twin: ``hashing.poly60_token_duck_sql`` under the same
+    tokenizer (plans/entry_queries.py:_simhash_oracle_ctes).
     """
-    if hash_family not in ("poly", "md5"):
-        raise ValueError(f"hash_family must be 'poly' or 'md5', got {hash_family!r}")
-    shifts = np.arange(bits, dtype=np.int64)
-
-    if hash_family == "md5":
-
-        @F.pandas_udf("long")
-        def _sh(texts: pd.Series) -> pd.Series:
-            out = np.zeros(len(texts), dtype=np.int64)
-            # token vocabulary is Zipfian: memoize md5 per DISTINCT token
-            # per Arrow batch, so the interpreter cost is O(vocab), not
-            # O(tokens) (bit-identical — same md5, just deduplicated)
-            memo: dict[str, int] = {}
-            for i, t in enumerate(texts):
-                if not isinstance(t, str):
-                    continue
-                toks = _WS_RE.split(t.strip(" ").lower())
-                hv = np.fromiter(
-                    (
-                        memo[tok] if tok in memo
-                        else memo.setdefault(tok, HH.h60_python(tok))
-                        for tok in toks
-                    ),
-                    dtype=np.int64,
-                )
-                votes = (2 * ((hv[:, None] >> shifts[None, :]) & 1) - 1).sum(axis=0)
-                out[i] = int(((votes > 0).astype(np.int64) << shifts).sum())
-            return pd.Series(out)
-
-        return _sh
+    shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
 
     @F.pandas_udf("long")
     def _shp(texts: pd.Series) -> pd.Series:
@@ -401,40 +340,11 @@ def band_fp_explode(sig_col: str, bands: int, rows_per_band: int) -> Column:
     )
 
 
-def simhash(text_col: str, bits: int = 60) -> Column:
-    """60-bit SimHash over whitespace tokens, folded per-row (no shuffle).
-    One md5 per token; bit-votes fold over the pre-hashed array."""
-    th = (
-        f"transform(split(lower(trim({text_col})), '\\\\s+'), "
-        f"t -> {HH.h60_spark_sql('t')})"
-    )
-    return F.expr(
-        f"""
-        aggregate(
-          zip_with(
-            aggregate(
-              {th},
-              transform(sequence(0, {bits - 1}), j -> 0L),
-              (acc, hv) -> zip_with(acc,
-                transform(sequence(0, {bits - 1}), j ->
-                  CASE WHEN (shiftright(hv, j) & 1L) = 1L THEN 1L ELSE -1L END),
-                (a, b) -> a + b)
-            ),
-            sequence(0, {bits - 1}),
-            (votes, j) -> CASE WHEN votes > 0 THEN shiftleft(1L, j) ELSE 0L END
-          ),
-          0L, (s, v) -> s + v
-        )
-        """
-    )
-
-
 def simhash_near_duplicates(
     df: DataFrame,
     text_col: str,
     id_col: str,
     bands: int = 4,
-    bits: int = 60,
     max_hamming: int = 3,
     max_band_size: int | None = None,
 ) -> DataFrame:
@@ -445,14 +355,12 @@ def simhash_near_duplicates(
     band_bits) — shuffle volume rows×bands, never all-pairs — then verify
     with an exact popcount on the XOR.
 
-    Fingerprints use the polynomial token family
-    (``simhash_udf(bits, "poly")``, exact DuckDB twin
-    ``hashing.poly60_token_duck_sql``).
+    Fingerprints are :func:`simhash_udf`'s.
 
     Returns (id_a, id_b, hamming ≤ max_hamming).  Callers should keep
     max_hamming < bands for full recall (pigeonhole guarantee).
     """
-    fp = simhash_udf(bits, "poly")(F.col(text_col))
+    fp = simhash_udf()(F.col(text_col))
     # materialized once for the same both-sides reason as lsh_candidate_pairs
     with_fp = (
         df.filter(F.col(text_col).isNotNull() & (F.length(F.trim(text_col)) > 0))
@@ -460,7 +368,7 @@ def simhash_near_duplicates(
         .transform(materialize)
     )
     return fingerprint_near_duplicates(
-        with_fp, "_fp", "_id", bands=bands, bits=bits,
+        with_fp, "_fp", "_id", bands=bands, bits=SIMHASH_BITS,
         max_hamming=max_hamming, max_band_size=max_band_size,
     )
 

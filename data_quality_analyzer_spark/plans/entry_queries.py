@@ -751,63 +751,99 @@ def q25(spark, sf_dir):
     )
 
 
-_MINHASH_SEEDS = tuple(range(8))
-
-_DUCK_SHINGLE_HASHES = (
-    "list_transform(list_transform(range(1, length(text) - 3), i -> substr(text, i, 5)), "
-    f"x -> {HH.h60_sql('x')})"
-)
+_K_43 = 5
+_POLY_SEEDS_43 = 8
 
 
-@_register(
-    "q26_minhash_signatures",
-    f"""
-    SELECT doc_id,
-           {", ".join(f"list_min(list_transform(hs, h -> {HH.mix_sql('h', s)})) AS mh{s}" for s in _MINHASH_SEEDS)}
-    FROM (SELECT doc_id, {_DUCK_SHINGLE_HASHES} AS hs
-          FROM documents WHERE text IS NOT NULL AND length(text) >= 5)
-    """,
-)
-def q26(spark, sf_dir):
-    """MinHash signatures over 5-char shingles — the signature stage of
-    MinHash+LSH near-dup detection.  Map-only (NO explode, NO shuffle —
-    embarrassingly parallel at 100 TB), via the Arrow-batched numpy UDF
-    (operators/dedup.py:minhash_signature_udf): one md5 per shingle plus
-    the affine per-seed mixes, integer arithmetic ⇒ exact agreement with
-    the oracle's list_transform formulation."""
-    d = _spread(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length("text") >= 5)
+def _q43_oracle() -> str:
+    mins = ", ".join(
+        f"list_min(list_transform(hs, h -> {HH.mix_sql('h', s)})) AS mh{s}"
+        for s in range(_POLY_SEEDS_43)
     )
-    d = d.withColumn("_sig", DD.minhash_signature_udf(len(_MINHASH_SEEDS))(F.col("text")))
+    return f"""
+    WITH cp AS (
+      SELECT doc_id, length(text) AS n,
+             list_transform(range(1, length(text) + 1),
+                            i -> unicode(substr(text, i, 1))) AS cps
+      FROM documents WHERE text IS NOT NULL AND length(text) >= {_K_43}
+    )
+    SELECT doc_id, {mins}
+    FROM (SELECT doc_id,
+                 list_transform(range(1, n - {_K_43 - 1} + 1),
+                                i -> {HH.poly60_duck_sql(_K_43)}) AS hs
+          FROM cp)
+    """
+
+
+def _minhash_signatures(spark, sf_dir):
+    """``doc_id, mh0..mh7`` over 5-char shingles through the production
+    signature kernel (dedup.minhash_signature_poly_udf): polynomial
+    shingle hash by two int64 matmuls over the codepoint window matrix
+    (functions/hashing.py:poly60_np) plus the affine per-seed mixes.
+    Map-only: no explode, no shuffle.  The DuckDB oracle
+    (:func:`_q43_oracle`) computes the identical hash in plain BIGINT
+    arithmetic (poly60_duck_sql), so agreement is exact."""
+    d = _spread(spark, sf_dir, "documents").filter(
+        F.col("text").isNotNull() & (F.length("text") >= _K_43)
+    )
+    d = d.withColumn(
+        "_sig", DD.minhash_signature_poly_udf(_POLY_SEEDS_43, _K_43)(F.col("text"))
+    )
     cols = [F.col("doc_id")]
-    for s in _MINHASH_SEEDS:
+    for s in range(_POLY_SEEDS_43):
         cols.append(F.element_at("_sig", s + 1).alias(f"mh{s}"))
     return d.select(*cols)
+
+
+@_register("q26_minhash_signatures", _q43_oracle)
+def q26(spark, sf_dir):
+    """MinHash signatures over 5-char shingles: the same signature as
+    q43 (:func:`_minhash_signatures`), kept under its catalog name."""
+    return _minhash_signatures(spark, sf_dir)
+
+
+def _simhash_oracle_ctes() -> str:
+    """DuckDB twin of dedup.simhash_udf as the CTEs ``toks, h, bits, sh``
+    over a ``base(doc_id, text)`` CTE the caller defines; ``sh(doc_id,
+    fp)`` holds the fingerprints.  Same tokenizer (``lower(trim(text))``
+    split on dedup.WS_CLASS runs), same token hash
+    (hashing.poly60_token_duck_sql), same bit-vote fold."""
+    return f"""
+    toks AS (
+      SELECT doc_id,
+             unnest(string_split_regex(lower(trim(text)), '{DD.WS_CLASS}+')) AS t
+      FROM base
+    ),
+    h AS (
+      SELECT doc_id, {HH.poly60_token_duck_sql('t')} AS hv FROM toks
+    ),
+    bits AS (
+      SELECT doc_id, j, SUM(CASE WHEN (hv >> j) & 1 = 1 THEN 1 ELSE -1 END) AS s
+      FROM h, range({DD.SIMHASH_BITS}) r(j) GROUP BY doc_id, j
+    ),
+    sh AS (
+      SELECT doc_id,
+             CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS fp
+      FROM bits GROUP BY doc_id
+    )"""
 
 
 @_register(
     "q27_simhash",
     f"""
-    WITH toks AS (
-      SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS t
-      FROM documents WHERE text IS NOT NULL AND length(trim(text)) > 0
-    ), h AS (
-      SELECT doc_id, {HH.h60_sql('t')} AS hv FROM toks
-    ), bits AS (
-      SELECT doc_id, j, SUM(CASE WHEN (hv >> j) & 1 = 1 THEN 1 ELSE -1 END) AS s
-      FROM h, range(60) r(j) GROUP BY doc_id, j
-    )
-    SELECT doc_id,
-           CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS simhash
-    FROM bits GROUP BY doc_id
+    WITH base AS (
+      SELECT doc_id, text FROM documents
+      WHERE text IS NOT NULL AND length(trim(text)) > 0
+    ),{_simhash_oracle_ctes()}
+    SELECT doc_id, fp AS simhash FROM sh
     """,
 )
 def q27(spark, sf_dir):
     """SimHash (60-bit) document fingerprint for near-dup detection, via
-    the Arrow-batched numpy bit-vote fold (operators/dedup.py:simhash_udf)
-    — bit-identical to the higher-order-function reference form (which is
-    CodegenFallback-interpreted) and to the oracle's unnest+group
-    formulation.  Integer arithmetic ⇒ exact agreement."""
+    the Arrow-batched numpy bit-vote fold over the polynomial token
+    family (operators/dedup.py:simhash_udf) — the fingerprint q38 bands.
+    Integer arithmetic ⇒ exact agreement with the oracle's unnest+group
+    formulation (:func:`_simhash_oracle_ctes`)."""
     d = _spread(spark, sf_dir, "documents").filter(
         F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
     )
@@ -1262,22 +1298,7 @@ def _q38_oracle() -> str:
       SELECT doc_id + 1000000, text FROM documents
       WHERE text IS NOT NULL AND length(trim(text)) > 0 AND doc_id % 25 = 0
     ),
-    toks AS (
-      SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS t
-      FROM base
-    ),
-    h AS (
-      SELECT doc_id, {HH.poly60_token_duck_sql('t')} AS hv FROM toks
-    ),
-    bits AS (
-      SELECT doc_id, j, SUM(CASE WHEN (hv >> j) & 1 = 1 THEN 1 ELSE -1 END) AS s
-      FROM h, range(60) r(j) GROUP BY doc_id, j
-    ),
-    sh AS (
-      SELECT doc_id,
-             CAST(SUM(CASE WHEN s > 0 THEN (CAST(1 AS BIGINT) << CAST(j AS INTEGER)) ELSE 0 END) AS BIGINT) AS fp
-      FROM bits GROUP BY doc_id
-    ),
+    {_simhash_oracle_ctes()},
     bandrows AS (
       SELECT doc_id, fp, r.b AS band, (fp >> (r.b * 15)) % 32768 AS bb
       FROM sh, range(4) r(b)
@@ -1308,7 +1329,7 @@ def q38(spark, sf_dir):
     )
     full = d.unionByName(twins)
     out = DD.simhash_near_duplicates(
-        full, "text", "doc_id", bands=4, bits=60, max_hamming=3
+        full, "text", "doc_id", bands=4, max_hamming=3
     )
     return out.withColumn("hamming", F.col("hamming").cast("int"))
 
@@ -1492,49 +1513,11 @@ def q45(spark, sf_dir):
     return kept.select("doc_id")
 
 
-_K_43 = 5
-_POLY_SEEDS_43 = 8
-
-
-def _q43_oracle() -> str:
-    mins = ", ".join(
-        f"list_min(list_transform(hs, h -> {HH.mix_sql('h', s)})) AS mh{s}"
-        for s in range(_POLY_SEEDS_43)
-    )
-    return f"""
-    WITH cp AS (
-      SELECT doc_id, length(text) AS n,
-             list_transform(range(1, length(text) + 1),
-                            i -> unicode(substr(text, i, 1))) AS cps
-      FROM documents WHERE text IS NOT NULL AND length(text) >= {_K_43}
-    )
-    SELECT doc_id, {mins}
-    FROM (SELECT doc_id,
-                 list_transform(range(1, n - {_K_43 - 1} + 1),
-                                i -> {HH.poly60_duck_sql(_K_43)}) AS hs
-          FROM cp)
-    """
-
-
-@_register("q43_minhash_poly_signatures", _q43_oracle())
+@_register("q43_minhash_poly_signatures", _q43_oracle)
 def q43(spark, sf_dir):
-    """MinHash signatures over the PRODUCTION polynomial shingle-hash
-    family (dedup.minhash_signature_poly_udf): the per-shingle md5
-    interpreter loop of q26 replaced by two int64 matmuls over the
-    codepoint window matrix (functions/hashing.py:poly60_np) — fully
-    vectorized, zero Python per shingle.  The DuckDB oracle computes the
-    identical hash with plain BIGINT arithmetic (poly60_duck_sql), proving
-    the fast path is engine-portable, not just fast."""
-    d = _spread(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length("text") >= _K_43)
-    )
-    d = d.withColumn(
-        "_sig", DD.minhash_signature_poly_udf(_POLY_SEEDS_43, _K_43)(F.col("text"))
-    )
-    cols = [F.col("doc_id")]
-    for s in range(_POLY_SEEDS_43):
-        cols.append(F.element_at("_sig", s + 1).alias(f"mh{s}"))
-    return d.select(*cols)
+    """MinHash signatures over 5-char shingles, the signature stage of
+    MinHash+LSH near-dup detection (:func:`_minhash_signatures`)."""
+    return _minhash_signatures(spark, sf_dir)
 
 
 def _q46_oracle() -> str:

@@ -52,7 +52,7 @@ def test_minhash_lsh_finds_near_dups(docs):
 
 def test_simhash_property(docs):
     out = docs.filter(F.col("text").isNotNull()).select(
-        "doc_id", DD.simhash("text").alias("sh")
+        "doc_id", DD.simhash_udf()(F.col("text")).alias("sh")
     ).collect()
     by_id = {r["doc_id"]: r["sh"] for r in out}
     assert by_id[1] == by_id[2]  # identical text -> identical simhash
@@ -62,54 +62,17 @@ def test_simhash_property(docs):
     assert ham < ham_far
 
 
-def test_minhash_udf_twin_bit_identical(spark):
-    """The md5-family Arrow/numpy signature (q26's) is bit-identical to
-    its pure-python reference — md5 per shingle, then the same affine
-    per-seed mixes — including non-ASCII text and len == k."""
+def test_minhash_param_validation(docs):
     from data_quality_analyzer_spark.functions import hashing as HH
 
-    texts = [
-        "the quick brown fox jumps over the lazy dog",
-        "ünïcode — naïve café text with €uro signs",
-        "short",
-        "exact",  # len == k → exactly one window
-    ]
-    k, num = 5, 8
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id int, text string"
-    )
-    got = {
-        r["doc_id"]: list(r["sig"])
-        for r in df.select(
-            "doc_id", DD.minhash_signature_udf(num, k)(F.col("text")).alias("sig")
-        ).collect()
-    }
-    for i, t in enumerate(texts):
-        hs = [HH.h60_python(t[j : j + k]) for j in range(len(t) - k + 1)]
-        want = [min(HH.mix_python(h, s) for h in hs) for s in range(num)]
-        assert got[i] == want, f"doc {i}"
-
-
-def test_simhash_udf_twin_bit_identical(docs):
-    valid = docs.filter(F.col("text").isNotNull())
-    hof = {
-        r["doc_id"]: r["s"]
-        for r in valid.select("doc_id", DD.simhash("text").alias("s")).collect()
-    }
-    udf = {
-        r["doc_id"]: r["s"]
-        for r in valid.select("doc_id", DD.simhash_udf()(F.col("text")).alias("s")).collect()
-    }
-    assert hof == udf and len(hof) > 0
-
-
-def test_minhash_param_validation(docs):
     with pytest.raises(ValueError, match="num_hashes"):
-        DD.minhash_signature_udf(num_hashes=99)
+        DD.minhash_signature_poly_udf(num_hashes=99)
     with pytest.raises(ValueError, match="bands must divide"):
         DD.lsh_candidate_pairs(docs, "text", "doc_id", num_hashes=16, bands=5)
     with pytest.raises(ValueError, match="num_hashes"):
-        DD.minhash_signature_udf(num_hashes=0)
+        DD.minhash_signature_poly_udf(num_hashes=0)
+    with pytest.raises(ValueError, match="k must be"):
+        DD.minhash_signature_poly_udf(k=HH.POLY_MAX_K + 1)
 
 
 def test_simhash_banded_hamming_search(spark):
@@ -129,7 +92,7 @@ def test_simhash_banded_hamming_search(spark):
     fp = {
         r["doc_id"]: r["s"]
         for r in df.select(
-            "doc_id", DD.simhash_udf(60, "poly")(F.col("text")).alias("s")
+            "doc_id", DD.simhash_udf()(F.col("text")).alias("s")
         ).collect()
     }
     ham13 = bin(fp[1] ^ fp[3]).count("1")
@@ -259,9 +222,14 @@ def test_ivf_ann(spark):
 
 
 def test_simhash_udf_twin_whitespace_edges(spark):
-    """The numpy twin must tokenize EXACTLY like the engine HOF (Java \\s =
-    ASCII class; trim strips spaces only): leading tab → empty first token,
-    NBSP stays inside its token, trailing newline → trailing empty token."""
+    """The kernel and its DuckDB twin tokenize alike on whitespace-edge
+    texts (one ASCII class, dedup.WS_CLASS; trim strips spaces only):
+    leading tab → empty first token, NBSP stays inside its token,
+    trailing newline → trailing empty token, VT separates tokens."""
+    import duckdb
+
+    from data_quality_analyzer_spark.plans import entry_queries as EQ
+
     rows = [
         (1, "\tleading tab text"),
         (2, "trailing newline text\n"),
@@ -270,15 +238,16 @@ def test_simhash_udf_twin_whitespace_edges(spark):
         (5, "mixed \t\n whitespace \x0b runs"),
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
-    hof = {
-        r["doc_id"]: r["s"]
-        for r in df.select("doc_id", DD.simhash("text").alias("s")).collect()
-    }
     udf = {
         r["doc_id"]: r["s"]
         for r in df.select("doc_id", DD.simhash_udf()(F.col("text")).alias("s")).collect()
     }
-    assert hof == udf
+    con = duckdb.connect()
+    con.register("base", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    duck = dict(
+        con.execute(f"WITH {EQ._simhash_oracle_ctes()} SELECT doc_id, fp FROM sh").fetchall()
+    )
+    assert udf == duck
 
 
 def test_ivf_assign_null_guard(spark):
@@ -322,9 +291,9 @@ def test_near_duplicates_broadcast_side_is_slim(docs):
 
 
 def test_poly_minhash_udf_matches_python_reference(spark):
-    """The vectorized polynomial shingle hash (production fast path) is
-    bit-identical to its pure-python reference, including non-ASCII text,
-    and the signature applies the same affine mixes as the md5 family."""
+    """The vectorized polynomial shingle hash (the one MinHash kernel) is
+    bit-identical to its pure-python reference, including non-ASCII text
+    and len == k, with the signature's affine per-seed mixes."""
     from data_quality_analyzer_spark.functions import hashing as HH
 
     texts = [
@@ -704,10 +673,8 @@ def test_dedup_lines_identity_without_duplicates(spark):
 
 def test_simhash_poly_family(spark):
     """The poly token family: engine fingerprints match the pure-python
-    token-hash reference fold, differ from the md5 family, and the banded
-    search still finds exact twins at Hamming 0."""
-    import hashlib
-
+    token-hash reference fold, and the banded search still finds exact
+    twins at Hamming 0."""
     import numpy as np
 
     from data_quality_analyzer_spark.functions import hashing as HH
@@ -725,7 +692,7 @@ def test_simhash_poly_family(spark):
     got = {
         r["doc_id"]: r["fp"]
         for r in df.select(
-            "doc_id", DD.simhash_udf(60, "poly")(F.col("text")).alias("fp")
+            "doc_id", DD.simhash_udf()(F.col("text")).alias("fp")
         ).collect()
     }
 
@@ -739,14 +706,6 @@ def test_simhash_poly_family(spark):
     for i, t in enumerate(texts):
         assert got[i] == ref_fp(t), t
 
-    md5_got = {
-        r["doc_id"]: r["fp"]
-        for r in df.select(
-            "doc_id", DD.simhash_udf(60, "md5")(F.col("text")).alias("fp")
-        ).collect()
-    }
-    assert all(md5_got[i] != got[i] for i in range(len(texts)))
-
     twins = df.union(
         df.filter(F.col("doc_id") == 0).select(
             (F.col("doc_id") + 100).alias("doc_id"), "text"
@@ -757,8 +716,38 @@ def test_simhash_poly_family(spark):
         {p["id_a"], p["id_b"]} == {0, 100} and p["hamming"] == 0 for p in pairs
     )
 
-    with pytest.raises(ValueError, match="hash_family"):
-        DD.simhash_udf(60, "sha1")
+
+def test_one_hash_family_per_sketch():
+    """MinHash and SimHash have one (polynomial) hash family each: no
+    package function takes a ``hash_family`` parameter, the dedup module
+    never calls the md5 token hash, and the md5 MinHash kernel and the
+    HOF SimHash are gone."""
+    import ast
+    from pathlib import Path
+
+    import data_quality_analyzer_spark as PKG
+
+    root = Path(PKG.__file__).parent
+    family_params, md5_calls = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                names = [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs]
+                if "hash_family" in names:
+                    family_params.append((rel, node.name))
+            if (
+                rel == "operators/dedup.py"
+                and isinstance(node, ast.Call)
+                and "h60_python"
+                in (getattr(node.func, "attr", None), getattr(node.func, "id", None))
+            ):
+                md5_calls.append(node.lineno)
+    assert family_params == [], family_params
+    assert md5_calls == [], md5_calls
+    assert not hasattr(DD, "minhash_signature_udf")
+    assert not hasattr(DD, "simhash")
 
 
 def test_materialize_seam_reliable_checkpoint(spark, tmp_path):
