@@ -16,6 +16,8 @@ engine.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -42,16 +44,46 @@ MIN_DISTINCT_RATIO = 0.20
 MAX_MEAN_WORD_LEN = 15.0
 MIN_MEAN_WORD_LEN = 2.0
 
-_WS = r"\s+"
 _NON_ALNUM_SPACE = "[^a-zA-Z0-9 ]"
+
+# ---------------------------------------------------------------------------
+# Whitespace: the ONE definition every Spark, Spark-SQL, DuckDB and Python
+# tokenizer in the package renders.  Trim the class from both ends, split
+# on its runs; a text empty after the trim is blank and has no tokens (so
+# no token is ever '').  The ASCII class is spelled out because no engine
+# default agrees: `\s` omits VT in RE2 and adds Unicode spaces in Python;
+# Spark's trim() strips spaces only, DuckDB's also NBSP, Python's strip()
+# all Unicode whitespace.
+# ---------------------------------------------------------------------------
+
+WS_CLASS = r"[ \t\n\x0b\f\r]"
+_WS_RUN = WS_CLASS + "+"
+_WS_CHARS = WS_CLASS[1:-1].encode().decode("unicode_escape")  # the trim set
+_WS_RE = re.compile(_WS_RUN)
+
+
+def ws_trim(col: Column) -> Column:
+    """``col`` with the whitespace class stripped from both ends."""
+    return F.btrim(col, F.lit(_WS_CHARS))
 
 
 def tokens(col: Column) -> Column:
-    """Whitespace tokenization of trimmed text ('' → empty array)."""
-    t = F.trim(col)
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(t, _WS)
+    """Whitespace tokens of ``col`` (blank → empty array, NULL → NULL)."""
+    t = ws_trim(col)
+    return F.when(t == "", F.array().cast("array<string>")).otherwise(
+        F.split(t, _WS_RUN)
     )
+
+
+def tokens_python(text: str | None) -> list[str]:
+    """Python twin of :func:`tokens` (NULL → no tokens)."""
+    t = text.strip(_WS_CHARS) if isinstance(text, str) else ""
+    return _WS_RE.split(t) if t else []
+
+
+def is_blank_python(text: str | None) -> bool:
+    """Python twin of :func:`is_blank`."""
+    return not tokens_python(text)
 
 
 def n_tokens(col: Column) -> Column:
@@ -64,10 +96,14 @@ def n_chars(col: Column) -> Column:
 
 # BPE-ish subword tokenizer pattern (GPT-2 family, lookahead-free so the
 # same pattern is valid in both Java regex and RE2): contraction suffixes,
-# space-prefixed letter runs, digit runs, punctuation runs, whitespace runs.
+# space-prefixed letter runs, digit runs, punctuation runs, whitespace runs
+# (the WS_CLASS runs).
 # This is THE token unit training pipelines budget with (q42 fertility, q54
 # token-budget sampling).
-BPE_PAT = r"'(?:[sdmt]|ll|ve|re)| ?[\p{L}]+| ?[\p{N}]+| ?[^\s\p{L}\p{N}]+|\s+"
+BPE_PAT = (
+    r"'(?:[sdmt]|ll|ve|re)| ?[\p{L}]+| ?[\p{N}]+| ?[^"
+    + WS_CLASS[1:-1] + r"\p{L}\p{N}]+|" + _WS_RUN
+)
 
 
 def bpe_token_count(col: Column) -> Column:
@@ -103,19 +139,21 @@ def symbol_ratio(col: Column) -> Column:
 
 
 def token_set_pattern(words: tuple[str, ...]) -> str:
-    """Java-regex pattern matching a whole whitespace-token from `words`.
+    """Java-regex pattern matching a whole :data:`WS_CLASS` token from `words`.
     Zero-width boundaries (lookaround) so consecutive stopword tokens are
     all counted.  Counting via regexp_count is whole-stage-codegen-friendly;
     the higher-order-function formulation (filter + isin) is a
     CodegenFallback expression that re-evaluates its split() child
     interpreted on every call — ~10× slower in the fused rule projection."""
     alternatives = "|".join(sorted(words))
-    return rf"(?<=^|\s)({alternatives})(?=\s|$)"
+    # \z, not $: Java's $ also matches before a final U+0085/U+2028/U+2029
+    return f"(?<=^|{WS_CLASS})({alternatives})(?={WS_CLASS}|\\z)"
 
 
 def stopword_count(col: Column, words: tuple[str, ...] = STOPWORDS) -> Column:
-    """Number of (lowercased) tokens that are in `words`."""
-    return F.regexp_count(F.lower(F.trim(col)), F.lit(token_set_pattern(words)))
+    """Number of (lowercased) tokens that are in `words` (the pattern's
+    boundaries already match at the class, so no trim is needed)."""
+    return F.regexp_count(F.lower(col), F.lit(token_set_pattern(words)))
 
 
 def stopword_ratio(col: Column) -> Column:
@@ -139,8 +177,8 @@ def mean_word_len(col: Column) -> Column:
     """Mean token length (0.0 for empty).  Σ|token| == |trimmed text| minus
     its whitespace chars — pure counting, no intermediate string."""
     n = n_tokens(col)
-    t = F.trim(col)
-    total = F.length(t) - F.regexp_count(t, F.lit(r"\s"))
+    t = ws_trim(col)
+    total = F.length(t) - F.regexp_count(t, F.lit(WS_CLASS))
     return F.when(n == 0, F.lit(0.0)).otherwise(
         total.cast("double") / n.cast("double")
     )
@@ -152,8 +190,9 @@ def has_toxicity(col: Column) -> Column:
 
 def is_blank(col: Column) -> Column:
     """The reference's tri-state missing/null/'' collapse (SURVEY §1.2):
-    missing ∨ null ∨ '' → one predicate.  diagnosis_analysis.py:41-46."""
-    return col.isNull() | (F.trim(col) == "")
+    missing ∨ null ∨ '' → one predicate (blank = no tokens after the
+    whitespace trim).  diagnosis_analysis.py:41-46."""
+    return col.isNull() | (ws_trim(col) == "")
 
 
 # ---------------------------------------------------------------------------
@@ -162,15 +201,26 @@ def is_blank(col: Column) -> Column:
 # ``operators/rules.py`` (``RU.HEURISTIC_RULES``, ``RU.keep_verdict_sql``).
 # ---------------------------------------------------------------------------
 
-def _sql_tokens(c: str) -> str:
+# RE2 reads the class as is; DuckDB's E'' literal unescapes it to the trim set
+def _trim_sql(c: str) -> str:
+    return f"trim({c}, E'{WS_CLASS[1:-1]}')"
+
+
+def ws_split_sql(c: str) -> str:
+    """Trim + split without the blank arm: a blank text yields one ''
+    token (the SimHash twin's fold)."""
+    return f"string_split_regex({_trim_sql(c)}, '{_WS_RUN}')"
+
+
+def tokens_sql(c: str) -> str:
     return (
-        f"CASE WHEN length(trim({c})) = 0 THEN []::VARCHAR[] "
-        f"ELSE string_split_regex(trim({c}), '\\s+') END"
+        f"CASE WHEN {_trim_sql(c)} = '' THEN []::VARCHAR[] "
+        f"ELSE {ws_split_sql(c)} END"
     )
 
 
 def n_tokens_sql(c: str) -> str:
-    return f"len({_sql_tokens(c)})"
+    return f"len({tokens_sql(c)})"
 
 
 def symbol_ratio_sql(c: str) -> str:
@@ -186,7 +236,7 @@ def _sql_in_list(words: tuple[str, ...]) -> str:
 
 
 def stopword_ratio_sql(c: str) -> str:
-    toks = _sql_tokens(f"lower({c})")
+    toks = tokens_sql(f"lower({c})")
     return (
         f"CASE WHEN len({toks}) = 0 THEN 0.0 "
         f"ELSE len(list_filter({toks}, t -> t IN ({_sql_in_list(STOPWORDS)})))::DOUBLE"
@@ -195,7 +245,7 @@ def stopword_ratio_sql(c: str) -> str:
 
 
 def distinct_token_ratio_sql(c: str) -> str:
-    toks = _sql_tokens(f"lower({c})")
+    toks = tokens_sql(f"lower({c})")
     return (
         f"CASE WHEN len({toks}) = 0 THEN 1.0 "
         f"ELSE len(list_distinct({toks}))::DOUBLE / len({toks}) END"
@@ -203,7 +253,7 @@ def distinct_token_ratio_sql(c: str) -> str:
 
 
 def mean_word_len_sql(c: str) -> str:
-    toks = _sql_tokens(c)
+    toks = tokens_sql(c)
     return (
         f"CASE WHEN len({toks}) = 0 THEN 0.0 "
         f"ELSE list_sum(list_transform({toks}, t -> length(t)))::DOUBLE / len({toks}) END"
@@ -211,25 +261,38 @@ def mean_word_len_sql(c: str) -> str:
 
 
 def has_toxicity_sql(c: str) -> str:
-    toks = _sql_tokens(f"lower({c})")
+    toks = tokens_sql(f"lower({c})")
     return f"len(list_filter({toks}, t -> t IN ({_sql_in_list(TOXICITY_WORDS)}))) > 0"
 
 
 def is_blank_sql(c: str) -> str:
-    return f"({c} IS NULL OR trim({c}) = '')"
+    return f"({c} IS NULL OR {_trim_sql(c)} = '')"
 
 
 # ---------------------------------------------------------------------------
-# Pinned whitespace tokenizer — ONE definition per engine, shared by the
-# repetition metrics and the caption-alignment gate (a drift here would
-# silently desynchronize their token streams).  `\s` is ASCII-only in
-# BOTH Java regex and DuckDB's RE2 (the U+00A0 lesson in repetition.py's
-# kernel notes); empty tokens from leading/trailing/repeated whitespace
-# are filtered on both sides.
+# Lower-cased tokens as templates over ``{c}`` — shared by the repetition
+# metrics, the caption-alignment gate, decontamination and the q94 TF-IDF
+# (a drift here would silently desynchronize their token streams).
 # ---------------------------------------------------------------------------
 
-WS_TOKENS_SPARK = "filter(split(lower(trim({c})), '\\\\s+'), t -> t != '')"
-WS_TOKENS_DUCK = (
-    "list_filter(string_split_regex(lower(trim({c})), '\\s+'), "
-    "t -> t != '')"
-)
+def _spark_sql_str(s: str) -> str:
+    """``s`` as a Spark-SQL string literal.  The SQL parser unescapes
+    backslash sequences (and knows neither ``\\f`` nor ``\\x0b``), so
+    backslashes are doubled and control characters written ``\\uXXXX``."""
+    body = "".join(
+        "\\\\" if ch == "\\" else f"\\u{ord(ch):04x}" if ch < " " else ch
+        for ch in s
+    )
+    return f"'{body}'"
+
+
+def _tokens_spark_sql(c: str) -> str:
+    t = f"btrim({c}, {_spark_sql_str(_WS_CHARS)})"
+    return (
+        f"CASE WHEN {t} = '' THEN cast(array() AS array<string>) "
+        f"ELSE split({t}, {_spark_sql_str(_WS_RUN)}) END"
+    )
+
+
+WS_TOKENS_SPARK = _tokens_spark_sql("lower({c})")
+WS_TOKENS_DUCK = tokens_sql("lower({c})")

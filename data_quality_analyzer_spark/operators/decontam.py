@@ -38,27 +38,27 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import text as TX
+
 DEFAULT_N = 3
 DEFAULT_THRESHOLD = 0.8
 
 
 def word_gram_hashes(text_col: str, n: int = DEFAULT_N):
     """array<bigint> of DISTINCT hashed word-``n``-gram ids of a text
-    column: lowercase, split on whitespace runs, drop empty tokens, hash
-    each n-token window with ``xxhash64``.  Pure Catalyst — codegen'd,
+    column: its lower-cased whitespace tokens (``TX.WS_TOKENS_SPARK``),
+    each n-token window hashed with ``xxhash64``.  Pure Catalyst — codegen'd,
     Arrow never involved.  Rows with fewer than ``n`` words yield an empty
     array."""
     if n < 1:
         # n=0 would reduce EVERY doc to the single gram xxhash64('') and
         # flag the whole corpus as contaminated — refuse loudly
         raise ValueError(f"gram size n must be >= 1, got {n}")
-    words = (
-        f"filter(split(lower({text_col}), '\\\\s+'), x -> x != '')"
-    )
+    words = TX.WS_TOKENS_SPARK.format(c=text_col)
     # HOF let-binding: evaluate the words array ONCE per row and bind it
     # as the lambda variable `w` — higher-order functions are
     # CodegenFallback-interpreted, so without the binding the
-    # split+filter would re-run for the size check, the sequence bound,
+    # tokenization would re-run for the size check, the sequence bound,
     # and every slice.  Null text → null words array; the
     # explicit IS NULL arm matters because ANSI size(NULL) is NULL, which
     # would fall through to the ELSE and null the whole result.

@@ -37,7 +37,6 @@ exact DuckDB twins.
 from __future__ import annotations
 
 import logging
-import re
 from collections.abc import Callable
 
 import numpy as np
@@ -46,6 +45,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from ..exec_utils import materialize
 from ..functions import hashing as HH
+from ..functions import text as TX
 
 DEFAULT_SHINGLE = 5
 DEFAULT_NUM_HASHES = 16
@@ -156,14 +156,6 @@ def minhash_signature_poly_udf(
     return _mh
 
 
-# The SimHash token separator: the ASCII whitespace class (space, tab, LF,
-# VT, FF, CR), written out so that one string means the same thing to
-# Python's re (the kernel) and to RE2 (the DuckDB twins' string_split_regex).
-# Neither engine's \s would do: Python's also matches NBSP and other
-# Unicode spaces, RE2's omits VT.
-WS_CLASS = r"[ \t\n\x0b\f\r]"
-_WS_RE = re.compile(WS_CLASS + "+")
-
 # poly60_token_* hashes are < 2^60, so a wider fingerprint would only add
 # bits that are always 0
 SIMHASH_BITS = 60
@@ -175,13 +167,14 @@ def simhash_udf():
     """Arrow-batched numpy SimHash: a ``SIMHASH_BITS``-bit fingerprint
     over the polynomial token family (``hashing.poly60_token_np``).
 
-    Tokens are ``lower(trim(text))`` split on :data:`WS_CLASS` runs;
-    ``trim`` strips SPACES only, so a leading tab survives and yields an
-    empty first token.  Each distinct token of an Arrow batch is hashed
-    once, fully vectorized, and the bit-vote fold is chunk-global (one
-    reduceat per chunk instead of one numpy round-trip per row).  Exact
-    DuckDB twin: ``hashing.poly60_token_duck_sql`` under the same
-    tokenizer (plans/entry_queries.py:_simhash_oracle_ctes).
+    Tokens are ``TX.tokens_python`` of ``lower(text)`` (the one
+    whitespace class of ``functions/text.py``, trimmed and split); a
+    blank text folds to the one token '' so every row votes.  Each
+    distinct token of an Arrow batch is hashed once, fully vectorized,
+    and the bit-vote fold is chunk-global (one reduceat per chunk instead
+    of one numpy round-trip per row).  Exact DuckDB twin:
+    ``hashing.poly60_token_duck_sql`` under the same tokenizer
+    (plans/entry_queries.py:_simhash_oracle_ctes).
     """
     shifts = np.arange(SIMHASH_BITS, dtype=np.int64)
 
@@ -197,7 +190,7 @@ def simhash_udf():
             if not isinstance(t, str):
                 row_tok_ids.append(None)
                 continue
-            toks = _WS_RE.split(t.strip(" ").lower())
+            toks = TX.tokens_python(t.lower()) or [""]
             ids = np.fromiter(
                 (
                     vocab[tok] if tok in vocab
@@ -210,7 +203,7 @@ def simhash_udf():
             row_tok_ids.append(ids)
         vocab_h = HH.poly60_token_np(list(vocab))
         # chunk-global vote fold: rows grouped so the ±1 slab stays small;
-        # every row has ≥1 token (split('') == ['']), so reduceat offsets
+        # every row has ≥1 token (the blank fold above), so reduceat offsets
         # are strictly increasing and in-bounds.
         i = 0
         n = len(vals)
@@ -363,7 +356,7 @@ def simhash_near_duplicates(
     fp = simhash_udf()(F.col(text_col))
     # materialized once for the same both-sides reason as lsh_candidate_pairs
     with_fp = (
-        df.filter(F.col(text_col).isNotNull() & (F.length(F.trim(text_col)) > 0))
+        df.filter(~TX.is_blank(F.col(text_col)))
         .select(F.col(id_col).alias("_id"), fp.alias("_fp"))
         .transform(materialize)
     )

@@ -37,39 +37,25 @@ import re
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import text as TX
+
 MIN_WORDS = 20
 MAX_WORDS = 80
 STOPWORDS: tuple[str, ...] = ("the", "a")
 # RE2-compatible (no lookaround) so Java regex and DuckDB agree byte-for-byte
 BOILER_PATTERN = r"(cookie|javascript|subscribe|all rights reserved)"
 
-_WS = r"\s+"
-# Full-whitespace edge trim: Spark's trim()/DuckDB's trim() strip spaces
-# only, and Java vs RE2 vs Python disagree on boundary-empty tokens after
-# split — a regex trim first makes tokenization identical in all three.
-_EDGE_WS = r"^\s+|\s+$"
-
-
-def _clean(line: Column) -> Column:
-    return F.regexp_replace(F.lower(line), _EDGE_WS, "")
-
 
 def tokens(line: Column) -> Column:
-    """Lower-cased, edge-trimmed ``\\s+`` tokens — the tokenizer the
-    DSIR sampler shares (DuckDB twin :func:`tokens_sql`)."""
-    return F.split(_clean(line), _WS)
-
-
-def _word_count(line: Column) -> Column:
-    # split('') == [''] — count a blank line as 0 words, not 1
-    return F.when(_clean(line) == "", F.lit(0)).otherwise(
-        F.size(tokens(line))
-    )
+    """Lower-cased whitespace tokens (``TX.tokens``; a blank line has
+    none) — the tokenizer the DSIR sampler shares (DuckDB twin
+    :func:`tokens_sql`)."""
+    return TX.tokens(F.lower(line))
 
 
 def line_flags(line: Column) -> dict[str, Column]:
     """First-fail drop-reason booleans for ONE line (mutually exclusive)."""
-    wc = _word_count(line)
+    wc = F.size(tokens(line))
     short = wc < MIN_WORDS
     long_ = ~short & (wc > MAX_WORDS)
     no_stop = (
@@ -130,24 +116,13 @@ def filter_lines(
 # ---------------------------------------------------------------------------
 
 
-def _clean_sql(l: str) -> str:
-    return f"regexp_replace(lower({l}), '{_EDGE_WS}', '', 'g')"
-
-
-def _wc_sql(l: str) -> str:
-    return (
-        f"CASE WHEN {_clean_sql(l)} = '' THEN 0 "
-        f"ELSE len(string_split_regex({_clean_sql(l)}, '{_WS}')) END"
-    )
-
-
 def tokens_sql(l: str) -> str:
-    return f"string_split_regex({_clean_sql(l)}, '{_WS}')"
+    return TX.tokens_sql(f"lower({l})")
 
 
 def line_flag_sql(l: str, reason: str) -> str:
     """DuckDB boolean for one line + reason (same first-fail order)."""
-    wc = _wc_sql(l)
+    wc = f"len({tokens_sql(l)})"
     stop_list = "[" + ", ".join(f"'{s}'" for s in STOPWORDS) + "]"
     short = f"({wc} < {MIN_WORDS})"
     long_ = f"(NOT {short} AND {wc} > {MAX_WORDS})"
@@ -173,8 +148,7 @@ def line_flag_sql(l: str, reason: str) -> str:
 
 
 def _flags_python(line: str) -> str:
-    cleaned = re.sub(_EDGE_WS, "", line.lower())
-    toks = re.split(_WS, cleaned) if cleaned else []
+    toks = TX.tokens_python(line.lower())
     wc = len(toks)
     if wc < MIN_WORDS:
         return "short"

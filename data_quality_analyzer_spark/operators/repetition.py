@@ -9,7 +9,8 @@ navigation blocks, template spam) that keep distinct-token ratio high.
 
 Metric definitions (pinned, identical in Spark / numpy / DuckDB):
 
-* tokens = whitespace split of ``lower(trim(text))``;
+* tokens = the whitespace tokens of ``lower(text)`` (the one class and
+  edge trim of ``functions/text.py``);
 * an n-gram's text is ``concat_ws(' ', window)`` — its char length is
   the token lengths plus the n-1 joining spaces;
 * ``L`` = char length of ``concat_ws(' ', tokens)`` (the normalized doc);
@@ -44,8 +45,6 @@ exact-row duplicates to phrase-level repetition statistics.
 """
 
 from __future__ import annotations
-
-import re
 
 import numpy as np
 import pandas as pd
@@ -193,21 +192,15 @@ _SCORE_CHUNK = 2048
 # affine mixes — windows differing in any position get independent hashes.
 
 
-# Java-regex \s = [ \t\n\x0B\f\r] (ASCII only) — Python str.split()
-# splits on UNICODE whitespace (U+00A0 etc.), which would silently
-# diverge from the native form on crawled HTML; pin the Java set.
-_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
-
-
 def _metrics_chunk(
     texts: list[str], ns: tuple[int, ...]
 ) -> dict[int, np.ndarray]:
     """(top_frac, dup_frac) arrays per n for one chunk of non-null texts.
     Fully vectorized: one token-hash pass, per-n window combine, one
-    lexsort per n, run-length counts, per-doc reduceat."""
-    toks_per_doc = [
-        [w for w in _JAVA_WS.split(t.lower()) if w] for t in texts
-    ]
+    lexsort per n, run-length counts, per-doc reduceat.  Tokens are
+    ``TXF.tokens_python``'s, the native form's rule (``str.split()``
+    would also split on NBSP)."""
+    toks_per_doc = [TXF.tokens_python(t.lower()) for t in texts]
     n_docs = len(texts)
     doc_ntok = np.array([len(t) for t in toks_per_doc], dtype=np.int64)
     flat = [tok for toks in toks_per_doc for tok in toks]

@@ -409,9 +409,10 @@ def dsir_weights(
     num_buckets: int = DSIR_BUCKETS,
 ) -> DataFrame:
     """Annotate every row with its DSIR importance weight (rounded to
-    4 dp; NULL text → NULL weight).  ``target`` is a boolean Column
-    marking the in-domain exemplar rows *within* ``df`` (e.g. "kept
-    English docs"); the raw distribution is all of ``df``."""
+    4 dp; a NULL or blank text has no tokens → NULL weight).  ``target``
+    is a boolean Column marking the in-domain exemplar rows *within*
+    ``df`` (e.g. "kept English docs"); the raw distribution is all of
+    ``df``."""
     import math
 
     toks = LN.tokens(F.col(text_col))
@@ -467,10 +468,7 @@ def dsir_weights(
         lambda acc, x: (acc + x).cast(dec),
     )
     w = w_sum.cast("double") / F.size(toks)
-    return df.withColumn(
-        weight_col,
-        F.when(F.col(text_col).isNotNull(), F.round(w, 4)),
-    )
+    return df.withColumn(weight_col, F.when(F.size(toks) > 0, F.round(w, 4)))
 
 
 def dsir_weights_duck_sql(

@@ -24,15 +24,7 @@ from ..functions import text as TX
 from ..operators import images as IM
 from ..plans.pipeline import PIPELINE_RULES, RULE_KEYS, STOPWORDS_BY_LANG
 
-_WS = re.compile(r"\s+")
 _NON_ALNUM_SPACE = re.compile(r"[^a-zA-Z0-9 ]")
-
-
-def _tokens(text: str | None) -> list[str]:
-    if text is None:
-        return []
-    t = text.strip()
-    return _WS.split(t) if t else []
 
 
 def _symbol_ratio(text: str | None) -> float:
@@ -43,21 +35,21 @@ def _symbol_ratio(text: str | None) -> float:
 
 
 def _distinct_ratio(text: str | None) -> float:
-    toks = _tokens(text.lower() if text else text)
+    toks = TX.tokens_python(text.lower() if text else text)
     if not toks:
         return 1.0
     return len(set(toks)) / len(toks)
 
 
 def _mean_word_len(text: str | None) -> float:
-    toks = _tokens(text)
+    toks = TX.tokens_python(text)
     if not toks:
         return 0.0
     return sum(len(t) for t in toks) / len(toks)
 
 
 def _stopword_ratio(text: str | None, words: tuple[str, ...]) -> float:
-    toks = _tokens(text.lower() if text else text)
+    toks = TX.tokens_python(text.lower() if text else text)
     if not toks:
         return 0.0
     sw = set(words)
@@ -83,10 +75,9 @@ def oracle_verdicts(
 
     def _gate(i: int) -> bool:
         t = cap.iloc[i]
-        is_str = isinstance(t, str)
-        if (not is_str) or t.strip() == "":
+        if TX.is_blank_python(t):
             return False  # caption_present fails
-        if any(tok in tox for tok in _tokens(t.lower())):
+        if any(tok in tox for tok in TX.tokens_python(t.lower())):
             return False  # toxicity fails
         b = images["bytes"].iloc[i]
         return b is not None and len(b) > 0  # bytes_present
@@ -123,14 +114,13 @@ def oracle_verdicts(
     def passes(row_i: int) -> dict[str, bool]:
         t = cap.iloc[row_i]
         is_str = isinstance(t, str)
-        blank = (not is_str) or t.strip() == ""
         nc = len(t) if is_str else 0
-        toks = _tokens(t if is_str else None)
+        toks = TX.tokens_python(t)
         nt = len(toks)
         lang = out["lang_pred"].iloc[row_i]
         sw_words = STOPWORDS_BY_LANG.get(lang, STOPWORDS_BY_LANG["en"])
         return {
-            "caption_present": not blank,
+            "caption_present": not TX.is_blank_python(t),
             "min_length": is_str and nc >= s.min_chars,
             "max_length": is_str and nc <= s.max_chars,
             "token_bounds": s.min_tokens <= nt <= s.max_tokens,
@@ -140,7 +130,7 @@ def oracle_verdicts(
             "repetition": is_str and _distinct_ratio(t) >= s.min_distinct_ratio,
             "word_length": is_str
             and s.min_mean_word_len <= _mean_word_len(t) <= s.max_mean_word_len,
-            "toxicity": not any(tok in tox for tok in _tokens(t.lower() if is_str else None)),
+            "toxicity": not any(tok in tox for tok in TX.tokens_python(t.lower() if is_str else None)),
             "lang_confident": out["lang_conf"].iloc[row_i] >= s.min_lang_confidence,
             "ppl_bound": out["perplexity"].iloc[row_i] <= s.max_perplexity,
             "quality_clf": out["quality_score"].iloc[row_i]

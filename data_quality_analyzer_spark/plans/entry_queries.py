@@ -805,13 +805,14 @@ def q26(spark, sf_dir):
 def _simhash_oracle_ctes() -> str:
     """DuckDB twin of dedup.simhash_udf as the CTEs ``toks, h, bits, sh``
     over a ``base(doc_id, text)`` CTE the caller defines; ``sh(doc_id,
-    fp)`` holds the fingerprints.  Same tokenizer (``lower(trim(text))``
-    split on dedup.WS_CLASS runs), same token hash
-    (hashing.poly60_token_duck_sql), same bit-vote fold."""
+    fp)`` holds the fingerprints.  Same tokens (``TX.ws_split_sql`` of
+    ``lower(text)``: a blank text folds to one '' token, as in the
+    kernel), same token hash (hashing.poly60_token_duck_sql), same
+    bit-vote fold."""
     return f"""
     toks AS (
       SELECT doc_id,
-             unnest(string_split_regex(lower(trim(text)), '{DD.WS_CLASS}+')) AS t
+             unnest({TX.ws_split_sql('lower(text)')}) AS t
       FROM base
     ),
     h AS (
@@ -833,7 +834,7 @@ def _simhash_oracle_ctes() -> str:
     f"""
     WITH base AS (
       SELECT doc_id, text FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE NOT {TX.is_blank_sql('text')}
     ),{_simhash_oracle_ctes()}
     SELECT doc_id, fp AS simhash FROM sh
     """,
@@ -845,14 +846,14 @@ def q27(spark, sf_dir):
     Integer arithmetic ⇒ exact agreement with the oracle's unnest+group
     formulation (:func:`_simhash_oracle_ctes`)."""
     d = _spread(spark, sf_dir, "documents").filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
+        ~TX.is_blank(F.col("text"))
     )
     return d.select("doc_id", DD.simhash_udf()(F.col("text")).alias("simhash"))
 
 
 _BOW_SQL = (
     "array_to_string(list_sort(list_distinct("
-    + TX._sql_tokens("lower(text)")
+    + TX.tokens_sql("lower(text)")
     + ")), ' ')"
 )
 
@@ -1293,10 +1294,10 @@ def _q38_oracle() -> str:
     return f"""
     WITH base AS (
       SELECT doc_id, text FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE NOT {TX.is_blank_sql('text')}
       UNION ALL
       SELECT doc_id + 1000000, text FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0 AND doc_id % 25 = 0
+      WHERE NOT {TX.is_blank_sql('text')} AND doc_id % 25 = 0
     ),
     {_simhash_oracle_ctes()},
     bandrows AS (
@@ -1322,7 +1323,7 @@ def q38(spark, sf_dir):
     an exact popcount on the XOR (operators/dedup.py:
     simhash_near_duplicates).  Exact twin rows guarantee hamming-0 hits."""
     d = _spread(spark, sf_dir, "documents", "doc_id", "text").filter(
-        F.col("text").isNotNull() & (F.length(F.trim("text")) > 0)
+        ~TX.is_blank(F.col("text"))
     )
     twins = d.filter(F.col("doc_id") % 25 == 0).select(
         (F.col("doc_id") + 1000000).alias("doc_id"), F.col("text")
@@ -1404,20 +1405,14 @@ def q41(spark, sf_dir):
     )
 
 
-# BPE-ish subword tokenizer pattern — canonical definition lives in
-# functions/text.py (shared with the q54 token-budget sampler).
-_BPE_PAT = TX.BPE_PAT
-
-
 @_register(
     "q42_token_stats_bpe",
     f"""
     SELECT lang,
            COUNT(*) AS n_docs,
-           CAST(SUM(len(regexp_extract_all(text, '{_BPE_PAT.replace("'", "''")}'))) AS BIGINT)
-             AS bpe_tokens,
+           CAST(SUM({TX.bpe_token_count_sql('text')}) AS BIGINT) AS bpe_tokens,
            CAST(SUM(CAST({TX.n_tokens_sql('text')} AS BIGINT)) AS BIGINT) AS ws_tokens,
-           ROUND(CAST(SUM(len(regexp_extract_all(text, '{_BPE_PAT.replace("'", "''")}'))) AS DOUBLE)
+           ROUND(CAST(SUM({TX.bpe_token_count_sql('text')}) AS DOUBLE)
              / SUM(CAST({TX.n_tokens_sql('text')} AS BIGINT)), 6) AS bpe_per_ws_token
     FROM documents WHERE text IS NOT NULL
     GROUP BY lang
@@ -1430,7 +1425,7 @@ def q42(spark, sf_dir):
     UDF; the per-language bpe/ws ratio is the fertility metric training
     pipelines budget token counts with."""
     d = read_table(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    bpe = F.regexp_count("text", F.lit(_BPE_PAT)).cast("long")
+    bpe = TX.bpe_token_count(F.col("text"))
     ws = TX.n_tokens(F.col("text")).cast("long")
     return d.groupBy("lang").agg(
         F.count("*").alias("n_docs"),
@@ -1525,7 +1520,7 @@ def _q46_oracle() -> str:
     return f"""
     WITH base AS (
       SELECT doc_id, {fp} AS fp FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE NOT {TX.is_blank_sql('text')}
     ),
     allrows AS (
       SELECT doc_id, fp FROM base
@@ -1568,7 +1563,7 @@ def q46(spark, sf_dir):
     exact copies exercise both the pairing and the collapse."""
     base = (
         _spread(spark, sf_dir, "documents", "doc_id", "text")
-        .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
+        .filter(~TX.is_blank(F.col("text")))
         .select("doc_id", F.expr(HH.h60_spark_sql("text")).alias("fp"))
     )
     twins = base.filter(F.col("doc_id") % 25 == 0).select(
@@ -1698,11 +1693,10 @@ def q48(spark, sf_dir):
 
 @_register(
     "q49_decontamination",
-    """
+    f"""
     WITH ev AS (
       SELECT doc_id AS eval_id,
-             list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                         x -> x <> '') AS w
+             {TX.WS_TOKENS_DUCK.format(c='text')} AS w
       FROM documents WHERE doc_id % 101 = 7 AND text IS NOT NULL
     ),
     ev_grams AS (
@@ -1717,8 +1711,7 @@ def q48(spark, sf_dir):
     ),
     dw AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                         x -> x <> '') AS w
+             {TX.WS_TOKENS_DUCK.format(c='text')} AS w
       FROM documents WHERE text IS NOT NULL
     ),
     doc_grams AS (
@@ -2663,11 +2656,10 @@ def q63(spark, sf_dir):
 
 @_register(
     "q64_crossdoc_dup_ngrams",
-    """
+    f"""
     WITH dw AS (
       SELECT doc_id,
-             list_filter(regexp_split_to_array(lower(text), '\\s+'),
-                         x -> x <> '') AS w
+             {TX.WS_TOKENS_DUCK.format(c='text')} AS w
       FROM documents WHERE text IS NOT NULL
     ),
     doc_grams AS (
@@ -3059,8 +3051,8 @@ def _q70_oracle() -> str:
 
     toks = LN.tokens_sql("text")
     rel = (
-        f"(SELECT source, tok FROM (SELECT source, unnest({toks}) AS tok "
-        f"FROM documents WHERE text IS NOT NULL) WHERE tok <> '')"
+        f"(SELECT source, unnest({toks}) AS tok "
+        f"FROM documents WHERE text IS NOT NULL)"
     )
     return SK.kmv_distinct_sql(rel, "tok", ["source"], k=64)
 
@@ -3081,12 +3073,8 @@ def q70(spark, sf_dir):
     from ..operators import sketches as SK
 
     d = _spread(spark, sf_dir, "documents").filter(F.col("text").isNotNull())
-    toks = (
-        d.select(
-            "source",
-            F.explode(LN.tokens(F.col("text"))).alias("tok"),
-        )
-        .filter(F.col("tok") != "")
+    toks = d.select(
+        "source", F.explode(LN.tokens(F.col("text"))).alias("tok")
     )
     return SK.kmv_distinct(toks, "tok", ["source"], k=64)
 
@@ -3447,8 +3435,8 @@ def _q78_oracle() -> str:
 
     toks = LN.tokens_sql("text")
     rel = (
-        f"(SELECT tok FROM (SELECT unnest({toks}) AS tok FROM documents "
-        f"WHERE text IS NOT NULL) WHERE tok <> '')"
+        f"(SELECT unnest({toks}) AS tok FROM documents "
+        f"WHERE text IS NOT NULL)"
     )
     probes = " UNION ALL ".join(
         f"SELECT tok, n_exact, {i} AS row_idx, "
@@ -3497,7 +3485,6 @@ def q78(spark, sf_dir):
     # the exact top-20 — without the cut the corpus tokenizes twice
     toks = materialize(
         d.select(F.explode(LN.tokens(F.col("text"))).alias("tok"))
-        .filter(F.col("tok") != "")
     )
     cells = {
         (r["row_idx"], r["col"]): r["cnt"]
@@ -3563,7 +3550,7 @@ def _q80_oracle() -> str:
     return f"""
     WITH RECURSIVE base AS (
       SELECT doc_id, text, {fp} AS fp FROM documents
-      WHERE text IS NOT NULL AND length(trim(text)) > 0
+      WHERE NOT {TX.is_blank_sql('text')}
     ),
     allrows AS (
       SELECT doc_id AS id, text AS caption, fp FROM base
@@ -3625,7 +3612,7 @@ def q80(spark, sf_dir):
     ancestor: A10 $first-in-group upgraded to a scored election."""
     base = (
         _spread(spark, sf_dir, "documents")
-        .filter(F.col("text").isNotNull() & (F.length(F.trim("text")) > 0))
+        .filter(~TX.is_blank(F.col("text")))
         .select(
             "doc_id", "text", F.expr(HH.h60_spark_sql("text")).alias("fp")
         )

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import hashlib
 
+from data_quality_analyzer_spark.functions import text as TX
 from data_quality_analyzer_spark.operators import alignment as AL
 
 
@@ -18,9 +19,7 @@ def _py_score(caption: str | None, p: int) -> tuple[int, int]:
     if caption is None:
         return 0, 0
     v: dict[int, int] = {}
-    for t in caption.lower().strip().split():
-        if not t:
-            continue
+    for t in TX.tokens_python(caption.lower()):
         h = _h60(t)
         b = h % AL.ALIGN_DIM
         s = 1 - 2 * ((h >> 6) & 1)
@@ -34,7 +33,7 @@ def _aligned_hash(caption: str) -> int:
     """Image hash whose ±1 vector matches the sign of every caption
     bucket (u_b = sign(v_b)) — the maximally-aligned image."""
     v: dict[int, int] = {}
-    for t in caption.lower().split():
+    for t in TX.tokens_python(caption.lower()):
         h = _h60(t)
         v[h % AL.ALIGN_DIM] = v.get(h % AL.ALIGN_DIM, 0) + 1 - 2 * ((h >> 6) & 1)
     p = 0

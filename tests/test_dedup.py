@@ -6,6 +6,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from data_quality_analyzer_spark.functions import text as TX
 from data_quality_analyzer_spark.operators import dedup as DD
 from data_quality_analyzer_spark.operators import similarity as SIM
 
@@ -223,9 +224,10 @@ def test_ivf_ann(spark):
 
 def test_simhash_udf_twin_whitespace_edges(spark):
     """The kernel and its DuckDB twin tokenize alike on whitespace-edge
-    texts (one ASCII class, dedup.WS_CLASS; trim strips spaces only):
-    leading tab → empty first token, NBSP stays inside its token,
-    trailing newline → trailing empty token, VT separates tokens."""
+    texts (the one class and edge trim of functions/text.py): leading
+    tab and trailing newline are trimmed, NBSP stays inside its token
+    (also at the edges), VT separates tokens, a blank text folds to one
+    '' token."""
     import duckdb
 
     from data_quality_analyzer_spark.plans import entry_queries as EQ
@@ -236,6 +238,8 @@ def test_simhash_udf_twin_whitespace_edges(spark):
         (3, "non\xa0breaking space inside"),
         (4, "  padded  with   spaces  "),
         (5, "mixed \t\n whitespace \x0b runs"),
+        (6, "\xa0nbsp edged text\xa0"),
+        (7, " \t "),
     ]
     df = spark.createDataFrame(rows, "doc_id int, text string")
     udf = {
@@ -697,7 +701,7 @@ def test_simhash_poly_family(spark):
     }
 
     def ref_fp(t):
-        toks = DD._WS_RE.split(t.strip(" ").lower())
+        toks = TX.tokens_python(t.lower()) or [""]
         hv = np.array([HH.poly60_token_python(tok) for tok in toks], dtype=np.int64)
         shifts = np.arange(60, dtype=np.int64)
         votes = (2 * ((hv[:, None] >> shifts[None, :]) & 1) - 1).sum(axis=0)

@@ -1,7 +1,7 @@
 """Line-quality filter (operators/lines.py): three-engine agreement on
 planted multi-line documents, including the edge cases the synthetic
-corpus cannot produce (tabs, NBSP-free ASCII edges, empty lines, cookie
-banners, all-lines-dropped documents)."""
+corpus cannot produce (tabs, VT, NBSP edges, empty lines, cookie banners,
+all-lines-dropped documents)."""
 
 from __future__ import annotations
 
@@ -24,12 +24,17 @@ NO_STOP = (
     "mills and millers wave at foxes once more during bright mornings"
 )  # >= 20 words but no 'the'/'a' token
 LONG = " ".join(["the"] + ["word"] * 100)  # 101 words
+# exactly MIN_WORDS words, one of them VT-separated: RE2's \s omits VT
+VT_LINE = " ".join(GOOD.split()[:20]).replace(" ", "\x0b", 1)
+# the only stopword carries an NBSP edge, which is no whitespace here
+NBSP_LINE = f"{NO_STOP} a\xa0"
 
 DOCS = [
     f"{GOOD}\n{COOKIE}\nshort line\n{GOOD}",
     f"\t {GOOD} \t\n\n   \n{NO_STOP}",
     f"{LONG}\nshort",
     "short\nalso short",  # everything dropped -> NULL text
+    f"{VT_LINE}\n{NBSP_LINE}",
     None,
 ]
 
@@ -56,6 +61,9 @@ def test_python_twin_reasons():
     assert counts["long"] == 1 and counts["short"] == 1 and cleaned is None
     cleaned, counts = _expected(DOCS[3])
     assert cleaned is None and counts["short"] == 2
+    cleaned, counts = _expected(DOCS[4])
+    assert cleaned == VT_LINE
+    assert counts["keep"] == 1 and counts["no_stopword"] == 1
     assert _expected(None) == (
         None,
         {"short": 0, "long": 0, "no_stopword": 0, "boilerplate": 0, "keep": 0},

@@ -64,6 +64,39 @@ def test_every_rule_flag_matches(aligned):
         assert (m[f"pass_{k}"] == o[f"pass_{k}"]).all(), k
 
 
+# captions whose only difficulty is whitespace: a trailing newline, an NBSP
+# or a tab alone, tab-separated and tab-ended words, a VT separator
+PLANTED_CAPTIONS = [
+    "kittens napping\n",
+    "\xa0",
+    "\t",
+    "the dog\tand the cat\t",
+    "a photo of\x0ba cat on the sofa",
+]
+
+
+def test_planted_whitespace_captions_match_oracle(spark, corpus_path, corpus_pdf):
+    """Engine and pandas oracle agree on every rule flag and the keep
+    verdict when fixture rows carry the planted whitespace captions."""
+    schema = spark.read.parquet(corpus_path).schema
+    rows = (
+        corpus_pdf.drop_duplicates("image_id")
+        .head(len(PLANTED_CAPTIONS))
+        .reset_index(drop=True)
+    )
+    rows["caption"] = PLANTED_CAPTIONS
+    got = (
+        run_pipeline(spark, spark.createDataFrame(rows[schema.fieldNames()], schema))
+        .drop("bytes")
+        .toPandas()
+        .sort_values("image_id")
+        .reset_index(drop=True)
+    )
+    want = oracle_verdicts(rows).sort_values("image_id").reset_index(drop=True)
+    for col in [f"pass_{k}" for k in RULE_KEYS] + ["keep"]:
+        assert got[col].tolist() == want[col].tolist(), col
+
+
 def test_fail_rules_match(aligned):
     m, o = aligned
     for a, b in zip(m["fail_rules"], o["fail_rules"]):

@@ -33,6 +33,17 @@ EDGE_TEXTS = [
     _LONG_VARIED,
     _LONG_VARIED[: TX.MAX_CHARS],  # exactly at the char bound
     "ab " * 2600,  # 5,200 tokens of two words: over every upper bound
+    # planted whitespace: the class is ASCII [ \t\n\x0b\f\r], trimmed
+    # from both ends; NBSP is content
+    "the cat\x0bsat on the mat",
+    "\tleading tab on the caption",
+    "kittens napping\n",
+    "\xa0",
+    "\xa0the nbsp edged caption\xa0",
+    "\t",
+    # a final line separator is content, not a token boundary
+    "the swearword1\u2028",
+    "a cat on the\u0085",
 ]
 
 
@@ -159,10 +170,11 @@ def test_scrub_three_engines(frames):
 def test_blank_collapse_quirk():
     """SURVEY §1.3 quirk 1: missing ∨ null ∨ '' all count as blank."""
     assert SC.scrub_python(None) is None
-    for t, expect in [(None, True), ("", True), ("  ", True), ("x", False)]:
-        # python-side mirror of TX.is_blank
-        blank = t is None or t.strip() == ""
-        assert blank is expect
+    for t, expect in [
+        (None, True), ("", True), ("  ", True), ("\t\n", True),
+        ("x", False), ("\xa0", False),
+    ]:
+        assert TX.is_blank_python(t) is expect
 
 
 def test_pii_patterns_precise():
@@ -238,3 +250,55 @@ def test_scrub_cc_spark_matches_python(spark):
         gv = None if pd.isna(g) else g
         assert gv == want, (raw, gv)
         assert SC.scrub_cc_python(raw) == want, raw
+
+
+# ---------------------------------------------------------------------------
+# One whitespace definition (functions/text.py)
+# ---------------------------------------------------------------------------
+
+
+def _code_strings(path):
+    """(lineno, value) of every string constant in ``path`` that is not
+    a docstring."""
+    import ast
+
+    tree = ast.parse(path.read_text())
+    docs = {
+        id(node.body[0].value)
+        for node in ast.walk(tree)
+        if isinstance(
+            node,
+            (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+        )
+        and node.body
+        and isinstance(node.body[0], ast.Expr)
+        and isinstance(node.body[0].value, ast.Constant)
+    }
+    return [
+        (node.lineno, node.value)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and id(node) not in docs
+    ]
+
+
+def test_one_whitespace_definition():
+    """No package string spells the engine-dependent regex escape ``\\s``,
+    and only functions/text.py spells the whitespace class (VT, its
+    member no engine default agrees on, is the tell)."""
+    import pathlib
+
+    import data_quality_analyzer_spark as pkg
+
+    root = pathlib.Path(pkg.__file__).parent
+    escapes, classes = [], []
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for lineno, value in _code_strings(path):
+            if "\\s" in value:
+                escapes.append(f"{rel}:{lineno}")
+            if ("\\x0b" in value or "\x0b" in value) and rel != "functions/text.py":
+                classes.append(f"{rel}:{lineno}")
+    assert escapes == []
+    assert classes == []
